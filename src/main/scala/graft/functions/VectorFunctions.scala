@@ -1,6 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.graftshim.{ColumnShim => ExpressionUtils}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, FloatType}
@@ -133,12 +135,21 @@ object VectorFunctions {
   def md5Long(c: Column): Column =
     conv(substring(md5(c), 1, 15), 16, 10).cast("long")
 
+  /** Register the five vector functions for SQL, each only when the
+    * session does not have it yet: `GraftSession.prepare` runs before
+    * every query, and a session built with `GraftExtensions` has them
+    * from the start, so re-registering would replace them (and log a
+    * warning) on every call.
+    */
   def registerAll(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("dot_product", es => DotProduct(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("cosine_distance", es => CosineDistance(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("l2_distance", es => L2Distance(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("l2_norm", es => L2Norm(es.head), "built-in")
-    reg.createOrReplaceTempFunction("l2_normalize", es => L2Normalize(es.head), "built-in")
+    def register(name: String, builder: Seq[Expression] => Expression): Unit =
+      if (!reg.functionExists(FunctionIdentifier(name)))
+        reg.createOrReplaceTempFunction(name, builder, "built-in")
+    register("dot_product", es => DotProduct(es(0), es(1)))
+    register("cosine_distance", es => CosineDistance(es(0), es(1)))
+    register("l2_distance", es => L2Distance(es(0), es(1)))
+    register("l2_norm", es => L2Norm(es.head))
+    register("l2_normalize", es => L2Normalize(es.head))
   }
 }

@@ -1,6 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -23,12 +26,17 @@ import scala.collection.mutable
   * Search fans one beam per shard (each task touches O(ef·log n) nodes
   * of its local graph, not the shard), emits ≤ efSearch candidate ids
   * per shard, and the union (≤ nShards·efSearch ids — bounded, like
-  * IVF's probe list) is re-ranked EXACTLY by the same codegen'd cosine
-  * expression the exact-KNN path uses. That two-stage shape is what
-  * makes the result hash-gateable: the candidate set is deterministic
-  * (ascending-id insertion, id tie-breaks everywhere), so the DuckDB
-  * oracle re-ranks the identical id list with its own cosine and must
-  * agree bit-for-bit after the shared round(·,6) exit.
+  * IVF's probe list) is re-ranked EXACTLY. The single-query paths
+  * ([[search]], [[routedSearch]]) re-rank through the same codegen'd
+  * cosine expression the exact-KNN path uses; the batch paths
+  * ([[batchSearch]], [[routedBatchSearch]]) re-rank inside the beam
+  * task, with that expression's arithmetic, over the graph store's
+  * float copy of each candidate's vector — no second corpus scan. That
+  * two-stage shape is what makes the result hash-gateable: the
+  * candidate set is deterministic (ascending-id insertion, id
+  * tie-breaks everywhere), so the DuckDB oracle re-ranks the identical
+  * id list with its own cosine and must agree bit-for-bit after the
+  * shared round(·,6) exit.
   *
   * Determinism contract (everything the oracle leans on):
   *   - insertion order = ascending vec_id within a shard;
@@ -45,9 +53,9 @@ import scala.collection.mutable
   * data-sized graph store, and launching a Spark job from inside
   * Catalyst optimization is both unsound (rules may re-fire, plans may
   * never execute) and unbounded-latency. Graph indexes therefore serve
-  * through the explicit [[search]]/[[batchSearch]] API; the exact
-  * re-rank stage still plans identically to the rewritten IVF/LSH
-  * probes (pushed IN-filter + TakeOrderedAndProject).
+  * through the explicit [[search]]/[[batchSearch]] API; the
+  * single-query re-rank stage still plans identically to the rewritten
+  * IVF/LSH probes (pushed IN-filter + TakeOrderedAndProject).
   */
 object Nsw {
 
@@ -239,11 +247,10 @@ object Nsw {
     * shard's rows must all reach one task (a parquet file >
     * maxPartitionBytes splits across tasks, and a beam over half a
     * shard's graph returns wrong candidates). The exchange moves the
-    * graph store once per CALL — [[batchSearch]] amortizes it across a
-    * whole query batch (one pass serves N queries), and a serving
-    * deployment keeps the post-exchange relation cached (a resident
-    * index: the shuffle is paid once per executor lifetime, exactly
-    * like loading an HNSW index into RAM).
+    * graph store once per CALL here; the batch paths run over an
+    * [[OpenedGraph]] instead, which holds the exchange's shuffle output
+    * so a serving index pays it once, on its first request, and every
+    * later request reads only its routed shards' partitions.
     */
   def shardCandidates(graph: DataFrame, queryVec: Array[Float],
                       p: Params): DataFrame = {
@@ -343,8 +350,8 @@ object Nsw {
     * shard — better balanced for a static corpus, but an append
     * rewrites the whole store; this layout is the documented
     * mitigation. Search code is layout-agnostic: tasks group rows by
-    * the `shard` column, so [[shardCandidates]]/[[batchShardCandidates]]
-    * fan over windowed stores unchanged.
+    * the `shard` column, so [[shardCandidates]]/[[batchSearch]] fan over
+    * windowed stores unchanged.
     */
   def windowShard(idCol: String, windowSize: Long): org.apache.spark.sql.Column =
     // integer `div`, not `/` (double division) — exact at any id scale.
@@ -563,158 +570,165 @@ object Nsw {
         col("embedding"), col("neighbors"))
   }
 
-  /** Multi-query beam pass: one scan of the graph store serves a WHOLE
-    * query batch — each task builds its shard's (vecs, adj) maps once
-    * and loops the broadcast queries over them, emitting ≤ efSearch
-    * candidate rows per (shard, query). The per-batch cost is one job
-    * regardless of batch size; at 100 TB this is the serving shape
-    * (a job per query would pay the scan |batch| times).
+  /** A graph store's shard exchange, opened once and held: the
+    * post-exchange rows of `graph.select(shard, vec_id, embedding,
+    * neighbors).repartition(nShards, shard)`, plus the shard → partition
+    * map of that exchange. The first use runs the exchange; the held RDD
+    * keeps its shuffle dependency alive, and Spark keeps the shuffle
+    * output of a live dependency, so every later job over it skips the
+    * map stage and reads only the partitions it asks for. The shuffle
+    * files live as long as this object does (the context cleaner
+    * removes them once it is unreachable). Nothing here holds vectors
+    * in the heap: each search task rebuilds its shard's lookup from the
+    * exchanged rows.
+    *
+    * The exchange is a CORRECTNESS requirement, as in [[shardCandidates]]:
+    * a beam needs all of a shard's rows in one task. Serving opens this
+    * once per index ([[graft.streaming.VectorServing.AutoServingIndexes]]
+    * holds one); a one-shot caller opens it and searches it in the same
+    * call — the same code either way.
     */
-  def batchShardCandidates(graph: DataFrame,
-                           queries: Seq[(Int, Array[Float])],
-                           p: Params): DataFrame = {
-    val spark = graph.sparkSession
-    val qb = spark.sparkContext.broadcast(queries)
-    val prepared = graph
+  final class OpenedGraph private[Nsw] (graph: DataFrame, nShards: Int) {
+    private[Nsw] val spark: SparkSession = graph.sparkSession
+
+    private lazy val exchanged: org.apache.spark.rdd.RDD[InternalRow] = graph
       .select(col("shard"), col("vec_id"), col("embedding"), col("neighbors"))
-      .repartition(p.nShards, col("shard"))
-    val out = prepared.queryExecution.toRdd.mapPartitions { it =>
-      val rows = it.map { ir =>
-        (ir.getInt(0), ir.getLong(1), ir.getArray(2).toFloatArray(),
-          ir.getArray(3).toLongArray())
-      }.toArray
+      .repartition(nShards, col("shard"))
+      .queryExecution.toRdd
+
+    /** `repartition(nShards, shard)`'s own hash partitioning, evaluated
+      * for one shard value: the partition that holds every row of it.
+      */
+    private def partitionOf(shard: Int): Int =
+      HashPartitioning(Seq(BoundReference(0, IntegerType, nullable = false)), nShards)
+        .partitionIdExpression.eval(InternalRow(shard)).asInstanceOf[Int]
+
+    /** The exchanged rows of `shards` (None = every shard). Pruning keeps
+      * only the partitions holding those shards, so a job over them runs
+      * one task per such partition. An exchange that does not come back
+      * with nShards partitions (adaptive execution plans an empty store
+      * as an empty relation) is read whole: its partition ids do not
+      * follow the hash, and the tasks filter by shard either way.
+      */
+    private[Nsw] def shardRows(shards: Option[Set[Int]]): org.apache.spark.rdd.RDD[InternalRow] =
+      shards match {
+        case Some(shs) if exchanged.getNumPartitions == nShards =>
+          val parts = shs.map(partitionOf)
+          org.apache.spark.rdd.PartitionPruningRDD.create(exchanged, parts.contains)
+        case _ => exchanged
+      }
+  }
+
+  /** Open a graph store's shard exchange ([[OpenedGraph]]) with
+    * `nShards` exchange partitions. Cheap: nothing runs until the first
+    * search.
+    */
+  def openGraph(graph: DataFrame, nShards: Int): OpenedGraph =
+    new OpenedGraph(graph, nShards)
+
+  /** The SQL re-rank's own distance: `CosineDistance` over two float
+    * arrays, evaluated directly — Double accumulation in element order,
+    * NULL when a norm is 0 or the dimensions differ.
+    */
+  private val rerankCosine = graft.functions.CosineDistance(
+    BoundReference(0, ArrayType(FloatType), nullable = false),
+    BoundReference(1, ArrayType(FloatType), nullable = false))
+
+  /** SQL's `ORDER BY distance_score ASC, id ASC`: NULLs first, doubles by
+    * `SQLOrderingUtil.compareDoubles` (NaN last, -0.0 = 0.0), then id.
+    */
+  private val byScoreThenId: Ordering[(java.lang.Double, Long)] = (a, b) => {
+    val c =
+      if (a._1 == null) { if (b._1 == null) 0 else -1 }
+      else if (b._1 == null) 1
+      else org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+        .compareDoubles(a._1.doubleValue, b._1.doubleValue)
+    if (c != 0) c else java.lang.Long.compare(a._2, b._2)
+  }
+
+  /** The one search over an [[OpenedGraph]], in ONE Spark job: each task
+    * reads one exchanged partition, builds the lookup of every shard in
+    * it that some query is routed to (`routes` = None: every shard, for
+    * every query), beams each such query, and scores each candidate
+    * exactly over the store's own copy of its vector ([[buildGraph]]
+    * writes the corpus vectors as `array<float>`, so this is the value
+    * the SQL re-rank over the corpus computes). A task sends the driver
+    * ≤ (shards it holds for the query)·efSearch rows per query; the
+    * driver keeps the top k per query by (distance ASC NULLS FIRST, id).
+    * Returns the ranked rows (query_id, knn_rank, `idCol`,
+    * distance_score) as a local DataFrame, plus the per-query candidate
+    * ids (for the late-bound oracle, which re-ranks exactly these).
+    */
+  private def openedSearch(graph: OpenedGraph, idCol: String,
+                           queries: Seq[(Int, Array[Float])], k: Int,
+                           efSearch: Int, routes: Option[Map[Int, Seq[Int]]])
+      : (DataFrame, Map[Int, Seq[Long]]) = {
+    val routeSets = routes.map(_.map { case (q, shs) => q -> shs.toSet })
+    val wanted = routeSets.map(_.values.flatten.toSet)
+    val found = graph.shardRows(wanted).mapPartitions { it =>
+      val rows = it.filter(ir => wanted.forall(_.contains(ir.getInt(0))))
+        .map { ir =>
+          (ir.getInt(0), ir.getLong(1), ir.getArray(2).toFloatArray(),
+            ir.getArray(3).toLongArray())
+        }.toArray
       rows.groupBy(_._1).iterator.flatMap { case (shard, grp) =>
         val vecs = grp.map(r => (r._2, r._3)).toMap
         val adj = grp.map(r => (r._2, r._4)).toMap
         val entry = grp.iterator.map(_._2).min
-        qb.value.iterator.flatMap { case (qid, qv) =>
-          beamSearch(qv, entry, vecs, adj, p.efSearch)
-            .iterator.map { case (_, id) => Row(qid, shard, id) }
-        }
+        queries.iterator
+          .filter { case (qid, _) => routeSets.forall(_(qid).contains(shard)) }
+          .flatMap { case (qid, qv) =>
+            val q = UnsafeArrayData.fromPrimitiveArray(qv)
+            beamSearch(qv, entry, vecs, adj, efSearch).iterator.map { case (_, id) =>
+              (qid, id, rerankCosine.nullSafeEval(
+                UnsafeArrayData.fromPrimitiveArray(vecs(id)), q).asInstanceOf[java.lang.Double])
+            }
+          }
       }
+    }.collect()
+    val byQ = found.groupBy(_._1)
+    val ranked = byQ.toSeq.sortBy(_._1).flatMap { case (qid, rs) =>
+      rs.map(r => (r._3, r._2)).sorted(byScoreThenId).take(k).zipWithIndex
+        .map { case ((d, id), i) => Row(qid, i + 1, id, d) }
     }
-    spark.createDataFrame(out, StructType(Seq(
-      StructField("query_id", IntegerType),
-      StructField("shard", IntegerType),
-      StructField("vec_id", LongType))))
+    val schema = StructType(Seq(
+      StructField("query_id", IntegerType, nullable = false),
+      StructField("knn_rank", IntegerType, nullable = false),
+      StructField(idCol, LongType),
+      StructField("distance_score", DoubleType)))
+    (graph.spark.createDataFrame(java.util.Arrays.asList(ranked: _*), schema),
+      byQ.map { case (q, rs) => q -> rs.map(_._2).toSeq.sorted })
   }
 
-  /** Batch search: beam candidates for every query in ONE graph-store
-    * pass, then per-query exact top-k over the candidate union — the
-    * candidate relation (≤ |batch|·nShards·efSearch rows) broadcasts
-    * onto the corpus scan, queries broadcast beside it, and one
-    * query-keyed rank shuffle of candidate-sized data finishes. Returns
-    * the ranked result plus the per-query candidate ids (for the
-    * late-bound oracle, which re-ranks exactly these).
+  /** Batch search: every query beams every shard of the opened store in
+    * one job, then the exact per-query top-k over its candidates.
+    * Returns the ranked result plus the per-query candidate ids.
     */
-  def batchSearch(graph: DataFrame, corpus: DataFrame, vecCol: String,
-                  idCol: String, queries: Seq[(Int, Array[Float])], k: Int,
-                  p: Params, metric: Knn.Metric = Knn.Cosine)
-      : (DataFrame, Map[Int, Seq[Long]]) = {
-    val byQ = batchShardCandidates(graph, queries, p)
-      .select("query_id", "vec_id").collect()
-      .groupBy(_.getInt(0))
-      .map { case (q, rs) => q -> rs.map(_.getLong(1)).toSeq.sorted }
-    (exactBatchRerank(corpus, vecCol, idCol, queries, k, metric, byQ), byQ)
-  }
+  def batchSearch(graph: OpenedGraph, idCol: String,
+                  queries: Seq[(Int, Array[Float])], k: Int, p: Params)
+      : (DataFrame, Map[Int, Seq[Long]]) =
+    openedSearch(graph, idCol, queries, k, p.efSearch, None)
 
-  /** The exact second stage shared by [[batchSearch]] and
-    * [[routedBatchSearch]]: per-query exact top-k over the recorded
-    * candidate sets — candidates and queries broadcast onto ONE corpus
-    * scan, one query-keyed rank shuffle of candidate-sized data.
+  /** Routed batch search: each query routes driver-side to its nprobe
+    * centroid-nearest shards ([[routeShards]]), the job reads only the
+    * partitions of the batch's routed-shard UNION, and within a shard
+    * only the queries routed THERE beam — per-query cost is
+    * ≤ min(nShards, nprobe)·efSearch candidates, the single-query
+    * router's constant-in-corpus bound, batch-wide. Returns (ranked
+    * result, per-query candidate ids, per-query routed shards) — the
+    * candidate map feeds the recorded-candidate late oracle, the route
+    * map rides gated output.
     */
-  private def exactBatchRerank(corpus: DataFrame, vecCol: String,
-                               idCol: String, queries: Seq[(Int, Array[Float])],
-                               k: Int, metric: Knn.Metric,
-                               byQ: Map[Int, Seq[Long]]): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val candDf = byQ.toSeq.flatMap { case (q, ids) => ids.map(q -> _) }
-      .toDF("query_id", idCol)
-    val qDf = queries.map { case (i, v) => (i, v.toSeq) }
-      .toDF("query_id", "graft_query_vec")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("distance_score").asc, col(idCol).asc)
-    corpus
-      .join(broadcast(candDf), idCol)
-      .join(broadcast(qDf), "query_id")
-      .withColumn("distance_score", metric(col(vecCol), col("graft_query_vec")))
-      .withColumn("knn_rank", row_number().over(w))
-      .filter(col("knn_rank") <= k)
-  }
-
-  /** Routed multi-query beam pass — [[batchShardCandidates]] with the
-    * shard ROUTER applied per query (the r17 batch-serving scale gap:
-    * the single-query router existed but batch serving still beamed
-    * EVERY shard for every query). Each query routes driver-side to
-    * its nprobe centroid-nearest shards, the graph scan prunes to the
-    * UNION of routed shards (a pushed partition filter — shards no
-    * query in the batch routed to are never opened), and within a
-    * shard's task only the queries routed THERE beam. Per-query cost
-    * is ≤ min(nShards, nprobe)·efSearch candidates — the single-query
-    * router's constant-in-corpus bound, now batch-wide.
-    */
-  def routedBatchShardCandidates(graph: DataFrame,
-                                 queries: Seq[(Int, Array[Float])],
-                                 centroids: Array[(Int, Array[Double])],
-                                 nprobe: Int, p: Params)
-      : (DataFrame, Map[Int, Seq[Int]]) = {
+  def routedBatchSearch(graph: OpenedGraph, idCol: String,
+                        queries: Seq[(Int, Array[Float])], k: Int,
+                        centroids: Array[(Int, Array[Double])],
+                        nprobe: Int, p: Params)
+      : (DataFrame, Map[Int, Seq[Long]], Map[Int, Seq[Int]]) = {
     val routes = queries.map { case (qid, qv) =>
       qid -> routeShards(centroids, qv, nprobe)
     }.toMap
-    val unionShards = routes.values.flatten.toSet.toSeq.sorted
-    val spark = graph.sparkSession
-    val qb = spark.sparkContext.broadcast(queries)
-    val rb = spark.sparkContext.broadcast(
-      routes.map { case (q, shs) => (q, shs.toSet) })
-    val prepared = graph
-      .filter(col("shard").isin(unionShards.map(Integer.valueOf): _*))
-      .select(col("shard"), col("vec_id"), col("embedding"), col("neighbors"))
-      .repartition(p.nShards, col("shard"))
-    val out = prepared.queryExecution.toRdd.mapPartitions { it =>
-      val rows = it.map { ir =>
-        (ir.getInt(0), ir.getLong(1), ir.getArray(2).toFloatArray(),
-          ir.getArray(3).toLongArray())
-      }.toArray
-      rows.groupBy(_._1).iterator.flatMap { case (shard, grp) =>
-        val vecs = grp.map(r => (r._2, r._3)).toMap
-        val adj = grp.map(r => (r._2, r._4)).toMap
-        val entry = grp.iterator.map(_._2).min
-        qb.value.iterator
-          .filter { case (qid, _) => rb.value(qid).contains(shard) }
-          .flatMap { case (qid, qv) =>
-            beamSearch(qv, entry, vecs, adj, p.efSearch)
-              .iterator.map { case (_, id) => Row(qid, shard, id) }
-          }
-      }
-    }
-    (spark.createDataFrame(out, StructType(Seq(
-      StructField("query_id", IntegerType),
-      StructField("shard", IntegerType),
-      StructField("vec_id", LongType)))), routes)
-  }
-
-  /** Routed batch search: [[batchSearch]]'s exact second stage over
-    * [[routedBatchShardCandidates]]' per-query candidate sets. Returns
-    * (ranked result, per-query candidate ids, per-query routed shards)
-    * — the candidate map feeds the recorded-candidate late oracle, the
-    * route map rides gated output.
-    */
-  def routedBatchSearch(graph: DataFrame, corpus: DataFrame, vecCol: String,
-                        idCol: String, queries: Seq[(Int, Array[Float])],
-                        k: Int, centroids: Array[(Int, Array[Double])],
-                        nprobe: Int, p: Params,
-                        metric: Knn.Metric = Knn.Cosine)
-      : (DataFrame, Map[Int, Seq[Long]], Map[Int, Seq[Int]]) = {
-    val (candDf, routes) =
-      routedBatchShardCandidates(graph, queries, centroids, nprobe, p)
-    val byQ = candDf
-      .select("query_id", "vec_id").collect()
-      .groupBy(_.getInt(0))
-      .map { case (q, rs) => q -> rs.map(_.getLong(1)).toSeq.sorted }
-    (exactBatchRerank(corpus, vecCol, idCol, queries, k, metric, byQ),
-      byQ, routes)
+    val (res, byQ) = openedSearch(graph, idCol, queries, k, p.efSearch, Some(routes))
+    (res, byQ, routes)
   }
 
   /** End-to-end search: beam per shard → bounded candidate id list

@@ -919,21 +919,22 @@ object VectorQueries {
       "query): all five knn_batch query vectors route driver-side to " +
       "their 2 centroid-nearest shards (shard centroids = one bounded " +
       "exact-DECIMAL aggregate per store, the IVF-centroid metadata " +
-      "contract), the graph scan prunes to the batch's routed-shard " +
-      "UNION (a pushed partition filter — shards no query routed to " +
-      "are never opened), and within a shard's task only the queries " +
-      "routed THERE beam — per-query cost is the router's " +
-      "constant-in-corpus bound, batch-wide, in ONE graph-store pass. " +
-      "Exact per-query top-3 re-rank over candidate-sized data; each " +
-      "query's routed shard list rides the output, and the late " +
-      "oracle re-ranks THIS run's per-query recorded candidate sets. " +
+      "contract), the search job over the store's opened shard " +
+      "exchange prunes to the partitions of the batch's routed-shard " +
+      "UNION, and within a shard's task only the queries routed THERE " +
+      "beam — per-query cost is the router's constant-in-corpus bound, " +
+      "batch-wide, in ONE job. Exact per-query top-3 re-rank of each " +
+      "candidate in the same task, over the store's copy of its " +
+      "vector; each query's routed shard list rides the output, and " +
+      "the late oracle re-ranks THIS run's per-query recorded " +
+      "candidate sets. " +
       "NswSpec asserts routed-batch candidates ≡ the full batch fan's " +
       "restricted to each query's routed shards.",
     (s, dir) => {
       val graph = Nsw.readGraph(s, NswStore.ensure(s, dir))
       val cents = NswRouterStore.ensure(s, dir)
       val (res, cands, routes) = Nsw.routedBatchSearch(
-        graph, Tables.embeddings(s, dir), "embedding", "vec_id",
+        Nsw.openGraph(graph, NswStore.params.nShards), "vec_id",
         batchQueryVecs, k = 3, cents, NswRouterStore.nprobe, NswStore.params)
       RoutedBatchState.cands(dir) = cands
       RoutedBatchState.routes(dir) = routes
@@ -1375,9 +1376,9 @@ object VectorQueries {
             Knn.search(withPred(corpus.filter(col("vec_id").isin(sl: _*))),
               "embedding", "vec_id", q, k = 5)
           case "hnsw" =>
-            val (_, cands, _) = Nsw.routedBatchSearch(graph, corpus,
-              "embedding", "vec_id", Seq(0 -> q), k = 5, routerCents,
-              NswRouterStore.nprobe, p.copy(efSearch = efEff.toInt))
+            val (_, cands, _) = Nsw.routedBatchSearch(
+              Nsw.openGraph(graph, p.nShards), "vec_id", Seq(0 -> q), k = 5,
+              routerCents, NswRouterStore.nprobe, p.copy(efSearch = efEff.toInt))
             val ids = cands.getOrElse(0, Seq.empty)
             CostServingFilteredState.cands(dir) =
               CostServingFilteredState.cands.getOrElse(dir, Map.empty) + (tag -> ids)
@@ -1574,8 +1575,8 @@ object VectorQueries {
             "embedding", "vec_id", q, k = 10)
         case "hnsw" =>
           val graph = Nsw.readGraph(s, NswStore.ensure(s, dir))
-          val (res, cands, _) = Nsw.routedBatchSearch(graph, corpus,
-            "embedding", "vec_id", Seq(0 -> q), k = 10,
+          val (res, cands, _) = Nsw.routedBatchSearch(
+            Nsw.openGraph(graph, p.nShards), "vec_id", Seq(0 -> q), k = 10,
             NswRouterStore.ensure(s, dir), NswRouterStore.nprobe, p)
           CostServingCalState.recorded(dir) =
             cands.getOrElse(0, Seq.empty).sorted
@@ -1874,9 +1875,9 @@ object VectorQueries {
             }
             (rank(legsDf), sl)
           case "hnsw" =>
-            val (_, cands, _) = Nsw.routedBatchSearch(graph, corpus,
-              "embedding", "vec_id", qs, k = 3, routerCents,
-              NswRouterStore.nprobe, p.copy(efSearch = efEff.toInt))
+            val (_, cands, _) = Nsw.routedBatchSearch(
+              Nsw.openGraph(graph, p.nShards), "vec_id", qs, k = 3,
+              routerCents, NswRouterStore.nprobe, p.copy(efSearch = efEff.toInt))
             val rec0 = qs.map { case (qid, _) =>
               qid -> cands.getOrElse(qid, Seq.empty).sorted
             }.toMap

@@ -145,8 +145,8 @@ class NswSpec extends SparkSpec {
 
   test("batchSearch agrees with the single-query path, query by query") {
     val queries = graft.queries.VectorQueries.batchQueryVecs.take(3)
-    val (res, cands) = Nsw.batchSearch(graph, emb, "embedding", "vec_id",
-      queries, k = 3, p)
+    val (res, cands) = Nsw.batchSearch(Nsw.openGraph(graph, p.nShards),
+      "vec_id", queries, k = 3, p)
     val rows = res.select("query_id", "knn_rank", "vec_id").collect()
       .groupBy(_.getInt(0))
     queries.foreach { case (qid, qv) =>
@@ -434,7 +434,7 @@ class NswSpec extends SparkSpec {
         })
     }
     val flatCents = Nsw.shardCentroids(graph)
-    val (res, byQ, routes) = Nsw.routedBatchSearch(graph, emb, "embedding",
+    val (res, byQ, routes) = Nsw.routedBatchSearch(Nsw.openGraph(graph, p.nShards),
       "vec_id", queries, k = 3, flatCents, nprobe = 2, p)
     assert(routes.keySet == queries.map(_._1).toSet)
     routes.values.foreach(r => assert(r.length == 2 && r == r.sorted))
@@ -458,6 +458,57 @@ class NswSpec extends SparkSpec {
         .select("vec_id").collect().map(_.getLong(0)).toSeq
       assert(got.filter(_._1 == qid).map(_._2).toSeq == exact)
     }
+  }
+
+  test("opened-graph search ≡ brute-force exact top-k of the recorded candidates, bit for bit (zero vector included)") {
+    import spark.implicits._
+    // one all-zero corpus vector: its cosine distance is NULL, and the
+    // SQL re-rank orders NULLs FIRST — the in-task re-rank must agree
+    val zeroId = 500L
+    val corpus = emb.select(col("vec_id"), col("embedding"))
+      .union(Seq((zeroId, Seq.fill(64)(0f))).toDF("vec_id", "embedding"))
+      .cache()
+    val zgraph = Nsw.buildGraph(corpus, "embedding", "vec_id", p).cache()
+    val cents = Nsw.shardCentroids(zgraph)
+    val queries = (0 until 5).map(i => i -> q.zipWithIndex.map {
+      case (v, j) => if (j % 5 == i) v + 0.35f else v
+    })
+    val k = 5
+    def exact(qid: Int, qv: Array[Float], cands: Seq[Long]) =
+      Knn.search(corpus.filter(col("vec_id").isin(cands: _*)),
+          "embedding", "vec_id", qv, k)
+        .select(col("vec_id"), col("distance_score")).collect().toSeq
+        .zipWithIndex.map { case (r, i) => (qid, i + 1, r.getLong(0), r.get(1)) }
+    def rows(res: org.apache.spark.sql.DataFrame) =
+      res.select(col("query_id"), col("knn_rank"), col("vec_id"),
+          col("distance_score")).collect().toSeq
+        .map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.get(3)))
+    var zeroRanked = 0
+    try {
+      Seq(p, p.copy(efSearch = 1000)).foreach { pp =>
+        val opened = Nsw.openGraph(zgraph, pp.nShards)
+        // single-query requests, then the whole batch, on ONE opened graph
+        val single = queries.map { case (qid, qv) =>
+          val (res, byQ, _) = Nsw.routedBatchSearch(opened, "vec_id",
+            Seq(qid -> qv), k, cents, nprobe = 2, pp)
+          (rows(res), byQ)
+        }
+        val (bres, bByQ, _) = Nsw.routedBatchSearch(opened, "vec_id",
+          queries, k, cents, nprobe = 2, pp)
+        val batchRows = rows(bres)
+        queries.foreach { case (qid, qv) =>
+          val (srows, sByQ) = single(qid)
+          assert(sByQ(qid) == bByQ(qid), s"query $qid: single vs batch candidates")
+          val want = exact(qid, qv, bByQ(qid))
+          assert(srows == want, s"query $qid (ef=${pp.efSearch}) single: $srows\nexact: $want")
+          assert(batchRows.filter(_._1 == qid) == want,
+            s"query $qid (ef=${pp.efSearch}) batch vs exact")
+          if (want.exists(r => r._3 == zeroId && r._2 == 1 && r._4 == null)) zeroRanked += 1
+        }
+      }
+      assert(zeroRanked > 0,
+        "the zero vector must reach some query's candidates (and rank first, NULL)")
+    } finally { zgraph.unpersist(); corpus.unpersist() }
   }
 
   // ------------------------------------------------------------------

@@ -60,6 +60,20 @@ class VectorExpressionsSpec extends SparkSpec {
     assert(math.abs(r - 1.0) < 1e-12)
   }
 
+  test("prepare registers the vector functions only when absent: a repeat call replaces none") {
+    val reg = spark.sessionState.functionRegistry
+    val names = Seq("dot_product", "cosine_distance", "l2_distance", "l2_norm", "l2_normalize")
+    def builders = names.map(n => reg.lookupFunctionBuilder(
+      org.apache.spark.sql.catalyst.FunctionIdentifier(n)))
+    GraftSession.prepare(spark)
+    val before = builders
+    assert(before.forall(_.isDefined))
+    GraftSession.prepare(spark)
+    builders.zip(before).zip(names).foreach { case ((now, was), n) =>
+      assert(now.get eq was.get, s"$n was re-registered")
+    }
+  }
+
   test("codegen and interpreted paths agree") {
     val df = Seq((Seq(1.5f, -2f, 3f), Seq(0.5f, 4f, -1f))).toDF("a", "b")
       .select(cosineDistance(col("a"), col("b")).as("c"),

@@ -18,6 +18,36 @@ class VectorServingSpec extends SparkSpec {
 
   private val model = Md5PortableEmbedder(dim = 16)
 
+  /** Counts Spark jobs started and stages actually run while registered
+    * on the session's listener bus. A stage whose shuffle output is
+    * already available is skipped, never submitted, so a job that only
+    * reads a held shuffle runs exactly one stage: its result stage.
+    */
+  private class JobCounter {
+    private val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    private val stages = new java.util.concurrent.atomic.AtomicInteger(0)
+    private val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+      override def onStageSubmitted(
+          ss: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+        stages.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+
+    /** (jobs, stages run) once the listener bus stops moving. */
+    def settle(): (Int, Int) = {
+      var last = -1; var cur = jobs.get(); var spins = 0
+      while (cur != last && spins < 40) {
+        last = cur; Thread.sleep(100); cur = jobs.get(); spins += 1
+      }
+      (cur, stages.get())
+    }
+    def reset(): Unit = { settle(); jobs.set(0); stages.set(0) }
+    def close(): Unit = spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("streaming ingest builds the same cluster-partitioned corpus as the batch path") {
     val docs = Seq(
       IngestDoc(1L, "alpha beta gamma"), IngestDoc(2L, "delta epsilon zeta"),
@@ -218,29 +248,16 @@ class VectorServingSpec extends SparkSpec {
 
       // job-count differential: the executed work must not grow with B
       // (the old leg ran B Pq.search scans + B per-query rescores)
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
-      }
-      spark.sparkContext.addSparkListener(listener)
-      def settle(): Int = {
-        var last = -1; var cur = jobs.get(); var spins = 0
-        while (cur != last && spins < 40) {
-          last = cur; Thread.sleep(100); cur = jobs.get(); spins += 1
-        }
-        cur
-      }
+      val counter = new JobCounter
       def runDispatch(b: Int): (Int, String, Map[Int, Seq[Long]],
           Array[(Int, Int, Long, Double)]) = {
-        settle(); jobs.set(0)
+        counter.reset()
         val (res, chosen, _, cands) = VectorServing.dispatchServingBatch(
           queriesOf(b), idx, "embedding", "vec_id", k = 3)
         val rows = res.select(col("query_id"), col("knn_rank"),
             col("vec_id"), round(col("distance_score"), 6)).collect()
           .map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
-        (settle(), chosen, cands, rows)
+        (counter.settle()._1, chosen, cands, rows)
       }
       try {
         val (j1, c1, _, _) = runDispatch(1)
@@ -259,7 +276,56 @@ class VectorServingSpec extends SparkSpec {
         }.toSet
         assert(rows5.toSet == expect, s"got ${rows5.toSet}\nexpect $expect")
         assert(cands5.values.forall(_.size == 8), "B×shortlist recording")
-      } finally spark.sparkContext.removeSparkListener(listener)
+      } finally counter.close()
+    } finally {
+      import scala.reflect.io.Directory
+      new Directory(new java.io.File(tmp)).deleteRecursively()
+    }
+  }
+
+  test("routed graph dispatch on a held exchange: one Spark job per single-query request, no shuffle-map stage") {
+    import graft.operators.Nsw
+    val corpus = Tables.embeddings(spark, sf("sf0.001"))
+    val p = Nsw.Params()
+    val tmp = java.nio.file.Files.createTempDirectory("graft_nswdisp").toString
+    try {
+      Nsw.writeGraph(Nsw.buildGraph(corpus, "embedding", "vec_id", p), s"$tmp/graph")
+      val graph = Nsw.readGraph(spark, s"$tmp/graph")
+      val cents = Ann.seededCentroids(corpus, "embedding", "vec_id", nlist = 4)
+      val planes = Ann.signPlanes(dim = 64, nBits = 4)
+      // synthetic stats: probe lists and the PQ scan priced far above one
+      // routed beam, so the router sends every request to the graph
+      val idx = VectorServing.AutoServingIndexes(
+        graft.plans.IvfCatalog.IvfIndex(cents, 2,
+          cents.indices.map(_ -> 1000000L).toMap),
+        graft.plans.LshCatalog.LshIndex(planes, 1,
+          (0L until 16L).map(_ -> 1000000L).toMap),
+        corpus, graph, corpus, Nsw.shardCentroids(graph), 2, p,
+        corpus, Array.empty, dim = 64, corpusRows = 100000000L, pqM = 8,
+        pqShortlist = 8)
+      def query(i: Int) = Seq(0 -> graft.functions.HashingEmbedder(dim = 64, seed = 7)
+        .encode(s"routed dispatch probe $i"))
+      val counter = new JobCounter
+      try {
+        // the first routed request opens the exchange (its map stage runs)
+        val (_, first, _, _) = VectorServing.dispatchServingBatch(
+          query(0), idx, "embedding", "vec_id", k = 3)
+        assert(first == "hnsw", s"router must pick hnsw, got $first")
+        (1 to 3).foreach { i =>
+          counter.reset()
+          val (res, chosen, _, cands) = VectorServing.dispatchServingBatch(
+            query(i), idx, "embedding", "vec_id", k = 3)
+          val rows = res.select(col("query_id"), col("knn_rank"), col("vec_id"),
+            col("distance_score")).collect()
+          val (jobs, stages) = counter.settle()
+          assert(chosen == "hnsw")
+          assert(rows.length == 3 && cands(0).nonEmpty)
+          // one job whose only stage is the result stage: the exchange's
+          // map stage is skipped
+          assert(jobs == 1 && stages == 1,
+            s"request $i ran $jobs jobs and $stages stages; want 1 and 1")
+        }
+      } finally counter.close()
     } finally {
       import scala.reflect.io.Directory
       new Directory(new java.io.File(tmp)).deleteRecursively()
