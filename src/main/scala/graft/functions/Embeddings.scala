@@ -1,7 +1,13 @@
 package graft.functions
 
+import java.nio.charset.StandardCharsets
+
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow, UnsafeArrayData}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ColumnShim
+import org.apache.spark.sql.types.{ArrayType, FloatType, StringType, StructField, StructType}
 import scala.util.hashing.MurmurHash3
 
 /** Text-embedding contract + a deterministic offline encoder.
@@ -24,16 +30,17 @@ trait EmbeddingModel extends Serializable {
   def encodeBatch(texts: Seq[String]): Seq[Array[Float]] = texts.map(encode)
 }
 
-/** Deterministic feature-hashing encoder: token → (murmur3 bucket, ±1
-  * sign), accumulated then L2-normalized. Same text → same unit vector on
-  * any JVM. Empty/blank text → basis vector e₀ (a real encoder never
-  * returns the zero vector either).
-  */
 /** JVM-side md5 helpers mirroring the DuckDB-portable hash family
   * (`Duck.md5Long48`): lowercase hex digest, first 12 hex chars as a
   * non-negative 48-bit long. Shared by the portable embedder, the
-  * multimodal stub decoder, and the LSH sign planes so every consumer
-  * hashes identically to its SQL oracle.
+  * multimodal stub decoder, the LSH sign planes and the HNSW levels so
+  * every consumer hashes identically to its SQL oracle.
+  *
+  * Hash consumers read the digest BYTES ([[digestOf]], [[long48Of]]):
+  * the first 6 bytes big-endian are the first 12 hex chars, and byte 6's
+  * top bit is the 13th hex nibble's `>= 8`. No string is formatted or
+  * parsed on those paths. The hex strings ([[hex]], [[hexOfBytes]],
+  * [[hexOf]]) are for keys and display.
   */
 object Md5 {
   // per-thread digest instance: getInstance per call would pay a JCA
@@ -42,16 +49,43 @@ object Md5 {
     override def initialValue(): java.security.MessageDigest =
       java.security.MessageDigest.getInstance("MD5")
   }
-  def hexOfBytes(bytes: Array[Byte]): String = {
+  private val HexDigits = "0123456789abcdef".toCharArray
+
+  /** The raw 16-byte md5 digest of `bytes`. */
+  def digestOf(bytes: Array[Byte]): Array[Byte] = {
     val md = digest.get()
     md.reset()
-    md.digest(bytes).map(b => f"${b & 0xff}%02x").mkString
+    md.digest(bytes)
   }
-  def hex(s: String): String = hexOfBytes(s.getBytes("UTF-8"))
+
+  /** The first 6 digest bytes read big-endian: a non-negative 48-bit
+    * long, ≡ `parseLong(hex.substring(0, 12), 16)`.
+    */
+  def long48Of(digest: Array[Byte]): Long = {
+    var h = 0L
+    var i = 0
+    while (i < 6) { h = (h << 8) | (digest(i) & 0xffL); i += 1 }
+    h
+  }
+
+  /** A digest as lowercase hex, two chars per byte. */
+  def hexOf(digest: Array[Byte]): String = {
+    val out = new Array[Char](2 * digest.length)
+    var i = 0
+    while (i < digest.length) {
+      out(2 * i) = HexDigits((digest(i) >> 4) & 0xf)
+      out(2 * i + 1) = HexDigits(digest(i) & 0xf)
+      i += 1
+    }
+    new String(out)
+  }
+  /** Lowercase hex of the md5 digest of `bytes` (32 chars). */
+  def hexOfBytes(bytes: Array[Byte]): String = hexOf(digestOf(bytes))
+  def hex(s: String): String = hexOfBytes(s.getBytes(StandardCharsets.UTF_8))
   /** First 12 hex chars as a non-negative 48-bit long (≡ DuckDB
     * `('0x' || substring(md5(s), 1, 12))::BIGINT`).
     */
-  def long48(s: String): Long = java.lang.Long.parseLong(hex(s).substring(0, 12), 16)
+  def long48(s: String): Long = long48Of(digestOf(s.getBytes(StandardCharsets.UTF_8)))
 }
 
 /** Cross-engine-portable feature-hashing encoder: token → md5-derived
@@ -74,14 +108,15 @@ final case class Md5PortableEmbedder(dim: Int = 64) extends EmbeddingModel {
     // Locale.ROOT: the default-locale overload would produce dotless-ı
     // tokens under a tr/az JVM locale and break oracle parity with
     // DuckDB's locale-independent lower()
-    val tokens = text.toLowerCase(java.util.Locale.ROOT).split("[^a-z0-9]+")
+    val tokens = Md5PortableEmbedder.TokenSplit.split(text.toLowerCase(java.util.Locale.ROOT))
     var any = false
     tokens.foreach { t =>
       if (t.nonEmpty) {
         any = true
-        val hex = Md5.hex(t)
-        val idx = (java.lang.Long.parseLong(hex.substring(0, 12), 16) % dim).toInt
-        val sign = if (Character.digit(hex.charAt(12), 16) < 8) 1.0 else -1.0
+        val d = Md5.digestOf(t.getBytes(StandardCharsets.UTF_8))
+        val idx = (Md5.long48Of(d) % dim).toInt
+        // 13th hex nibble < 8 ⇔ byte 6's top bit clear
+        val sign = if (d(6) >= 0) 1.0 else -1.0
         acc(idx) += sign
       }
     }
@@ -97,6 +132,16 @@ final case class Md5PortableEmbedder(dim: Int = 64) extends EmbeddingModel {
   }
 }
 
+object Md5PortableEmbedder {
+  // ≡ String.split("[^a-z0-9]+"), compiled once instead of per call
+  private val TokenSplit = java.util.regex.Pattern.compile("[^a-z0-9]+")
+}
+
+/** Deterministic feature-hashing encoder: token → (murmur3 bucket, ±1
+  * sign), accumulated then L2-normalized. Same text → same unit vector on
+  * any JVM. Empty/blank text → basis vector e₀ (a real encoder never
+  * returns the zero vector either).
+  */
 final case class HashingEmbedder(dim: Int = 384, seed: Int = 42) extends EmbeddingModel {
   override def encode(text: String): Array[Float] = {
     val acc = new Array[Double](dim)
@@ -171,28 +216,40 @@ object Embeddings {
     * model initialized once per partition (in real deployments the model
     * is a broadcast variable / executor-local singleton, per
     * `streamlit_app.py:25-28`'s `@st.cache_resource`), rows embedded in
-    * batches.
+    * batches of `batchSize` through [[EmbeddingModel.encodeBatch]].
+    *
+    * Output: every input column as it is, then `outCol`
+    * (`array<float>` with no null elements, nullable). NULL text embeds
+    * as the empty string. Rows are built as catalyst rows — the input
+    * row carried through, the vector written as a primitive float array
+    * (`UnsafeArrayData.fromPrimitiveArray`) — with no Row encoder, which
+    * would box every component.
+    *
+    * The rows come from `df.queryExecution.toRdd`, so this call plans
+    * `df` when it is made (not when the result runs), and under
+    * adaptive execution it also runs any exchange in `df`'s plan.
     */
   def embedDataFrame(df: DataFrame, textCol: String, outCol: String,
                      model: EmbeddingModel, batchSize: Int = 256): DataFrame = {
     val spark = df.sparkSession
-    val bcModel = spark.sparkContext.broadcast(model)
-    val schema = org.apache.spark.sql.types.StructType(
-      df.schema.fields :+ org.apache.spark.sql.types.StructField(
-        outCol,
-        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType, containsNull = false),
-        nullable = true))
     val textIdx = df.schema.fieldNames.indexOf(textCol)
     require(textIdx >= 0, s"no column $textCol")
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    df.mapPartitions { rows =>
+    require(df.schema(textIdx).dataType.isInstanceOf[StringType],
+      s"column $textCol is ${df.schema(textIdx).dataType.simpleString}, not string")
+    val schema = StructType(df.schema.fields :+
+      StructField(outCol, ArrayType(FloatType, containsNull = false), nullable = true))
+    val bcModel = spark.sparkContext.broadcast(model)
+    val rows = df.queryExecution.toRdd.mapPartitions[InternalRow] { it =>
       val m = bcModel.value
-      rows.grouped(batchSize).flatMap { batch =>
-        val vecs = m.encodeBatch(batch.map(r => Option(r.getString(textIdx)).getOrElse("")))
+      // the scan reuses its row object: copy each one kept for a batch
+      it.map(_.copy()).grouped(batchSize).flatMap { batch =>
+        val vecs = m.encodeBatch(batch.map(r =>
+          if (r.isNullAt(textIdx)) "" else r.getUTF8String(textIdx).toString))
         batch.lazyZip(vecs).map { (r, v) =>
-          org.apache.spark.sql.Row.fromSeq(r.toSeq :+ v.toSeq)
+          new JoinedRow(r, new GenericInternalRow(Array[Any](UnsafeArrayData.fromPrimitiveArray(v))))
         }
       }
-    }(enc)
+    }
+    ColumnShim.internalCreateDataFrame(spark, rows, schema)
   }
 }

@@ -60,14 +60,14 @@ object Multimodal {
     private val embedder: EmbeddingModel = Md5PortableEmbedder(dim = featureDim)
 
     def decode(bytes: Array[Byte]): (Row, Array[Float]) = {
-      val hex = Md5.hexOfBytes(bytes)
-      val h = java.lang.Long.parseLong(hex.substring(0, 12), 16) // 48-bit, non-negative
+      val digest = Md5.digestOf(bytes)
+      val h = Md5.long48Of(digest) // 48-bit, non-negative
       val w = 64 + (h % 1024L).toInt
       val ht = 64 + ((h >> 10) % 1024L).toInt
       val ch = 1 + ((h >> 20) % 4L).toInt
       val dur = (h >> 22) % 600000L
       val meta = Row("stub", w, ht, ch, dur)
-      val featInput = hex.grouped(2).mkString(" ")
+      val featInput = Md5.hexOf(digest).grouped(2).mkString(" ")
       (meta, embedder.encode(featInput))
     }
   }

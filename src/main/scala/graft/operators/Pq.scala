@@ -46,17 +46,36 @@ object Pq {
   /** Per-subspace KMeans codebooks: result is m × ksub × (D/m) floats.
     * Fit runs one Spark ML KMeans per subspace over the sliced vectors
     * (fixed seed ⇒ deterministic for a given input DataFrame).
+    *
+    * The m fits are independent, and each is a chain of small Spark
+    * jobs that leaves most cores idle, so they run concurrently on a
+    * pool of m threads created for this call (its threads inherit the
+    * caller's Spark local properties: job group, scheduler pool). Each
+    * fit sees the same input and seed as a sequential loop would, so
+    * the codebooks are the same; they come back in subspace order. The
+    * first failing fit, in subspace order, is rethrown.
     */
   def fitCodebooks(corpus: DataFrame, vecCol: String, dim: Int, m: Int,
                    ksub: Int, seed: Long = 42L,
                    maxIter: Int = 10): Array[Array[Array[Float]]] = {
     require(dim % m == 0, s"dim $dim not divisible by m $m")
     val dsub = dim / m
-    (0 until m).toArray.map { mi =>
-      val sub = corpus.select(
-        slice(col(vecCol), mi * dsub + 1, dsub).as("sub"))
-      Ann.kmeansCentroids(sub, "sub", ksub, seed + mi, maxIter)
-    }
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(m)
+    try {
+      val fits = (0 until m).map { mi =>
+        pool.submit(new java.util.concurrent.Callable[Array[Array[Float]]] {
+          def call(): Array[Array[Float]] = {
+            val sub = corpus.select(
+              slice(col(vecCol), mi * dsub + 1, dsub).as("sub"))
+            Ann.kmeansCentroids(sub, "sub", ksub, seed + mi, maxIter)
+          }
+        })
+      }
+      fits.map { f =>
+        try f.get()
+        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+      }.toArray
+    } finally pool.shutdown()
   }
 
   /** Corpus + `pq_codes` (array<int>, one nearest-codebook-entry id per

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Knn, Pq}
+import graft.operators.{Ann, Knn, Pq}
 import graft.queries.Queries
 import org.apache.spark.sql.functions._
 
@@ -144,5 +144,19 @@ class PqSpec extends SparkSpec {
       .queryExecution.executedPlan.toString
     assert(p.contains("TakeOrderedAndProject"), s"expected a top-k heap:\n$p")
     assert(!p.contains("Exchange"), s"ADC scan must not shuffle:\n$p")
+  }
+
+  test("parallel codebook fit ≡ a sequential loop over Ann.kmeansCentroids") {
+    val sequential = (0 until 8).toArray.map { mi =>
+      Ann.kmeansCentroids(emb.select(slice(col("embedding"), mi * 8 + 1, 8).as("sub")),
+        "sub", 16, 42L + mi, 10)
+    }
+    assert(java.util.Arrays.deepEquals(
+      cb.asInstanceOf[Array[AnyRef]], sequential.asInstanceOf[Array[AnyRef]]))
+  }
+
+  test("a failing codebook fit rethrows its own exception, not the pool's wrapper") {
+    intercept[org.apache.spark.sql.AnalysisException](
+      Pq.fitCodebooks(emb, "no_such_column", dim = 64, m = 8, ksub = 16))
   }
 }
