@@ -1,9 +1,14 @@
 package graft.operators
 
+import graft.functions.CosineDistance
 import graft.functions.VectorFunctions._
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.BoundReference
+import org.apache.spark.sql.catalyst.util.{SQLOrderingUtil, TypeUtils}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Exact (brute-force) k-nearest-neighbor search — the reference's
   * flagship query (`streamlit_app.py:55-73`):
@@ -114,4 +119,56 @@ object Knn {
       .withColumn("match_score", round((lit(1.0) - col(distCol)) * 100.0, 2))
       .withColumn("display_score", concat(col("match_score").cast("string"), lit("%")))
       .orderBy(col("match_score").desc, col(idCol).asc)
+
+  // ------------------------------------------------------------------
+  // In-task exact re-rank: the ANN paths that score their candidates
+  // where they find them (Nsw's opened graph, Pq's batch kernel) share
+  // the SQL re-rank's distance, ordering and result shape through these.
+  // ------------------------------------------------------------------
+
+  /** The SQL re-rank's cosine, evaluated directly inside a task:
+    * `CosineDistance` over a stored vector of type `vecType` (left) and
+    * an array<float> query (right) — Double accumulation in element
+    * order, NULL when a norm is 0 or the dimensions differ, exactly as
+    * [[search]]'s codegen'd expression computes it.
+    */
+  def taskCosine(vecType: DataType): CosineDistance =
+    CosineDistance(BoundReference(0, vecType, nullable = false),
+      BoundReference(1, ArrayType(FloatType), nullable = false))
+
+  /** SQL's `ORDER BY score ASC, id ASC` over catalyst values: NULL scores
+    * first, doubles by `SQLOrderingUtil.compareDoubles` (NaN last,
+    * -0.0 = 0.0), then the id column's own SQL ordering (NULL first).
+    */
+  def byScoreThenId(idType: DataType): Ordering[(java.lang.Double, Any)] = {
+    val ids = TypeUtils.getInterpretedOrdering(idType)
+    def nullsFirst[T](a: T, b: T)(cmp: => Int): Int =
+      if (a == null) { if (b == null) 0 else -1 } else if (b == null) 1 else cmp
+    (a, b) => {
+      val c = nullsFirst(a._1, b._1)(
+        SQLOrderingUtil.compareDoubles(a._1.doubleValue, b._1.doubleValue))
+      if (c != 0) c else nullsFirst(a._2, b._2)(ids.compare(a._2, b._2))
+    }
+  }
+
+  /** The driver's half of an in-task re-rank: each query's top k of its
+    * (query_id, distance, id) hits by [[byScoreThenId]], as a local
+    * DataFrame (query_id, knn_rank, `idCol`, distance_score), queries
+    * ascending. Ids are catalyst values of `idType`.
+    */
+  def rankedLocal(spark: SparkSession, idCol: String, idType: DataType,
+                  hits: Seq[(Int, java.lang.Double, Any)], k: Int): DataFrame = {
+    val order = byScoreThenId(idType)
+    val toScala = CatalystTypeConverters.createToScalaConverter(idType)
+    val ranked = hits.groupBy(_._1).toSeq.sortBy(_._1).flatMap { case (qid, rs) =>
+      rs.map(r => (r._2, r._3)).sorted(order).take(k).zipWithIndex
+        .map { case ((d, id), i) => Row(qid, i + 1, toScala(id), d) }
+    }
+    val schema = StructType(Seq(
+      StructField("query_id", IntegerType, nullable = false),
+      StructField("knn_rank", IntegerType, nullable = false),
+      StructField(idCol, idType),
+      StructField("distance_score", DoubleType)))
+    spark.createDataFrame(java.util.Arrays.asList(ranked: _*), schema)
+  }
 }

@@ -626,26 +626,6 @@ object Nsw {
   def openGraph(graph: DataFrame, nShards: Int): OpenedGraph =
     new OpenedGraph(graph, nShards)
 
-  /** The SQL re-rank's own distance: `CosineDistance` over two float
-    * arrays, evaluated directly — Double accumulation in element order,
-    * NULL when a norm is 0 or the dimensions differ.
-    */
-  private val rerankCosine = graft.functions.CosineDistance(
-    BoundReference(0, ArrayType(FloatType), nullable = false),
-    BoundReference(1, ArrayType(FloatType), nullable = false))
-
-  /** SQL's `ORDER BY distance_score ASC, id ASC`: NULLs first, doubles by
-    * `SQLOrderingUtil.compareDoubles` (NaN last, -0.0 = 0.0), then id.
-    */
-  private val byScoreThenId: Ordering[(java.lang.Double, Long)] = (a, b) => {
-    val c =
-      if (a._1 == null) { if (b._1 == null) 0 else -1 }
-      else if (b._1 == null) 1
-      else org.apache.spark.sql.catalyst.util.SQLOrderingUtil
-        .compareDoubles(a._1.doubleValue, b._1.doubleValue)
-    if (c != 0) c else java.lang.Long.compare(a._2, b._2)
-  }
-
   /** The one search over an [[OpenedGraph]], in ONE Spark job: each task
     * reads one exchanged partition, builds the lookup of every shard in
     * it that some query is routed to (`routes` = None: every shard, for
@@ -654,7 +634,8 @@ object Nsw {
     * writes the corpus vectors as `array<float>`, so this is the value
     * the SQL re-rank over the corpus computes). A task sends the driver
     * ≤ (shards it holds for the query)·efSearch rows per query; the
-    * driver keeps the top k per query by (distance ASC NULLS FIRST, id).
+    * driver keeps the top k per query by (distance ASC NULLS FIRST, id)
+    * ([[Knn.rankedLocal]]).
     * Returns the ranked rows (query_id, knn_rank, `idCol`,
     * distance_score) as a local DataFrame, plus the per-query candidate
     * ids (for the late-bound oracle, which re-ranks exactly these).
@@ -666,6 +647,7 @@ object Nsw {
     val routeSets = routes.map(_.map { case (q, shs) => q -> shs.toSet })
     val wanted = routeSets.map(_.values.flatten.toSet)
     val found = graph.shardRows(wanted).mapPartitions { it =>
+      val cosine = Knn.taskCosine(ArrayType(FloatType))
       val rows = it.filter(ir => wanted.forall(_.contains(ir.getInt(0))))
         .map { ir =>
           (ir.getInt(0), ir.getLong(1), ir.getArray(2).toFloatArray(),
@@ -680,24 +662,15 @@ object Nsw {
           .flatMap { case (qid, qv) =>
             val q = UnsafeArrayData.fromPrimitiveArray(qv)
             beamSearch(qv, entry, vecs, adj, efSearch).iterator.map { case (_, id) =>
-              (qid, id, rerankCosine.nullSafeEval(
+              (qid, id, cosine.nullSafeEval(
                 UnsafeArrayData.fromPrimitiveArray(vecs(id)), q).asInstanceOf[java.lang.Double])
             }
           }
       }
     }.collect()
-    val byQ = found.groupBy(_._1)
-    val ranked = byQ.toSeq.sortBy(_._1).flatMap { case (qid, rs) =>
-      rs.map(r => (r._3, r._2)).sorted(byScoreThenId).take(k).zipWithIndex
-        .map { case ((d, id), i) => Row(qid, i + 1, id, d) }
-    }
-    val schema = StructType(Seq(
-      StructField("query_id", IntegerType, nullable = false),
-      StructField("knn_rank", IntegerType, nullable = false),
-      StructField(idCol, LongType),
-      StructField("distance_score", DoubleType)))
-    (graph.spark.createDataFrame(java.util.Arrays.asList(ranked: _*), schema),
-      byQ.map { case (q, rs) => q -> rs.map(_._2).toSeq.sorted })
+    (Knn.rankedLocal(graph.spark, idCol, LongType,
+        found.toSeq.map(r => (r._1, r._3, r._2)), k),
+      found.groupBy(_._1).map { case (q, rs) => q -> rs.map(_._2).toSeq.sorted })
   }
 
   /** Batch search: every query beams every shard of the opened store in

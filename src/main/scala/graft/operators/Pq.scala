@@ -1,9 +1,14 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.VectorFunctions.cosineDistance
+import org.apache.spark.sql.types.DataType
+
+import scala.jdk.CollectionConverters._
 
 /** Product quantization (PQ) — the memory-bound ANN serving path the
   * reference's engine family offers alongside IVF (Jégou et al., "Product
@@ -19,9 +24,12 @@ import graft.functions.VectorFunctions.cosineDistance
   * m=8). Query scoring is ADC (asymmetric distance computation): the
   * query precomputes an m×ksub table of squared subspace distances on
   * the driver, and each row's approximate squared L2 distance is m
-  * table lookups + (m−1) adds — a codegen'd projection over the codes
-  * column, no vector arithmetic, no shuffle, TakeOrderedAndProject for
-  * the top-k. At 100 TB the codes relation is ~1/32 the corpus bytes
+  * table lookups + (m−1) adds, no vector arithmetic, no shuffle. One
+  * query ([[search]]) is a codegen'd projection over the codes column
+  * under TakeOrderedAndProject; a query batch ([[batchSearch]]) is one
+  * pass over the codes in which each task keeps a bounded heap per
+  * query, then one In-pruned read of the shortlisted vectors re-ranked
+  * in the task. At 100 TB the codes relation is ~1/32 the corpus bytes
   * and the scan is memory-bandwidth-bound exactly like the int8 path.
   *
   * Determinism/parity contract (mirrored by the late-bound DuckDB
@@ -32,7 +40,8 @@ import graft.functions.VectorFunctions.cosineDistance
   *   - the ADC table is computed ONCE driver-side in Double and embedded
   *     as exact decimal literals on both engines;
   *   - the per-row ADC sum is a FIXED left-associated add chain (both
-  *     engines evaluate ((d0+d1)+d2)+… in subspace order);
+  *     engines, and the batch kernel's task loop, evaluate
+  *     ((d0+d1)+d2)+… in subspace order);
   *   - top-k SELECTION runs on the full-precision (adc, id) key;
   *     presentation rounds to 6 decimals and re-sorts on the rounded
   *     alias (the sf10 decade-gate rule).
@@ -95,6 +104,7 @@ object Pq {
   /** The query's ADC table: adcTable(m)(c) = Σᵢ (q[m·dsub+i] −
     * codebook[m](c)(i))² — squared subspace L2, sequential Double
     * accumulation (same order as [[l2Distance]] without the sqrt).
+    * The query must have exactly m·dsub components.
     */
   def adcTable(queryVec: Array[Float],
                codebooks: Array[Array[Array[Float]]]): Array[Array[Double]] =
@@ -109,6 +119,9 @@ object Pq {
   def adcTableD(queryVec: Array[Double],
                 codebooks: Array[Array[Array[Float]]]): Array[Array[Double]] = {
     val dsub = codebooks(0)(0).length
+    require(queryVec.length == codebooks.length * dsub,
+      s"query vector has ${queryVec.length} components; the codebooks " +
+        s"score ${codebooks.length * dsub} (m = ${codebooks.length} × dsub = $dsub)")
     codebooks.zipWithIndex.map { case (cb, mi) =>
       cb.map { c =>
         var acc = 0.0; var i = 0
@@ -168,68 +181,89 @@ object Pq {
   def readEncoded(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
 
-  /** Batch multi-query PQ serving: every query in `queries` gets its own
-    * driver-computed ADC table, compiled into ONE codegen'd CASE chain
-    * keyed on query_id — so the corpus×queries BroadcastNestedLoopJoin
-    * scores every pair with table lookups, never vector arithmetic. The
-    * per-query shortlist comes from a rank window (WindowGroupLimit caps
-    * the sort at `shortlist` per query); only shortlisted rows read the
-    * vector column for the exact rescore. The corpus never shuffles
-    * vectors — the rank shuffle carries (query_id, id, adc) rows.
+  /** Batch multi-query PQ serving in TWO Spark jobs — the micro-batch
+    * serving kernel ([[graft.streaming.VectorServing.dispatchServingBatch]]'s
+    * pq branch, [[batchSearchRescore]], the filtered batch gate):
+    *   1. [[batchShortlist]]: one pass over `codes` keeps every query's
+    *      `shortlist` best ADC rows;
+    *   2. one pass over `vectors` filtered to the shortlisted ids (the In
+    *      filter pushes into a parquet scan: row-group pruning, ~B ×
+    *      shortlist × dim·4 bytes read), scoring each shortlisted row
+    *      against the queries that shortlisted it with the SQL re-rank's
+    *      own cosine ([[Knn.taskCosine]]), in the task.
+    * The driver keeps the top k per query by (distance ASC NULLS FIRST,
+    * id) and returns a local DataFrame (query_id, knn_rank, `idCol`,
+    * distance_score), plus each query's shortlist ids in (adc, id) order
+    * — the late oracle re-ranks exactly these. Nothing shuffles, and the
+    * driver holds at most B × shortlist ids.
     *
-    * This is the micro-batch serving kernel: a streaming foreachBatch
-    * collects its (small-by-contract) query batch, builds the tables,
-    * and runs this one distributed job per batch.
-    *
-    * EAGER: unlike most DataFrame builders here, calling this runs
-    * Spark jobs immediately (the shortlist is localCheckpointed and its
-    * ids collected so they can be pushed into the vector scan as an In
-    * filter — the r21 pushdown fix). The driver holds B×shortlist ids.
+    * EAGER: both jobs run when this is called. `idCol` may be any
+    * orderable type (int, long, string: ties break by its own SQL
+    * ordering), the same in `codes` and `vectors`.
+    */
+  def batchSearch(codes: DataFrame, vectors: DataFrame, vecCol: String,
+                  idCol: String, queries: Seq[(Int, Array[Float])],
+                  codebooks: Array[Array[Array[Float]]], k: Int,
+                  shortlist: Int): (DataFrame, Map[Int, Seq[Any]]) = {
+    require(k >= 1, s"k must be >= 1, got $k")
+    val idType = codes.schema(idCol).dataType
+    require(vectors.schema(idCol).dataType == idType,
+      s"$idCol is ${vectors.schema(idCol).dataType.catalogString} in the vectors " +
+        s"but ${idType.catalogString} in the codes")
+    val lists = batchShortlist(codes, idCol, queries, codebooks, shortlist)
+      .map { case (q, l) => q -> l.map(_._2) }
+    val qids = queries.map(_._1).toArray
+    val qvecs = queries.map(_._2).toArray
+    // catalyst id → indices of the queries that shortlisted it
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(idType)
+    val wanted: Map[Any, Array[Int]] = qids.indices
+      .flatMap(q => lists(qids(q)).map(id => toCatalyst(id) -> q))
+      .groupBy(_._1).map { case (id, qs) => id -> qs.map(_._2).distinct.toArray }
+    // In-filter literals in string order: plan determinism only
+    val read = vectorRead(vectors, vecCol, idCol,
+      lists.values.flatten.toSeq.distinct.sortBy(String.valueOf(_)))
+    val vecType = read.schema(1).dataType
+    val hits = read.queryExecution.toRdd.mapPartitions { it =>
+      val cosine = Knn.taskCosine(vecType)
+      val qs = qvecs.map(UnsafeArrayData.fromPrimitiveArray)
+      it.flatMap { row =>
+        wanted.get(row.get(0, idType)).iterator.flatMap { qIdx =>
+          val id = InternalRow.copyValue(row.get(0, idType))
+          qIdx.iterator.map { q =>
+            val d = if (row.isNullAt(1)) null
+              else cosine.nullSafeEval(row.getArray(1), qs(q)).asInstanceOf[java.lang.Double]
+            (qids(q), d, id)
+          }
+        }
+      }
+    }.collect()
+    (Knn.rankedLocal(vectors.sparkSession, idCol, idType, hits.toSeq, k), lists)
+  }
+
+  /** [[batchSearch]]'s second job reads exactly this: `vectors` filtered
+    * to `ids` (pushed into the scan), projected to (`idCol`, `vecCol`).
+    */
+  private[graft] def vectorRead(vectors: DataFrame, vecCol: String, idCol: String,
+                                ids: Seq[Any]): DataFrame =
+    vectors.filter(col(idCol).isin(ids: _*)).select(col(idCol), col(vecCol))
+
+  /** [[batchSearch]] over one encoded relation that carries both the
+    * codes and the vectors. Ranked rows (query_id, knn_rank, `idCol`,
+    * distance_score); EAGER, like [[batchSearch]].
     */
   def batchSearchRescore(encoded: DataFrame, vecCol: String, idCol: String,
                          queries: Seq[(Int, Array[Float])],
                          codebooks: Array[Array[Array[Float]]],
-                         k: Int, shortlist: Int): DataFrame = {
-    // eager shortlist (bounded at B×shortlist rows by construction —
-    // the same driver-held budget VectorServing.dispatchServingBatch
-    // collects), so the candidate ids can be pushed INTO the vector
-    // scan as an In filter: PushedFilters → parquet row-group pruning,
-    // and the rescore reads ~shortlist×dim·4 bytes instead of a full
-    // vector-column pass (guide §6; closes r20's one perf `weak` — the
-    // lazy API now executes the same pruned plan as the dispatch path).
-    // localCheckpoint also stops the join from recomputing the whole
-    // ADC rank pipeline a second time for the broadcast build.
-    val cand = batchShortlist(encoded, idCol, queries, codebooks, shortlist)
-      .localCheckpoint()
-    // collect ids GENERICALLY (ADVICE r21: getLong threw on int/string
-    // id columns); order of the In-filter literals is stabilized by
-    // string form — it never affects results, only plan determinism.
-    // NOTE (API contract): this method is EAGER — the shortlist runs as
-    // Spark jobs (localCheckpoint + collect) at DataFrame-construction
-    // time so the candidate ids can be pushed into the vector scan.
-    val ids = cand.select(col(idCol)).distinct()
-      .collect().map(_.get(0)).sortBy(String.valueOf(_)).toSeq
-    // vector fetch AFTER the shortlist: one column-pruned, id-pruned
-    // (id, vec) pass joined against the broadcast B×shortlist candidate
-    // set — the wide vector column never rides the rank's sort/exchange
-    // (see batchShortlist's narrowing note)
-    val w2 = Window.partitionBy(col("query_id"))
-      .orderBy(col("distance_score").asc, col(idCol).asc)
-    encoded.select(col(idCol), col(vecCol))
-      .filter(col(idCol).isin(ids: _*))
-      .join(broadcast(cand), Seq(idCol))
-      .withColumn("distance_score", cosineDistance(col(vecCol), col("query_vec")))
-      .withColumn("knn_rank", row_number().over(w2))
-      .filter(col("knn_rank") <= k)
-  }
+                         k: Int, shortlist: Int): DataFrame =
+    batchSearch(encoded, encoded, vecCol, idCol, queries, codebooks, k, shortlist)._1
 
   /** The PER-QUERY execution shape of batch PQ serving: B independent
     * TakeOrderedAndProject scans of the codes relation (zero shuffle,
     * zero sort — each is [[searchRescore]]'s plan), unioned and
-    * re-ranked. Reads B× the codes bytes of [[batchSearchRescore]] but
-    * skips its map-side rank sort entirely — the faster shape whenever
-    * the codes store is CACHE-RESIDENT (measured ~2.4× at 2M codes ×
-    * 32 queries), and the losing one when it is not;
+    * re-ranked. Reads B× the codes bytes of [[batchSearchRescore]]; it
+    * measured ~2.4× faster than the shared pass at a CACHE-RESIDENT
+    * 2M codes × 32 queries when that pass still ranked under a map-side
+    * window sort, and loses whenever the codes are not cache-resident;
     * [[graft.plans.IvfProbeRule.choosePqBatchShape]] makes that call
     * from one replayable integer comparison. Identical output to
     * [[batchSearchRescore]] by the ADC determinism contract.
@@ -250,53 +284,79 @@ object Pq {
       .filter(col("knn_rank") <= k)
   }
 
-  /** The ADC-shortlist stage of [[batchSearchRescore]] alone — ONE
-    * shared pass over the codes column for the WHOLE batch (the
-    * amortized N·m scan the batch-aware cost model prices; r19 verdict
-    * #1), with every query's driver-computed ADC table compiled into a
-    * single codegen'd CASE chain. Returns the per-query shortlist rows
-    * (query_id, idCol, adc_dist, adc_rank ≤ shortlist, query_vec —
-    * B × shortlist rows total), for a caller that records the ids (the
-    * serving oracle contract) and/or rescores them against the vector
-    * store.
+  /** The ADC-shortlist job of [[batchSearch]] alone: ONE pass over the
+    * codes for the WHOLE batch (the amortized N·m scan the batch-aware
+    * cost model prices). Each task keeps, per query, a bounded heap of
+    * its `shortlist` best rows by (adc ASC NULLS FIRST, id ASC), with
+    * adc = t(0)(c₀) + t(1)(c₁) + … added left to right in Double over
+    * the query's driver-computed table t ([[adcTable]]; the same sum
+    * [[adcScore]] builds), NULL for a NULL `pq_codes` array or element;
+    * the driver merges the heaps. Returns each query's shortlist as
+    * (adc, id) in that order (ids as Scala values).
     *
-    * The rank's sort/exchange carries the NARROW (query_id, id, adc)
-    * projection ONLY — the codes array and the dim-float query vectors
-    * must not ride a B×N-row sort (measured 2× wall-clock at 2M rows ×
-    * 32 queries, unboundedly worse at 100 TB where the sort payload
-    * would be B×N×(m + dim·4) bytes); query_vec is re-attached by a
-    * broadcast join on the shortlist-sized survivor set. The ADC CASE
-    * chain keys on query_id alone (the tables are driver-computed
-    * literals), so the broadcast side of the scan join is one INT per
-    * query.
+    * A `pq_codes` array whose length is not m, or a code outside
+    * [0, ksub), fails the job with a message naming the row's id.
     */
-  def batchShortlist(encoded: DataFrame, idCol: String,
+  def batchShortlist(codes: DataFrame, idCol: String,
                      queries: Seq[(Int, Array[Float])],
                      codebooks: Array[Array[Array[Float]]],
-                     shortlist: Int): DataFrame = {
-    // an empty batch would fold the ADC CASE chain to lit(NaN) and an
-    // unknown caller-supplied query_id silently scores NaN — fail fast
-    // instead (ADVICE r20)
+                     shortlist: Int): Map[Int, Seq[(java.lang.Double, Any)]] = {
     require(queries.nonEmpty, "batchShortlist: empty query batch")
     require(queries.map(_._1).distinct.length == queries.length,
       "batchShortlist: duplicate query ids")
-    val spark = encoded.sparkSession
-    import spark.implicits._
-    val qdf = spark.createDataFrame(queries.map { case (i, v) => (i, v.toSeq) })
-      .toDF("query_id", "query_vec")
-    val qids = queries.map(_._1).toDF("query_id")
-    val adcByQ = queries.map { case (qid, v) =>
-      qid -> adcScore(col("pq_codes"), adcTable(v, codebooks))
-    }.foldLeft(lit(Double.NaN)) { case (acc, (qid, sc)) =>
-      when(col("query_id") === qid, sc).otherwise(acc)
+    require(shortlist >= 1, s"shortlist must be >= 1, got $shortlist")
+    val tables = queries.map { case (_, v) => adcTable(v, codebooks) }.toArray
+    val m = codebooks.length
+    val rel = codes.select(col(idCol), col("pq_codes"))
+    val idType = rel.schema(0).dataType
+    val found = rel.queryExecution.toRdd.mapPartitions { it =>
+      val order = Knn.byScoreThenId(idType)
+      val heaps = tables.map(_ =>
+        new java.util.PriorityQueue[(java.lang.Double, Any)](shortlist, order.reverse))
+      it.foreach { row =>
+        val id = if (row.isNullAt(0)) null else InternalRow.copyValue(row.get(0, idType))
+        val cs = if (row.isNullAt(1)) null else row.getArray(1)
+        if (cs != null && cs.numElements() != m)
+          throw new IllegalArgumentException(
+            s"pq_codes of $idCol = $id has ${cs.numElements()} codes; want m = $m")
+        var q = 0
+        while (q < tables.length) {
+          val e = (adcOf(tables(q), cs, idCol, id), id)
+          val h = heaps(q)
+          if (h.size < shortlist) h.add(e)
+          else if (order.lt(e, h.peek())) { h.poll(); h.add(e) }
+          q += 1
+        }
+      }
+      heaps.iterator.zipWithIndex.flatMap { case (h, q) =>
+        h.iterator.asScala.map(e => (q, e))
+      }
+    }.collect()
+    val order = Knn.byScoreThenId(idType)
+    val toScala = CatalystTypeConverters.createToScalaConverter(idType)
+    val byQ = found.groupBy(_._1)
+    queries.indices.map { q =>
+      queries(q)._1 -> byQ.getOrElse(q, Array.empty).map(_._2).sorted(order)
+        .take(shortlist).map { case (adc, id) => (adc, toScala(id)) }.toSeq
+    }.toMap
+  }
+
+  /** One row's ADC against one query's table: the left-associated sum,
+    * NULL when the codes or one of them is NULL.
+    */
+  private def adcOf(t: Array[Array[Double]], cs: ArrayData, idCol: String,
+                    id: Any): java.lang.Double = {
+    if (cs == null) return null
+    var acc = 0.0; var mi = 0
+    while (mi < t.length) {
+      if (cs.isNullAt(mi)) return null
+      val c = cs.getInt(mi)
+      if (c < 0 || c >= t(mi).length)
+        throw new IllegalArgumentException(
+          s"pq_codes of $idCol = $id: code $c in subspace $mi is outside [0, ${t(mi).length})")
+      acc = if (mi == 0) t(0)(c) else acc + t(mi)(c)
+      mi += 1
     }
-    val w1 = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_dist").asc, col(idCol).asc)
-    encoded.select(col(idCol), col("pq_codes"))
-      .crossJoin(broadcast(qids))
-      .select(col("query_id"), col(idCol), adcByQ.as("adc_dist"))
-      .withColumn("adc_rank", row_number().over(w1))
-      .filter(col("adc_rank") <= shortlist)
-      .join(broadcast(qdf), Seq("query_id"))
+    acc
   }
 }

@@ -165,9 +165,9 @@ object StreamingQueries {
     "stream_serve_pq",
     "Micro-batch PQ serving run to completion: the knn_batch query " +
       "vectors stream through VectorServing.servePqKnn in two " +
-      "micro-batches; each batch compiles its per-query ADC tables into " +
-      "one codegen'd CASE chain over the codes column, shortlists 20 " +
-      "per query, and exact-rescores only the shortlist. The hashed " +
+      "micro-batches; each batch scores the codes column against its " +
+      "per-query ADC tables in one pass, keeping a shortlist-20 heap " +
+      "per query in each task, and exact-rescores only the shortlist. The hashed " +
       "result is the FINAL sink table; the oracle is the one-shot " +
       "ann_pq_batch SQL (single builder) — green proves the streaming " +
       "PQ loop reproduces the batch answer regardless of batching.",

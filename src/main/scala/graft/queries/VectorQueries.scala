@@ -1858,22 +1858,11 @@ object VectorQueries {
         val (ranked, rec) = chosen match {
           case "pq" =>
             // one shared ADC pass (the amortized term the model
-            // priced), per-query predicate rescore over sl_eff rows
-            val pairs = Pq.batchShortlist(codes, "vec_id", qs, cb,
-                slEff.toInt)
-              .select(col("query_id"), col("vec_id")).collect()
-              .map(r => (r.getInt(0), r.getLong(1)))
-            val sl = qs.map { case (qid, _) =>
-              qid -> pairs.collect { case (q2, id) if q2 == qid => id }
-                .toSeq.sorted
-            }.toMap
-            val legsDf = qs.map { case (qid, qv) =>
-              Knn.search(withPred(corpus.filter(
-                  col("vec_id").isin(sl(qid): _*))),
-                "embedding", "vec_id", qv, k = 3)
-                .withColumn("query_id", lit(qid))
-            }
-            (rank(legsDf), sl)
+            // priced), then the predicate-filtered rescore of each
+            // query's sl_eff shortlist
+            val (res, sl) = Pq.batchSearch(codes, withPred(corpus),
+              "embedding", "vec_id", qs, cb, k = 3, slEff.toInt)
+            (res, sl.map { case (q, ids) => q -> ids.map(_.asInstanceOf[Long]).sorted })
           case "hnsw" =>
             val (_, cands, _) = Nsw.routedBatchSearch(
               Nsw.openGraph(graph, p.nShards), "vec_id", qs, k = 3,
@@ -2229,13 +2218,14 @@ object VectorQueries {
   private val pqBatch = QueryDef(
     "ann_pq_batch",
     "Batch multi-query PQ serving: the knn_batch query table scored " +
-      "against the CODES column — each query's ADC table compiles into " +
-      "one codegen'd CASE chain keyed on query_id, so the corpus×5 " +
-      "BNLJ does table lookups, not vector math; per-query shortlist-20 " +
-      "via a rank window (WindowGroupLimit), exact cosine rescore only " +
-      "on the shortlist. The micro-batch serving kernel — same output " +
-      "shape as knn_batch. Late oracle: per-query ADC chains over the " +
-      "shared recomputed codes + per-query rescore, unioned.",
+      "against the CODES column in one pass — each task looks every " +
+      "row up in the 5 driver-computed ADC tables (table lookups, not " +
+      "vector math) and keeps a bounded shortlist-20 heap per query; " +
+      "the driver merges the heaps, then one In-pruned read of the " +
+      "shortlisted vectors is exact-cosine rescored in the task. Two " +
+      "Spark jobs, no shuffle. The micro-batch serving kernel — same " +
+      "output shape as knn_batch. Late oracle: per-query ADC chains " +
+      "over the shared recomputed codes + per-query rescore, unioned.",
     (s, dir) => {
       val cb = PqStore.ensure(s, dir)
       val enc = Pq.encode(Tables.embeddings(s, dir), "embedding", cb)
@@ -2293,7 +2283,8 @@ object VectorQueries {
       "TakeOrdered scans do the SAME ADC arithmetic but their " +
       "wall-clock inverts with the cache regime — B zero-shuffle " +
       "scans ran ~2.4× faster at a cache-resident 2M-code store " +
-      "(the shared pass pays a map-side rank sort), while beyond " +
+      "(measured when the shared pass still ranked under a map-side " +
+      "sort; it now keeps per-task heaps), while beyond " +
       "cache the shared pass wins by the full B× on disk bytes. " +
       "IvfProbeRule.choosePqBatchShape makes the call from ONE " +
       "replayable integer comparison (codesBytes = N·m vs the " +

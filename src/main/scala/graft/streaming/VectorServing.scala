@@ -262,38 +262,16 @@ object VectorServing {
         (res, chosen, (ivfB, lshB, hnswB, pqB), cands)
       case "pq" =>
         // the EXECUTED plan is the PRICED plan (r19 verdict #1): ONE
-        // shared ADC pass over the codes store for the whole batch —
-        // every query's table compiled into Pq.batchShortlist's single
-        // codegen'd CASE chain — then ONE distributed exact re-rank
-        // that broadcast-joins the shortlist ids back to the vector
-        // store. Never B code scans, never B corpus scans; the only
-        // collect is the B × pqShortlist (query_id, id) shortlist
-        // rows, which is also what the late oracle re-ranks.
-        val spark = idx.corpus.sparkSession
-        val pairs = Pq.batchShortlist(idx.encoded, corpusIdCol, qs,
-            idx.codebooks, idx.pqShortlist)
-          .select(col("query_id"), col(corpusIdCol)).collect()
-          .map(r => (r.getInt(0), r.getLong(1))).toIndexedSeq
-        val shortlists = qs.map { case (qid, _) =>
-          qid -> pairs.collect { case (q, id) if q == qid => id }.sorted.toSeq
-        }.toMap
-        val shortDf = spark.createDataFrame(pairs)
-          .toDF("query_id", corpusIdCol)
-        val qdf = spark.createDataFrame(qs.map { case (i, v) => (i, v.toSeq) })
-          .toDF("query_id", "query_vec")
-        // the isin literal (≤ B × pqShortlist ids) pushes to the parquet
-        // scan (PushedFilters: In → row-group pruning), so the rescore
-        // approaches the shortlist × dim·4 point-lookup bytes the cost
-        // model prices instead of a full vector-column pass
-        val allIds = pairs.map(_._2).distinct.sorted
-        val rescored = idx.corpus
-          .filter(col(corpusIdCol).isin(allIds: _*))
-          .join(broadcast(shortDf), Seq(corpusIdCol))
-          .join(broadcast(qdf), Seq("query_id"))
-          .withColumn("distance_score", graft.functions.VectorFunctions
-            .cosineDistance(col(corpusVecCol), col("query_vec")))
-        (rankPerQuery(Seq(rescored)), chosen, (ivfB, lshB, hnswB, pqB),
-          shortlists)
+        // shared pass over the codes store for the whole batch (a
+        // bounded ADC heap per query in each task), then ONE read of
+        // the shortlisted vectors (In filter pushed into the scan),
+        // re-ranked in the task — two Spark jobs, whatever B is. The
+        // shortlists (≤ B × pqShortlist ids) are what the late oracle
+        // re-ranks.
+        val (res, shortlists) = Pq.batchSearch(idx.encoded, idx.corpus,
+          corpusVecCol, corpusIdCol, qs, idx.codebooks, k, idx.pqShortlist)
+        (res, chosen, (ivfB, lshB, hnswB, pqB),
+          shortlists.map { case (q, ids) => q -> ids.map(_.asInstanceOf[Long]).sorted })
       case "lsh" =>
         val legs = qs.map { case (qid, qv) =>
           val probes = Ann.probeBuckets(Ann.queryBucket(qv, idx.lsh.planes),
@@ -349,10 +327,10 @@ object VectorServing {
 
   /** Micro-batch PQ serving: each query batch is COLLECTED to the driver
     * (query batches are small by contract — they are user requests, not
-    * data) so its per-query ADC tables can be compiled into the one
-    * codegen'd CASE chain of [[graft.operators.Pq.batchSearchRescore]];
-    * the corpus side stays fully distributed — one job per batch over
-    * the codes column, vectors read only for the per-query shortlist.
+    * data) so its per-query ADC tables can be computed there and served
+    * by [[graft.operators.Pq.batchSearchRescore]]; the corpus side stays
+    * fully distributed — one job per batch over the codes column, one
+    * over the vectors of the per-query shortlists only.
     * Same sink contract as [[serveKnn]].
     */
   def servePqKnn(queries: DataFrame, encoded: DataFrame,

@@ -229,27 +229,12 @@ class VectorServingSpec extends SparkSpec {
         i -> graft.functions.HashingEmbedder(dim = 64, seed = 7)
           .encode(s"pq dispatch probe $i"))
 
-      // plan shape: the whole 5-query batch's shortlist stage is ONE
-      // scan of the codes store (the amortized N·m pass the cost model
-      // priced) — not one scan per query
-      val shortPlan = Pq.batchShortlist(encoded, "vec_id", queriesOf(5),
-        books, 8).queryExecution.executedPlan
-      val exec = shortPlan match {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          a.executedPlan
-        case p => p
-      }
-      val codeScans = exec.collectLeaves().collect {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec
-            if f.relation.location.rootPaths.exists(_.toString.contains("codes")) => f
-      }
-      assert(codeScans.size == 1,
-        s"batch shortlist must scan the codes store exactly once, got ${codeScans.size}:\n$shortPlan")
-
-      // job-count differential: the executed work must not grow with B
-      // (the old leg ran B Pq.search scans + B per-query rescores)
+      // job pins: the whole batch is ONE pass over the codes store (the
+      // amortized N·m pass the cost model priced) plus ONE read of the
+      // shortlisted vectors — two jobs of one stage each (no shuffle-map
+      // stage), whatever the batch size
       val counter = new JobCounter
-      def runDispatch(b: Int): (Int, String, Map[Int, Seq[Long]],
+      def runDispatch(b: Int): ((Int, Int), String, Map[Int, Seq[Long]],
           Array[(Int, Int, Long, Double)]) = {
         counter.reset()
         val (res, chosen, _, cands) = VectorServing.dispatchServingBatch(
@@ -257,14 +242,16 @@ class VectorServingSpec extends SparkSpec {
         val rows = res.select(col("query_id"), col("knn_rank"),
             col("vec_id"), round(col("distance_score"), 6)).collect()
           .map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
-        (counter.settle()._1, chosen, cands, rows)
+        (counter.settle(), chosen, cands, rows)
       }
       try {
-        val (j1, c1, _, _) = runDispatch(1)
-        val (j5, c5, cands5, rows5) = runDispatch(5)
+        val ((j1, s1), c1, _, _) = runDispatch(1)
+        val ((j5, s5), c5, cands5, rows5) = runDispatch(5)
         assert(c1 == "pq" && c5 == "pq", s"router must pick pq: $c1/$c5")
         assert(j5 == j1,
           s"pq dispatch job count must be constant in batch size: B=1 ran $j1 jobs, B=5 ran $j5")
+        assert((j1, s1) == ((2, 2)) && (j5, s5) == ((2, 2)),
+          s"pq dispatch + collect must run 2 jobs and 2 stages: B=1 ran $j1/$s1, B=5 ran $j5/$s5")
         // result parity: exact cosine re-rank of THIS run's recorded
         // shortlists (the late-oracle contract) reproduces the output
         val expect = queriesOf(5).flatMap { case (qid, qv) =>
