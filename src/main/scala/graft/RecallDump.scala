@@ -256,11 +256,10 @@ object RecallDump {
                includeFlagship: Boolean, layered: Boolean = false): Seq[NswPoint] = {
     val emb = corpus.cache()
     val base = graft.operators.Nsw.Params(nShards = 4, m = 8,
-      efConstruction = 32, efSearch = 32)
-    val graph = (if (layered)
-      graft.operators.Nsw.buildHnswGraph(emb, "embedding", "vec_id", base)
-    else
-      graft.operators.Nsw.buildGraph(emb, "embedding", "vec_id", base)).cache()
+      efConstruction = 32, efSearch = 32,
+      maxLevel = if (layered) graft.operators.Nsw.HnswMaxLevel else 0)
+    val graph = graft.operators.Nsw
+      .buildGraph(emb, "embedding", "vec_id", base).cache()
     graph.count()
     val n = emb.count()
     val qs0 = emb.filter(col("vec_id") % 100 === 10)
@@ -272,11 +271,8 @@ object RecallDump {
       val p = base.copy(efSearch = ef)
       var cand = 0L
       val rs = qs.toSeq.lazyZip(exactByQ).map { (qv, exact) =>
-        val (res, cs) =
-          if (layered) graft.operators.Nsw
-            .hnswSearch(graph, emb, "embedding", "vec_id", qv, k, p)
-          else graft.operators.Nsw
-            .search(graph, emb, "embedding", "vec_id", qv, k, p)
+        val (res, cs) = graft.operators.Nsw
+          .search(graph, emb, "embedding", "vec_id", qv, k, p)
         cand += cs.length
         Ann.recallAtK(res, exact, "vec_id")
       }
@@ -300,9 +296,10 @@ object RecallDump {
                   includeFlagship: Boolean): Seq[RoutedPoint] = {
     val emb = corpus.cache()
     val p = graft.operators.Nsw.Params(nShards = 4, m = 8,
-      efConstruction = 32, efSearch = 32)
+      efConstruction = 32, efSearch = 32,
+      maxLevel = graft.operators.Nsw.HnswMaxLevel)
     val graph = graft.operators.Nsw
-      .buildHnswGraph(emb, "embedding", "vec_id", p).cache()
+      .buildGraph(emb, "embedding", "vec_id", p).cache()
     graph.count()
     // bounded: nShards·dim rows — the router's whole driver footprint
     val cents = graft.operators.Nsw.shardCentroids(graph)
@@ -315,7 +312,7 @@ object RecallDump {
     val pts = (1 to p.nShards).map { np =>
       var cand = 0L
       val rs = qs.toSeq.lazyZip(exactByQ).map { (qv, exact) =>
-        val (res, cs, _) = graft.operators.Nsw.hnswRoutedSearch(
+        val (res, cs, _) = graft.operators.Nsw.routedSearch(
           graph, emb, "embedding", "vec_id", qv, k, cents, np, p)
         cand += cs.length
         Ann.recallAtK(res, exact, "vec_id")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
@@ -9,19 +9,27 @@ import org.apache.spark.sql.types._
 
 import scala.collection.mutable
 
-/** Graph-based ANN: sharded Navigable-Small-World beam search — the
-  * last ANN family member beside IVF/LSH/PQ (Malkov et al. 2014 NSW;
-  * HNSW 2016 adds a layer hierarchy on the same search principle).
+/** Graph-based ANN: sharded HNSW beam search — the last ANN family
+  * member beside IVF/LSH/PQ (Malkov & Yashunin 2016). One index with a
+  * level cap ([[Params.maxLevel]]): at cap 0 every node lives on layer
+  * 0 only and the graph is the flat Navigable Small World (Malkov et
+  * al. 2014); above it, nodes draw levels and search descends through
+  * the upper layers before the layer-0 beam. Both are built, stored,
+  * appended and searched by the same code.
   *
   * Spark-first layout: the corpus is hash-sharded (`vec_id % nShards`),
-  * and each shard gets an INDEPENDENT small-world graph built inside
-  * one `mapPartitions` task — the sanctioned per-partition imperative
+  * and each shard gets an INDEPENDENT graph built inside one
+  * `mapPartitions` task — the sanctioned per-partition imperative
   * case: graph insertion is inherently sequential within a shard, but
   * shards build in parallel and never communicate. At 100 TB you pick
   * nShards so a shard (vectors + adjacency) fits one executor's memory
   * (e.g. ~1M × 384-d ≈ 1.5 GB/shard → a few thousand shards); build
   * cost per shard is n·log n beam searches instead of the n² of a
   * brute-force kNN-graph.
+  *
+  * The store holds one row per node: (shard, vec_id, embedding, level,
+  * layers), `layers(l)` = the node's neighbors at layer l, so a flat
+  * store is the level-0 case of the layered one.
   *
   * Search fans one beam per shard (each task touches O(ef·log n) nodes
   * of its local graph, not the shard), emits ≤ efSearch candidate ids
@@ -40,36 +48,49 @@ import scala.collection.mutable
   *
   * Determinism contract (everything the oracle leans on):
   *   - insertion order = ascending vec_id within a shard;
-  *   - entry point = smallest vec_id in the shard;
+  *   - a node's level = a pure function of its id ([[hnswLevel]]);
+  *   - entry point = the highest-level node, ties to the smallest id
+  *     (at cap 0: the smallest vec_id in the shard);
   *   - all heap orderings break distance ties by smaller id;
   *   - distances in Double with fixed left-to-right accumulation.
   *
-  * Why NSW has NO transparent KNN→probe rewrite (unlike IVF/LSH,
-  * plans.IvfProbeRule): those rewrites inject a probe IN-filter whose
-  * probe set is computable DRIVER-SIDE from index metadata resident in
-  * the rule (centroid array, hyperplanes) — an O(nlist·dim) closed-form
-  * step that is legitimate inside an optimizer rule. An NSW probe set
-  * IS the beam walk: deriving it requires a distributed pass over the
-  * data-sized graph store, and launching a Spark job from inside
-  * Catalyst optimization is both unsound (rules may re-fire, plans may
-  * never execute) and unbounded-latency. Graph indexes therefore serve
-  * through the explicit [[search]]/[[batchSearch]] API; the
-  * single-query re-rank stage still plans identically to the rewritten
-  * IVF/LSH probes (pushed IN-filter + TakeOrderedAndProject).
+  * Why graph search has NO transparent KNN→probe rewrite (unlike
+  * IVF/LSH, plans.IvfProbeRule): those rewrites inject a probe
+  * IN-filter whose probe set is computable DRIVER-SIDE from index
+  * metadata resident in the rule (centroid array, hyperplanes) — an
+  * O(nlist·dim) closed-form step that is legitimate inside an
+  * optimizer rule. A graph probe set IS the beam walk: deriving it
+  * requires a distributed pass over the data-sized graph store, and
+  * launching a Spark job from inside Catalyst optimization is both
+  * unsound (rules may re-fire, plans may never execute) and
+  * unbounded-latency. Graph indexes therefore serve through the
+  * explicit [[search]]/[[batchSearch]] API; the single-query re-rank
+  * stage still plans identically to the rewritten IVF/LSH probes
+  * (pushed IN-filter + TakeOrderedAndProject).
   */
 object Nsw {
 
   /** Build/search knobs. `m` = edges added per insertion, `maxDegree` =
-    * cap after bidirectional backlinks (2m, the usual NSW setting),
-    * `efConstruction`/`efSearch` = beam widths.
+    * the layer-0 cap after bidirectional backlinks (2m, the usual
+    * setting; upper layers cap at m), `efConstruction`/`efSearch` =
+    * beam widths, `maxLevel` = the highest layer a node may draw (0 =
+    * flat NSW, [[HnswMaxLevel]] for the layered stores). Append to a
+    * store with the Params it was built with.
     */
   final case class Params(
       nShards: Int = 4,
       m: Int = 8,
       efConstruction: Int = 32,
-      efSearch: Int = 32) {
+      efSearch: Int = 32,
+      maxLevel: Int = 0) {
     val maxDegree: Int = 2 * m
   }
+
+  /** Level cap of the layered stores: with P(level ≥ l) = m^(-l),
+    * level 8 at m = 8 is one node in 8^8 ≈ 16M — deeper layers would be
+    * empty at any shard size an executor can hold.
+    */
+  val HnswMaxLevel = 8
 
   private def cosine(a: Array[Float], b: Array[Float]): Double = {
     var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
@@ -89,25 +110,20 @@ object Nsw {
   private val byDistThenId: Ordering[(Double, Long)] =
     Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long)
 
-  /** Greedy best-first beam over one shard's graph: returns the ef
-    * closest visited nodes to `q`, ascending (distance, id). Classic
-    * NSW search — a min-heap of frontier candidates, a bounded
-    * max-heap of results; stop when the nearest frontier node is
-    * farther than the worst retained result.
-    */
-  def beamSearch(q: Array[Float], entry: Long,
-                 vecs: collection.Map[Long, Array[Float]],
-                 adj: collection.Map[Long, Array[Long]],
-                 ef: Int): Seq[(Double, Long)] =
-    beamSearchFn(q, entry, vecs, adj.getOrElse(_, Array.empty), ef)
+  /** A node's neighbors at layer `l` (none above its level). */
+  private def adjAt(layers: Long => Array[Array[Long]], l: Int)(id: Long): Array[Long] = {
+    val ls = layers(id); if (l < ls.length) ls(l) else Array.empty
+  }
 
-  /** [[beamSearch]] over a FUNCTION adjacency — the layered (HNSW)
-    * variants walk one layer of a per-node layer stack through this.
+  /** Greedy best-first beam over one layer: returns the ef closest
+    * visited nodes to `q`, ascending (distance, id). A min-heap of
+    * frontier candidates, a bounded max-heap of results; stop when the
+    * nearest frontier node is farther than the worst retained result.
     */
-  private def beamSearchFn(q: Array[Float], entry: Long,
-                           vecs: collection.Map[Long, Array[Float]],
-                           adjFn: Long => Array[Long],
-                           ef: Int): Seq[(Double, Long)] = {
+  private def beamSearch(q: Array[Float], entry: Long,
+                         vecs: Long => Array[Float],
+                         adj: Long => Array[Long],
+                         ef: Int): Seq[(Double, Long)] = {
     val visited = mutable.Set[Long](entry)
     val d0 = cosine(q, vecs(entry))
     val frontier = mutable.PriorityQueue((d0, entry))(byDistThenId.reverse) // min-heap
@@ -117,7 +133,7 @@ object Nsw {
       if (results.size >= ef && byDistThenId.gt((d, node), results.head)) {
         frontier.clear() // nearest frontier ≥ worst result: done
       } else {
-        adjFn(node).foreach { nb =>
+        adj(node).foreach { nb =>
           if (visited.add(nb)) {
             val dn = cosine(q, vecs(nb))
             if (results.size < ef || byDistThenId.lt((dn, nb), results.head)) {
@@ -130,6 +146,31 @@ object Nsw {
       }
     }
     results.dequeueAll.reverse.toSeq
+  }
+
+  /** Greedy descent (ef = 1) from `start` through layers `from` down to
+    * `downTo`: at each layer, move to a closer neighbor until none is.
+    */
+  private def descend(q: Array[Float], start: Long, vecs: Long => Array[Float],
+                      layers: Long => Array[Array[Long]],
+                      from: Int, downTo: Int): Long = {
+    var cur = start
+    var curD = cosine(q, vecs(cur))
+    var l = from
+    while (l >= downTo) {
+      var improved = true
+      while (improved) {
+        improved = false
+        adjAt(layers, l)(cur).foreach { nb =>
+          val dn = cosine(q, vecs(nb))
+          if (byDistThenId.lt((dn, nb), (curD, cur))) {
+            cur = nb; curD = dn; improved = true
+          }
+        }
+      }
+      l -= 1
+    }
+    cur
   }
 
   /** Diverse-neighbor selection (the HNSW select-neighbors heuristic,
@@ -157,177 +198,191 @@ object Nsw {
     (kept.map(_._1) ++ pruned.take(m - kept.size)).toArray
   }
 
-  /** Insert `batch` (ascending id) into an existing shard graph — the
-    * ONE insertion procedure: each new node links to `m` DIVERSE nodes
-    * among its efConstruction-beam nearest (the select-neighbors
-    * heuristic), bidirectionally; any node exceeding maxDegree
-    * re-selects maxDegree diverse edges the same way. The initial
-    * build is this with an empty existing graph; incremental append is
-    * this with the persisted one — same code, so append ≡ "rebuild
-    * where the batch ids happen to insert last".
+  /** Deterministic level draw (Malkov & Yashunin 2016 Alg. 1's
+    * `floor(-ln(U)·mL)`, mL = 1/ln(m) so P(level ≥ l) = m^(-l)), capped
+    * at `maxLevel` — with U derived from the portable 48-bit md5 hash of
+    * the vec_id instead of RNG state: a node's level is a pure function
+    * of its id, so an append assigns the SAME level a full rebuild
+    * would, and two builds of one corpus are byte-identical.
+    * StrictMath.log, not Math.log: levels must not depend on the host's
+    * libm. The level only shapes the graph — gated arithmetic stays in
+    * the exact re-rank stage.
     */
-  def insertIntoShardGraph(existing: Array[(Long, Array[Float], Array[Long])],
+  def hnswLevel(id: Long, m: Int, maxLevel: Int): Int = {
+    val u = (graft.functions.Md5.long48(s"hnsw:$id") + 1).toDouble / (1L << 48).toDouble
+    val mL = 1.0 / StrictMath.log(m.toDouble)
+    math.min(maxLevel, (-StrictMath.log(u) * mL).toInt)
+  }
+
+  /** The entry rule, on load, on insert and on search: the highest-level
+    * node, ties to the smallest id.
+    */
+  private def entryOf(ids: Iterator[Long], levelOf: Long => Int): Long =
+    ids.minBy(id => (-levelOf(id), id))
+
+  /** Insert `batch` (ascending id) into an existing shard graph — the
+    * ONE insertion procedure. Each node draws its level
+    * ([[hnswLevel]], capped at `p.maxLevel`) and carries one adjacency
+    * array per layer 0..level. Insertion descends greedily (ef = 1)
+    * from the entry's top layer down to level+1, then at each layer
+    * level..0 links to `m` DIVERSE nodes among its efConstruction-beam
+    * nearest (the select-neighbors heuristic), bidirectionally; any
+    * node exceeding the layer's cap (2m at layer 0, m above) re-selects
+    * that many diverse edges the same way. A new node takes over the
+    * entry when its level is higher than the entry's, or equal with a
+    * smaller id — the rule the load applies to the existing nodes, so
+    * an append sees the entry a rebuild would. The initial build is
+    * this with an empty existing graph; incremental append is this with
+    * the persisted one — same code, so append ≡ "rebuild where the
+    * batch ids happen to insert last".
+    */
+  def insertIntoShardGraph(existing: Array[(Long, Array[Float], Array[Array[Long]])],
                            batch: Array[(Long, Array[Float])],
-                           p: Params): Map[Long, Array[Long]] = {
+                           p: Params): Map[Long, Array[Array[Long]]] = {
     val vecs = mutable.Map.empty[Long, Array[Float]]
-    // adjacency arrays are rebuilt on append/trim — each is ≤ maxDegree+1
+    // adjacency arrays are rebuilt on append/trim — each is ≤ cap+1
     // long, so the copies are O(1); the map itself is never copied
-    val adj = mutable.Map.empty[Long, Array[Long]]
-    existing.foreach { case (id, v, nbrs) => vecs(id) = v; adj(id) = nbrs }
-    var entry = if (existing.isEmpty) Long.MaxValue else existing.iterator.map(_._1).min
-    def trim(id: Long): Unit = {
-      val edges = adj(id)
-      if (edges.length > p.maxDegree) {
+    val layers = mutable.Map.empty[Long, Array[Array[Long]]]
+    existing.foreach { case (id, v, ls) => vecs(id) = v; layers(id) = ls }
+    def levelOf(id: Long): Int = layers(id).length - 1
+    var entry = if (layers.isEmpty) 0L else entryOf(layers.keysIterator, levelOf)
+    def maxDegreeAt(l: Int): Int = if (l == 0) p.maxDegree else p.m
+    def trim(l: Int, id: Long): Unit = {
+      val edges = layers(id)(l)
+      if (edges.length > maxDegreeAt(l)) {
         val base = vecs(id)
-        adj(id) = selectNeighbors(
-          edges.map(e => (cosine(base, vecs(e)), e)).toSeq, p.maxDegree, vecs)
+        layers(id)(l) = selectNeighbors(
+          edges.map(e => (cosine(base, vecs(e)), e)).toSeq, maxDegreeAt(l), vecs)
       }
     }
     batch.sortBy(_._1).foreach { case (id, v) =>
-      if (vecs.isEmpty) { vecs(id) = v; adj(id) = Array.empty; entry = id }
+      val lvl = hnswLevel(id, p.m, p.maxLevel)
+      val first = layers.isEmpty
+      vecs(id) = v
+      layers(id) = Array.fill(lvl + 1)(Array.empty[Long])
+      if (first) entry = id
       else {
-        val near = beamSearch(v, entry, vecs, adj,
-          math.max(p.efConstruction, p.m))
-        vecs(id) = v
-        adj(id) = selectNeighbors(near, p.m, vecs)
-        adj(id).foreach { nb => adj(nb) = adj(nb) :+ id; trim(nb) }
-        trim(id)
-        entry = math.min(entry, id)
+        val entryLvl = levelOf(entry)
+        var cur = descend(v, entry, vecs, layers, entryLvl, lvl + 1)
+        var l = math.min(lvl, entryLvl)
+        while (l >= 0) {
+          val near = beamSearch(v, cur, vecs, adjAt(layers, l),
+            math.max(p.efConstruction, p.m))
+          layers(id)(l) = selectNeighbors(near, p.m, vecs)
+          layers(id)(l).foreach { nb =>
+            layers(nb)(l) = layers(nb)(l) :+ id
+            trim(l, nb)
+          }
+          trim(l, id)
+          cur = near.head._2
+          l -= 1
+        }
+        if (lvl > entryLvl || (lvl == entryLvl && id < entry)) entry = id
       }
     }
-    adj.toMap
+    layers.toMap
   }
 
-  /** One shard's NSW graph from scratch (the initial-build case of
+  /** One shard's graph from scratch (the initial-build case of
     * [[insertIntoShardGraph]]).
     */
   def buildShardGraph(nodes: Array[(Long, Array[Float])],
-                      p: Params): Map[Long, Array[Long]] =
+                      p: Params): Map[Long, Array[Array[Long]]] =
     insertIntoShardGraph(Array.empty, nodes, p)
 
   private val graphSchema: StructType = StructType(Seq(
     StructField("shard", IntegerType),
     StructField("vec_id", LongType),
     StructField("embedding", ArrayType(FloatType)),
-    StructField("neighbors", ArrayType(LongType))))
+    StructField("level", IntegerType),
+    StructField("layers", ArrayType(ArrayType(LongType)))))
 
-  /** Build the sharded graph store: one `mapPartitions` task per shard
-    * (shards never communicate), output rows (shard, vec_id, embedding,
-    * neighbors). Write this partitioned by `shard` so search's per-shard
-    * tasks read exactly one directory each.
+  private def layersOf(ir: InternalRow, ordinal: Int): Array[Array[Long]] = {
+    val ls = ir.getArray(ordinal)
+    Array.tabulate(ls.numElements())(i => ls.getArray(i).toLongArray())
+  }
+
+  /** The rows of `corpus` as nodes to insert: (shard, vec_id,
+    * embedding, layers, is_new), the insert task's input.
     */
-  def buildGraph(corpus: DataFrame, vecCol: String, idCol: String,
-                 p: Params): DataFrame = {
-    val spark = corpus.sparkSession
-    val sharded = corpus
-      .select(pmod(col(idCol), lit(p.nShards)).cast("int").as("shard"),
-        col(idCol).cast("long").as("vec_id"), col(vecCol).cast("array<float>").as("embedding"))
-      .repartition(p.nShards, col("shard"))
-    val out = sharded.queryExecution.toRdd.mapPartitions { it =>
+  private def newNodes(corpus: DataFrame, shard: Column, vecCol: String,
+                       idCol: String): DataFrame =
+    corpus.select(shard.as("shard"), col(idCol).cast("long").as("vec_id"),
+      col(vecCol).cast("array<float>").as("embedding"),
+      typedLit(Seq.empty[Seq[Long]]).as("layers"), lit(true).as("is_new"))
+
+  /** A store's rows as already-inserted nodes of the insert task. */
+  private def storedNodes(graph: DataFrame): DataFrame =
+    graph.select(col("shard"), col("vec_id"), col("embedding"), col("layers"),
+      lit(false).as("is_new"))
+
+  private def hashShard(idCol: String, p: Params): Column =
+    pmod(col(idCol), lit(p.nShards)).cast("int")
+
+  /** The one per-shard insert task behind every build and append:
+    * `nodes` (see [[newNodes]]) must already be exchanged so that each
+    * shard's rows share one task. Per shard, the stored nodes load, the
+    * new ones insert through [[insertIntoShardGraph]], and the shard's
+    * store rows come out in vec_id order.
+    */
+  private def insertTask(nodes: DataFrame, p: Params): DataFrame = {
+    val out = nodes.queryExecution.toRdd.mapPartitions { it =>
       val rows = it.map { ir =>
-        (ir.getInt(0), ir.getLong(1), ir.getArray(2).toFloatArray())
+        (ir.getInt(0), ir.getLong(1), ir.getArray(2).toFloatArray(),
+          layersOf(ir, 3), ir.getBoolean(4))
       }.toArray
       rows.groupBy(_._1).iterator.flatMap { case (shard, grp) =>
-        val nodes = grp.map(r => (r._2, r._3))
-        val adj = buildShardGraph(nodes, p)
-        nodes.sortBy(_._1).iterator.map { case (id, v) =>
-          Row(shard, id, v.toSeq, adj.getOrElse(id, Array.empty[Long]).toSeq)
+        val (nw, ex) = grp.partition(_._5)
+        val layers = insertIntoShardGraph(
+          ex.map(r => (r._2, r._3, r._4)), nw.map(r => (r._2, r._3)), p)
+        grp.sortBy(_._2).iterator.map { case (_, id, v, _, _) =>
+          val ls = layers(id)
+          Row(shard, id, v.toSeq, ls.length - 1, ls.map(_.toSeq).toSeq)
         }
       }
     }
-    spark.createDataFrame(out, graphSchema)
+    nodes.sparkSession.createDataFrame(out, graphSchema)
   }
 
-  /** Per-shard beam candidates for one query: ≤ efSearch ids per shard
-    * (ascending (distance, id) within the shard). The scan is one pass
-    * over the graph store; each task returns a bounded row count —
-    * the same "every task returns ≤ k rows" contract as exact KNN.
-    *
-    * The repartition is a CORRECTNESS requirement, not a convenience: a
-    * shard's rows must all reach one task (a parquet file >
-    * maxPartitionBytes splits across tasks, and a beam over half a
-    * shard's graph returns wrong candidates). The exchange moves the
-    * graph store once per CALL here; the batch paths run over an
-    * [[OpenedGraph]] instead, which holds the exchange's shuffle output
-    * so a serving index pays it once, on its first request, and every
-    * later request reads only its routed shards' partitions.
+  /** Build the sharded graph store: one `mapPartitions` task per shard
+    * (shards never communicate). Write this partitioned by `shard` so
+    * search's per-shard tasks read exactly one directory each.
     */
-  def shardCandidates(graph: DataFrame, queryVec: Array[Float],
-                      p: Params): DataFrame = {
-    val spark = graph.sparkSession
-    val q = spark.sparkContext.broadcast(queryVec)
-    val prepared = graph
-      .select(col("shard"), col("vec_id"), col("embedding"), col("neighbors"))
-      .repartition(p.nShards, col("shard"))
-    val out = prepared.queryExecution.toRdd.mapPartitions { it =>
-      val rows = it.map { ir =>
-        (ir.getInt(0), ir.getLong(1), ir.getArray(2).toFloatArray(),
-          ir.getArray(3).toLongArray())
-      }.toArray
-      rows.groupBy(_._1).iterator.flatMap { case (shard, grp) =>
-        val vecs = grp.map(r => (r._2, r._3)).toMap
-        val adj = grp.map(r => (r._2, r._4)).toMap
-        val entry = grp.iterator.map(_._2).min
-        beamSearch(q.value, entry, vecs, adj, p.efSearch)
-          .iterator.map { case (d, id) => Row(shard, id, d) }
-      }
-    }
-    spark.createDataFrame(out, StructType(Seq(
-      StructField("shard", IntegerType),
-      StructField("vec_id", LongType),
-      StructField("beam_distance", DoubleType))))
-  }
+  def buildGraph(corpus: DataFrame, vecCol: String, idCol: String,
+                 p: Params): DataFrame =
+    insertTask(newNodes(corpus, hashShard(idCol, p), vecCol, idCol)
+      .repartition(p.nShards, col("shard")), p)
 
   /** Incremental index refresh: insert a new batch into the persisted
     * graph without rebuilding it. Per shard, the existing (vectors,
-    * adjacency) load once and the shard's batch slice inserts through
-    * the SAME procedure as the initial build — compute cost is
-    * O(|batch|·ef·log n), not O(|corpus|). Backlinks may retouch
-    * existing nodes' edge lists, so the touched SHARDS rewrite (write
-    * amplification graph stores inherently pay where IVF append is
-    * file-append-only, maint_ivf_append); under hash sharding every
-    * shard is touched, so at 100 TB an appendy deployment shards by
-    * arrival window instead ([[buildGraphWindowed]] /
-    * [[appendToGraphWindowed]]) — then an append rewrites only the
-    * newest window's shard and search fans over all shards exactly as
-    * here.
+    * layers) load once and the shard's batch slice inserts through the
+    * SAME procedure as the initial build — compute cost is
+    * O(|batch|·ef·log n), not O(|corpus|). Because levels are id-pure
+    * and insertion is ascending-id, a batch of strictly-newer ids
+    * replays exactly the tail of a full rebuild (append ≡ rebuild, byte
+    * for byte). Backlinks may retouch existing nodes' edge lists, so
+    * the touched SHARDS rewrite (write amplification graph stores
+    * inherently pay where IVF append is file-append-only,
+    * maint_ivf_append); under hash sharding every shard is touched, so
+    * at 100 TB an appendy deployment shards by arrival window instead
+    * ([[buildGraphWindowed]] / [[appendToGraphWindowed]]) — then an
+    * append rewrites only the newest window's shard and search fans
+    * over all shards exactly as here.
     */
   def appendToGraph(graph: DataFrame, batch: DataFrame, vecCol: String,
                     idCol: String, p: Params): DataFrame = {
-    val spark = graph.sparkSession
-    val existing = graph
-      .select(col("shard"), col("vec_id"), col("embedding"), col("neighbors"),
-        lit(false).as("is_new"))
-    val incoming = batch
-      .select(pmod(col(idCol), lit(p.nShards)).cast("int").as("shard"),
-        col(idCol).cast("long").as("vec_id"),
-        col(vecCol).cast("array<float>").as("embedding"),
-        typedLit(Seq.empty[Long]).as("neighbors"), lit(true).as("is_new"))
+    val existing = storedNodes(graph)
+    val incoming = newNodes(batch, hashShard(idCol, p), vecCol, idCol)
       // idempotence: an id already in the graph must not insert twice
       // (a replayed batch would otherwise emit duplicate rows and wire
       // a node to itself through its earlier copy) — and neither must a
       // vec_id duplicated WITHIN the batch (the second insert would
-      // reset the node's adjacency while backlinks from the first
-      // persist in other nodes' edge lists)
+      // reset the node's layers while backlinks from the first persist
+      // in other nodes' edge lists)
       .join(graph.select(col("vec_id")), Seq("vec_id"), "left_anti")
       .dropDuplicates("vec_id")
       .select(existing.columns.map(col): _*)
-    val all = existing.union(incoming).repartition(p.nShards, col("shard"))
-    val out = all.queryExecution.toRdd.mapPartitions { it =>
-      val rows = it.map { ir =>
-        (ir.getInt(0), ir.getLong(1), ir.getArray(2).toFloatArray(),
-          ir.getArray(3).toLongArray(), ir.getBoolean(4))
-      }.toArray
-      rows.groupBy(_._1).iterator.flatMap { case (shard, grp) =>
-        val (nw, ex) = grp.partition(_._5)
-        val adj = insertIntoShardGraph(
-          ex.map(r => (r._2, r._3, r._4)), nw.map(r => (r._2, r._3)), p)
-        grp.sortBy(_._2).iterator.map { case (_, id, v, _, _) =>
-          Row(shard, id, v.toSeq, adj.getOrElse(id, Array.empty[Long]).toSeq)
-        }
-      }
-    }
-    spark.createDataFrame(out, graphSchema)
+    insertTask(existing.union(incoming).repartition(p.nShards, col("shard")), p)
   }
 
   /** Persist the graph store partitioned by `shard`: each search task
@@ -353,7 +408,7 @@ object Nsw {
     * the `shard` column, so [[shardCandidates]]/[[batchSearch]] fan over
     * windowed stores unchanged.
     */
-  def windowShard(idCol: String, windowSize: Long): org.apache.spark.sql.Column =
+  def windowShard(idCol: String, windowSize: Long): Column =
     // integer `div`, not `/` (double division) — exact at any id scale.
     // NOTE: Spark `div` truncates toward zero while DuckDB `//` floors;
     // they agree ONLY for non-negative ids, which the arrival-order
@@ -362,7 +417,7 @@ object Nsw {
     expr(s"CAST(CAST($idCol AS BIGINT) div ${windowSize}L AS INT)")
 
   /** Build the sharded graph store under arrival-window sharding —
-    * the same independent per-shard NSW construction as [[buildGraph]],
+    * the same independent per-shard construction as [[buildGraph]],
     * with `vec_id div windowSize` in place of the hash shard. Insertion
     * order (ascending vec_id within a shard) and every other clause of
     * the determinism contract are unchanged, so a windowed append of a
@@ -370,27 +425,9 @@ object Nsw {
     * (the batch ids insert last either way — NswSpec locks this).
     */
   def buildGraphWindowed(corpus: DataFrame, vecCol: String, idCol: String,
-                         windowSize: Long, p: Params): DataFrame = {
-    val spark = corpus.sparkSession
-    val sharded = corpus
-      .select(windowShard(idCol, windowSize).as("shard"),
-        col(idCol).cast("long").as("vec_id"),
-        col(vecCol).cast("array<float>").as("embedding"))
-      .repartition(col("shard"))
-    val out = sharded.queryExecution.toRdd.mapPartitions { it =>
-      val rows = it.map { ir =>
-        (ir.getInt(0), ir.getLong(1), ir.getArray(2).toFloatArray())
-      }.toArray
-      rows.groupBy(_._1).iterator.flatMap { case (shard, grp) =>
-        val nodes = grp.map(r => (r._2, r._3))
-        val adj = buildShardGraph(nodes, p)
-        nodes.sortBy(_._1).iterator.map { case (id, v) =>
-          Row(shard, id, v.toSeq, adj.getOrElse(id, Array.empty[Long]).toSeq)
-        }
-      }
-    }
-    spark.createDataFrame(out, graphSchema)
-  }
+                         windowSize: Long, p: Params): DataFrame =
+    insertTask(newNodes(corpus, windowShard(idCol, windowSize), vecCol, idCol)
+      .repartition(col("shard")), p)
 
   /** Incremental refresh of a PERSISTED arrival-window store, rewriting
     * ONLY the shard directories the batch touches: the batch's windows
@@ -413,47 +450,26 @@ object Nsw {
                             batch: DataFrame, vecCol: String, idCol: String,
                             windowSize: Long, p: Params): Unit = {
     recoverAside(spark, storePath)
-    val incoming = batch
-      .select(windowShard(idCol, windowSize).as("shard"),
-        col(idCol).cast("long").as("vec_id"),
-        col(vecCol).cast("array<float>").as("embedding"))
+    val incoming = newNodes(batch, windowShard(idCol, windowSize), vecCol, idCol)
       // batch-internal idempotence (the cross-store anti-join below only
       // covers ids ALREADY in the store): duplicate vec_ids within one
       // batch would insert twice — the second insert resets the node's
-      // adjacency while backlinks from the first persist, corrupting the
+      // layers while backlinks from the first persist, corrupting the
       // graph invariants. Equal-id rows are replays of one logical row,
       // so keeping any single one is correct.
       .dropDuplicates("vec_id")
     val touched = incoming.select(col("shard")).distinct()
       .collect().map(_.getInt(0)).sorted
     if (touched.isEmpty) return
-    val existingTouched = readGraph(spark, storePath)
-      .filter(col("shard").isin(touched.map(Integer.valueOf).toSeq: _*))
-      .select(col("shard"), col("vec_id"), col("embedding"), col("neighbors"),
-        lit(false).as("is_new"))
+    val existingTouched = storedNodes(readGraph(spark, storePath)
+      .filter(col("shard").isin(touched.map(Integer.valueOf).toSeq: _*)))
     // idempotence (same clause as appendToGraph): a replayed id must not
     // insert twice — the anti-join is against the touched slice only,
     // which is sufficient because windowing sends an id to ONE shard
     val fresh = incoming
       .join(existingTouched.select(col("vec_id")), Seq("vec_id"), "left_anti")
-      .select(col("shard"), col("vec_id"), col("embedding"),
-        typedLit(Seq.empty[Long]).as("neighbors"), lit(true).as("is_new"))
-    val all = existingTouched.union(fresh).repartition(col("shard"))
-    val out = all.queryExecution.toRdd.mapPartitions { it =>
-      val rows = it.map { ir =>
-        (ir.getInt(0), ir.getLong(1), ir.getArray(2).toFloatArray(),
-          ir.getArray(3).toLongArray(), ir.getBoolean(4))
-      }.toArray
-      rows.groupBy(_._1).iterator.flatMap { case (shard, grp) =>
-        val (nw, ex) = grp.partition(_._5)
-        val adj = insertIntoShardGraph(
-          ex.map(r => (r._2, r._3, r._4)), nw.map(r => (r._2, r._3)), p)
-        grp.sortBy(_._2).iterator.map { case (_, id, v, _, _) =>
-          Row(shard, id, v.toSeq, adj.getOrElse(id, Array.empty[Long]).toSeq)
-        }
-      }
-    }
-    val refreshed = spark.createDataFrame(out, graphSchema)
+      .select(existingTouched.columns.map(col): _*)
+    val refreshed = insertTask(existingTouched.union(fresh).repartition(col("shard")), p)
     // stage-then-swap, per TOUCHED partition only: the refresh READS the
     // directories being replaced, so they are written to a sibling dir
     // first and the shard dirs swapped after the job completes — the
@@ -567,12 +583,39 @@ object Nsw {
     recoverAside(spark, path)
     spark.read.parquet(path)
       .select(col("shard").cast("int").as("shard"), col("vec_id"),
-        col("embedding"), col("neighbors"))
+        col("embedding"), col("level"), col("layers"))
   }
+
+  // ------------------------------------------------------------------
+  // Search
+  // ------------------------------------------------------------------
+
+  /** One shard's graph as a search task holds it, built from the
+    * shard's exchanged rows (shard, vec_id, embedding, layers).
+    */
+  private final class ShardGraph(val shard: Int,
+                                 rows: Array[(Int, Long, Array[Float], Array[Array[Long]])]) {
+    val vecs: Map[Long, Array[Float]] = rows.iterator.map(r => r._2 -> r._3).toMap
+    private val layers = rows.iterator.map(r => r._2 -> r._4).toMap
+    private val entry = entryOf(layers.keysIterator, layers(_).length - 1)
+
+    /** The one beam: greedy descent from the entry's top layer to layer
+      * 1, then the ef beam at layer 0 — ≤ ef (distance, id), ascending.
+      */
+    def search(q: Array[Float], ef: Int): Seq[(Double, Long)] =
+      beamSearch(q, descend(q, entry, vecs, layers, layers(entry).length - 1, 1),
+        vecs, adjAt(layers, 0), ef)
+  }
+
+  /** The shard graphs in one task's exchanged rows. */
+  private def shardGraphs(rows: Iterator[InternalRow]): Iterator[ShardGraph] =
+    rows.map { ir =>
+      (ir.getInt(0), ir.getLong(1), ir.getArray(2).toFloatArray(), layersOf(ir, 3))
+    }.toArray.groupBy(_._1).iterator.map { case (shard, grp) => new ShardGraph(shard, grp) }
 
   /** A graph store's shard exchange, opened once and held: the
     * post-exchange rows of `graph.select(shard, vec_id, embedding,
-    * neighbors).repartition(nShards, shard)`, plus the shard → partition
+    * layers).repartition(nShards, shard)`, plus the shard → partition
     * map of that exchange. The first use runs the exchange; the held RDD
     * keeps its shuffle dependency alive, and Spark keeps the shuffle
     * output of a live dependency, so every later job over it skips the
@@ -582,17 +625,19 @@ object Nsw {
     * in the heap: each search task rebuilds its shard's lookup from the
     * exchanged rows.
     *
-    * The exchange is a CORRECTNESS requirement, as in [[shardCandidates]]:
-    * a beam needs all of a shard's rows in one task. Serving opens this
-    * once per index ([[graft.streaming.VectorServing.AutoServingIndexes]]
-    * holds one); a one-shot caller opens it and searches it in the same
-    * call — the same code either way.
+    * The exchange is a CORRECTNESS requirement, not a convenience: a
+    * shard's rows must all reach one task (a parquet file >
+    * maxPartitionBytes splits across tasks, and a beam over half a
+    * shard's graph returns wrong candidates). Serving opens this once
+    * per index ([[graft.streaming.VectorServing.AutoServingIndexes]]
+    * holds one); a one-shot caller ([[shardCandidates]]) opens it and
+    * searches it in the same call — the same code either way.
     */
   final class OpenedGraph private[Nsw] (graph: DataFrame, nShards: Int) {
     private[Nsw] val spark: SparkSession = graph.sparkSession
 
     private lazy val exchanged: org.apache.spark.rdd.RDD[InternalRow] = graph
-      .select(col("shard"), col("vec_id"), col("embedding"), col("neighbors"))
+      .select(col("shard"), col("vec_id"), col("embedding"), col("layers"))
       .repartition(nShards, col("shard"))
       .queryExecution.toRdd
 
@@ -626,6 +671,29 @@ object Nsw {
   def openGraph(graph: DataFrame, nShards: Int): OpenedGraph =
     new OpenedGraph(graph, nShards)
 
+  /** Per-shard beam candidates for one query: ≤ efSearch ids per shard
+    * (ascending (distance, id) within the shard), as rows (shard,
+    * vec_id, beam_distance). One pass over the graph store's shard
+    * exchange, opened for this call; each task returns a bounded row
+    * count — the same "every task returns ≤ k rows" contract as exact
+    * KNN.
+    */
+  def shardCandidates(graph: DataFrame, queryVec: Array[Float],
+                      p: Params): DataFrame = {
+    val spark = graph.sparkSession
+    val q = spark.sparkContext.broadcast(queryVec)
+    val ef = p.efSearch
+    val out = openGraph(graph, p.nShards).shardRows(None).mapPartitions { it =>
+      shardGraphs(it).flatMap { g =>
+        g.search(q.value, ef).iterator.map { case (d, id) => Row(g.shard, id, d) }
+      }
+    }
+    spark.createDataFrame(out, StructType(Seq(
+      StructField("shard", IntegerType),
+      StructField("vec_id", LongType),
+      StructField("beam_distance", DoubleType))))
+  }
+
   /** The one search over an [[OpenedGraph]], in ONE Spark job: each task
     * reads one exchanged partition, builds the lookup of every shard in
     * it that some query is routed to (`routes` = None: every shard, for
@@ -648,22 +716,14 @@ object Nsw {
     val wanted = routeSets.map(_.values.flatten.toSet)
     val found = graph.shardRows(wanted).mapPartitions { it =>
       val cosine = Knn.taskCosine(ArrayType(FloatType))
-      val rows = it.filter(ir => wanted.forall(_.contains(ir.getInt(0))))
-        .map { ir =>
-          (ir.getInt(0), ir.getLong(1), ir.getArray(2).toFloatArray(),
-            ir.getArray(3).toLongArray())
-        }.toArray
-      rows.groupBy(_._1).iterator.flatMap { case (shard, grp) =>
-        val vecs = grp.map(r => (r._2, r._3)).toMap
-        val adj = grp.map(r => (r._2, r._4)).toMap
-        val entry = grp.iterator.map(_._2).min
+      shardGraphs(it.filter(ir => wanted.forall(_.contains(ir.getInt(0))))).flatMap { g =>
         queries.iterator
-          .filter { case (qid, _) => routeSets.forall(_(qid).contains(shard)) }
+          .filter { case (qid, _) => routeSets.forall(_(qid).contains(g.shard)) }
           .flatMap { case (qid, qv) =>
             val q = UnsafeArrayData.fromPrimitiveArray(qv)
-            beamSearch(qv, entry, vecs, adj, efSearch).iterator.map { case (_, id) =>
+            g.search(qv, efSearch).iterator.map { case (_, id) =>
               (qid, id, cosine.nullSafeEval(
-                UnsafeArrayData.fromPrimitiveArray(vecs(id)), q).asInstanceOf[java.lang.Double])
+                UnsafeArrayData.fromPrimitiveArray(g.vecs(id)), q).asInstanceOf[java.lang.Double])
             }
           }
       }
@@ -710,6 +770,16 @@ object Nsw {
     * TakeOrderedAndProject as exact KNN, with the `vec_id IN (...)`
     * filter pushed into the corpus scan. Returns (result, candidates)
     * so callers (the late oracle, recall telemetry) see the id set.
+    *
+    * Hybrid predicate + graph search passes `corpus.filter(predicate)`:
+    * the beams run unchanged (the graph is predicate-agnostic — dropping
+    * nodes DURING traversal would disconnect the small-world routing),
+    * and the predicate composes with the candidate IN-filter on one
+    * corpus scan (both push to the parquet scan). Only
+    * predicate-survivors can place, so the efSearch beam is the
+    * oversampling budget: a deployment sizes efSearch ∝ 1/selectivity
+    * (the standard filtered-ANN contract — same trade as IVF's
+    * knn_filtered_ivf_rewrite, where probes oversample instead).
     */
   def search(graph: DataFrame, corpus: DataFrame, vecCol: String,
              idCol: String, queryVec: Array[Float], k: Int,
@@ -718,318 +788,6 @@ object Nsw {
       .select("vec_id").collect().map(_.getLong(0)).toSeq.sorted
     val result = Knn.search(
       corpus.filter(col(idCol).isin(cands: _*)),
-      vecCol, idCol, queryVec, k, metric)
-    (result, cands)
-  }
-
-  // ------------------------------------------------------------------
-  // HNSW — log-layered entry-point descent over the same shards
-  // ------------------------------------------------------------------
-
-  /** Deterministic HNSW level draw (Malkov & Yashunin 2016 Alg. 1's
-    * `floor(-ln(U)·mL)`, mL = 1/ln(m) so P(level ≥ l) = m^(-l)) — with
-    * U derived from the portable 48-bit md5 hash of the vec_id instead
-    * of RNG state: a node's level is a pure function of its id, so an
-    * append assigns the SAME level a full rebuild would (the append ≡
-    * rebuild contract the flat NSW store already has), and two builds
-    * of one corpus are byte-identical. StrictMath.log, not Math.log:
-    * levels must not depend on the host's libm. The level only shapes
-    * the graph — gated arithmetic stays in the exact re-rank stage.
-    */
-  def hnswLevel(id: Long, m: Int, maxLevel: Int): Int = {
-    val u = (graft.functions.Md5.long48(s"hnsw:$id") + 1).toDouble / (1L << 48).toDouble
-    val mL = 1.0 / StrictMath.log(m.toDouble)
-    math.min(maxLevel, (-StrictMath.log(u) * mL).toInt)
-  }
-
-  /** Layer cap: with P(level ≥ l) = m^(-l), level 8 at m = 8 is one
-    * node in 8^8 ≈ 16M — deeper layers would be empty at any shard
-    * size an executor can hold.
-    */
-  val HnswMaxLevel = 8
-
-  /** Insert `batch` (ascending id) into an existing per-shard HNSW —
-    * the layered twin of [[insertIntoShardGraph]] and the SAME
-    * determinism contract: ascending-id insertion, id tie-breaks in
-    * every heap, diverse-neighbor selection at every layer. Entry
-    * point = the highest-level node (ties → smallest id, and a new
-    * node replaces the entry only when STRICTLY higher — insertion
-    * order never flips it on ties). Each node carries one adjacency
-    * array per layer 0..level(id); upper layers cap at m edges,
-    * layer 0 at the flat store's 2m (the M/M_max0 convention).
-    * Descent: greedy ef=1 from the entry's top layer down to
-    * level+1, then an efConstruction beam + select at each layer
-    * level..0 — the log-layered entry that replaces the flat store's
-    * smallest-id entry point, and the payoff at large shard sizes
-    * (the beam no longer walks in from an arbitrary corner of the
-    * shard).
-    */
-  def insertIntoShardHnsw(existing: Array[(Long, Array[Float], Array[Array[Long]])],
-                          batch: Array[(Long, Array[Float])],
-                          p: Params): Map[Long, Array[Array[Long]]] = {
-    val vecs = mutable.Map.empty[Long, Array[Float]]
-    val layers = mutable.Map.empty[Long, Array[Array[Long]]]
-    existing.foreach { case (id, v, ls) => vecs(id) = v; layers(id) = ls }
-    def levelOf(id: Long): Int = layers(id).length - 1
-    var entry: Long = -1L
-    layers.keysIterator.foreach { id =>
-      if (entry == -1L || levelOf(id) > levelOf(entry) ||
-        (levelOf(id) == levelOf(entry) && id < entry)) entry = id
-    }
-    def adjAt(l: Int)(id: Long): Array[Long] = {
-      val ls = layers(id); if (l < ls.length) ls(l) else Array.empty
-    }
-    def greedyAt(l: Int, q: Array[Float], start: Long): Long = {
-      var cur = start
-      var curD = cosine(q, vecs(cur))
-      var improved = true
-      while (improved) {
-        improved = false
-        adjAt(l)(cur).foreach { nb =>
-          val dn = cosine(q, vecs(nb))
-          if (byDistThenId.lt((dn, nb), (curD, cur))) {
-            cur = nb; curD = dn; improved = true
-          }
-        }
-      }
-      cur
-    }
-    def maxDegreeAt(l: Int): Int = if (l == 0) p.maxDegree else p.m
-    def trim(l: Int, id: Long): Unit = {
-      val edges = layers(id)(l)
-      if (edges.length > maxDegreeAt(l)) {
-        val base = vecs(id)
-        layers(id)(l) = selectNeighbors(
-          edges.map(e => (cosine(base, vecs(e)), e)).toSeq, maxDegreeAt(l), vecs)
-      }
-    }
-    batch.sortBy(_._1).foreach { case (id, v) =>
-      val lvl = hnswLevel(id, p.m, HnswMaxLevel)
-      vecs(id) = v
-      layers(id) = Array.fill(lvl + 1)(Array.empty[Long])
-      if (entry == -1L) entry = id
-      else {
-        val entryLvl = levelOf(entry)
-        var cur = entry
-        var l = entryLvl
-        while (l > lvl) { cur = greedyAt(l, v, cur); l -= 1 }
-        l = math.min(lvl, entryLvl)
-        while (l >= 0) {
-          val near = beamSearchFn(v, cur, vecs, adjAt(l),
-            math.max(p.efConstruction, p.m))
-          layers(id)(l) = selectNeighbors(near, p.m, vecs)
-          layers(id)(l).foreach { nb =>
-            layers(nb)(l) = layers(nb)(l) :+ id
-            trim(l, nb)
-          }
-          trim(l, id)
-          cur = near.head._2
-          l -= 1
-        }
-        if (lvl > entryLvl) entry = id
-      }
-    }
-    layers.toMap
-  }
-
-  /** One shard's HNSW from scratch. */
-  def buildShardHnsw(nodes: Array[(Long, Array[Float])],
-                     p: Params): Map[Long, Array[Array[Long]]] =
-    insertIntoShardHnsw(Array.empty, nodes, p)
-
-  private val hnswSchema: StructType = StructType(Seq(
-    StructField("shard", IntegerType),
-    StructField("vec_id", LongType),
-    StructField("embedding", ArrayType(FloatType)),
-    StructField("level", IntegerType),
-    StructField("layers", ArrayType(ArrayType(LongType)))))
-
-  /** Build the sharded HNSW store — same hash sharding, one
-    * `mapPartitions` task per shard, rows carry the per-layer
-    * adjacency stack (`layers(l)` = neighbors at layer l).
-    */
-  def buildHnswGraph(corpus: DataFrame, vecCol: String, idCol: String,
-                     p: Params): DataFrame = {
-    val spark = corpus.sparkSession
-    val sharded = corpus
-      .select(pmod(col(idCol), lit(p.nShards)).cast("int").as("shard"),
-        col(idCol).cast("long").as("vec_id"),
-        col(vecCol).cast("array<float>").as("embedding"))
-      .repartition(p.nShards, col("shard"))
-    val out = sharded.queryExecution.toRdd.mapPartitions { it =>
-      val rows = it.map { ir =>
-        (ir.getInt(0), ir.getLong(1), ir.getArray(2).toFloatArray())
-      }.toArray
-      rows.groupBy(_._1).iterator.flatMap { case (shard, grp) =>
-        val nodes = grp.map(r => (r._2, r._3))
-        val layers = buildShardHnsw(nodes, p)
-        nodes.sortBy(_._1).iterator.map { case (id, v) =>
-          val ls = layers(id)
-          Row(shard, id, v.toSeq, ls.length - 1, ls.map(_.toSeq).toSeq)
-        }
-      }
-    }
-    spark.createDataFrame(out, hnswSchema)
-  }
-
-  def writeHnswGraph(graph: DataFrame, path: String): Unit =
-    graph.write.partitionBy("shard").mode("overwrite").parquet(path)
-
-  def readHnswGraph(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-      .select(col("shard").cast("int").as("shard"), col("vec_id"),
-        col("embedding"), col("level"), col("layers"))
-
-  /** Incremental HNSW refresh — the layered twin of [[appendToGraph]]:
-    * per shard, the existing (vectors, layer stacks) load once and the
-    * batch inserts through the SAME procedure as the initial build.
-    * Because levels are a pure function of the id ([[hnswLevel]]) and
-    * insertion order is ascending id, a batch of strictly-newer ids
-    * replays exactly the tail of a full rebuild — append ≡ rebuild,
-    * byte for byte (NswSpec locks this), the strongest form of the
-    * flat store's append contract. Backlinks retouch existing nodes,
-    * so touched shards rewrite (the graph-store write amplification;
-    * arrival-window sharding bounds it, as for the flat store).
-    */
-  def appendToHnswGraph(graph: DataFrame, batch: DataFrame, vecCol: String,
-                        idCol: String, p: Params): DataFrame = {
-    val spark = graph.sparkSession
-    val existing = graph
-      .select(col("shard"), col("vec_id"), col("embedding"), col("level"),
-        col("layers"), lit(false).as("is_new"))
-    val incoming = batch
-      .select(pmod(col(idCol), lit(p.nShards)).cast("int").as("shard"),
-        col(idCol).cast("long").as("vec_id"),
-        col(vecCol).cast("array<float>").as("embedding"),
-        lit(0).as("level"),
-        typedLit(Seq.empty[Seq[Long]]).as("layers"), lit(true).as("is_new"))
-      // idempotence: a replayed id must not insert twice — the anti-join
-      // covers ids already in the graph; dropDuplicates covers a vec_id
-      // duplicated WITHIN the batch (the second insertIntoShardHnsw
-      // insert would reset layers(id) while backlinks from the first
-      // persist in other nodes' adjacency, silently breaking the
-      // advertised append ≡ rebuild byte-for-byte contract)
-      .join(graph.select(col("vec_id")), Seq("vec_id"), "left_anti")
-      .dropDuplicates("vec_id")
-      .select(existing.columns.map(col): _*)
-    val all = existing.union(incoming).repartition(p.nShards, col("shard"))
-    val out = all.queryExecution.toRdd.mapPartitions { it =>
-      val rows = it.map { ir =>
-        val layersData = ir.getArray(4)
-        val ls = Array.tabulate(layersData.numElements()) { i =>
-          layersData.getArray(i).toLongArray()
-        }
-        (ir.getInt(0), ir.getLong(1), ir.getArray(2).toFloatArray(), ls,
-          ir.getBoolean(5))
-      }.toArray
-      rows.groupBy(_._1).iterator.flatMap { case (shard, grp) =>
-        val (nw, ex) = grp.partition(_._5)
-        val layers = insertIntoShardHnsw(
-          ex.map(r => (r._2, r._3, r._4)), nw.map(r => (r._2, r._3)), p)
-        grp.sortBy(_._2).iterator.map { case (_, id, v, _, _) =>
-          val ls = layers(id)
-          Row(shard, id, v.toSeq, ls.length - 1, ls.map(_.toSeq).toSeq)
-        }
-      }
-    }
-    spark.createDataFrame(out, hnswSchema)
-  }
-
-  /** Per-shard HNSW candidates: greedy layer descent from the shard's
-    * top-level entry (ties → smallest id, matching the build), then
-    * one efSearch beam at layer 0 — ≤ efSearch ids per shard, the
-    * same bounded-candidate contract as [[shardCandidates]].
-    */
-  def hnswShardCandidates(graph: DataFrame, queryVec: Array[Float],
-                          p: Params): DataFrame = {
-    val spark = graph.sparkSession
-    val q = spark.sparkContext.broadcast(queryVec)
-    val prepared = graph
-      .select(col("shard"), col("vec_id"), col("embedding"), col("level"),
-        col("layers"))
-      .repartition(p.nShards, col("shard"))
-    val out = prepared.queryExecution.toRdd.mapPartitions { it =>
-      val rows = it.map { ir =>
-        val layersData = ir.getArray(4)
-        val ls = Array.tabulate(layersData.numElements()) { i =>
-          layersData.getArray(i).toLongArray()
-        }
-        (ir.getInt(0), ir.getLong(1), ir.getArray(2).toFloatArray(),
-          ir.getInt(3), ls)
-      }.toArray
-      rows.groupBy(_._1).iterator.flatMap { case (shard, grp) =>
-        val vecs = grp.map(r => (r._2, r._3)).toMap
-        val layers = grp.map(r => (r._2, r._5)).toMap
-        def adjAt(l: Int)(id: Long): Array[Long] = {
-          val ls = layers(id); if (l < ls.length) ls(l) else Array.empty
-        }
-        var entry = grp.head._2
-        grp.foreach { r =>
-          val better = r._4 > layers(entry).length - 1 ||
-            (r._4 == layers(entry).length - 1 && r._2 < entry)
-          if (better) entry = r._2
-        }
-        var cur = entry
-        var curD = cosine(q.value, vecs(cur))
-        var l = layers(entry).length - 1
-        while (l > 0) {
-          var improved = true
-          while (improved) {
-            improved = false
-            adjAt(l)(cur).foreach { nb =>
-              val dn = cosine(q.value, vecs(nb))
-              if (byDistThenId.lt((dn, nb), (curD, cur))) {
-                cur = nb; curD = dn; improved = true
-              }
-            }
-          }
-          l -= 1
-        }
-        beamSearchFn(q.value, cur, vecs, adjAt(0), p.efSearch)
-          .iterator.map { case (d, id) => Row(shard, id, d) }
-      }
-    }
-    spark.createDataFrame(out, StructType(Seq(
-      StructField("shard", IntegerType),
-      StructField("vec_id", LongType),
-      StructField("beam_distance", DoubleType))))
-  }
-
-  /** End-to-end HNSW search: layered beam per shard → bounded
-    * candidate list → EXACT top-k re-rank, identical second stage to
-    * [[search]] (and the identical recorded-candidate-set late-oracle
-    * contract).
-    */
-  def hnswSearch(graph: DataFrame, corpus: DataFrame, vecCol: String,
-                 idCol: String, queryVec: Array[Float], k: Int,
-                 p: Params, metric: Knn.Metric = Knn.Cosine): (DataFrame, Seq[Long]) = {
-    val cands = hnswShardCandidates(graph, queryVec, p)
-      .select("vec_id").collect().map(_.getLong(0)).toSeq.sorted
-    val result = Knn.search(
-      corpus.filter(col(idCol).isin(cands: _*)),
-      vecCol, idCol, queryVec, k, metric)
-    (result, cands)
-  }
-
-  /** Hybrid predicate + HNSW search: the beams run unchanged (the graph
-    * is predicate-agnostic — dropping nodes DURING traversal would
-    * disconnect the small-world routing), and the predicate applies in
-    * the exact re-rank stage, composing with the candidate IN-filter on
-    * one corpus scan (both push to the parquet scan). Only
-    * predicate-survivors can place, so the efSearch beam is the
-    * oversampling budget: a deployment sizes efSearch ∝ 1/selectivity
-    * (the standard filtered-ANN contract — same trade as IVF's
-    * knn_filtered_ivf_rewrite, where probes oversample instead).
-    */
-  def hnswFilteredSearch(graph: DataFrame, corpus: DataFrame,
-                         predicate: org.apache.spark.sql.Column,
-                         vecCol: String, idCol: String,
-                         queryVec: Array[Float], k: Int, p: Params,
-                         metric: Knn.Metric = Knn.Cosine): (DataFrame, Seq[Long]) = {
-    val cands = hnswShardCandidates(graph, queryVec, p)
-      .select("vec_id").collect().map(_.getLong(0)).toSeq.sorted
-    val result = Knn.search(
-      corpus.filter(predicate && col(idCol).isin(cands: _*)),
       vecCol, idCol, queryVec, k, metric)
     (result, cands)
   }
@@ -1061,8 +819,8 @@ object Nsw {
     * never data" contract as IVF's centroid array. Element sums
     * accumulate in exact DECIMAL so the centroid is a pure function of
     * the shard's vector SET (shuffle-order-independent) and routing is
-    * reproducible across runs. Works for flat-NSW and HNSW stores alike
-    * (both carry (shard, embedding)).
+    * reproducible across runs. Works at any level cap (it reads only
+    * (shard, embedding)).
     */
   def shardCentroids(graph: DataFrame): Array[(Int, Array[Double])] = {
     val rows = graph
@@ -1101,33 +859,13 @@ object Nsw {
     centroids.map { case (sh, c) => (cosineDbl(queryVec, c), sh) }
       .sortBy(t => (t._1, t._2)).take(nprobe).map(_._2).sorted
 
-  /** Routed HNSW search: route to the nprobe centroid-nearest shards,
-    * beam ONLY those (the shard filter is a pushed partition filter on
-    * the shard-partitioned store — unrouted shard directories are never
+  /** Routed search: route to the nprobe centroid-nearest shards, beam
+    * ONLY those (the shard filter is a pushed partition filter on the
+    * shard-partitioned store — unrouted shard directories are never
     * opened), then the identical exact re-rank + recorded-candidate-set
-    * contract as [[hnswSearch]]. Returns (result, candidates, routed
+    * contract as [[search]]. Returns (result, candidates, routed
     * shards). Candidates are by construction the full fan's candidates
     * restricted to the routed shards (per-shard beams are independent).
-    */
-  def hnswRoutedSearch(graph: DataFrame, corpus: DataFrame, vecCol: String,
-                       idCol: String, queryVec: Array[Float], k: Int,
-                       centroids: Array[(Int, Array[Double])], nprobe: Int,
-                       p: Params, metric: Knn.Metric = Knn.Cosine)
-      : (DataFrame, Seq[Long], Seq[Int]) = {
-    val routed = routeShards(centroids, queryVec, nprobe)
-    val pruned = graph.filter(col("shard")
-      .isin(routed.map(Integer.valueOf): _*))
-    val cands = hnswShardCandidates(pruned, queryVec, p)
-      .select("vec_id").collect().map(_.getLong(0)).toSeq.sorted
-    val result = Knn.search(
-      corpus.filter(col(idCol).isin(cands: _*)),
-      vecCol, idCol, queryVec, k, metric)
-    (result, cands, routed)
-  }
-
-  /** Routed flat-NSW search — the same router over [[shardCandidates]]'
-    * store shape (the two stores share (shard, embedding), so one
-    * centroid relation serves both).
     */
   def routedSearch(graph: DataFrame, corpus: DataFrame, vecCol: String,
                    idCol: String, queryVec: Array[Float], k: Int,
@@ -1135,13 +873,9 @@ object Nsw {
                    p: Params, metric: Knn.Metric = Knn.Cosine)
       : (DataFrame, Seq[Long], Seq[Int]) = {
     val routed = routeShards(centroids, queryVec, nprobe)
-    val pruned = graph.filter(col("shard")
-      .isin(routed.map(Integer.valueOf): _*))
-    val cands = shardCandidates(pruned, queryVec, p)
-      .select("vec_id").collect().map(_.getLong(0)).toSeq.sorted
-    val result = Knn.search(
-      corpus.filter(col(idCol).isin(cands: _*)),
-      vecCol, idCol, queryVec, k, metric)
+    val (result, cands) = search(
+      graph.filter(col("shard").isin(routed.map(Integer.valueOf): _*)),
+      corpus, vecCol, idCol, queryVec, k, p, metric)
     (result, cands, routed)
   }
 }

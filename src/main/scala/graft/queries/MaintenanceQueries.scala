@@ -530,7 +530,8 @@ object MaintenanceQueries {
       "derives shard membership of the FULL corpus from vec_id " +
       "arithmetic: a green hash proves the append lost, duplicated, " +
       "and misplaced nothing. Graph QUALITY after append (connectivity, " +
-      "recall ≥ exact-rebuild band) is NswSpec's half of the contract.",
+      "recall ≥ exact-rebuild band) and the appended edges themselves " +
+      "(a golden fingerprint) are NswSpec's half of the contract.",
     (s, dir) => {
       val table = NswAppendStore.ensure(s, dir)
       val h = conv(substring(md5(col("vec_id").cast("string")), 1, 12), 16, 10)
@@ -550,46 +551,49 @@ object MaintenanceQueries {
       |GROUP BY 1 ORDER BY shard
       """.stripMargin.trim))
 
-  /** HNSW store built WITHOUT the newest id quarter, then the quarter
-    * appended through [[graft.operators.Nsw.appendToHnswGraph]]. A
-    * strictly-newer batch replays exactly the tail of a full rebuild
-    * (levels are a pure function of the id), so NswSpec asserts append
-    * ≡ rebuild BYTE-FOR-BYTE; this gate covers membership fidelity of
-    * the persisted store. One build+append per (fixture, JVM).
+  /** Layered store (cap [[graft.operators.Nsw.HnswMaxLevel]]) built
+    * WITHOUT the newest id quarter, then the quarter appended through
+    * [[graft.operators.Nsw.appendToGraph]]. A strictly-newer batch
+    * replays exactly the tail of a full rebuild (levels are a pure
+    * function of the id), so NswSpec asserts append ≡ rebuild
+    * BYTE-FOR-BYTE; this gate covers membership fidelity of the
+    * persisted store. One build+append per (fixture, JVM).
     */
   private object HnswAppendStore {
     val params: graft.operators.Nsw.Params =
       graft.operators.Nsw.Params(nShards = 4, m = 8,
-        efConstruction = 32, efSearch = 32)
+        efConstruction = 32, efSearch = 32,
+        maxLevel = graft.operators.Nsw.HnswMaxLevel)
     def ensure(s: SparkSession, dir: String): String =
       TmpStores.memoizedTable("graft_hnsw_append", dir) { root =>
         import graft.operators.Nsw
         val table = s"$root/hnsw"
         val emb = Tables.embeddings(s, dir)
         val cut = emb.agg(max(col("vec_id"))).first().getLong(0) / 4 * 3
-        Nsw.writeHnswGraph(Nsw.buildHnswGraph(
+        Nsw.writeGraph(Nsw.buildGraph(
           emb.filter(col("vec_id") < cut), "embedding", "vec_id", params), table)
-        val appended = Nsw.appendToHnswGraph(Nsw.readHnswGraph(s, table),
+        val appended = Nsw.appendToGraph(Nsw.readGraph(s, table),
           emb.filter(col("vec_id") >= cut), "embedding", "vec_id", params)
         // stage-then-swap: the append READS the store being replaced
         val staged = s"$root/hnsw_appended"
-        Nsw.writeHnswGraph(appended, staged)
+        Nsw.writeGraph(appended, staged)
         staged
       }
   }
 
   private val hnswAppend = QueryDef(
     "maint_hnsw_append",
-    "Incremental LAYERED-graph-index maintenance gate (the HNSW twin " +
-      "of maint_nsw_append): the layered store is built without the " +
+    "Incremental LAYERED-graph-index maintenance gate (maint_nsw_append " +
+      "at level cap 8): the layered store is built without the " +
       "newest id quarter, then the quarter inserts into the persisted " +
       "per-shard graphs through the one insertion procedure — and " +
       "because a node's LEVEL is a pure function of its id (the md5 " +
       "draw), a strictly-newer batch replays exactly the tail of a " +
       "full rebuild: NswSpec asserts append ≡ rebuild byte-for-byte, " +
       "layer stacks included, the strongest form of the append " +
-      "contract (the flat store only gets node-set equality under " +
-      "interleaved batches). This gate hashes per-shard counts + an " +
+      "contract (maint_nsw_append's interleaved batch inserts ids " +
+      "below stored ones, so NswSpec pins its appended edges by a " +
+      "golden fingerprint instead). This gate hashes per-shard counts + an " +
       "order-independent md5 row-set checksum of the appended store " +
       "against vec_id arithmetic over the full corpus: green proves " +
       "the append lost, duplicated, and misplaced nothing (levels and " +
@@ -599,7 +603,7 @@ object MaintenanceQueries {
       val table = HnswAppendStore.ensure(s, dir)
       val h = conv(substring(md5(col("vec_id").cast("string")), 1, 12), 16, 10)
         .cast(DecimalType(38, 0))
-      graft.operators.Nsw.readHnswGraph(s, table)
+      graft.operators.Nsw.readGraph(s, table)
         .groupBy(col("shard").cast("long").as("shard"))
         .agg(count(lit(1)).as("n_vecs"),
           sum(h).cast(DecimalType(38, 0)).cast("string").as("rowset_fp"))

@@ -451,31 +451,63 @@ object VectorQueries {
       """.stripMargin.trim
     })
 
-  /** Sharded NSW graph store per (fixture, JVM) — the graph-ANN family
-    * member (Malkov et al. 2014; HNSW 2016 layers the same search).
-    * The build is one `mapPartitions` pass (independent per-shard
-    * graphs, ascending-id insertion — deterministic), persisted
-    * partitioned by shard. The beam-searched candidate id set is kept
-    * for the LATE oracle: graph traversal is not SQL-recomputable, so
-    * the oracle re-ranks THIS run's candidate list exactly (the same
-    * self-consistency contract as the fitted-KMeans/PQ oracles).
+  /** Sharded graph store per (fixture, JVM) at level cap `maxLevel`
+    * (Malkov & Yashunin 2016; cap 0 is the flat NSW of Malkov et al.
+    * 2014), memoized under `prefix`. The build is one `mapPartitions`
+    * pass (independent per-shard graphs, ascending-id insertion —
+    * deterministic), persisted partitioned by shard. The beam-searched
+    * candidate id set is kept for the LATE oracle: graph traversal is
+    * not SQL-recomputable, so the oracle re-ranks THIS run's candidate
+    * list exactly (the same self-consistency contract as the
+    * fitted-KMeans/PQ oracles).
     */
-  private[queries] object NswStore {
+  private[queries] final class GraphStore(prefix: String, maxLevel: Int) {
     val params: Nsw.Params = Nsw.Params(nShards = 4, m = 8,
-      efConstruction = 32, efSearch = 32)
+      efConstruction = 32, efSearch = 32, maxLevel = maxLevel)
     val candidates = scala.collection.concurrent.TrieMap.empty[String, Seq[Long]]
     @volatile var lastDir: Option[String] = None
     private val written = scala.collection.concurrent.TrieMap.empty[String, String]
     def ensure(s: org.apache.spark.sql.SparkSession, dir: String): String = {
       lastDir = Some(dir)
       written.getOrElseUpdate(dir, {
-        val p = TmpStores.pidScopedPath("graft_nsw_idx", dir)
+        val p = TmpStores.pidScopedPath(prefix, dir)
         Nsw.writeGraph(Nsw.buildGraph(Tables.embeddings(s, dir),
           "embedding", "vec_id", params), p)
         p
       })
     }
   }
+
+  /** The flat store (cap 0): ann_nsw_beam, the routed batch and the
+    * serving gates.
+    */
+  private[queries] val NswStore = new GraphStore("graft_nsw_idx", maxLevel = 0)
+
+  /** The layered store (cap [[Nsw.HnswMaxLevel]]): same hash shards and
+    * diverse-neighbor insertion, plus the log-layered entry-point
+    * descent (deterministic md5 levels).
+    */
+  private[queries] val HnswStore = new GraphStore("graft_hnsw_idx", Nsw.HnswMaxLevel)
+
+  /** Per-shard centroids of a [[GraphStore]] — the shard ROUTER's index
+    * metadata: one bounded aggregate per (fixture, JVM), nShards rows
+    * held on the driver exactly like IVF's centroid array. Exact
+    * DECIMAL element sums make the centroids a pure function of each
+    * shard's vector set (shuffle-order-independent), so routing is
+    * reproducible across runs.
+    */
+  private[queries] final class GraphRouterStore(store: GraphStore) {
+    val nprobe = 2
+    private val cents = scala.collection.concurrent.TrieMap
+      .empty[String, Array[(Int, Array[Double])]]
+    def ensure(s: org.apache.spark.sql.SparkSession,
+               dir: String): Array[(Int, Array[Double])] =
+      cents.getOrElseUpdate(dir,
+        Nsw.shardCentroids(Nsw.readGraph(s, store.ensure(s, dir))))
+  }
+
+  private[queries] val NswRouterStore = new GraphRouterStore(NswStore)
+  private[queries] val HnswRouterStore = new GraphRouterStore(HnswStore)
 
   /** Late-oracle builder for candidate-restricted batch re-ranks (the
     * NSW batch/streaming serving gates): for each query, exact cosine
@@ -537,32 +569,11 @@ object VectorQueries {
         """.stripMargin.trim
       }))
 
-  /** Sharded HNSW store per (fixture, JVM) — the layered twin of
-    * [[NswStore]]: same hash shards, same diverse-neighbor insertion,
-    * plus the log-layered entry-point descent (deterministic md5
-    * levels). Same recorded-candidate-set late-oracle contract.
-    */
-  private[queries] object HnswStore {
-    val params: Nsw.Params = Nsw.Params(nShards = 4, m = 8,
-      efConstruction = 32, efSearch = 32)
-    val candidates = scala.collection.concurrent.TrieMap.empty[String, Seq[Long]]
-    @volatile var lastDir: Option[String] = None
-    private val written = scala.collection.concurrent.TrieMap.empty[String, String]
-    def ensure(s: org.apache.spark.sql.SparkSession, dir: String): String = {
-      lastDir = Some(dir)
-      written.getOrElseUpdate(dir, {
-        val p = TmpStores.pidScopedPath("graft_hnsw_idx", dir)
-        Nsw.writeHnswGraph(Nsw.buildHnswGraph(Tables.embeddings(s, dir),
-          "embedding", "vec_id", params), p)
-        p
-      })
-    }
-  }
-
   private val hnswBeam = QueryDef(
     "ann_hnsw_beam",
     "HNSW search over the persisted shard-partitioned LAYERED graph " +
-      "store (Malkov & Yashunin 2016 on top of the flat NSW build): " +
+      "store (Malkov & Yashunin 2016: ann_nsw_beam's build at level " +
+      "cap 8 instead of 0): " +
       "each node draws level l with P(level ≥ l) = m^(-l) from the " +
       "portable md5 hash of its id — a pure function of the id, so " +
       "levels survive appends and rebuilds identically — and carries " +
@@ -570,7 +581,7 @@ object VectorQueries {
       "layer 0). Search descends greedily (ef=1) from the shard's " +
       "top-level entry point through the upper layers, then runs the " +
       "efSearch beam at layer 0 — the log-layered entry replaces the " +
-      "flat store's smallest-id entry, which at large shard sizes is " +
+      "cap-0 store's smallest-id entry, which at large shard sizes is " +
       "an arbitrary corner the beam must walk in from. Exact cosine " +
       "top-10 re-rank over the ≤ nShards·efSearch candidates, " +
       "identical second stage (and late oracle: re-rank THIS run's " +
@@ -578,7 +589,7 @@ object VectorQueries {
       "layer invariants, RECALL.md the ef sweep vs flat NSW.",
     (s, dir) => {
       val path = HnswStore.ensure(s, dir)
-      val (res, cands) = Nsw.hnswSearch(Nsw.readHnswGraph(s, path),
+      val (res, cands) = Nsw.search(Nsw.readGraph(s, path),
         Tables.embeddings(s, dir), "embedding", "vec_id",
         Queries.queryVec64, k = 10, HnswStore.params)
       HnswStore.candidates(dir) = cands
@@ -601,24 +612,10 @@ object VectorQueries {
         """.stripMargin.trim
       }))
 
-  /** Per-shard centroids of the HNSW store — the shard ROUTER's index
-    * metadata: one bounded aggregate per (fixture, JVM), nShards rows
-    * held on the driver exactly like IVF's centroid array. Exact
-    * DECIMAL element sums make the centroids a pure function of each
-    * shard's vector set (shuffle-order-independent), so routing is
-    * reproducible across runs.
-    */
-  private[queries] object HnswRouterStore {
-    val nprobe = 2
-    val cents = scala.collection.concurrent.TrieMap
-      .empty[String, Array[(Int, Array[Double])]]
+  private object HnswRoutedState {
     val candidates = scala.collection.concurrent.TrieMap.empty[String, Seq[Long]]
     val routed = scala.collection.concurrent.TrieMap.empty[String, Seq[Int]]
     @volatile var lastDir: Option[String] = None
-    def ensure(s: org.apache.spark.sql.SparkSession,
-               dir: String): Array[(Int, Array[Double])] =
-      cents.getOrElseUpdate(dir,
-        Nsw.shardCentroids(Nsw.readHnswGraph(s, HnswStore.ensure(s, dir))))
   }
 
   private val hnswRouted = QueryDef(
@@ -646,23 +643,23 @@ object VectorQueries {
     (s, dir) => {
       val path = HnswStore.ensure(s, dir)
       val cents = HnswRouterStore.ensure(s, dir)
-      val (res, cands, routed) = Nsw.hnswRoutedSearch(
-        Nsw.readHnswGraph(s, path), Tables.embeddings(s, dir),
+      val (res, cands, routed) = Nsw.routedSearch(
+        Nsw.readGraph(s, path), Tables.embeddings(s, dir),
         "embedding", "vec_id", Queries.queryVec64, k = 10,
         cents, HnswRouterStore.nprobe, HnswStore.params)
-      HnswRouterStore.candidates(dir) = cands
-      HnswRouterStore.routed(dir) = routed
-      HnswRouterStore.lastDir = Some(dir)
+      HnswRoutedState.candidates(dir) = cands
+      HnswRoutedState.routed(dir) = routed
+      HnswRoutedState.lastDir = Some(dir)
       res.select(col("vec_id"), lit(routed.mkString(",")).as("routed_shards"),
           round(col("distance_score"), 6).as("distance"))
         .orderBy(col("distance"), col("vec_id"))
     },
     oracle = None,
     oracleLate = Some(() =>
-      HnswRouterStore.lastDir.flatMap { d =>
+      HnswRoutedState.lastDir.flatMap { d =>
         for {
-          cands <- HnswRouterStore.candidates.get(d)
-          routed <- HnswRouterStore.routed.get(d)
+          cands <- HnswRoutedState.candidates.get(d)
+          routed <- HnswRoutedState.routed.get(d)
         } yield {
           val qLit = vecLit(Queries.queryVec64)
           s"""
@@ -697,8 +694,8 @@ object VectorQueries {
       "THIS run's recorded candidate set.",
     (s, dir) => {
       val path = HnswStore.ensure(s, dir)
-      val (res, cands) = Nsw.hnswFilteredSearch(Nsw.readHnswGraph(s, path),
-        Tables.embeddings(s, dir), col("label").isin(2, 5, 8),
+      val (res, cands) = Nsw.search(Nsw.readGraph(s, path),
+        Tables.embeddings(s, dir).filter(col("label").isin(2, 5, 8)),
         "embedding", "vec_id", Queries.queryVec64, k = 10, HnswStore.params)
       FilteredHnswState.candidates(dir) = cands
       FilteredHnswState.lastDir = Some(dir)
@@ -774,8 +771,8 @@ object VectorQueries {
       val ranked = chosen match {
         case "hnsw" =>
           val hnswPath = HnswStore.ensure(s, dir)
-          val (res, cands, _) = Nsw.hnswRoutedSearch(
-            Nsw.readHnswGraph(s, hnswPath), corpus, "embedding", "vec_id",
+          val (res, cands, _) = Nsw.routedSearch(
+            Nsw.readGraph(s, hnswPath), corpus, "embedding", "vec_id",
             q, k = 10, HnswRouterStore.ensure(s, dir),
             HnswRouterStore.nprobe, p)
           CostServingState.hnswCands(dir) = cands
@@ -875,19 +872,6 @@ object VectorQueries {
     val cands = scala.collection.concurrent.TrieMap.empty[String, Map[Int, Seq[Long]]]
     val routes = scala.collection.concurrent.TrieMap.empty[String, Map[Int, Seq[Int]]]
     @volatile var lastDir: Option[String] = None
-  }
-
-  /** Flat-NSW shard centroids per (fixture, JVM) — same one-bounded-
-    * aggregate contract as [[HnswRouterStore]], over the flat store.
-    */
-  private[queries] object NswRouterStore {
-    val nprobe = 2
-    private val cents = scala.collection.concurrent.TrieMap
-      .empty[String, Array[(Int, Array[Double])]]
-    def ensure(s: org.apache.spark.sql.SparkSession,
-               dir: String): Array[(Int, Array[Double])] =
-      cents.getOrElseUpdate(dir,
-        Nsw.shardCentroids(Nsw.readGraph(s, NswStore.ensure(s, dir))))
   }
 
   /** duckNswBatchSql with each query's routed shard list riding the
@@ -1014,8 +998,8 @@ object VectorQueries {
             "embedding", "vec_id", q, k = 10)
         case "hnsw" =>
           val hnswPath = HnswStore.ensure(s, dir)
-          val (res, cands, _) = Nsw.hnswRoutedSearch(
-            Nsw.readHnswGraph(s, hnswPath), corpus, "embedding", "vec_id",
+          val (res, cands, _) = Nsw.routedSearch(
+            Nsw.readGraph(s, hnswPath), corpus, "embedding", "vec_id",
             q, k = 10, HnswRouterStore.ensure(s, dir),
             HnswRouterStore.nprobe, p)
           CostServing4State.recorded(dir) = cands

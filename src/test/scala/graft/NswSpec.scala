@@ -2,10 +2,12 @@ package graft
 
 import graft.operators.{Knn, Nsw}
 import graft.queries.Queries
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
-/** Operator tests for the sharded NSW graph-ANN (the graph family
-  * member beside IVF/LSH/PQ). The registered query's hash gate covers
+/** Operator tests for the sharded graph-ANN (the graph family member
+  * beside IVF/LSH/PQ), at level cap 0 (flat NSW) and at
+  * [[Nsw.HnswMaxLevel]] (HNSW). The registered query's hash gate covers
   * the exact re-rank; these cover the GRAPH: build invariants, search
   * determinism, exhaustive-beam exactness, and recall vs exact KNN.
   */
@@ -14,15 +16,38 @@ class NswSpec extends SparkSpec {
   private lazy val emb = Tables.embeddings(spark, sf("sf0.001"))
   private val q = Queries.queryVec64
   private val p = Nsw.Params(nShards = 4, m = 8, efConstruction = 32, efSearch = 32)
+  private val ph = p.copy(maxLevel = Nsw.HnswMaxLevel)
 
   private lazy val graph = Nsw.buildGraph(emb, "embedding", "vec_id", p).cache()
+
+  private def layersOf(r: Row): Seq[Seq[Long]] =
+    r.getSeq[scala.collection.Seq[Long]](r.fieldIndex("layers")).map(_.toSeq).toSeq
+
+  private def layer0(r: Row): Seq[Long] = layersOf(r).head
+
+  /** Per shard, the nodes not reachable at layer 0 from the shard's
+    * entry (highest level, ties to the smallest id).
+    */
+  private def unreachableAtLayer0(rows: Array[Row]): Map[Int, Int] =
+    rows.groupBy(_.getAs[Int]("shard")).map { case (shard, rs) =>
+      val adj = rs.map(r => r.getAs[Long]("vec_id") -> layer0(r)).toMap
+      val entry = rs.minBy(r =>
+        (-r.getAs[Int]("level"), r.getAs[Long]("vec_id"))).getAs[Long]("vec_id")
+      val seen = collection.mutable.Set(entry)
+      val stack = collection.mutable.Stack(entry)
+      while (stack.nonEmpty)
+        adj(stack.pop()).foreach(n => if (seen.add(n)) stack.push(n))
+      shard -> (adj.size - seen.size)
+    }
 
   test("graph covers every corpus vector, degree-capped, no self-loops") {
     val rows = graph.collect()
     assert(rows.length == emb.count())
     rows.foreach { r =>
       val id = r.getAs[Long]("vec_id")
-      val nbrs = r.getSeq[Long](r.fieldIndex("neighbors"))
+      assert(r.getAs[Int]("level") == 0 && layersOf(r).length == 1,
+        s"node $id is not a level-0 node at cap 0")
+      val nbrs = layer0(r)
       assert(nbrs.length <= p.maxDegree, s"node $id degree ${nbrs.length} > ${p.maxDegree}")
       assert(!nbrs.contains(id), s"node $id has a self-loop")
       assert(nbrs.distinct.length == nbrs.length, s"node $id has duplicate edges")
@@ -31,17 +56,8 @@ class NswSpec extends SparkSpec {
   }
 
   test("every non-entry node is reachable from its shard entry (connectivity)") {
-    val byShard = graph.collect().groupBy(_.getAs[Int]("shard"))
-    byShard.foreach { case (shard, rows) =>
-      val adj = rows.map(r => r.getAs[Long]("vec_id") ->
-        r.getSeq[Long](r.fieldIndex("neighbors")).toArray).toMap
-      val entry = adj.keys.min
-      val seen = collection.mutable.Set(entry)
-      val stack = collection.mutable.Stack(entry)
-      while (stack.nonEmpty)
-        adj(stack.pop()).foreach(n => if (seen.add(n)) stack.push(n))
-      assert(seen.size == adj.size,
-        s"shard $shard: ${adj.size - seen.size} nodes unreachable from entry")
+    unreachableAtLayer0(graph.collect()).foreach { case (shard, n) =>
+      assert(n == 0, s"shard $shard: $n nodes unreachable from entry")
     }
   }
 
@@ -109,16 +125,10 @@ class NswSpec extends SparkSpec {
     val want = emb.select("vec_id").collect().map(_.getLong(0)).toSet
     assert(got == want)
     // every shard still connected from its entry; degrees still capped
-    val byShard = appended.collect().groupBy(_.getAs[Int]("shard"))
-    byShard.foreach { case (shard, rows) =>
-      val adj = rows.map(r => r.getAs[Long]("vec_id") ->
-        r.getSeq[Long](r.fieldIndex("neighbors")).toArray).toMap
-      adj.values.foreach(n => assert(n.length <= p.maxDegree))
-      val seen = collection.mutable.Set(adj.keys.min)
-      val stack = collection.mutable.Stack(adj.keys.min)
-      while (stack.nonEmpty)
-        adj(stack.pop()).foreach(n => if (seen.add(n)) stack.push(n))
-      assert(seen.size == adj.size, s"shard $shard disconnected after append")
+    val rows = appended.collect()
+    rows.foreach(r => assert(layer0(r).length <= p.maxDegree))
+    unreachableAtLayer0(rows).foreach { case (shard, n) =>
+      assert(n == 0, s"shard $shard disconnected after append")
     }
     // batch vectors are actually findable: search quality holds
     val (res, _) = Nsw.search(appended, emb, "embedding", "vec_id", q, 10, p)
@@ -137,8 +147,8 @@ class NswSpec extends SparkSpec {
       Nsw.buildGraph(base, "embedding", "vec_id", p),
       batch, "embedding", "vec_id", p).cache()
     val twice = Nsw.appendToGraph(once, batch, "embedding", "vec_id", p)
-    val a = once.collect().map(r => (r.getLong(1), r.getSeq[Long](3))).sortBy(_._1).toSeq
-    val b = twice.collect().map(r => (r.getLong(1), r.getSeq[Long](3))).sortBy(_._1).toSeq
+    val a = once.collect().map(r => (r.getLong(1), layersOf(r))).sortBy(_._1).toSeq
+    val b = twice.collect().map(r => (r.getLong(1), layersOf(r))).sortBy(_._1).toSeq
     once.unpersist()
     assert(a == b, "replaying the same batch changed the graph")
   }
@@ -215,9 +225,8 @@ class NswSpec extends SparkSpec {
       emb.filter(col("vec_id") < 3 * ws), "embedding", "vec_id", ws, p), store)
     Nsw.appendToGraphWindowed(spark, store,
       emb.filter(col("vec_id") >= 3 * ws), "embedding", "vec_id", ws, p)
-    def edges(df: org.apache.spark.sql.DataFrame) = df
-      .select("shard", "vec_id", "neighbors").collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Long](2).toSeq))
+    def edges(df: DataFrame) = df.collect()
+      .map(r => (r.getAs[Int]("shard"), r.getAs[Long]("vec_id"), layersOf(r)))
       .sortBy(t => (t._1, t._2)).toSeq
     val appended = edges(Nsw.readGraph(spark, store))
     val rebuilt = edges(Nsw.buildGraphWindowed(emb, "embedding", "vec_id", ws, p))
@@ -241,7 +250,7 @@ class NswSpec extends SparkSpec {
 
   // ---------------- HNSW layer hierarchy ----------------
 
-  private lazy val hnsw = Nsw.buildHnswGraph(emb, "embedding", "vec_id", p).cache()
+  private lazy val hnsw = Nsw.buildGraph(emb, "embedding", "vec_id", ph).cache()
 
   test("hnsw: levels are the deterministic md5 draw; layer stacks sized level+1") {
     val rows = hnsw.collect()
@@ -286,24 +295,14 @@ class NswSpec extends SparkSpec {
   }
 
   test("hnsw: layer 0 stays connected from the top-level entry") {
-    val byShard = hnsw.collect().groupBy(_.getAs[Int]("shard"))
-    byShard.foreach { case (shard, rows) =>
-      val adj = rows.map(r => r.getAs[Long]("vec_id") ->
-        r.getSeq[scala.collection.Seq[Long]](r.fieldIndex("layers")).head.toArray).toMap
-      val entry = rows.minBy(r =>
-        (-r.getAs[Int]("level"), r.getAs[Long]("vec_id"))).getAs[Long]("vec_id")
-      val seen = collection.mutable.Set(entry)
-      val stack = collection.mutable.Stack(entry)
-      while (stack.nonEmpty)
-        adj(stack.pop()).foreach(n => if (seen.add(n)) stack.push(n))
-      assert(seen.size == adj.size,
-        s"shard $shard: ${adj.size - seen.size} nodes unreachable at layer 0")
+    unreachableAtLayer0(hnsw.collect()).foreach { case (shard, n) =>
+      assert(n == 0, s"shard $shard: $n nodes unreachable at layer 0")
     }
   }
 
   test("hnsw: search is deterministic and recall@10 >= 0.8 vs exact") {
-    val (r1, c1) = Nsw.hnswSearch(hnsw, emb, "embedding", "vec_id", q, 10, p)
-    val (r2, c2) = Nsw.hnswSearch(hnsw, emb, "embedding", "vec_id", q, 10, p)
+    val (r1, c1) = Nsw.search(hnsw, emb, "embedding", "vec_id", q, 10, ph)
+    val (r2, c2) = Nsw.search(hnsw, emb, "embedding", "vec_id", q, 10, ph)
     assert(c1 == c2)
     assert(c1.length <= p.nShards * p.efSearch)
     assert(r1.collect().toSeq == r2.collect().toSeq)
@@ -315,8 +314,8 @@ class NswSpec extends SparkSpec {
   }
 
   test("hnsw: exhaustive layer-0 beam returns the exact per-shard ranking") {
-    val pAll = p.copy(efSearch = 1000)
-    val (res, cands) = Nsw.hnswSearch(hnsw, emb, "embedding", "vec_id", q, 10, pAll)
+    val pAll = ph.copy(efSearch = 1000)
+    val (res, cands) = Nsw.search(hnsw, emb, "embedding", "vec_id", q, 10, pAll)
     val exact = Knn.search(emb, "embedding", "vec_id", q, 10)
       .select("vec_id").collect().map(_.getLong(0)).toSeq
     assert(exact.toSet.subsetOf(cands.toSet))
@@ -324,7 +323,7 @@ class NswSpec extends SparkSpec {
   }
 
   test("hnsw: store round trip is byte-stable (two builds identical)") {
-    val again = Nsw.buildHnswGraph(emb, "embedding", "vec_id", p)
+    val again = Nsw.buildGraph(emb, "embedding", "vec_id", ph)
     val a = hnsw.orderBy("vec_id").collect().toSeq
     val b = again.orderBy("vec_id").collect().toSeq
     assert(a == b, "two HNSW builds of one corpus must be identical")
@@ -334,19 +333,19 @@ class NswSpec extends SparkSpec {
     // a batch of strictly-newer ids replays exactly the tail of a full
     // rebuild: ascending-id insertion + id-pure levels leave NO state
     // the append path could diverge on — the strongest append contract
-    // in the index family (the flat NSW only asserts node-set equality
-    // under interleaved batches)
+    // in the index family (the interleaved flat append below asserts
+    // node-set equality; its edges are pinned by a golden fingerprint)
     val cut = emb.agg(max(col("vec_id"))).first().getLong(0) / 4 * 3
-    val base = Nsw.buildHnswGraph(
-      emb.filter(col("vec_id") < cut), "embedding", "vec_id", p)
-    val appended = Nsw.appendToHnswGraph(base,
-      emb.filter(col("vec_id") >= cut), "embedding", "vec_id", p)
+    val base = Nsw.buildGraph(
+      emb.filter(col("vec_id") < cut), "embedding", "vec_id", ph)
+    val appended = Nsw.appendToGraph(base,
+      emb.filter(col("vec_id") >= cut), "embedding", "vec_id", ph)
     val a = appended.orderBy("vec_id").collect().toSeq
     val b = hnsw.orderBy("vec_id").collect().toSeq
     assert(a == b, "append of a strictly-newer batch must equal the rebuild exactly")
     // idempotence: replaying the batch changes nothing
-    val replay = Nsw.appendToHnswGraph(appended,
-      emb.filter(col("vec_id") >= cut), "embedding", "vec_id", p)
+    val replay = Nsw.appendToGraph(appended,
+      emb.filter(col("vec_id") >= cut), "embedding", "vec_id", ph)
     assert(replay.orderBy("vec_id").collect().toSeq == b,
       "replaying the batch must be a no-op")
   }
@@ -357,11 +356,11 @@ class NswSpec extends SparkSpec {
     // backlinks from the first persist in other nodes' adjacency,
     // silently breaking append ≡ rebuild
     val cut = emb.agg(max(col("vec_id"))).first().getLong(0) / 4 * 3
-    val base = Nsw.buildHnswGraph(
-      emb.filter(col("vec_id") < cut), "embedding", "vec_id", p)
+    val base = Nsw.buildGraph(
+      emb.filter(col("vec_id") < cut), "embedding", "vec_id", ph)
     val batch = emb.filter(col("vec_id") >= cut)
-    val dup = Nsw.appendToHnswGraph(base, batch.union(batch),
-      "embedding", "vec_id", p)
+    val dup = Nsw.appendToGraph(base, batch.union(batch),
+      "embedding", "vec_id", ph)
     assert(dup.orderBy("vec_id").collect().toSeq ==
       hnsw.orderBy("vec_id").collect().toSeq,
       "a batch with internal duplicates must append like its dedup'd self")
@@ -390,10 +389,10 @@ class NswSpec extends SparkSpec {
   }
 
   test("router: routed candidates ≡ the full fan's restricted to the routed shards") {
-    val (_, candsR, routed) = Nsw.hnswRoutedSearch(hnsw, emb, "embedding",
-      "vec_id", q, 10, routerCents, nprobe = 2, p)
+    val (_, candsR, routed) = Nsw.routedSearch(hnsw, emb, "embedding",
+      "vec_id", q, 10, routerCents, nprobe = 2, ph)
     assert(routed.length == 2 && routed == routed.sorted)
-    val restricted = Nsw.hnswShardCandidates(hnsw, q, p)
+    val restricted = Nsw.shardCandidates(hnsw, q, ph)
       .filter(col("shard").isin(routed.map(Integer.valueOf): _*))
       .select("vec_id").collect().map(_.getLong(0)).toSeq.sorted
     assert(candsR == restricted,
@@ -401,20 +400,20 @@ class NswSpec extends SparkSpec {
   }
 
   test("router: nprobe = nShards ≡ the full fan; recall degrades gracefully at nprobe 2") {
-    val (resFull, candsFull) = Nsw.hnswSearch(hnsw, emb, "embedding",
-      "vec_id", q, 10, p)
-    val (resAll, candsAll, _) = Nsw.hnswRoutedSearch(hnsw, emb, "embedding",
-      "vec_id", q, 10, routerCents, nprobe = p.nShards, p)
+    val (resFull, candsFull) = Nsw.search(hnsw, emb, "embedding",
+      "vec_id", q, 10, ph)
+    val (resAll, candsAll, _) = Nsw.routedSearch(hnsw, emb, "embedding",
+      "vec_id", q, 10, routerCents, nprobe = p.nShards, ph)
     assert(candsAll == candsFull)
     assert(resAll.collect().toSeq == resFull.collect().toSeq)
     val exact = Knn.search(emb, "embedding", "vec_id", q, 10)
       .select("vec_id").collect().map(_.getLong(0)).toSet
-    def recall(res: org.apache.spark.sql.DataFrame): Double = {
+    def recall(res: DataFrame): Double = {
       val got = res.select("vec_id").collect().map(_.getLong(0)).toSet
       (got & exact).size / 10.0
     }
-    val (res2, _, _) = Nsw.hnswRoutedSearch(hnsw, emb, "embedding",
-      "vec_id", q, 10, routerCents, nprobe = 2, p)
+    val (res2, _, _) = Nsw.routedSearch(hnsw, emb, "embedding",
+      "vec_id", q, 10, routerCents, nprobe = 2, ph)
     val r2 = recall(res2); val rf = recall(resFull)
     // under HASH sharding every shard sees the same distribution, so
     // routing approximates a uniform shard sample: recall ≈ rf·nprobe/n
@@ -547,5 +546,103 @@ class NswSpec extends SparkSpec {
     assert(!asideDir.exists && !java.nio.file.Files.exists(marker),
       "recovery must restore the shard and clear aside + marker")
     new scala.reflect.io.Directory(new java.io.File(root)).deleteRecursively()
+  }
+
+  // ------------------------------------------------------------------
+  // Flat ≡ cap 0: golden adjacency, the entry rule, job pins
+  // ------------------------------------------------------------------
+
+  private def md5(s: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+
+  /** md5 over the sorted (shard, vec_id, layer-0 neighbors, in stored order). */
+  private def layer0Fingerprint(df: DataFrame): String =
+    md5(df.collect()
+      .map(r => (r.getAs[Int]("shard"), r.getAs[Long]("vec_id"), layer0(r).mkString(" ")))
+      .sortBy(t => (t._1, t._2)).map(t => s"${t._1},${t._2},${t._3}").mkString("\n"))
+
+  /** md5 over the sorted (shard, vec_id, level, layers). */
+  private def layeredFingerprint(df: DataFrame): String =
+    md5(df.collect()
+      .map(r => (r.getAs[Int]("shard"), r.getAs[Long]("vec_id"), r.getAs[Int]("level"),
+        layersOf(r).map(_.mkString(" ")).mkString("|")))
+      .sortBy(t => (t._1, t._2)).map(t => s"${t._1},${t._2},${t._3},${t._4}").mkString("\n"))
+
+  test("golden adjacency: cap-0 builds and appends reproduce the flat NSW graphs edge for edge") {
+    // the flat NSW and HNSW graphs of the sf0.001 fixture at these
+    // Params, edge for edge and in stored order: a mismatch means the
+    // graphs, and so every candidate set the gates record, changed
+    assert(layer0Fingerprint(graph) == "ace1891d91b4c7c515f62d21b6bacb6f", "flat build")
+    val interleaved = Nsw.appendToGraph(
+      Nsw.buildGraph(emb.filter(col("vec_id") % 5 =!= 0), "embedding", "vec_id", p),
+      emb.filter(col("vec_id") % 5 === 0), "embedding", "vec_id", p)
+    assert(layer0Fingerprint(interleaved) == "19659dc616a20e51dd9ffca3535d6bc1",
+      "interleaved vec_id % 5 append")
+    // at a two-node beam the node each insert starts from decides its
+    // neighbors, so this pins the entry rule on append: a batch id
+    // below every stored id takes over the entry
+    val narrow = p.copy(m = 2, efConstruction = 2, efSearch = 2)
+    val narrowInterleaved = Nsw.appendToGraph(
+      Nsw.buildGraph(emb.filter(col("vec_id") % 5 =!= 0), "embedding", "vec_id", narrow),
+      emb.filter(col("vec_id") % 5 === 0), "embedding", "vec_id", narrow)
+    assert(layer0Fingerprint(narrowInterleaved) == "f9dcfc75ee79e2de612e062ca856217a",
+      "interleaved vec_id % 5 append, m = 2, ef = 2")
+    val ws = 125L
+    val store = java.nio.file.Files
+      .createTempDirectory("nsw_golden").toString + "/nsw"
+    Nsw.writeGraph(Nsw.buildGraphWindowed(
+      emb.filter(col("vec_id") < 3 * ws), "embedding", "vec_id", ws, p), store)
+    Nsw.appendToGraphWindowed(spark, store,
+      emb.filter(col("vec_id") >= 3 * ws), "embedding", "vec_id", ws, p)
+    assert(layer0Fingerprint(Nsw.readGraph(spark, store)) ==
+      "47e2b5aafb4d9f45185ac1c41452eb18", "windowed build + append")
+    assert(layeredFingerprint(hnsw) == "6883619d65ccb64ad022ccfde42e1efa", "HNSW build")
+  }
+
+  test("entry rule: a shard holding vec_id -1 leaves no node without a layer-0 edge, at both caps") {
+    import spark.implicits._
+    // hash sharding (pmod) accepts negative ids; -1 must not read as
+    // "no entry yet"
+    val rnd = new scala.util.Random(11)
+    val corpus = (-1L to 40L)
+      .map(i => (i, Array.fill(16)(rnd.nextGaussian().toFloat).toSeq))
+      .toDF("vec_id", "embedding")
+    Seq(0, Nsw.HnswMaxLevel).foreach { cap =>
+      val rows = Nsw.buildGraph(corpus, "embedding", "vec_id",
+        p.copy(nShards = 1, maxLevel = cap)).collect()
+      assert(rows.length == 42)
+      rows.foreach { r =>
+        assert(layer0(r).nonEmpty, s"cap $cap: node ${r.getAs[Long]("vec_id")} has no layer-0 edge")
+      }
+      assert(unreachableAtLayer0(rows) == Map(0 -> 0), s"cap $cap: nodes unreachable at layer 0")
+    }
+  }
+
+  test("job pins: single-query search and routedSearch run 3 jobs and 3 stages at both caps") {
+    val root = java.nio.file.Files.createTempDirectory("nsw_jobs").toString
+    val counter = new JobCounter(spark)
+    try {
+      Seq(p, ph).foreach { pp =>
+        val path = s"$root/cap${pp.maxLevel}"
+        Nsw.writeGraph(Nsw.buildGraph(emb, "embedding", "vec_id", pp), path)
+        val store = Nsw.readGraph(spark, path)
+        val cents = Nsw.shardCentroids(store)
+        def pin(name: String)(run: => DataFrame): Unit = {
+          run.collect() // warm
+          counter.reset()
+          assert(run.collect().length == 10)
+          // one exchange job for the shard beams, the candidate collect,
+          // and the re-rank over the pushed IN-filter
+          assert(counter.settle() == ((3, 3)), s"cap ${pp.maxLevel} $name")
+        }
+        pin("search")(Nsw.search(store, emb, "embedding", "vec_id", q, 10, pp)._1)
+        pin("routedSearch")(Nsw.routedSearch(store, emb, "embedding", "vec_id", q, 10,
+          cents, nprobe = 2, pp)._1)
+      }
+    } finally {
+      counter.close()
+      new scala.reflect.io.Directory(new java.io.File(root)).deleteRecursively()
+    }
   }
 }

@@ -93,15 +93,16 @@ class PlanShapeSpec extends SparkSpec {
   test("routed HNSW: the shard filter prunes the store to the routed partitions") {
     import graft.operators.Nsw
     val emb = Tables.embeddings(spark, sf("sf0.001"))
-    val params = Nsw.Params(nShards = 4, m = 8, efConstruction = 32, efSearch = 32)
+    val params = Nsw.Params(nShards = 4, m = 8, efConstruction = 32, efSearch = 32,
+      maxLevel = Nsw.HnswMaxLevel)
     val dir = java.nio.file.Files.createTempDirectory("graft_hnsw_route").toString
     try {
-      Nsw.writeHnswGraph(
-        Nsw.buildHnswGraph(emb, "embedding", "vec_id", params), dir)
-      val store = Nsw.readHnswGraph(spark, dir)
+      Nsw.writeGraph(
+        Nsw.buildGraph(emb, "embedding", "vec_id", params), dir)
+      val store = Nsw.readGraph(spark, dir)
       val cents = Nsw.shardCentroids(store)
       val routed = Nsw.routeShards(cents, Queries.queryVec64, nprobe = 2)
-      // the exact relation hnswRoutedSearch beams over: unrouted shard
+      // the exact relation routedSearch beams over: unrouted shard
       // DIRECTORIES must never be opened (static partition pruning on
       // the shard-partitioned store — the IVF probe-pruning shape)
       val pruned = store.filter(

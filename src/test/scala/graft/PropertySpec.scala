@@ -143,24 +143,30 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("nsw graph: for ANY corpus — degree-capped, no self-loops/dups, connected, deterministic") {
-    val p = Nsw.Params(nShards = 1, m = 4, efConstruction = 12, efSearch = 12)
-    check("nswBuild", Prop.forAll(nodesGen) { nodes =>
-      val adj = Nsw.buildShardGraph(nodes, p)
-      val sane = adj.forall { case (id, nbrs) =>
-        nbrs.length <= p.maxDegree && !nbrs.contains(id) &&
-          nbrs.distinct.length == nbrs.length &&
-          nbrs.forall(adj.contains)
-      }
-      // connectivity from the entry (min id) — the search contract
-      val entry = adj.keys.min
-      val seen = scala.collection.mutable.Set(entry)
-      val stack = scala.collection.mutable.Stack(entry)
-      while (stack.nonEmpty)
-        adj(stack.pop()).foreach(x => if (seen.add(x)) stack.push(x))
-      sane && seen.size == adj.size &&
-        adj.view.mapValues(_.toSeq).toMap ==
-          Nsw.buildShardGraph(nodes, p).view.mapValues(_.toSeq).toMap
-    }, n = 60)
+    val flat = Nsw.Params(nShards = 1, m = 4, efConstruction = 12, efSearch = 12)
+    Seq(flat, flat.copy(maxLevel = Nsw.HnswMaxLevel)).foreach { p =>
+      check(s"nswBuild cap ${p.maxLevel}", Prop.forAll(nodesGen) { nodes =>
+        val layers = Nsw.buildShardGraph(nodes, p)
+        val sane = layers.forall { case (id, ls) =>
+          ls.length == Nsw.hnswLevel(id, p.m, p.maxLevel) + 1 &&
+            ls.zipWithIndex.forall { case (nbrs, l) =>
+              nbrs.length <= (if (l == 0) p.maxDegree else p.m) &&
+                !nbrs.contains(id) && nbrs.distinct.length == nbrs.length &&
+                nbrs.forall(nb => layers.get(nb).exists(_.length > l))
+            }
+        }
+        // layer-0 connectivity from the entry (highest level, then
+        // smallest id) — the search contract
+        val entry = layers.keys.minBy(id => (-layers(id).length, id))
+        val seen = scala.collection.mutable.Set(entry)
+        val stack = scala.collection.mutable.Stack(entry)
+        while (stack.nonEmpty)
+          layers(stack.pop())(0).foreach(x => if (seen.add(x)) stack.push(x))
+        sane && seen.size == layers.size &&
+          layers.view.mapValues(_.map(_.toSeq).toSeq).toMap ==
+            Nsw.buildShardGraph(nodes, p).view.mapValues(_.map(_.toSeq).toSeq).toMap
+      }, n = 60)
+    }
   }
 
   test("nsw selectNeighbors: <= m unique candidates, closest always kept, subset of input") {

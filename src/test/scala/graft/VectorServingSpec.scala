@@ -18,36 +18,6 @@ class VectorServingSpec extends SparkSpec {
 
   private val model = Md5PortableEmbedder(dim = 16)
 
-  /** Counts Spark jobs started and stages actually run while registered
-    * on the session's listener bus. A stage whose shuffle output is
-    * already available is skipped, never submitted, so a job that only
-    * reads a held shuffle runs exactly one stage: its result stage.
-    */
-  private class JobCounter {
-    private val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    private val stages = new java.util.concurrent.atomic.AtomicInteger(0)
-    private val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-      override def onStageSubmitted(
-          ss: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
-        stages.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-
-    /** (jobs, stages run) once the listener bus stops moving. */
-    def settle(): (Int, Int) = {
-      var last = -1; var cur = jobs.get(); var spins = 0
-      while (cur != last && spins < 40) {
-        last = cur; Thread.sleep(100); cur = jobs.get(); spins += 1
-      }
-      (cur, stages.get())
-    }
-    def reset(): Unit = { settle(); jobs.set(0); stages.set(0) }
-    def close(): Unit = spark.sparkContext.removeSparkListener(listener)
-  }
-
   test("streaming ingest builds the same cluster-partitioned corpus as the batch path") {
     val docs = Seq(
       IngestDoc(1L, "alpha beta gamma"), IngestDoc(2L, "delta epsilon zeta"),
@@ -233,7 +203,7 @@ class VectorServingSpec extends SparkSpec {
       // amortized N·m pass the cost model priced) plus ONE read of the
       // shortlisted vectors — two jobs of one stage each (no shuffle-map
       // stage), whatever the batch size
-      val counter = new JobCounter
+      val counter = new JobCounter(spark)
       def runDispatch(b: Int): ((Int, Int), String, Map[Int, Seq[Long]],
           Array[(Int, Int, Long, Double)]) = {
         counter.reset()
@@ -292,7 +262,7 @@ class VectorServingSpec extends SparkSpec {
         pqShortlist = 8)
       def query(i: Int) = Seq(0 -> graft.functions.HashingEmbedder(dim = 64, seed = 7)
         .encode(s"routed dispatch probe $i"))
-      val counter = new JobCounter
+      val counter = new JobCounter(spark)
       try {
         // the first routed request opens the exchange (its map stage runs)
         val (_, first, _, _) = VectorServing.dispatchServingBatch(
