@@ -783,12 +783,12 @@ object Nsw {
     */
   def search(graph: DataFrame, corpus: DataFrame, vecCol: String,
              idCol: String, queryVec: Array[Float], k: Int,
-             p: Params, metric: Knn.Metric = Knn.Cosine): (DataFrame, Seq[Long]) = {
+             p: Params): (DataFrame, Seq[Long]) = {
     val cands = shardCandidates(graph, queryVec, p)
       .select("vec_id").collect().map(_.getLong(0)).toSeq.sorted
     val result = Knn.search(
       corpus.filter(col(idCol).isin(cands: _*)),
-      vecCol, idCol, queryVec, k, metric)
+      vecCol, idCol, queryVec, k)
     (result, cands)
   }
 
@@ -870,12 +870,11 @@ object Nsw {
   def routedSearch(graph: DataFrame, corpus: DataFrame, vecCol: String,
                    idCol: String, queryVec: Array[Float], k: Int,
                    centroids: Array[(Int, Array[Double])], nprobe: Int,
-                   p: Params, metric: Knn.Metric = Knn.Cosine)
-      : (DataFrame, Seq[Long], Seq[Int]) = {
+                   p: Params): (DataFrame, Seq[Long], Seq[Int]) = {
     val routed = routeShards(centroids, queryVec, nprobe)
     val (result, cands) = search(
       graph.filter(col("shard").isin(routed.map(Integer.valueOf): _*)),
-      corpus, vecCol, idCol, queryVec, k, p, metric)
+      corpus, vecCol, idCol, queryVec, k, p)
     (result, cands, routed)
   }
 }

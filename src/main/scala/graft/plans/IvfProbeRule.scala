@@ -95,246 +95,167 @@ object LshCatalog {
   */
 object IvfProbeRule extends Rule[LogicalPlan] {
 
+  /** The IVF and LSH probe sets of `qv`, and the rows each would scan by
+    * the per-partition row counts registered with the indexes: Σ
+    * clusterRows over the nprobe nearest lists, Σ bucketRows over the
+    * hamming-≤radius bucket set. The stats are exact counts taken at
+    * build time, so an estimate IS the scanned-row count. Both row
+    * counts are -1 when either index has no stats.
+    */
+  private def probeRows(qv: Array[Float], ivf: IvfCatalog.IvfIndex,
+                        lsh: LshCatalog.LshIndex): (Seq[Int], Seq[Long], Long, Long) = {
+    val ivfProbes = Ann.probeIds(qv, ivf.centroids, ivf.nprobe)
+    val lshProbes = Ann.probeBuckets(
+      Ann.queryBucket(qv, lsh.planes), lsh.planes.length, lsh.radius)
+    if (ivf.clusterRows.isEmpty || lsh.bucketRows.isEmpty)
+      (ivfProbes, lshProbes, -1L, -1L)
+    else
+      (ivfProbes, lshProbes,
+        ivfProbes.map(c => ivf.clusterRows.getOrElse(c, 0L)).sum,
+        lshProbes.map(b => lsh.bucketRows.getOrElse(b, 0L)).sum)
+  }
+
   /** Cost-based index selection when ONE table is registered in BOTH
     * catalogs (a hybrid store partitioned by cluster_id AND lsh_bucket):
-    * estimate the rows each index would scan for THIS query vector —
-    * Σ clusterRows over the nprobe nearest lists vs Σ bucketRows over
-    * the hamming-≤radius probe set — and pick the smaller scan. The
-    * stats are exact per-partition row counts registered at build time,
-    * so the estimate IS the scanned-row count, not a heuristic; at
-    * 100 TB "transparent" means the optimizer makes this choice, not
-    * the user. Missing stats on either side (or a tie) fall back to
-    * IVF precedence — the pruning+compression default, and the
-    * pre-stats behavior. Returns (chosen, ivfProbes, lshProbes) so the
-    * registered query can surface the decision as a gated column.
+    * the rows each index would scan for THIS query vector
+    * ([[probeRows]]), and the smaller scan wins, through the serving
+    * model's argmin ([[FamilyCosts.chosen]]). At 100 TB "transparent"
+    * means the optimizer makes this choice, not the user. Missing stats
+    * on either side (or a tie) fall back to IVF precedence — the
+    * pruning+compression default, and the pre-stats behavior. Returns
+    * (chosen, ivfProbes, lshProbes) so the registered query can surface
+    * the decision as a gated column.
     */
   def chooseIndex(qv: Array[Float], ivf: IvfCatalog.IvfIndex,
                   lsh: LshCatalog.LshIndex): (String, Seq[Int], Seq[Long]) = {
-    val ivfProbes = Ann.probeIds(qv, ivf.centroids, ivf.nprobe)
-    val lshProbes = Ann.probeBuckets(
-      Ann.queryBucket(qv, lsh.planes), lsh.planes.length, lsh.radius)
-    val chosen =
-      if (ivf.clusterRows.isEmpty || lsh.bucketRows.isEmpty) "ivf"
-      else {
-        val ivfRows = ivfProbes.map(c => ivf.clusterRows.getOrElse(c, 0L)).sum
-        val lshRows = lshProbes.map(b => lsh.bucketRows.getOrElse(b, 0L)).sum
-        if (lshRows < ivfRows) "lsh" else "ivf"
-      }
-    (chosen, ivfProbes, lshProbes)
+    val (ivfProbes, lshProbes, ivfRows, lshRows) = probeRows(qv, ivf, lsh)
+    // no graph or PQ family here: the graph is priced out of the argmin
+    (FamilyCosts(ivfRows, lshRows, hnsw = Long.MaxValue, pq = None).chosen,
+      ivfProbes, lshProbes)
   }
 
-  /** Three-way serving-layer cost choice: [[chooseIndex]]'s scanned-row
-    * estimates for IVF and LSH, extended with the graph family. A
-    * routed HNSW's cost unit is the same — rows reaching the exact
-    * re-rank — and it is a CLOSED FORM of the search knobs:
-    * ≤ min(nShards, nprobe)·efSearch candidates regardless of corpus
-    * size (each routed shard's beam emits ≤ efSearch ids). The graph
-    * path never gets a transparent Catalyst rewrite (deriving its probe
-    * set requires a distributed beam — the documented no-rewrite
-    * rationale at Nsw.scala), so this choice lives in the SERVING
-    * layer, above the optimizer: a query router calls it per query and
-    * dispatches to the IVF/LSH probe filter or the HNSW beam API.
-    * Decision: HNSW when its bound is STRICTLY below both row
-    * estimates, else LSH when strictly below IVF, else IVF — the same
-    * IVF-precedence tie rule as [[chooseIndex]], and the same
-    * missing-stats fallback (no stats → IVF). Returns
-    * (chosen, ivfRows, lshRows, hnswCands) so the registered query can
-    * gate all three estimates, not just the winner.
+  /** The routed graph's search knobs: a query beams its
+    * min(nShards, nprobe) centroid-nearest shards, each emitting ≤
+    * efSearch candidates to the exact re-rank.
     */
-  def chooseServing(qv: Array[Float], ivf: IvfCatalog.IvfIndex,
-                    lsh: LshCatalog.LshIndex, hnswShards: Int,
-                    hnswNprobe: Int, efSearch: Int): (String, Long, Long, Long) = {
-    val ivfProbes = Ann.probeIds(qv, ivf.centroids, ivf.nprobe)
-    val lshProbes = Ann.probeBuckets(
-      Ann.queryBucket(qv, lsh.planes), lsh.planes.length, lsh.radius)
-    val hnswCands = math.min(hnswShards, hnswNprobe).toLong * efSearch
-    if (ivf.clusterRows.isEmpty || lsh.bucketRows.isEmpty)
-      ("ivf", -1L, -1L, hnswCands)
-    else {
-      val ivfRows = ivfProbes.map(c => ivf.clusterRows.getOrElse(c, 0L)).sum
-      val lshRows = lshProbes.map(b => lsh.bucketRows.getOrElse(b, 0L)).sum
-      val chosen =
-        if (hnswCands < ivfRows && hnswCands < lshRows) "hnsw"
-        else if (lshRows < ivfRows) "lsh"
-        else "ivf"
-      (chosen, ivfRows, lshRows, hnswCands)
+  final case class GraphBound(nShards: Int, nprobe: Int, efSearch: Int)
+
+  /** The PQ/ADC family: the codes store's row count, its m code bytes per
+    * row, and the per-query shortlist the exact rescore reads.
+    */
+  final case class PqFamily(corpusRows: Long, m: Int, shortlist: Int)
+
+  /** One price per index family — bytes read, or weighted ns — with pq
+    * None where the PQ family is not a candidate. -1 for ivf and lsh
+    * means "no probe stats".
+    */
+  final case class FamilyCosts(ivf: Long, lsh: Long, hnsw: Long, pq: Option[Long]) {
+    /** The one argmin, with IVF precedence on ties: pq only when strictly
+      * cheaper than all three others, hnsw when strictly below both
+      * probe paths, lsh when strictly below ivf, else ivf. Missing probe
+      * stats stay sticky on ivf (ADVICE r18, deliberate): with the probe
+      * paths unpriceable the router cannot certify that pq/hnsw beat
+      * them, IVF degrades gracefully (bounded by the nprobe/nlist
+      * fraction of the corpus), and a stats hiccup must not flip the
+      * serving family.
+      */
+    def chosen: String =
+      if (ivf < 0 || lsh < 0) "ivf"
+      else if (pq.exists(p => p < ivf && p < lsh && p < hnsw)) "pq"
+      else if (hnsw < ivf && hnsw < lsh) "hnsw"
+      else if (lsh < ivf) "lsh"
+      else "ivf"
+  }
+
+  /** A priced serving request: per-family byte totals for the whole
+    * batch, the beam width and shortlist after selectivity widening
+    * (`efEff`, `slEff`; the unwidened knobs when unfiltered, and slEff 0
+    * without a PQ family), and the bytes of one full-precision vector.
+    */
+  final case class ServingPrice(bytes: FamilyCosts, efEff: Long, slEff: Long,
+                                vecBytes: Long) {
+    def chosen: String = bytes.chosen
+
+    /** A byte total as rows reaching the exact re-rank (-1 stays -1). */
+    def rows(b: Long): Long = if (b < 0) b else b / vecBytes
+
+    /** The LATENCY-CALIBRATED form (r19 verdict #6): each byte total
+      * weighted by its family's measured ns/KiB, as the exact integer
+      * ceil(bytes/1024) × nsPerKib (KiB granularity keeps the product
+      * inside BIGINT out to petabyte scans). Bytes-read is a portable
+      * unit but not a clock: the routed beam pays per-candidate random
+      * access and per-shard dispatch (~15.6 μs/KiB at sf0.1) while the
+      * probe paths stream columnar partitions (~1.1–1.9 μs/KiB), so the
+      * byte argmin and this one genuinely disagree (RECALL.md "Serving
+      * latency calibration"). Its `chosen` is the same argmin.
+      */
+    def weighted(w: ServingWeights): FamilyCosts = {
+      def ns(b: Long, nsPerKib: Long): Long =
+        if (b < 0) -1L else ((b + 1023L) / 1024L) * nsPerKib
+      FamilyCosts(ns(bytes.ivf, w.ivfNsPerKib), ns(bytes.lsh, w.lshNsPerKib),
+        ns(bytes.hnsw, w.hnswNsPerKib), bytes.pq.map(ns(_, w.pqNsPerKib)))
     }
   }
 
-  /** FOUR-way serving cost choice — [[chooseServing]] extended with the
-    * PQ/ADC path (r17 verdict #1a). Rows are no longer comparable
-    * across all four families (PQ scans EVERY row but at m code bytes
-    * instead of dim·4 vector bytes), so the unit becomes BYTES READ
-    * FROM STORES, the thing a 100 TB scan actually pays:
-    *   - IVF / LSH: probed rows × dim·4 (full-precision vector scan of
-    *     the probe partitions);
-    *   - routed HNSW: the closed-form candidate bound
-    *     min(nShards, nprobe)·efSearch × dim·4 (the exact re-rank
-    *     reads; constant in corpus size);
-    *   - PQ/ADC: corpusRows × m codes bytes + shortlist × dim·4
-    *     rescore bytes — linear in corpus size but at a 4·dim/m byte
-    *     discount, so it wins exactly the regime where probe
-    *     selectivity is poor and the graph's constant bound has not
-    *     yet paid off.
-    * Ties keep the established precedence (ivf default, lsh must be
-    * strictly cheaper, hnsw strictly cheaper than both probe paths, pq
-    * strictly cheaper than all three); missing probe stats fall back
-    * to IVF exactly like [[chooseServing]]. The fallback stays IVF even
-    * though the HNSW and PQ bounds are computable without probe stats
-    * (ADVICE r18, deliberate): with the probe paths unpriceable the
-    * router cannot certify that pq/hnsw actually beat them, IVF
-    * degrades gracefully (bounded by the nprobe/nlist fraction of the
-    * corpus), and a stats hiccup must not flip the serving family —
-    * index choice stays sticky under partial information, matching
-    * [[chooseIndex]]/[[chooseServing]] precedent (IvfProbeRuleSpec pins
-    * this). Returns (chosen, ivfBytes, lshBytes, hnswBytes, pqBytes) so
-    * a gated query can replay the whole decision.
+  /** THE serving-layer cost model: prices a batch of B ≥ 1 queries on
+    * every index family in BYTES READ FROM STORES — the unit a 100 TB
+    * scan actually pays, and the only one comparable across families
+    * (PQ scans every row but at m code bytes instead of dim·4 vector
+    * bytes):
+    *   - IVF / LSH: Σ over the batch's per-query probe rows
+    *     ([[probeRows]]) × dim·4;
+    *   - routed graph: B × min(nShards, nprobe) × efEff × dim·4 — the
+    *     closed-form re-rank bound, constant in corpus size (the graph
+    *     never gets a Catalyst rewrite, so this choice lives in the
+    *     serving layer, above the optimizer);
+    *   - PQ/ADC (when `pq` is given): corpusRows × m + B × slEff × dim·4
+    *     — one shared code scan plus per-query shortlist rescores.
+    * What each input changes:
+    *   - B: the probe paths and the graph pay per query, PQ's code scan
+    *     is paid once, so batch size alone flips hnsw (small batches)
+    *     to pq (large ones) — `ann_cost_serving_batch`;
+    *   - selectivity (matchRows, totalRows), for a predicate + KNN
+    *     query: probe partitions are read in full either way (bytes
+    *     unchanged), but the predicate-blind beam must widen to
+    *     efEff = min(total, ⌈ef·total/match⌉) to surface k survivors and
+    *     the PQ shortlist to slEff = min(total, ⌈sl·total/match⌉), so a
+    *     selective predicate prices the graph out first —
+    *     `ann_cost_serving_filtered`, jointly with B in
+    *     `ann_cost_serving_batch_filtered`. The knobs are integer
+    *     ceilings both engines replay bit-for-bit, Long, and saturate at
+    *     totalRows (ADVICE r19: an Int ceiling at a 2e9-row / 1-match
+    *     ratio wrapped to a negative beam that won every comparison).
+    *     Absent means unfiltered, NOT match = total: that pair still
+    *     clamps the knobs to totalRows, which bites below efSearch rows;
+    *   - weights: [[ServingPrice.weighted]] turns the bytes into
+    *     measured ns for `ann_cost_serving_calibrated`.
+    * The choice is [[FamilyCosts.chosen]]; missing probe stats price the
+    * probe paths at -1 and stay on ivf.
     */
-  def chooseServing4(qv: Array[Float], ivf: IvfCatalog.IvfIndex,
-                     lsh: LshCatalog.LshIndex, hnswShards: Int,
-                     hnswNprobe: Int, efSearch: Int, dim: Int,
-                     pqCorpusRows: Long, pqM: Int, pqShortlist: Int)
-      : (String, Long, Long, Long, Long) = {
-    val vecBytes = dim.toLong * 4
-    val hnswBytes = math.min(hnswShards, hnswNprobe).toLong * efSearch * vecBytes
-    val pqBytes = pqCorpusRows * pqM + pqShortlist.toLong * vecBytes
-    if (ivf.clusterRows.isEmpty || lsh.bucketRows.isEmpty)
-      ("ivf", -1L, -1L, hnswBytes, pqBytes)
-    else {
-      val ivfProbes = Ann.probeIds(qv, ivf.centroids, ivf.nprobe)
-      val lshProbes = Ann.probeBuckets(
-        Ann.queryBucket(qv, lsh.planes), lsh.planes.length, lsh.radius)
-      val ivfBytes = ivfProbes.map(c => ivf.clusterRows.getOrElse(c, 0L)).sum * vecBytes
-      val lshBytes = lshProbes.map(b => lsh.bucketRows.getOrElse(b, 0L)).sum * vecBytes
-      val chosen =
-        if (pqBytes < ivfBytes && pqBytes < lshBytes && pqBytes < hnswBytes) "pq"
-        else if (hnswBytes < ivfBytes && hnswBytes < lshBytes) "hnsw"
-        else if (lshBytes < ivfBytes) "lsh"
-        else "ivf"
-      (chosen, ivfBytes, lshBytes, hnswBytes, pqBytes)
+  def priceServing(qvs: Seq[Array[Float]], ivf: IvfCatalog.IvfIndex,
+                   lsh: LshCatalog.LshIndex, graph: GraphBound,
+                   pq: Option[PqFamily] = None,
+                   selectivity: Option[(Long, Long)] = None): ServingPrice = {
+    require(qvs.nonEmpty, "pricing needs at least one query")
+    selectivity.foreach { case (m, n) =>
+      require(m > 0 && m <= n, s"selectivity pair out of range: $m / $n")
     }
-  }
-
-  /** BATCH-aware serving cost choice — [[chooseServing4]] priced for a
-    * whole query batch instead of a single query (r18 verdict #1),
-    * because the economics INVERT with batch size: PQ's corpus scan is
-    * ONE ADC pass over the codes column no matter how many queries ride
-    * it (each row's per-query distance is a table lookup — CPU, not
-    * bytes), so its N·m scan bytes AMORTIZE across the batch, while the
-    * probe paths and the graph router pay per query. Total bytes for a
-    * batch of B queries:
-    *   - IVF / LSH: Σ over the batch's per-query probe sets × dim·4
-    *     (each query scans its own probe partitions);
-    *   - routed HNSW: B × min(nShards, nprobe)·efSearch × dim·4
-    *     (the closed-form re-rank bound, per query);
-    *   - PQ/ADC: corpusRows × m  +  B × shortlist × dim·4 (one shared
-    *     code scan + per-query shortlist rescores).
-    * Consequence: hnsw wins the SMALL-batch regime once the corpus is
-    * large enough that one code scan costs more than a few routed
-    * beams, and pq wins the LARGE-batch regime where the shared scan
-    * amortizes below B beams — the decision must flip on batch size
-    * alone, which `ann_cost_serving_batch` gates and
-    * IvfProbeRuleSpec pins on synthetic stats. Tie/fallback discipline
-    * is [[chooseServing4]]'s verbatim (ivf default; missing probe stats
-    * → ivf with -1 probe estimates — same stickiness rationale).
-    * Returns (chosen, ivfBytes, lshBytes, hnswBytes, pqBytes) — TOTAL
-    * batch bytes per family, so a gated query can replay the decision.
-    */
-  def chooseServingBatch(qvs: Seq[Array[Float]], ivf: IvfCatalog.IvfIndex,
-                         lsh: LshCatalog.LshIndex, hnswShards: Int,
-                         hnswNprobe: Int, efSearch: Int, dim: Int,
-                         pqCorpusRows: Long, pqM: Int, pqShortlist: Int)
-      : (String, Long, Long, Long, Long) = {
-    require(qvs.nonEmpty, "chooseServingBatch needs at least one query")
-    val vecBytes = dim.toLong * 4
+    val vecBytes = qvs.head.length.toLong * 4
     val b = qvs.length.toLong
-    val hnswBytes =
-      b * math.min(hnswShards, hnswNprobe).toLong * efSearch * vecBytes
-    val pqBytes = pqCorpusRows * pqM + b * pqShortlist.toLong * vecBytes
-    if (ivf.clusterRows.isEmpty || lsh.bucketRows.isEmpty)
-      ("ivf", -1L, -1L, hnswBytes, pqBytes)
-    else {
-      val ivfBytes = qvs.map { qv =>
-        Ann.probeIds(qv, ivf.centroids, ivf.nprobe)
-          .map(c => ivf.clusterRows.getOrElse(c, 0L)).sum
-      }.sum * vecBytes
-      val lshBytes = qvs.map { qv =>
-        Ann.probeBuckets(Ann.queryBucket(qv, lsh.planes),
-            lsh.planes.length, lsh.radius)
-          .map(bk => lsh.bucketRows.getOrElse(bk, 0L)).sum
-      }.sum * vecBytes
-      val chosen =
-        if (pqBytes < ivfBytes && pqBytes < lshBytes && pqBytes < hnswBytes) "pq"
-        else if (hnswBytes < ivfBytes && hnswBytes < lshBytes) "hnsw"
-        else if (lshBytes < ivfBytes) "lsh"
-        else "ivf"
-      (chosen, ivfBytes, lshBytes, hnswBytes, pqBytes)
+    def widened(knob: Long): Long = selectivity match {
+      case Some((m, n)) => math.min(n, (knob * n + m - 1) / m)
+      case None         => knob
     }
-  }
-
-  /** SELECTIVITY-aware serving cost choice — [[chooseServing4]] priced
-    * for a HYBRID query (relational predicate + KNN), the composition
-    * every filtered gate runs (r19 candidate #1; knn_filtered_hnsw
-    * documents the efSearch ∝ 1/selectivity deployment rule this model
-    * prices). The predicate reaches every family differently:
-    *   - IVF / LSH: probe partitions are read in FULL and the predicate
-    *     applies inside the scan (the stores are not partitioned by the
-    *     filter column) — bytes UNCHANGED;
-    *   - routed HNSW: the beam is predicate-BLIND (filtering during
-    *     traversal would disconnect the graph), so surfacing k
-    *     survivors needs the beam widened to efSearch/s candidates —
-    *     bytes scale by 1/s;
-    *   - PQ/ADC: the shared code scan is unchanged, but the shortlist
-    *     must widen to shortlist/s for k survivors to reach the exact
-    *     re-rank — only the rescore term scales.
-    * Consequence: a selective predicate punishes the graph path
-    * hardest, leaves the probe paths untouched, and dents PQ only in
-    * its small linear term — so the winner FLIPS on selectivity alone
-    * (`ann_cost_serving_filtered` gates a measured flip; the spec pins
-    * it synthetically). Selectivity travels as the EXACT pair
-    * (matchRows, totalRows) and the widened knobs use integer ceiling
-    * division ((ef·total + match − 1) div match), so the whole decision
-    * is integer arithmetic both engines replay bit-for-bit — no float
-    * selectivity in the gated channel. The widened knobs stay Long and
-    * SATURATE at totalRows (ADVICE r19: ceilDiv(ef·total, match) at a
-    * 1e9-corpus / 1-match ratio overflows a toInt to a NEGATIVE beam,
-    * making hnsw spuriously win every comparison; a beam or shortlist
-    * wider than the corpus is the natural saturation point — it means
-    * "scan everything", the same bytes the exact path pays — and
-    * `least(n_total, …)` keeps the oracle arithmetic replayable).
-    * Tie/fallback discipline is [[chooseServing4]]'s verbatim. Returns
-    * (chosen, ivfBytes, lshBytes, hnswBytes, pqBytes, efEff, slEff).
-    */
-  def chooseServingFiltered(qv: Array[Float], ivf: IvfCatalog.IvfIndex,
-                            lsh: LshCatalog.LshIndex, hnswShards: Int,
-                            hnswNprobe: Int, efSearch: Int, dim: Int,
-                            pqCorpusRows: Long, pqM: Int, pqShortlist: Int,
-                            matchRows: Long, totalRows: Long)
-      : (String, Long, Long, Long, Long, Long, Long) = {
-    require(matchRows > 0 && matchRows <= totalRows,
-      s"selectivity pair out of range: $matchRows / $totalRows")
-    val vecBytes = dim.toLong * 4
-    def ceilDiv(a: Long, b: Long): Long = (a + b - 1) / b
-    val efEff = math.min(totalRows, ceilDiv(efSearch.toLong * totalRows, matchRows))
-    val slEff = math.min(totalRows, ceilDiv(pqShortlist.toLong * totalRows, matchRows))
-    val hnswBytes =
-      math.min(hnswShards, hnswNprobe).toLong * efEff * vecBytes
-    val pqBytes = pqCorpusRows * pqM + slEff * vecBytes
-    if (ivf.clusterRows.isEmpty || lsh.bucketRows.isEmpty)
-      ("ivf", -1L, -1L, hnswBytes, pqBytes, efEff, slEff)
-    else {
-      val ivfBytes = Ann.probeIds(qv, ivf.centroids, ivf.nprobe)
-        .map(c => ivf.clusterRows.getOrElse(c, 0L)).sum * vecBytes
-      val lshBytes = Ann.probeBuckets(Ann.queryBucket(qv, lsh.planes),
-          lsh.planes.length, lsh.radius)
-        .map(b => lsh.bucketRows.getOrElse(b, 0L)).sum * vecBytes
-      val chosen =
-        if (pqBytes < ivfBytes && pqBytes < lshBytes && pqBytes < hnswBytes) "pq"
-        else if (hnswBytes < ivfBytes && hnswBytes < lshBytes) "hnsw"
-        else if (lshBytes < ivfBytes) "lsh"
-        else "ivf"
-      (chosen, ivfBytes, lshBytes, hnswBytes, pqBytes, efEff, slEff)
-    }
+    val efEff = widened(graph.efSearch)
+    val slEff = pq.fold(0L)(f => widened(f.shortlist))
+    val probes = qvs.map(probeRows(_, ivf, lsh))
+    val (ivfB, lshB) =
+      if (probes.head._3 < 0) (-1L, -1L)
+      else (probes.map(_._3).sum * vecBytes, probes.map(_._4).sum * vecBytes)
+    val hnswB = b * math.min(graph.nShards, graph.nprobe).toLong * efEff * vecBytes
+    ServingPrice(
+      FamilyCosts(ivfB, lshB, hnswB, pq.map(f => f.corpusRows * f.m + b * slEff * vecBytes)),
+      efEff, slEff, vecBytes)
   }
 
   /** Execution-SHAPE choice inside the pq family for a batch of B
@@ -370,7 +291,7 @@ object IvfProbeRule extends Rule[LogicalPlan] {
   }
 
   /** Measured per-family serving cost weights in NANOSECONDS PER KiB
-    * READ — the latency calibration [[chooseServingCalibrated]]
+    * READ — the latency calibration [[ServingPrice.weighted]]
     * multiplies into the byte model. Derived by the
     * `graft.queries.CalibrateServing` probe (median of warm single-query
     * runs over the gate stores, divided by the priced bytes); treated
@@ -379,115 +300,6 @@ object IvfProbeRule extends Rule[LogicalPlan] {
     */
   final case class ServingWeights(ivfNsPerKib: Long, lshNsPerKib: Long,
                                   hnswNsPerKib: Long, pqNsPerKib: Long)
-
-  /** LATENCY-CALIBRATED serving cost choice (r19 verdict #6) —
-    * [[chooseServing4]]'s byte totals weighted by measured per-family
-    * ns/KiB, run BESIDE the pure-bytes decision. Bytes-read is a
-    * portable unit but not a clock: the routed graph beam pays
-    * per-candidate random access and per-shard dispatch (measured
-    * ~15.6 μs/KiB at sf0.1) while the probe paths stream columnar
-    * partitions (~1.1–1.9 μs/KiB), so the byte-argmin and the
-    * time-argmin genuinely disagree — at sf0.1 bytes pick the 16 KiB
-    * beam (255 ms measured) while the calibration picks the 66 KiB
-    * LSH probe scan (125 ms measured; RECALL.md "Serving latency
-    * calibration"). Costs are exact integers the oracle replays:
-    * ceil(bytes/1024) × nsPerKib, KiB granularity keeping the product
-    * inside BIGINT headroom out to petabyte scans. Tie/fallback
-    * discipline is [[chooseServing4]]'s verbatim on the weighted
-    * costs; missing probe stats → sticky ivf with -1 estimates on BOTH
-    * channels. Returns (byteChosen, calChosen, ivfBytes, lshBytes,
-    * hnswBytes, pqBytes, ivfNs, lshNs, hnswNs, pqNs).
-    */
-  def chooseServingCalibrated(qv: Array[Float], ivf: IvfCatalog.IvfIndex,
-                              lsh: LshCatalog.LshIndex, hnswShards: Int,
-                              hnswNprobe: Int, efSearch: Int, dim: Int,
-                              pqCorpusRows: Long, pqM: Int, pqShortlist: Int,
-                              w: ServingWeights)
-      : (String, String, Long, Long, Long, Long, Long, Long, Long, Long) = {
-    val (byteChosen, ivfB, lshB, hnswB, pqB) = chooseServing4(qv, ivf, lsh,
-      hnswShards, hnswNprobe, efSearch, dim, pqCorpusRows, pqM, pqShortlist)
-    def cost(bytes: Long, nsPerKib: Long): Long =
-      ((bytes + 1023L) / 1024L) * nsPerKib
-    val hnswNs = cost(hnswB, w.hnswNsPerKib)
-    val pqNs = cost(pqB, w.pqNsPerKib)
-    if (ivfB < 0)
-      (byteChosen, "ivf", ivfB, lshB, hnswB, pqB, -1L, -1L, hnswNs, pqNs)
-    else {
-      val ivfNs = cost(ivfB, w.ivfNsPerKib)
-      val lshNs = cost(lshB, w.lshNsPerKib)
-      val calChosen =
-        if (pqNs < ivfNs && pqNs < lshNs && pqNs < hnswNs) "pq"
-        else if (hnswNs < ivfNs && hnswNs < lshNs) "hnsw"
-        else if (lshNs < ivfNs) "lsh"
-        else "ivf"
-      (byteChosen, calChosen, ivfB, lshB, hnswB, pqB, ivfNs, lshNs, hnswNs, pqNs)
-    }
-  }
-
-  /** COMBINED batch × selectivity serving cost choice — the two r19
-    * refinements composed (r19 verdict #5), because a production
-    * serving tier faces both at once: a BATCH of hybrid
-    * (predicate + KNN) queries. The two models compose orthogonally —
-    * each family's batch rule applies to its selectivity-widened form:
-    *   - IVF / LSH: Σ over the batch's per-query probe sets × dim·4 —
-    *     selectivity-INVARIANT (probe partitions are read in full
-    *     either way), batch-LINEAR;
-    *   - routed HNSW: B × min(nShards, nprobe) × efEff × dim·4 with
-    *     efEff = min(totalRows, ⌈ef·total/match⌉) — the
-    *     predicate-blind beam widens by 1/s AND pays per query;
-    *   - PQ/ADC: corpusRows × m + B × slEff × dim·4 with
-    *     slEff = min(totalRows, ⌈sl·total/match⌉) — ONE shared code
-    *     scan however large the batch, only the per-query rescore
-    *     widens.
-    * Consequence: the decision flips on (B, s) JOINTLY — a selective
-    * predicate prices the graph out and can hand a SMALL batch to a
-    * probe path, while growing the batch re-amortizes PQ's shared scan
-    * below the widened rescores' rivals (`ann_cost_serving_batch_
-    * filtered` gates the measured grid; IvfProbeRuleSpec pins the
-    * synthetic joint flips). Knob saturation, the exact-integer
-    * (matchRows, totalRows) channel, and [[chooseServing4]]'s
-    * tie/fallback discipline are inherited verbatim from
-    * [[chooseServingFiltered]] / [[chooseServingBatch]]. Returns
-    * (chosen, ivfBytes, lshBytes, hnswBytes, pqBytes, efEff, slEff).
-    */
-  def chooseServingBatchFiltered(qvs: Seq[Array[Float]],
-                                 ivf: IvfCatalog.IvfIndex,
-                                 lsh: LshCatalog.LshIndex, hnswShards: Int,
-                                 hnswNprobe: Int, efSearch: Int, dim: Int,
-                                 pqCorpusRows: Long, pqM: Int, pqShortlist: Int,
-                                 matchRows: Long, totalRows: Long)
-      : (String, Long, Long, Long, Long, Long, Long) = {
-    require(qvs.nonEmpty, "chooseServingBatchFiltered needs at least one query")
-    require(matchRows > 0 && matchRows <= totalRows,
-      s"selectivity pair out of range: $matchRows / $totalRows")
-    val vecBytes = dim.toLong * 4
-    val b = qvs.length.toLong
-    def ceilDiv(a: Long, d: Long): Long = (a + d - 1) / d
-    val efEff = math.min(totalRows, ceilDiv(efSearch.toLong * totalRows, matchRows))
-    val slEff = math.min(totalRows, ceilDiv(pqShortlist.toLong * totalRows, matchRows))
-    val hnswBytes =
-      b * math.min(hnswShards, hnswNprobe).toLong * efEff * vecBytes
-    val pqBytes = pqCorpusRows * pqM + b * slEff * vecBytes
-    if (ivf.clusterRows.isEmpty || lsh.bucketRows.isEmpty)
-      ("ivf", -1L, -1L, hnswBytes, pqBytes, efEff, slEff)
-    else {
-      val ivfBytes = qvs.map { qv =>
-        Ann.probeIds(qv, ivf.centroids, ivf.nprobe)
-          .map(c => ivf.clusterRows.getOrElse(c, 0L)).sum
-      }.sum * vecBytes
-      val lshBytes = qvs.map { qv =>
-        Ann.probeBuckets(Ann.queryBucket(qv, lsh.planes),
-            lsh.planes.length, lsh.radius)
-          .map(bk => lsh.bucketRows.getOrElse(bk, 0L)).sum
-      }.sum * vecBytes
-      val chosen =
-        if (pqBytes < ivfBytes && pqBytes < lshBytes && pqBytes < hnswBytes) "pq"
-        else if (hnswBytes < ivfBytes && hnswBytes < lshBytes) "hnsw"
-        else if (lshBytes < ivfBytes) "lsh"
-        else "ivf"
-      (chosen, ivfBytes, lshBytes, hnswBytes, pqBytes, efEff, slEff)
-    }
-  }
 
   /** Extract the float array of a typed array literal (query vector). */
   private def literalVector(e: Expression): Option[Array[Float]] = e match {

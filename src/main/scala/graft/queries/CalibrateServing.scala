@@ -55,12 +55,13 @@ object CalibrateServing {
     val cb = VectorQueries.PqStore.ensure(spark, dir)
     val codes = Pq.readEncoded(spark, VectorQueries.PqCodeStore.ensure(spark, dir))
 
-    val (_, ivfB, lshB, hnswB, pqB) = graft.plans.IvfProbeRule.chooseServing4(
-      q, graft.plans.IvfCatalog.IvfIndex(cents, 3, clusterRows),
+    import graft.plans.IvfProbeRule.{GraphBound, PqFamily, priceServing}
+    val bytes = priceServing(Seq(q),
+      graft.plans.IvfCatalog.IvfIndex(cents, 3, clusterRows),
       graft.plans.LshCatalog.LshIndex(planes, 2, bucketRows),
-      p.nShards, VectorQueries.NswRouterStore.nprobe, p.efSearch, dim = 64,
-      pqCorpusRows = clusterRows.values.sum, pqM = VectorQueries.PqStore.M,
-      pqShortlist = 16)
+      GraphBound(p.nShards, VectorQueries.NswRouterStore.nprobe, p.efSearch),
+      Some(PqFamily(clusterRows.values.sum, VectorQueries.PqStore.M, 16))).bytes
+    val (ivfB, lshB, hnswB, pqB) = (bytes.ivf, bytes.lsh, bytes.hnsw, bytes.pq.get)
 
     val ivfNs = timeNs(reps) {
       val probes = Ann.probeIds(q, cents, nprobe = 3)

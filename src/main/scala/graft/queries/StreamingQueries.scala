@@ -266,12 +266,11 @@ object StreamingQueries {
     * [[VectorServing.serveAutoKnn]] — every micro-batch is priced by
     * the batch-aware four-way byte model over the SAME hybrid/NSW/PQ
     * stores the batch gates read, and served on the family the model
-    * picks. Decisions + candidate ids are recorded per batch for the
-    * late oracle.
+    * picks. Each batch's candidate ids are recorded for the late
+    * oracle (which replays the decisions itself).
     */
   private object AutoServeStore {
     private val done = scala.collection.concurrent.TrieMap.empty[String, String]
-    val chosen = scala.collection.concurrent.TrieMap.empty[String, Map[String, String]]
     val cands = scala.collection.concurrent.TrieMap
       .empty[String, Map[String, Map[Int, Seq[Long]]]]
     @volatile var lastDir: Option[String] = None
@@ -311,8 +310,7 @@ object StreamingQueries {
         val q = VectorServing.serveAutoKnn(
           input.toDF().toDF("query_id", "query_vec"), idx,
           "embedding", "vec_id", "query_vec", "query_id", k = 3,
-          s"$root/ckpt") { (batchId, ch, cds) =>
-          chosen(dir) = chosen.getOrElse(dir, Map.empty) + (s"mb$batchId" -> ch)
+          s"$root/ckpt") { (batchId, _, cds) =>
           cands(dir) = cands.getOrElse(dir, Map.empty) + (s"mb$batchId" -> cds)
         } { batchOut =>
           batchOut.write.mode("append").parquet(out)
@@ -332,7 +330,7 @@ object StreamingQueries {
       "#1): the knn_batch query vectors stream through " +
       "VectorServing.serveAutoKnn in two micro-batches (2 then 3 " +
       "queries); EACH batch is priced by the batch-aware four-way " +
-      "byte model (chooseServingBatch — PQ's shared ADC scan " +
+      "byte model (IvfProbeRule.priceServing — PQ's shared ADC scan " +
       "amortizes across the batch, the graph router and probe paths " +
       "pay per query) and served on the family it picks over the " +
       "same persisted hybrid/NSW/PQ stores the batch gates read. The " +
@@ -341,7 +339,7 @@ object StreamingQueries {
       "SQL (probe sets, closed forms, argmin, ivf-precedence ties) " +
       "and re-ranks its chosen candidates (probe membership for " +
       "ivf/lsh, THIS run's recorded shortlist/beam ids for pq/hnsw) " +
-      "— the single duckCostServingBatchSql builder shared with " +
+      "— the single duckDispatchOracle builder shared with " +
       "ann_cost_serving_batch, so streamed ≡ priced-batch is " +
       "structural. At the fixture corpus both batches price pq; at " +
       "sf0.1+ the 2-query batch flips to the graph router — the " +
@@ -358,8 +356,8 @@ object StreamingQueries {
     oracle = None,
     oracleLate = Some(() =>
       AutoServeStore.lastDir.map { d =>
-        VectorQueries.duckCostServingBatchSql(AutoServeStore.legs,
-          AutoServeStore.cands.getOrElse(d, Map.empty), k = 3)
+        VectorQueries.duckDispatchOracle(AutoServeStore.legs,
+          AutoServeStore.cands.getOrElse(d, Map.empty))
       }))
 
   private val streamServe = QueryDef(

@@ -363,6 +363,38 @@ object VectorQueries {
       })
   }
 
+  /** The hybrid store's index metadata, recomputed from the parquet data
+    * for every cost-served oracle: the 8 seeded centroids (cents), each
+    * vector's nearest centroid (assigned), the 8 md5 sign planes
+    * (planes) and each vector's bucket (bk). All MATERIALIZED: DuckDB
+    * inlines a CTE at every reference, and the per-query cand branches
+    * each carry a `(SELECT chosen FROM choice)` scalar — inlined, that
+    * re-expands the per-query probe counts → assigned/bk into a
+    * combinatorial plan that spilled >60 GB at sf1; materialized, the
+    * whole oracle runs in under a second.
+    */
+  private def duckServingPrelude: String = s"""
+    |WITH cents AS MATERIALIZED (
+    |  SELECT vec_id AS cid, embedding::DOUBLE[] AS c FROM embeddings WHERE vec_id < 8
+    |), assigned AS MATERIALIZED (
+    |  SELECT vec_id, cid AS cluster_id FROM (
+    |    SELECT e.vec_id, c.cid,
+    |           row_number() OVER (PARTITION BY e.vec_id
+    |                              ORDER BY ${duckL2("e.embedding::DOUBLE[]", "c.c")}, c.cid) AS rn
+    |    FROM embeddings e CROSS JOIN cents c
+    |  ) WHERE rn = 1
+    |), planes AS MATERIALIZED (
+    |  SELECT b, list_transform(range(64), j ->
+    |    CASE WHEN ('0x' || substring(md5('lsh:' || b::VARCHAR || ':' || j::VARCHAR), 1, 12))::BIGINT % 2 = 0
+    |         THEN 1.0 ELSE -1.0 END) AS plane
+    |  FROM (SELECT unnest(range(8)) AS b)
+    |), bk AS MATERIALIZED (
+    |  SELECT e.vec_id,
+    |         sum(CASE WHEN list_dot_product(e.embedding::DOUBLE[], p.plane) >= 0
+    |                  THEN (1::BIGINT << p.b) ELSE 0 END)::BIGINT AS lsh_bucket
+    |  FROM embeddings e CROSS JOIN planes p GROUP BY e.vec_id
+    |)""".stripMargin.trim
+
   private val costRule = QueryDef(
     "ann_cost_rewrite",
     "Cost-based index selection inside the transparent rewrite: ONE " +
@@ -399,26 +431,7 @@ object VectorQueries {
     Some {
       val qLit = vecLit(Queries.queryVec64)
       s"""
-      |WITH cents AS (
-      |  SELECT vec_id AS cid, embedding::DOUBLE[] AS c FROM embeddings WHERE vec_id < 8
-      |), assigned AS (
-      |  SELECT vec_id, cid AS cluster_id FROM (
-      |    SELECT e.vec_id, c.cid,
-      |           row_number() OVER (PARTITION BY e.vec_id
-      |                              ORDER BY ${duckL2("e.embedding::DOUBLE[]", "c.c")}, c.cid) AS rn
-      |    FROM embeddings e CROSS JOIN cents c
-      |  ) WHERE rn = 1
-      |), planes AS (
-      |  SELECT b, list_transform(range(64), j ->
-      |    CASE WHEN ('0x' || substring(md5('lsh:' || b::VARCHAR || ':' || j::VARCHAR), 1, 12))::BIGINT % 2 = 0
-      |         THEN 1.0 ELSE -1.0 END) AS plane
-      |  FROM (SELECT unnest(range(8)) AS b)
-      |), bk AS (
-      |  SELECT e.vec_id,
-      |         sum(CASE WHEN list_dot_product(e.embedding::DOUBLE[], p.plane) >= 0
-      |                  THEN (1::BIGINT << p.b) ELSE 0 END)::BIGINT AS lsh_bucket
-      |  FROM embeddings e CROSS JOIN planes p GROUP BY e.vec_id
-      |), ivf_probes AS (
+      |$duckServingPrelude, ivf_probes AS (
       |  SELECT cid FROM cents ORDER BY ${duckL2(qLit, "c")}, cid LIMIT 3
       |), qb AS (
       |  SELECT sum(CASE WHEN list_dot_product($qLit, plane) >= 0
@@ -496,8 +509,12 @@ object VectorQueries {
     * shard's vector set (shuffle-order-independent), so routing is
     * reproducible across runs.
     */
-  private[queries] final class GraphRouterStore(store: GraphStore) {
+  private[queries] final class GraphRouterStore(val store: GraphStore) {
     val nprobe = 2
+
+    /** The routed graph's knobs as the serving cost model prices them. */
+    def bound: graft.plans.IvfProbeRule.GraphBound =
+      graft.plans.IvfProbeRule.GraphBound(store.params.nShards, nprobe, store.params.efSearch)
     private val cents = scala.collection.concurrent.TrieMap
       .empty[String, Array[(Int, Array[Double])]]
     def ensure(s: org.apache.spark.sql.SparkSession,
@@ -725,8 +742,222 @@ object VectorQueries {
     @volatile var lastDir: Option[String] = None
   }
 
+  /** One leg of a cost-served gate's oracle: its queries, THIS run's
+    * recorded candidate ids per query (read when the leg chose hnsw or
+    * pq), and for a filtered leg its (match-count SQL, row predicate SQL
+    * over the embeddings alias `e`).
+    */
+  private[queries] final case class OracleLeg(tag: String, qs: Seq[(Int, Array[Float])],
+                                              recorded: Map[Int, Seq[Long]],
+                                              filter: Option[(String, String)] = None)
+
+  /** [[graft.plans.IvfProbeRule.FamilyCosts]]'s argmin as a SQL CASE
+    * over the cost columns `cost(family)`.
+    */
+  private def duckArgmin(cost: String => String, pq: Boolean): String = {
+    val Seq(ivf, lsh, hnsw, pqc) = Seq("ivf", "lsh", "hnsw", "pq").map(cost)
+    val pqArm =
+      if (pq) s"WHEN $pqc < $ivf AND $pqc < $lsh AND $pqc < $hnsw THEN 'pq'\n              " else ""
+    s"""|CASE ${pqArm}WHEN $hnsw < $ivf AND $hnsw < $lsh THEN 'hnsw'
+        |              WHEN $lsh < $ivf THEN 'lsh'
+        |              ELSE 'ivf' END""".stripMargin
+  }
+
+  /** THE late oracle of the cost-served gates: it replays the serving
+    * cost model from the parquet data alone, leg by leg, then re-ranks
+    * the executed family's candidates exactly. It never reads the Scala
+    * model's numbers, only its knobs: it is the reference the model is
+    * checked against. After the shared [[duckServingPrelude]], each leg
+    * emits
+    *   - `qb_<leg>_<q>`: each query's sign bucket;
+    *   - `m_<leg>` (filtered legs): the exact (n_match, n_total) pair;
+    *   - `est_<leg>`: ef_eff and sl_eff — least(n_total, ⌈knob·n_total /
+    *     n_match⌉) when filtered, the knobs as given otherwise — then
+    *     est_ivf_b (Σ per-query rows in the 3 nearest lists), est_lsh_b
+    *     (Σ per-query rows within hamming `lshRadius`), est_hnsw_b
+    *     (B·min(nShards, nprobe)·ef_eff), each × `bytesPerRow`, and with
+    *     `pq` = (m, shortlist) est_pq_b = count(*)·m + B·sl_eff × bytesPerRow;
+    *   - `choice_<leg>`: the model's argmin (chosen_index);
+    *   - with `weights`, `cost_<leg>` (cost_*_ns = ⌈bytes/1024⌉·ns/KiB)
+    *     and `cchoice_<leg>` (its argmin, cal_chosen), which then picks
+    *     the executed family instead of chosen_index;
+    *   - `cand_<leg>_<q>`: the executed family's candidates — probe-set
+    *     membership for ivf/lsh, the recorded ids for hnsw/pq;
+    *   - `top_<leg>_<q>`: exact cosine top-k under the leg's predicate.
+    * A leg's rows carry leg, batch_size, query_id, knn_rank, vec_id,
+    * label, distance, chosen_index and every est_/cost_ column (plus
+    * cal_chosen); each gate keeps its own output through `projection`
+    * and `orderBy`. `bytesPerRow` is the vectors' dim·4, or 1 to price
+    * in rows (no PQ family then). est, choice, cost and cchoice are
+    * MATERIALIZED for the reason the prelude gives.
+    */
+  private[queries] def duckServingOracle(
+      legs: Seq[OracleLeg], k: Int, lshRadius: Int,
+      graph: graft.plans.IvfProbeRule.GraphBound, pq: Option[(Int, Int)],
+      weights: Option[graft.plans.IvfProbeRule.ServingWeights], bytesPerRow: Long,
+      projection: String, orderBy: String): String = {
+    val routed = math.min(graph.nShards, graph.nprobe)
+    def ivfProbes(v: Array[Float]) =
+      s"(SELECT cid FROM cents ORDER BY ${duckL2(vecLit(v), "c")}, cid LIMIT 3)"
+    def inLshProbes(q: String) =
+      s"""|len(list_filter(range(8), i ->
+          |      ((bk.lsh_bucket >> i) & 1) <> (($q.qbucket >> i) & 1))) <= $lshRadius""".stripMargin
+    val built = legs.map { case OracleLeg(t, qs, recorded, filter) =>
+      val b = qs.length
+      def widened(knob: Int) =
+        if (filter.isDefined) s"least(n_total, ($knob * n_total + n_match - 1) // n_match)"
+        else s"$knob::BIGINT"
+      val (ef, sl) = (widened(graph.efSearch), pq.fold("0::BIGINT")(p => widened(p._2)))
+      val qbs = qs.map { case (qid, v) =>
+        s"""|qb_${t}_$qid AS (
+            |  SELECT sum(CASE WHEN list_dot_product(${vecLit(v)}, plane) >= 0
+            |                  THEN (1::BIGINT << b) ELSE 0 END)::BIGINT AS qbucket
+            |  FROM planes
+            |)""".stripMargin
+      }
+      val ivfCnt = qs.map { case (_, v) =>
+        s"(SELECT count(*) FROM assigned WHERE cluster_id IN\n      ${ivfProbes(v)})"
+      }.mkString(" + ")
+      val lshCnt = qs.map { case (qid, _) =>
+        s"(SELECT count(*) FROM bk, qb_${t}_$qid q\n      WHERE ${inLshProbes("q")})"
+      }.mkString(" + ")
+      val sel = filter.map { case (matchSql, _) =>
+        s"""|m_$t AS MATERIALIZED (
+            |  SELECT ($matchSql)::BIGINT AS n_match,
+            |         (SELECT count(*) FROM embeddings)::BIGINT AS n_total
+            |)""".stripMargin
+      }
+      val pqEst = pq.fold("") { case (m, _) =>
+        s",\n         (SELECT count(*) FROM embeddings)::BIGINT * $m + ${b}::BIGINT * $sl * $bytesPerRow AS est_pq_b"
+      }
+      val est =
+        s"""|est_$t AS MATERIALIZED (
+            |  SELECT ${if (filter.isDefined) "n_match, n_total, " else ""}$ef AS ef_eff, $sl AS sl_eff,
+            |         ($ivfCnt)::BIGINT * $bytesPerRow AS est_ivf_b,
+            |         ($lshCnt)::BIGINT * $bytesPerRow AS est_lsh_b,
+            |         ${b}::BIGINT * $routed * $ef * $bytesPerRow AS est_hnsw_b$pqEst
+            |  ${if (filter.isDefined) s"FROM m_$t" else ""}
+            |), choice_$t AS MATERIALIZED (
+            |  SELECT ${duckArgmin(f => s"est_${f}_b", pq.isDefined)} AS chosen
+            |  FROM est_$t
+            |)""".stripMargin
+      val calibrated = weights.map { w =>
+        val perKib = Map("ivf" -> w.ivfNsPerKib, "lsh" -> w.lshNsPerKib,
+          "hnsw" -> w.hnswNsPerKib, "pq" -> w.pqNsPerKib)
+        val costs = Seq("ivf", "lsh", "hnsw", "pq").filter(f => f != "pq" || pq.isDefined)
+          .map(f => s"((est_${f}_b + 1023) // 1024) * ${perKib(f)} AS cost_${f}_ns")
+        s"""|cost_$t AS MATERIALIZED (
+            |  SELECT ${costs.mkString(",\n         ")}
+            |  FROM est_$t
+            |), cchoice_$t AS MATERIALIZED (
+            |  SELECT ${duckArgmin(f => s"cost_${f}_ns", pq.isDefined)} AS cal_chosen
+            |  FROM cost_$t
+            |)""".stripMargin
+      }
+      val executed =
+        if (weights.isDefined) s"(SELECT cal_chosen FROM cchoice_$t)"
+        else s"(SELECT chosen FROM choice_$t)"
+      val tops = qs.map { case (qid, v) =>
+        val rec = recorded.getOrElse(qid, Seq.empty)
+        val recList = if (rec.isEmpty) "[]::BIGINT[]" else rec.mkString("[", ", ", "]")
+        s"""|cand_${t}_$qid AS (
+            |  SELECT vec_id FROM assigned
+            |  WHERE $executed = 'ivf'
+            |    AND cluster_id IN ${ivfProbes(v)}
+            |  UNION ALL
+            |  SELECT bk.vec_id FROM bk, qb_${t}_$qid q
+            |  WHERE $executed = 'lsh'
+            |    AND ${inLshProbes("q")}
+            |  UNION ALL
+            |  SELECT unnest($recList) AS vec_id
+            |  WHERE $executed IN ('hnsw', 'pq')
+            |), top_${t}_$qid AS (
+            |  SELECT $qid AS query_id, vec_id, label, dist,
+            |         row_number() OVER (ORDER BY dist, vec_id) AS knn_rank
+            |  FROM (
+            |    SELECT c.vec_id, e.label, ${duckCosine("e.embedding", vecLit(v))} AS dist
+            |    FROM cand_${t}_$qid c JOIN embeddings e ON c.vec_id = e.vec_id
+            |    WHERE ${filter.fold("TRUE")(_._2)}
+            |  ) QUALIFY knn_rank <= $k
+            |)""".stripMargin
+      }
+      val rows = qs.map { case (qid, _) =>
+        s"""|SELECT '$t' AS leg, ${b}::BIGINT AS batch_size, t.query_id,
+            |       CAST(t.knn_rank AS BIGINT) AS knn_rank, t.vec_id, t.label,
+            |       round(t.dist, 6) AS distance, ch.chosen AS chosen_index, e.*${
+                      if (weights.isDefined) ", cc.cal_chosen, c.*" else ""}
+            |FROM top_${t}_$qid t CROSS JOIN est_$t e CROSS JOIN choice_$t ch${
+                      if (weights.isDefined) s" CROSS JOIN cost_$t c CROSS JOIN cchoice_$t cc" else ""}""".stripMargin
+      }
+      (qbs ++ sel ++ Seq(est) ++ calibrated ++ tops, rows)
+    }
+    s"""|$duckServingPrelude,
+        |${built.flatMap(_._1).mkString(",\n")}
+        |SELECT $projection FROM (
+        |${built.flatMap(_._2).mkString("\nUNION ALL\n")}
+        |) ORDER BY $orderBy""".stripMargin
+  }
+
+  /** Execute one query on `family` over the cost-served gates' stores,
+    * exact top-k under `pred`: the probe-pruned hybrid scan for ivf/lsh;
+    * the routed beam over `router`'s graph at beam width `ef`
+    * (re-ranked in the search task when unfiltered); the `shortlist`
+    * ADC shortlist for pq. Returns the ranked frame (vec_id,
+    * distance_score) and THIS run's recorded candidate ids (sorted;
+    * empty for ivf/lsh) for the late oracle.
+    */
+  private def serveOne(s: org.apache.spark.sql.SparkSession, dir: String,
+                       family: String, q: Array[Float], k: Int, path: String,
+                       ivf: graft.plans.IvfCatalog.IvfIndex,
+                       lsh: graft.plans.LshCatalog.LshIndex,
+                       router: GraphRouterStore, ef: Long, shortlist: Long,
+                       pred: Option[org.apache.spark.sql.Column] = None)
+      : (org.apache.spark.sql.DataFrame, Seq[Long]) = {
+    val corpus = Tables.embeddings(s, dir)
+    def ranked(df: org.apache.spark.sql.DataFrame) =
+      Knn.search(pred.fold(df)(df.filter), "embedding", "vec_id", q, k)
+    family match {
+      case "pq" =>
+        val cb = PqStore.ensure(s, dir)
+        val codes = Pq.readEncoded(s, PqCodeStore.ensure(s, dir))
+        val sl = Pq.search(codes, "vec_id", q, cb, k = shortlist.toInt)
+          .select("vec_id").collect().map(_.getLong(0)).toSeq.sorted
+        (ranked(corpus.filter(col("vec_id").isin(sl: _*))), sl)
+      case "hnsw" =>
+        val p = router.store.params.copy(efSearch = ef.toInt)
+        val (res, cands, _) = Nsw.routedBatchSearch(
+          Nsw.openGraph(Nsw.readGraph(s, router.store.ensure(s, dir)), p.nShards),
+          "vec_id", Seq(0 -> q), k, router.ensure(s, dir), router.nprobe, p)
+        val ids = cands.getOrElse(0, Seq.empty).sorted
+        (if (pred.isEmpty) res else ranked(corpus.filter(col("vec_id").isin(ids: _*))), ids)
+      case probe =>
+        (ranked(graft.streaming.VectorServing.probeScan(
+          Ann.readIndexed(s, path), probe, q, ivf, lsh)), Seq.empty)
+    }
+  }
+
+  /** The probe indexes every cost-served gate prices: the memoized
+    * hybrid store (its path), its 8 seeded centroids probed 3 deep and
+    * its 8 sign planes probed within hamming `lshRadius`, each with the
+    * store's exact per-partition row counts.
+    */
+  private def servingIndexes(s: org.apache.spark.sql.SparkSession, dir: String,
+                             lshRadius: Int)
+      : (String, graft.plans.IvfCatalog.IvfIndex, graft.plans.LshCatalog.LshIndex) = {
+    val cents = Ann.seededCentroids(Tables.embeddings(s, dir), "embedding", "vec_id", nlist = 8)
+    val planes = Ann.signPlanes(dim = 64, nBits = 8)
+    val (path, clusterRows, bucketRows) = HybridIndexStore.ensure(s, dir, cents, planes)
+    (path, graft.plans.IvfCatalog.IvfIndex(cents, 3, clusterRows),
+      graft.plans.LshCatalog.LshIndex(planes, lshRadius, bucketRows))
+  }
+
+  /** The gates' PQ family: every stored row's m = 8 codes, and a
+    * 16-id shortlist per query.
+    */
+  private def gatePq(ivf: graft.plans.IvfCatalog.IvfIndex) =
+    Some(graft.plans.IvfProbeRule.PqFamily(ivf.clusterRows.values.sum, PqStore.M, 16))
+
   private object CostServingState {
-    val chosen = scala.collection.concurrent.TrieMap.empty[String, String]
     val hnswCands = scala.collection.concurrent.TrieMap.empty[String, Seq[Long]]
     @volatile var lastDir: Option[String] = None
   }
@@ -735,14 +966,16 @@ object VectorQueries {
     "ann_cost_serving",
     "THREE-way cost-based index selection — the serving-layer router " +
       "that completes ann_cost_rewrite's IVF-vs-LSH optimizer choice " +
-      "with the graph family: IvfProbeRule.chooseServing estimates the " +
-      "rows each index sends to the exact re-rank for THIS query — " +
+      "with the graph family: IvfProbeRule.priceServing (no PQ family) " +
+      "estimates the rows each index sends to the exact re-rank for " +
+      "THIS query — " +
       "Σ cluster rows over the 3 nearest lists, Σ bucket rows over the " +
       "hamming-≤1 probe set, and the routed-HNSW CLOSED FORM " +
       "min(nShards,nprobe)·efSearch (constant in corpus size — the " +
       "whole point of the router) — and dispatches to the cheapest: " +
-      "probe filters for IVF/LSH, the routed beam API for HNSW (the " +
-      "graph path never gets a Catalyst rewrite, the documented " +
+      "probe filters for IVF/LSH, the routed beam over the opened graph " +
+      "exchange for HNSW (the graph path never gets a Catalyst " +
+      "rewrite, the documented " +
       "no-rewrite rationale, so this choice lives ABOVE the optimizer). " +
       "All three estimates ride the output and the oracle replays the " +
       "ENTIRE decision in SQL — both assignments, both probe sets, " +
@@ -755,117 +988,31 @@ object VectorQueries {
       "choices with synthetic stats.",
     (s, dir) => {
       val q = Queries.queryVec64
-      val corpus = Tables.embeddings(s, dir)
-      val cents = Ann.seededCentroids(corpus, "embedding", "vec_id", nlist = 8)
-      val planes = Ann.signPlanes(dim = 64, nBits = 8)
-      val (path, clusterRows, bucketRows) =
-        HybridIndexStore.ensure(s, dir, cents, planes)
-      val p = HnswStore.params
-      val (chosen, estIvf, estLsh, estHnsw) =
-        graft.plans.IvfProbeRule.chooseServing(q,
-          graft.plans.IvfCatalog.IvfIndex(cents, 3, clusterRows),
-          graft.plans.LshCatalog.LshIndex(planes, 1, bucketRows),
-          p.nShards, HnswRouterStore.nprobe, p.efSearch)
-      CostServingState.chosen(dir) = chosen
+      val (path, ivf, lsh) = servingIndexes(s, dir, lshRadius = 1)
+      val price = graft.plans.IvfProbeRule.priceServing(Seq(q), ivf, lsh,
+        HnswRouterStore.bound)
       CostServingState.lastDir = Some(dir)
-      val ranked = chosen match {
-        case "hnsw" =>
-          val hnswPath = HnswStore.ensure(s, dir)
-          val (res, cands, _) = Nsw.routedSearch(
-            Nsw.readGraph(s, hnswPath), corpus, "embedding", "vec_id",
-            q, k = 10, HnswRouterStore.ensure(s, dir),
-            HnswRouterStore.nprobe, p)
-          CostServingState.hnswCands(dir) = cands
-          res
-        case "lsh" =>
-          CostServingState.hnswCands(dir) = Seq.empty
-          val probes = Ann.probeBuckets(
-            Ann.queryBucket(q, planes), planes.length, radius = 1)
-          Knn.search(Ann.readIndexed(s, path)
-              .filter(col("lsh_bucket").isin(probes: _*)),
-            "embedding", "vec_id", q, k = 10)
-        case _ =>
-          CostServingState.hnswCands(dir) = Seq.empty
-          val probes = Ann.probeIds(q, cents, nprobe = 3)
-          Knn.search(Ann.readIndexed(s, path)
-              .filter(col("cluster_id").isin(probes: _*)),
-            "embedding", "vec_id", q, k = 10)
-      }
-      ranked.select(col("vec_id"), lit(chosen).as("chosen_index"),
-          lit(estIvf).as("est_ivf"), lit(estLsh).as("est_lsh"),
-          lit(estHnsw).as("est_hnsw"),
+      val (ranked, cands) = serveOne(s, dir, price.chosen, q, k = 10, path,
+        ivf, lsh, HnswRouterStore, price.efEff, price.slEff)
+      CostServingState.hnswCands(dir) = cands
+      ranked.select(col("vec_id"), lit(price.chosen).as("chosen_index"),
+          lit(price.rows(price.bytes.ivf)).as("est_ivf"),
+          lit(price.rows(price.bytes.lsh)).as("est_lsh"),
+          lit(price.rows(price.bytes.hnsw)).as("est_hnsw"),
           round(col("distance_score"), 6).as("distance"))
         .orderBy(col("distance"), col("vec_id"))
     },
     oracle = None,
     oracleLate = Some(() =>
       CostServingState.lastDir.map { d =>
-        val hnswIds = CostServingState.hnswCands.getOrElse(d, Seq.empty)
-        val hnswList =
-          if (hnswIds.isEmpty) "[]::BIGINT[]" else hnswIds.mkString("[", ", ", "]")
-        val estHnsw = math.min(HnswStore.params.nShards,
-          HnswRouterStore.nprobe).toLong * HnswStore.params.efSearch
-        val qLit = vecLit(Queries.queryVec64)
-        s"""
-        |WITH cents AS (
-        |  SELECT vec_id AS cid, embedding::DOUBLE[] AS c FROM embeddings WHERE vec_id < 8
-        |), assigned AS (
-        |  SELECT vec_id, cid AS cluster_id FROM (
-        |    SELECT e.vec_id, c.cid,
-        |           row_number() OVER (PARTITION BY e.vec_id
-        |                              ORDER BY ${duckL2("e.embedding::DOUBLE[]", "c.c")}, c.cid) AS rn
-        |    FROM embeddings e CROSS JOIN cents c
-        |  ) WHERE rn = 1
-        |), planes AS (
-        |  SELECT b, list_transform(range(64), j ->
-        |    CASE WHEN ('0x' || substring(md5('lsh:' || b::VARCHAR || ':' || j::VARCHAR), 1, 12))::BIGINT % 2 = 0
-        |         THEN 1.0 ELSE -1.0 END) AS plane
-        |  FROM (SELECT unnest(range(8)) AS b)
-        |), bk AS (
-        |  SELECT e.vec_id,
-        |         sum(CASE WHEN list_dot_product(e.embedding::DOUBLE[], p.plane) >= 0
-        |                  THEN (1::BIGINT << p.b) ELSE 0 END)::BIGINT AS lsh_bucket
-        |  FROM embeddings e CROSS JOIN planes p GROUP BY e.vec_id
-        |), ivf_probes AS (
-        |  SELECT cid FROM cents ORDER BY ${duckL2(qLit, "c")}, cid LIMIT 3
-        |), qb AS (
-        |  SELECT sum(CASE WHEN list_dot_product($qLit, plane) >= 0
-        |                  THEN (1::BIGINT << b) ELSE 0 END)::BIGINT AS qbucket
-        |  FROM planes
-        |), ivf_cand AS (
-        |  SELECT vec_id FROM assigned
-        |  WHERE cluster_id IN (SELECT cid FROM ivf_probes)
-        |), lsh_cand AS (
-        |  SELECT bk.vec_id FROM bk, qb
-        |  WHERE len(list_filter(range(8), i ->
-        |        ((bk.lsh_bucket >> i) & 1) <> ((qb.qbucket >> i) & 1))) <= 1
-        |), est AS (
-        |  SELECT (SELECT count(*) FROM ivf_cand)::BIGINT AS est_ivf,
-        |         (SELECT count(*) FROM lsh_cand)::BIGINT AS est_lsh,
-        |         ${estHnsw}::BIGINT AS est_hnsw
-        |), choice AS (
-        |  SELECT CASE WHEN est_hnsw < est_ivf AND est_hnsw < est_lsh THEN 'hnsw'
-        |              WHEN est_lsh < est_ivf THEN 'lsh'
-        |              ELSE 'ivf' END AS chosen
-        |  FROM est
-        |), cand AS (
-        |  SELECT vec_id FROM lsh_cand WHERE (SELECT chosen FROM choice) = 'lsh'
-        |  UNION ALL
-        |  SELECT vec_id FROM ivf_cand WHERE (SELECT chosen FROM choice) = 'ivf'
-        |  UNION ALL
-        |  SELECT unnest($hnswList) AS vec_id
-        |  WHERE (SELECT chosen FROM choice) = 'hnsw'
-        |), dd AS (
-        |  SELECT c.vec_id, ${duckCosine("e.embedding", qLit)} AS dist
-        |  FROM cand c JOIN embeddings e ON c.vec_id = e.vec_id
-        |), top AS (
-        |  SELECT vec_id, dist FROM dd ORDER BY dist, vec_id LIMIT 10
-        |)
-        |SELECT t.vec_id, (SELECT chosen FROM choice) AS chosen_index,
-        |       e.est_ivf, e.est_lsh, e.est_hnsw,
-        |       round(t.dist, 6) AS distance
-        |FROM top t CROSS JOIN est e ORDER BY distance, vec_id
-        """.stripMargin.trim
+        duckServingOracle(
+          Seq(OracleLeg("q", Seq(0 -> Queries.queryVec64),
+            Map(0 -> CostServingState.hnswCands.getOrElse(d, Seq.empty)))),
+          k = 10, lshRadius = 1, HnswRouterStore.bound, pq = None,
+          weights = None, bytesPerRow = 1,
+          "vec_id, chosen_index, est_ivf_b AS est_ivf, est_lsh_b AS est_lsh, " +
+            "est_hnsw_b AS est_hnsw, distance",
+          "distance, vec_id")
       }))
 
   private object RoutedBatchState {
@@ -943,7 +1090,6 @@ object VectorQueries {
       }))
 
   private object CostServing4State {
-    val chosen = scala.collection.concurrent.TrieMap.empty[String, String]
     val recorded = scala.collection.concurrent.TrieMap.empty[String, Seq[Long]]
     @volatile var lastDir: Option[String] = None
   }
@@ -971,265 +1117,60 @@ object VectorQueries {
       "FOUR ways with synthetic stats.",
     (s, dir) => {
       val q = Queries.queryVec64
-      val corpus = Tables.embeddings(s, dir)
-      val cents = Ann.seededCentroids(corpus, "embedding", "vec_id", nlist = 8)
-      val planes = Ann.signPlanes(dim = 64, nBits = 8)
-      val (path, clusterRows, bucketRows) =
-        HybridIndexStore.ensure(s, dir, cents, planes)
-      val p = HnswStore.params
-      val corpusRows = clusterRows.values.sum
-      val shortlist = 16
-      val (chosen, estIvfB, estLshB, estHnswB, estPqB) =
-        graft.plans.IvfProbeRule.chooseServing4(q,
-          graft.plans.IvfCatalog.IvfIndex(cents, 3, clusterRows),
-          graft.plans.LshCatalog.LshIndex(planes, 2, bucketRows),
-          p.nShards, HnswRouterStore.nprobe, p.efSearch,
-          dim = 64, corpusRows, pqM = PqStore.M, pqShortlist = shortlist)
-      CostServing4State.chosen(dir) = chosen
+      val (path, ivf, lsh) = servingIndexes(s, dir, lshRadius = 2)
+      val price = graft.plans.IvfProbeRule.priceServing(Seq(q), ivf, lsh,
+        HnswRouterStore.bound, gatePq(ivf))
       CostServing4State.lastDir = Some(dir)
-      val ranked = chosen match {
-        case "pq" =>
-          val cb = PqStore.ensure(s, dir)
-          val codes = Pq.readEncoded(s, PqCodeStore.ensure(s, dir))
-          val sl = Pq.search(codes, "vec_id", q, cb, k = shortlist)
-            .select("vec_id").collect().map(_.getLong(0)).toSeq.sorted
-          CostServing4State.recorded(dir) = sl
-          Knn.search(corpus.filter(col("vec_id").isin(sl: _*)),
-            "embedding", "vec_id", q, k = 10)
-        case "hnsw" =>
-          val hnswPath = HnswStore.ensure(s, dir)
-          val (res, cands, _) = Nsw.routedSearch(
-            Nsw.readGraph(s, hnswPath), corpus, "embedding", "vec_id",
-            q, k = 10, HnswRouterStore.ensure(s, dir),
-            HnswRouterStore.nprobe, p)
-          CostServing4State.recorded(dir) = cands
-          res
-        case "lsh" =>
-          CostServing4State.recorded(dir) = Seq.empty
-          val probes = Ann.probeBuckets(
-            Ann.queryBucket(q, planes), planes.length, radius = 2)
-          Knn.search(Ann.readIndexed(s, path)
-              .filter(col("lsh_bucket").isin(probes: _*)),
-            "embedding", "vec_id", q, k = 10)
-        case _ =>
-          CostServing4State.recorded(dir) = Seq.empty
-          val probes = Ann.probeIds(q, cents, nprobe = 3)
-          Knn.search(Ann.readIndexed(s, path)
-              .filter(col("cluster_id").isin(probes: _*)),
-            "embedding", "vec_id", q, k = 10)
-      }
-      ranked.select(col("vec_id"), lit(chosen).as("chosen_index"),
-          lit(estIvfB).as("est_ivf_b"), lit(estLshB).as("est_lsh_b"),
-          lit(estHnswB).as("est_hnsw_b"), lit(estPqB).as("est_pq_b"),
-          round(col("distance_score"), 6).as("distance"))
+      val (ranked, recorded) = serveOne(s, dir, price.chosen, q, k = 10, path,
+        ivf, lsh, HnswRouterStore, price.efEff, price.slEff)
+      CostServing4State.recorded(dir) = recorded
+      ranked.select(Seq(col("vec_id"), lit(price.chosen).as("chosen_index")) ++
+          graft.streaming.VectorServing.byteColumns(price) ++
+          Seq(round(col("distance_score"), 6).as("distance")): _*)
         .orderBy(col("distance"), col("vec_id"))
     },
     oracle = None,
     oracleLate = Some(() =>
       CostServing4State.lastDir.map { d =>
-        val recIds = CostServing4State.recorded.getOrElse(d, Seq.empty)
-        val recList =
-          if (recIds.isEmpty) "[]::BIGINT[]" else recIds.mkString("[", ", ", "]")
-        val estHnswB = math.min(HnswStore.params.nShards,
-          HnswRouterStore.nprobe).toLong * HnswStore.params.efSearch * 256L
-        val qLit = vecLit(Queries.queryVec64)
-        s"""
-        |WITH cents AS (
-        |  SELECT vec_id AS cid, embedding::DOUBLE[] AS c FROM embeddings WHERE vec_id < 8
-        |), assigned AS (
-        |  SELECT vec_id, cid AS cluster_id FROM (
-        |    SELECT e.vec_id, c.cid,
-        |           row_number() OVER (PARTITION BY e.vec_id
-        |                              ORDER BY ${duckL2("e.embedding::DOUBLE[]", "c.c")}, c.cid) AS rn
-        |    FROM embeddings e CROSS JOIN cents c
-        |  ) WHERE rn = 1
-        |), planes AS (
-        |  SELECT b, list_transform(range(64), j ->
-        |    CASE WHEN ('0x' || substring(md5('lsh:' || b::VARCHAR || ':' || j::VARCHAR), 1, 12))::BIGINT % 2 = 0
-        |         THEN 1.0 ELSE -1.0 END) AS plane
-        |  FROM (SELECT unnest(range(8)) AS b)
-        |), bk AS (
-        |  SELECT e.vec_id,
-        |         sum(CASE WHEN list_dot_product(e.embedding::DOUBLE[], p.plane) >= 0
-        |                  THEN (1::BIGINT << p.b) ELSE 0 END)::BIGINT AS lsh_bucket
-        |  FROM embeddings e CROSS JOIN planes p GROUP BY e.vec_id
-        |), ivf_probes AS (
-        |  SELECT cid FROM cents ORDER BY ${duckL2(qLit, "c")}, cid LIMIT 3
-        |), qb AS (
-        |  SELECT sum(CASE WHEN list_dot_product($qLit, plane) >= 0
-        |                  THEN (1::BIGINT << b) ELSE 0 END)::BIGINT AS qbucket
-        |  FROM planes
-        |), ivf_cand AS (
-        |  SELECT vec_id FROM assigned
-        |  WHERE cluster_id IN (SELECT cid FROM ivf_probes)
-        |), lsh_cand AS (
-        |  SELECT bk.vec_id FROM bk, qb
-        |  WHERE len(list_filter(range(8), i ->
-        |        ((bk.lsh_bucket >> i) & 1) <> ((qb.qbucket >> i) & 1))) <= 2
-        |), est AS (
-        |  SELECT (SELECT count(*) FROM ivf_cand)::BIGINT * 256 AS est_ivf_b,
-        |         (SELECT count(*) FROM lsh_cand)::BIGINT * 256 AS est_lsh_b,
-        |         ${estHnswB}::BIGINT AS est_hnsw_b,
-        |         ((SELECT count(*) FROM embeddings)::BIGINT * 8 + 16 * 256) AS est_pq_b
-        |), choice AS (
-        |  SELECT CASE WHEN est_pq_b < est_ivf_b AND est_pq_b < est_lsh_b
-        |                   AND est_pq_b < est_hnsw_b THEN 'pq'
-        |              WHEN est_hnsw_b < est_ivf_b AND est_hnsw_b < est_lsh_b THEN 'hnsw'
-        |              WHEN est_lsh_b < est_ivf_b THEN 'lsh'
-        |              ELSE 'ivf' END AS chosen
-        |  FROM est
-        |), cand AS (
-        |  SELECT vec_id FROM lsh_cand WHERE (SELECT chosen FROM choice) = 'lsh'
-        |  UNION ALL
-        |  SELECT vec_id FROM ivf_cand WHERE (SELECT chosen FROM choice) = 'ivf'
-        |  UNION ALL
-        |  SELECT unnest($recList) AS vec_id
-        |  WHERE (SELECT chosen FROM choice) IN ('hnsw', 'pq')
-        |), dd AS (
-        |  SELECT c.vec_id, ${duckCosine("e.embedding", qLit)} AS dist
-        |  FROM cand c JOIN embeddings e ON c.vec_id = e.vec_id
-        |), top AS (
-        |  SELECT vec_id, dist FROM dd ORDER BY dist, vec_id LIMIT 10
-        |)
-        |SELECT t.vec_id, (SELECT chosen FROM choice) AS chosen_index,
-        |       e.est_ivf_b, e.est_lsh_b, e.est_hnsw_b, e.est_pq_b,
-        |       round(t.dist, 6) AS distance
-        |FROM top t CROSS JOIN est e ORDER BY distance, vec_id
-        """.stripMargin.trim
+        duckServingOracle(
+          Seq(OracleLeg("q", Seq(0 -> Queries.queryVec64),
+            Map(0 -> CostServing4State.recorded.getOrElse(d, Seq.empty)))),
+          k = 10, lshRadius = 2, HnswRouterStore.bound, Some(PqStore.M -> 16),
+          weights = None, bytesPerRow = 256,
+          "vec_id, chosen_index, est_ivf_b, est_lsh_b, est_hnsw_b, est_pq_b, distance",
+          "distance, vec_id")
       }))
 
   private object CostServingBatchState {
-    val chosen = scala.collection.concurrent.TrieMap
-      .empty[String, Map[String, String]]
     val cands = scala.collection.concurrent.TrieMap
       .empty[String, Map[String, Map[Int, Seq[Long]]]]
     @volatile var lastDir: Option[String] = None
   }
 
-  /** Per-leg oracle CTEs for [[costServingBatch]]: replay the batch
-    * decision (per-query probe counts × 256, the closed-form hnsw
-    * bound × B, the amortized pq scan + B shortlist rescores), then
-    * per-query top-k over the decision's candidate set — probe-set
-    * membership for ivf/lsh, THIS run's recorded ids for hnsw/pq (the
-    * recorded-candidate contract of ann_nsw_routed_batch /
-    * ann_cost_serving4). Assumes the shared cents/assigned/planes/bk
-    * CTEs are already in scope. est/choice (and the shared CTEs) are
-    * MATERIALIZED: DuckDB inlines a CTE at every reference, and the
-    * per-query cand branches each carry a `(SELECT chosen FROM
-    * choice)` scalar — inlined, that re-expands est's per-query probe
-    * counts → assigned/bk into a combinatorial plan that spilled >60 GB
-    * at sf1; materialized, the whole oracle runs in under a second.
+  /** The late oracle of [[graft.streaming.VectorServing.dispatchServingBatch]]
+    * over the gate stores: the four-way byte model per query batch (one
+    * leg per batch, with THIS run's recorded ids), then per-query exact
+    * top-3 over each decision's candidates — shared by
+    * ann_cost_serving_batch and stream_serve_auto, so streamed ≡
+    * priced-batch is structural.
     */
-  private def duckServingBatchLeg(tag: String, qs: Seq[(Int, Array[Float])],
-                                  cands: Map[Int, Seq[Long]],
-                                  k: Int): (String, String) = {
-    val b = qs.length
-    val qbCtes = qs.map { case (qid, v) =>
-      s"""|qb_${tag}_$qid AS (
-          |  SELECT sum(CASE WHEN list_dot_product(${vecLit(v)}, plane) >= 0
-          |                  THEN (1::BIGINT << b) ELSE 0 END)::BIGINT AS qbucket
-          |  FROM planes
-          |)""".stripMargin
-    }
-    val ivfCnt = qs.map { case (_, v) =>
-      s"""(SELECT count(*) FROM assigned WHERE cluster_id IN
-         |      (SELECT cid FROM cents ORDER BY ${duckL2(vecLit(v), "c")}, cid LIMIT 3))"""
-        .stripMargin
-    }.mkString(" + ")
-    val lshCnt = qs.map { case (qid, _) =>
-      s"""(SELECT count(*) FROM bk, qb_${tag}_$qid q
-         |      WHERE len(list_filter(range(8), i ->
-         |        ((bk.lsh_bucket >> i) & 1) <> ((q.qbucket >> i) & 1))) <= 2)"""
-        .stripMargin
-    }.mkString(" + ")
-    val estCte =
-      s"""|est_$tag AS MATERIALIZED (
-          |  SELECT ($ivfCnt)::BIGINT * 256 AS est_ivf_b,
-          |         ($lshCnt)::BIGINT * 256 AS est_lsh_b,
-          |         ${b}::BIGINT * 16384 AS est_hnsw_b,
-          |         ((SELECT count(*) FROM embeddings)::BIGINT * 8
-          |           + ${b}::BIGINT * 16 * 256) AS est_pq_b
-          |), choice_$tag AS MATERIALIZED (
-          |  SELECT CASE WHEN est_pq_b < est_ivf_b AND est_pq_b < est_lsh_b
-          |                   AND est_pq_b < est_hnsw_b THEN 'pq'
-          |              WHEN est_hnsw_b < est_ivf_b AND est_hnsw_b < est_lsh_b THEN 'hnsw'
-          |              WHEN est_lsh_b < est_ivf_b THEN 'lsh'
-          |              ELSE 'ivf' END AS chosen
-          |  FROM est_$tag
-          |)""".stripMargin
-    val candCtes = qs.map { case (qid, v) =>
-      val rec = cands.getOrElse(qid, Seq.empty)
-      val recList = if (rec.isEmpty) "[]::BIGINT[]" else rec.mkString("[", ", ", "]")
-      s"""|cand_${tag}_$qid AS (
-          |  SELECT vec_id FROM assigned
-          |  WHERE (SELECT chosen FROM choice_$tag) = 'ivf'
-          |    AND cluster_id IN (SELECT cid FROM cents ORDER BY ${duckL2(vecLit(v), "c")}, cid LIMIT 3)
-          |  UNION ALL
-          |  SELECT bk.vec_id FROM bk, qb_${tag}_$qid q
-          |  WHERE (SELECT chosen FROM choice_$tag) = 'lsh'
-          |    AND len(list_filter(range(8), i ->
-          |      ((bk.lsh_bucket >> i) & 1) <> ((q.qbucket >> i) & 1))) <= 2
-          |  UNION ALL
-          |  SELECT unnest($recList) AS vec_id
-          |  WHERE (SELECT chosen FROM choice_$tag) IN ('hnsw', 'pq')
-          |), top_${tag}_$qid AS (
-          |  SELECT $qid AS query_id, vec_id, dist,
-          |         row_number() OVER (ORDER BY dist, vec_id) AS knn_rank
-          |  FROM (
-          |    SELECT c.vec_id, ${duckCosine("e.embedding", vecLit(v))} AS dist
-          |    FROM cand_${tag}_$qid c JOIN embeddings e ON c.vec_id = e.vec_id
-          |  ) QUALIFY knn_rank <= $k
-          |)""".stripMargin
-    }
-    val ctes = (qbCtes ++ Seq(estCte) ++ candCtes).mkString(",\n", ",\n", "")
-    val select = qs.map { case (qid, _) =>
-      s"""|SELECT ${b}::BIGINT AS batch_size, t.query_id,
-          |       CAST(t.knn_rank AS BIGINT) AS knn_rank, t.vec_id,
-          |       (SELECT chosen FROM choice_$tag) AS chosen_index,
-          |       e.est_ivf_b, e.est_lsh_b, e.est_hnsw_b, e.est_pq_b,
-          |       round(t.dist, 6) AS distance
-          |FROM top_${tag}_$qid t CROSS JOIN est_$tag e""".stripMargin
-    }.mkString("\nUNION ALL\n")
-    (ctes, select)
-  }
-
-  private[queries] def duckCostServingBatchSql(
+  private[queries] def duckDispatchOracle(
       legs: Seq[(String, Seq[(Int, Array[Float])])],
-      cands: Map[String, Map[Int, Seq[Long]]], k: Int): String = {
-    val shared = s"""
-      |WITH cents AS MATERIALIZED (
-      |  SELECT vec_id AS cid, embedding::DOUBLE[] AS c FROM embeddings WHERE vec_id < 8
-      |), assigned AS MATERIALIZED (
-      |  SELECT vec_id, cid AS cluster_id FROM (
-      |    SELECT e.vec_id, c.cid,
-      |           row_number() OVER (PARTITION BY e.vec_id
-      |                              ORDER BY ${duckL2("e.embedding::DOUBLE[]", "c.c")}, c.cid) AS rn
-      |    FROM embeddings e CROSS JOIN cents c
-      |  ) WHERE rn = 1
-      |), planes AS MATERIALIZED (
-      |  SELECT b, list_transform(range(64), j ->
-      |    CASE WHEN ('0x' || substring(md5('lsh:' || b::VARCHAR || ':' || j::VARCHAR), 1, 12))::BIGINT % 2 = 0
-      |         THEN 1.0 ELSE -1.0 END) AS plane
-      |  FROM (SELECT unnest(range(8)) AS b)
-      |), bk AS MATERIALIZED (
-      |  SELECT e.vec_id,
-      |         sum(CASE WHEN list_dot_product(e.embedding::DOUBLE[], p.plane) >= 0
-      |                  THEN (1::BIGINT << p.b) ELSE 0 END)::BIGINT AS lsh_bucket
-      |  FROM embeddings e CROSS JOIN planes p GROUP BY e.vec_id
-      |)""".stripMargin.trim
-    val built = legs.map { case (tag, qs) =>
-      duckServingBatchLeg(tag, qs, cands.getOrElse(tag, Map.empty), k)
-    }
-    shared + built.map(_._1).mkString +
-      "\n" + built.map(_._2).mkString("\nUNION ALL\n") +
-      "\nORDER BY batch_size, query_id, knn_rank"
-  }
+      cands: Map[String, Map[Int, Seq[Long]]]): String =
+    duckServingOracle(
+      legs.map { case (tag, qs) => OracleLeg(tag, qs, cands.getOrElse(tag, Map.empty)) },
+      k = 3, lshRadius = 2, NswRouterStore.bound, Some(PqStore.M -> 16),
+      weights = None, bytesPerRow = 256,
+      "batch_size, query_id, knn_rank, vec_id, chosen_index, " +
+        "est_ivf_b, est_lsh_b, est_hnsw_b, est_pq_b, distance",
+      "batch_size, query_id, knn_rank")
 
   private val costServingBatch = QueryDef(
     "ann_cost_serving_batch",
     "BATCH-aware serving cost choice (r18 verdict #1) — " +
-      "chooseServing4's four-way byte model priced for a WHOLE query " +
-      "batch, because the economics invert with batch size: PQ's " +
+      "the four-way byte model (IvfProbeRule.priceServing) priced for " +
+      "a WHOLE query batch, because the economics invert with batch " +
+      "size: PQ's " +
       "corpus scan is ONE shared ADC pass however many queries ride " +
       "it (amortized N·m bytes + B shortlist rescores), while the " +
       "probe paths and the routed-graph bound pay per query (B× " +
@@ -1253,35 +1194,26 @@ object VectorQueries {
     (s, dir) => {
       import graft.streaming.VectorServing
       val corpus = Tables.embeddings(s, dir)
-      val cents = Ann.seededCentroids(corpus, "embedding", "vec_id", nlist = 8)
-      val planes = Ann.signPlanes(dim = 64, nBits = 8)
-      val (path, clusterRows, bucketRows) =
-        HybridIndexStore.ensure(s, dir, cents, planes)
-      val idx = VectorServing.AutoServingIndexes(
-        graft.plans.IvfCatalog.IvfIndex(cents, 3, clusterRows),
-        graft.plans.LshCatalog.LshIndex(planes, 2, bucketRows),
+      val (path, ivf, lsh) = servingIndexes(s, dir, lshRadius = 2)
+      val idx = VectorServing.AutoServingIndexes(ivf, lsh,
         Ann.readIndexed(s, path),
         Nsw.readGraph(s, NswStore.ensure(s, dir)), corpus,
         NswRouterStore.ensure(s, dir), NswRouterStore.nprobe,
         NswStore.params,
         Pq.readEncoded(s, PqCodeStore.ensure(s, dir)), PqStore.ensure(s, dir),
-        dim = 64, corpusRows = clusterRows.values.sum,
+        dim = 64, corpusRows = ivf.clusterRows.values.sum,
         pqM = PqStore.M, pqShortlist = 16)
       val legs = Seq("small" -> batchQueryVecs.take(1),
         "large" -> batchQueryVecs)
       val outs = legs.map { case (tag, qs) =>
-        val (res, chosen, (ivfB, lshB, hnswB, pqB), recorded) =
+        val (res, chosen, price, recorded) =
           VectorServing.dispatchServingBatch(qs, idx, "embedding", "vec_id", k = 3)
-        CostServingBatchState.chosen(dir) =
-          CostServingBatchState.chosen.getOrElse(dir, Map.empty) + (tag -> chosen)
         CostServingBatchState.cands(dir) =
           CostServingBatchState.cands.getOrElse(dir, Map.empty) + (tag -> recorded)
-        res.select(lit(qs.length.toLong).as("batch_size"), col("query_id"),
+        res.select(Seq(lit(qs.length.toLong).as("batch_size"), col("query_id"),
           col("knn_rank").cast("long").as("knn_rank"), col("vec_id"),
-          lit(chosen).as("chosen_index"),
-          lit(ivfB).as("est_ivf_b"), lit(lshB).as("est_lsh_b"),
-          lit(hnswB).as("est_hnsw_b"), lit(pqB).as("est_pq_b"),
-          round(col("distance_score"), 6).as("distance"))
+          lit(chosen).as("chosen_index")) ++ VectorServing.byteColumns(price) ++
+          Seq(round(col("distance_score"), 6).as("distance")): _*)
       }
       CostServingBatchState.lastDir = Some(dir)
       outs.reduce(_ unionByName _)
@@ -1290,9 +1222,9 @@ object VectorQueries {
     oracle = None,
     oracleLate = Some(() =>
       CostServingBatchState.lastDir.map { d =>
-        duckCostServingBatchSql(
+        duckDispatchOracle(
           Seq("small" -> batchQueryVecs.take(1), "large" -> batchQueryVecs),
-          CostServingBatchState.cands.getOrElse(d, Map.empty), k = 3)
+          CostServingBatchState.cands.getOrElse(d, Map.empty))
       }))
 
   private object CostServingFilteredState {
@@ -1300,6 +1232,16 @@ object VectorQueries {
       .empty[String, Map[String, Seq[Long]]]
     @volatile var lastDir: Option[String] = None
   }
+
+  /** The selectivity channel of the filtered gates' priced legs: the
+    * decision record columns (n_match, n_total, ef_eff, sl_eff, then
+    * the four byte totals).
+    */
+  private def selectivityColumns(price: graft.plans.IvfProbeRule.ServingPrice,
+                                 nMatch: Long, nTotal: Long) =
+    Seq(lit(nMatch).as("n_match"), lit(nTotal).as("n_total"),
+      lit(price.efEff).as("ef_eff"), lit(price.slEff).as("sl_eff")) ++
+      graft.streaming.VectorServing.byteColumns(price)
 
   private val costServingFiltered = QueryDef(
     "ann_cost_serving_filtered",
@@ -1327,70 +1269,23 @@ object VectorQueries {
       "pins the synthetic flips and the ceiling arithmetic.",
     (s, dir) => {
       val q = Queries.queryVec64
-      val corpus = Tables.embeddings(s, dir)
-      val cents = Ann.seededCentroids(corpus, "embedding", "vec_id", nlist = 8)
-      val planes = Ann.signPlanes(dim = 64, nBits = 8)
-      val (path, clusterRows, bucketRows) =
-        HybridIndexStore.ensure(s, dir, cents, planes)
-      val nTotal = clusterRows.values.sum
-      val nMatch = corpus.filter(col("label") === 3).count()
-      val p = NswStore.params
-      val graph = Nsw.readGraph(s, NswStore.ensure(s, dir))
-      val routerCents = NswRouterStore.ensure(s, dir)
-      val cb = PqStore.ensure(s, dir)
-      val codes = Pq.readEncoded(s, PqCodeStore.ensure(s, dir))
-      val legs = Seq(("all", nTotal, None: Option[org.apache.spark.sql.Column]),
-        ("sel", nMatch, Some(col("label") === 3)))
+      val (path, ivf, lsh) = servingIndexes(s, dir, lshRadius = 2)
+      val nTotal = ivf.clusterRows.values.sum
+      val nMatch = Tables.embeddings(s, dir).filter(col("label") === 3).count()
+      // the unfiltered leg's predicate is TRUE, as in the oracle: every
+      // leg is priced and ranked as a predicate + KNN query
+      val legs = Seq(("all", nTotal, lit(true)), ("sel", nMatch, col("label") === 3))
       val outs = legs.map { case (tag, m, pred) =>
-        val (chosen, ivfB, lshB, hnswB, pqB, efEff, slEff) =
-          graft.plans.IvfProbeRule.chooseServingFiltered(q,
-            graft.plans.IvfCatalog.IvfIndex(cents, 3, clusterRows),
-            graft.plans.LshCatalog.LshIndex(planes, 2, bucketRows),
-            p.nShards, NswRouterStore.nprobe, p.efSearch, dim = 64,
-            nTotal, pqM = PqStore.M, pqShortlist = 16,
-            matchRows = m, totalRows = nTotal)
-        def withPred(df: org.apache.spark.sql.DataFrame) =
-          pred.map(df.filter).getOrElse(df)
-        val ranked = chosen match {
-          case "pq" =>
-            val sl = Pq.search(codes, "vec_id", q, cb, k = slEff.toInt)
-              .select("vec_id").collect().map(_.getLong(0)).toSeq.sorted
-            CostServingFilteredState.cands(dir) =
-              CostServingFilteredState.cands.getOrElse(dir, Map.empty) + (tag -> sl)
-            Knn.search(withPred(corpus.filter(col("vec_id").isin(sl: _*))),
-              "embedding", "vec_id", q, k = 5)
-          case "hnsw" =>
-            val (_, cands, _) = Nsw.routedBatchSearch(
-              Nsw.openGraph(graph, p.nShards), "vec_id", Seq(0 -> q), k = 5,
-              routerCents, NswRouterStore.nprobe, p.copy(efSearch = efEff.toInt))
-            val ids = cands.getOrElse(0, Seq.empty)
-            CostServingFilteredState.cands(dir) =
-              CostServingFilteredState.cands.getOrElse(dir, Map.empty) + (tag -> ids)
-            Knn.search(withPred(corpus.filter(col("vec_id").isin(ids: _*))),
-              "embedding", "vec_id", q, k = 5)
-          case "lsh" =>
-            CostServingFilteredState.cands(dir) =
-              CostServingFilteredState.cands.getOrElse(dir, Map.empty) + (tag -> Seq.empty)
-            val probes = Ann.probeBuckets(
-              Ann.queryBucket(q, planes), planes.length, radius = 2)
-            Knn.search(withPred(Ann.readIndexed(s, path)
-                .filter(col("lsh_bucket").isin(probes: _*))),
-              "embedding", "vec_id", q, k = 5)
-          case _ =>
-            CostServingFilteredState.cands(dir) =
-              CostServingFilteredState.cands.getOrElse(dir, Map.empty) + (tag -> Seq.empty)
-            val probes = Ann.probeIds(q, cents, nprobe = 3)
-            Knn.search(withPred(Ann.readIndexed(s, path)
-                .filter(col("cluster_id").isin(probes: _*))),
-              "embedding", "vec_id", q, k = 5)
-        }
-        ranked.select(lit(tag).as("leg"), col("vec_id"), col("label"),
-          lit(chosen).as("chosen_index"),
-          lit(m).as("n_match"), lit(nTotal).as("n_total"),
-          lit(efEff).as("ef_eff"), lit(slEff).as("sl_eff"),
-          lit(ivfB).as("est_ivf_b"), lit(lshB).as("est_lsh_b"),
-          lit(hnswB).as("est_hnsw_b"), lit(pqB).as("est_pq_b"),
-          round(col("distance_score"), 6).as("distance"))
+        val price = graft.plans.IvfProbeRule.priceServing(Seq(q), ivf, lsh,
+          NswRouterStore.bound, gatePq(ivf), selectivity = Some(m -> nTotal))
+        val (ranked, recorded) = serveOne(s, dir, price.chosen, q, k = 5, path,
+          ivf, lsh, NswRouterStore, price.efEff, price.slEff, Some(pred))
+        CostServingFilteredState.cands(dir) =
+          CostServingFilteredState.cands.getOrElse(dir, Map.empty) + (tag -> recorded)
+        ranked.select(Seq(lit(tag).as("leg"), col("vec_id"), col("label"),
+            lit(price.chosen).as("chosen_index")) ++
+            selectivityColumns(price, m, nTotal) ++
+            Seq(round(col("distance_score"), 6).as("distance")): _*)
       }
       CostServingFilteredState.lastDir = Some(dir)
       outs.reduce(_ unionByName _)
@@ -1400,98 +1295,21 @@ object VectorQueries {
     oracleLate = Some(() =>
       CostServingFilteredState.lastDir.map { d =>
         val rec = CostServingFilteredState.cands.getOrElse(d, Map.empty)
-        val qLit = vecLit(Queries.queryVec64)
-        def legSql(tag: String, predSql: String, matchSql: String) = {
-          val recIds = rec.getOrElse(tag, Seq.empty)
-          val recList =
-            if (recIds.isEmpty) "[]::BIGINT[]" else recIds.mkString("[", ", ", "]")
-          s"""|, m_$tag AS MATERIALIZED (
-              |  SELECT ($matchSql)::BIGINT AS n_match,
-              |         (SELECT count(*) FROM embeddings)::BIGINT AS n_total
-              |), est_$tag AS MATERIALIZED (
-              |  SELECT n_match, n_total,
-              |         least(n_total, (32 * n_total + n_match - 1) // n_match) AS ef_eff,
-              |         least(n_total, (16 * n_total + n_match - 1) // n_match) AS sl_eff,
-              |         (SELECT count(*) FROM assigned WHERE cluster_id IN
-              |            (SELECT cid FROM cents ORDER BY ${duckL2(qLit, "c")}, cid LIMIT 3))::BIGINT
-              |           * 256 AS est_ivf_b,
-              |         (SELECT count(*) FROM bk, qb
-              |          WHERE len(list_filter(range(8), i ->
-              |            ((bk.lsh_bucket >> i) & 1) <> ((qb.qbucket >> i) & 1))) <= 2)::BIGINT
-              |           * 256 AS est_lsh_b,
-              |         2 * least(n_total, (32 * n_total + n_match - 1) // n_match) * 256 AS est_hnsw_b,
-              |         n_total * 8 + least(n_total, (16 * n_total + n_match - 1) // n_match) * 256 AS est_pq_b
-              |  FROM m_$tag
-              |), choice_$tag AS MATERIALIZED (
-              |  SELECT CASE WHEN est_pq_b < est_ivf_b AND est_pq_b < est_lsh_b
-              |                   AND est_pq_b < est_hnsw_b THEN 'pq'
-              |              WHEN est_hnsw_b < est_ivf_b AND est_hnsw_b < est_lsh_b THEN 'hnsw'
-              |              WHEN est_lsh_b < est_ivf_b THEN 'lsh'
-              |              ELSE 'ivf' END AS chosen
-              |  FROM est_$tag
-              |), cand_$tag AS (
-              |  SELECT vec_id FROM assigned
-              |  WHERE (SELECT chosen FROM choice_$tag) = 'ivf'
-              |    AND cluster_id IN (SELECT cid FROM cents ORDER BY ${duckL2(qLit, "c")}, cid LIMIT 3)
-              |  UNION ALL
-              |  SELECT bk.vec_id FROM bk, qb
-              |  WHERE (SELECT chosen FROM choice_$tag) = 'lsh'
-              |    AND len(list_filter(range(8), i ->
-              |      ((bk.lsh_bucket >> i) & 1) <> ((qb.qbucket >> i) & 1))) <= 2
-              |  UNION ALL
-              |  SELECT unnest($recList) AS vec_id
-              |  WHERE (SELECT chosen FROM choice_$tag) IN ('hnsw', 'pq')
-              |), top_$tag AS (
-              |  SELECT vec_id, label, dist,
-              |         row_number() OVER (ORDER BY dist, vec_id) AS rn
-              |  FROM (
-              |    SELECT e.vec_id, e.label, ${duckCosine("e.embedding", qLit)} AS dist
-              |    FROM cand_$tag c JOIN embeddings e ON c.vec_id = e.vec_id
-              |    WHERE $predSql
-              |  ) QUALIFY rn <= 5
-              |)""".stripMargin
-        }
-        val selects = Seq("all", "sel").map { tag =>
-          s"""|SELECT '$tag' AS leg, t.vec_id, t.label,
-              |       (SELECT chosen FROM choice_$tag) AS chosen_index,
-              |       e.n_match, e.n_total, e.ef_eff, e.sl_eff,
-              |       e.est_ivf_b, e.est_lsh_b, e.est_hnsw_b, e.est_pq_b,
-              |       round(t.dist, 6) AS distance
-              |FROM top_$tag t CROSS JOIN est_$tag e""".stripMargin
-        }
-        s"""
-        |WITH cents AS MATERIALIZED (
-        |  SELECT vec_id AS cid, embedding::DOUBLE[] AS c FROM embeddings WHERE vec_id < 8
-        |), assigned AS MATERIALIZED (
-        |  SELECT vec_id, cid AS cluster_id FROM (
-        |    SELECT e.vec_id, c.cid,
-        |           row_number() OVER (PARTITION BY e.vec_id
-        |                              ORDER BY ${duckL2("e.embedding::DOUBLE[]", "c.c")}, c.cid) AS rn
-        |    FROM embeddings e CROSS JOIN cents c
-        |  ) WHERE rn = 1
-        |), planes AS MATERIALIZED (
-        |  SELECT b, list_transform(range(64), j ->
-        |    CASE WHEN ('0x' || substring(md5('lsh:' || b::VARCHAR || ':' || j::VARCHAR), 1, 12))::BIGINT % 2 = 0
-        |         THEN 1.0 ELSE -1.0 END) AS plane
-        |  FROM (SELECT unnest(range(8)) AS b)
-        |), bk AS MATERIALIZED (
-        |  SELECT e.vec_id,
-        |         sum(CASE WHEN list_dot_product(e.embedding::DOUBLE[], p.plane) >= 0
-        |                  THEN (1::BIGINT << p.b) ELSE 0 END)::BIGINT AS lsh_bucket
-        |  FROM embeddings e CROSS JOIN planes p GROUP BY e.vec_id
-        |), qb AS MATERIALIZED (
-        |  SELECT sum(CASE WHEN list_dot_product($qLit, plane) >= 0
-        |                  THEN (1::BIGINT << b) ELSE 0 END)::BIGINT AS qbucket
-        |  FROM planes
-        |)""".stripMargin.trim +
-          legSql("all", "TRUE", "SELECT count(*) FROM embeddings") +
-          legSql("sel", "e.label = 3", "SELECT count(*) FROM embeddings WHERE label = 3") +
-          "\n" + selects.mkString("\nUNION ALL\n") +
-          "\nORDER BY leg, distance, vec_id"
+        duckServingOracle(
+          Seq(("all", "SELECT count(*) FROM embeddings", "TRUE"),
+            ("sel", "SELECT count(*) FROM embeddings WHERE label = 3", "e.label = 3"))
+            .map { case (tag, matchSql, predSql) =>
+              OracleLeg(tag, Seq(0 -> Queries.queryVec64),
+                Map(0 -> rec.getOrElse(tag, Seq.empty)), Some(matchSql -> predSql))
+            },
+          k = 5, lshRadius = 2, NswRouterStore.bound, Some(PqStore.M -> 16),
+          weights = None, bytesPerRow = 256,
+          "leg, vec_id, label, chosen_index, n_match, n_total, ef_eff, sl_eff, " +
+            "est_ivf_b, est_lsh_b, est_hnsw_b, est_pq_b, distance",
+          "leg, distance, vec_id")
       }))
 
   private object CostServingCalState {
-    val chosen = scala.collection.concurrent.TrieMap.empty[String, (String, String)]
     val recorded = scala.collection.concurrent.TrieMap.empty[String, Seq[Long]]
     @volatile var lastDir: Option[String] = None
   }
@@ -1532,149 +1350,34 @@ object VectorQueries {
       "run's recorded ids for hnsw/pq).",
     (s, dir) => {
       val q = Queries.queryVec64
-      val corpus = Tables.embeddings(s, dir)
-      val cents = Ann.seededCentroids(corpus, "embedding", "vec_id", nlist = 8)
-      val planes = Ann.signPlanes(dim = 64, nBits = 8)
-      val (path, clusterRows, bucketRows) =
-        HybridIndexStore.ensure(s, dir, cents, planes)
-      val p = NswStore.params
-      val (byteChosen, calChosen, ivfB, lshB, hnswB, pqB,
-           ivfNs, lshNs, hnswNs, pqNs) =
-        graft.plans.IvfProbeRule.chooseServingCalibrated(q,
-          graft.plans.IvfCatalog.IvfIndex(cents, 3, clusterRows),
-          graft.plans.LshCatalog.LshIndex(planes, 2, bucketRows),
-          p.nShards, NswRouterStore.nprobe, p.efSearch, dim = 64,
-          clusterRows.values.sum, pqM = PqStore.M, pqShortlist = 16,
-          servingWeights)
-      CostServingCalState.chosen(dir) = (byteChosen, calChosen)
+      val (path, ivf, lsh) = servingIndexes(s, dir, lshRadius = 2)
+      val price = graft.plans.IvfProbeRule.priceServing(Seq(q), ivf, lsh,
+        NswRouterStore.bound, gatePq(ivf))
+      val ns = price.weighted(servingWeights)
       CostServingCalState.lastDir = Some(dir)
-      val ranked = calChosen match {
-        case "pq" =>
-          val cb = PqStore.ensure(s, dir)
-          val codes = Pq.readEncoded(s, PqCodeStore.ensure(s, dir))
-          val sl = Pq.search(codes, "vec_id", q, cb, k = 16)
-            .select("vec_id").collect().map(_.getLong(0)).toSeq.sorted
-          CostServingCalState.recorded(dir) = sl
-          Knn.search(corpus.filter(col("vec_id").isin(sl: _*)),
-            "embedding", "vec_id", q, k = 10)
-        case "hnsw" =>
-          val graph = Nsw.readGraph(s, NswStore.ensure(s, dir))
-          val (res, cands, _) = Nsw.routedBatchSearch(
-            Nsw.openGraph(graph, p.nShards), "vec_id", Seq(0 -> q), k = 10,
-            NswRouterStore.ensure(s, dir), NswRouterStore.nprobe, p)
-          CostServingCalState.recorded(dir) =
-            cands.getOrElse(0, Seq.empty).sorted
-          res
-        case "lsh" =>
-          CostServingCalState.recorded(dir) = Seq.empty
-          val probes = Ann.probeBuckets(
-            Ann.queryBucket(q, planes), planes.length, radius = 2)
-          Knn.search(Ann.readIndexed(s, path)
-              .filter(col("lsh_bucket").isin(probes: _*)),
-            "embedding", "vec_id", q, k = 10)
-        case _ =>
-          CostServingCalState.recorded(dir) = Seq.empty
-          val probes = Ann.probeIds(q, cents, nprobe = 3)
-          Knn.search(Ann.readIndexed(s, path)
-              .filter(col("cluster_id").isin(probes: _*)),
-            "embedding", "vec_id", q, k = 10)
-      }
-      ranked.select(col("vec_id"), lit(byteChosen).as("byte_chosen"),
-          lit(calChosen).as("cal_chosen"),
-          lit(ivfB).as("est_ivf_b"), lit(lshB).as("est_lsh_b"),
-          lit(hnswB).as("est_hnsw_b"), lit(pqB).as("est_pq_b"),
-          lit(ivfNs).as("cost_ivf_ns"), lit(lshNs).as("cost_lsh_ns"),
-          lit(hnswNs).as("cost_hnsw_ns"), lit(pqNs).as("cost_pq_ns"),
-          round(col("distance_score"), 6).as("distance"))
+      val (ranked, recorded) = serveOne(s, dir, ns.chosen, q, k = 10, path,
+        ivf, lsh, NswRouterStore, price.efEff, price.slEff)
+      CostServingCalState.recorded(dir) = recorded
+      ranked.select(Seq(col("vec_id"), lit(price.chosen).as("byte_chosen"),
+          lit(ns.chosen).as("cal_chosen")) ++
+          graft.streaming.VectorServing.byteColumns(price) ++
+          Seq(lit(ns.ivf).as("cost_ivf_ns"), lit(ns.lsh).as("cost_lsh_ns"),
+            lit(ns.hnsw).as("cost_hnsw_ns"), lit(ns.pq.get).as("cost_pq_ns"),
+            round(col("distance_score"), 6).as("distance")): _*)
         .orderBy(col("distance"), col("vec_id"))
     },
     oracle = None,
     oracleLate = Some(() =>
       CostServingCalState.lastDir.map { d =>
-        val recIds = CostServingCalState.recorded.getOrElse(d, Seq.empty)
-        val recList =
-          if (recIds.isEmpty) "[]::BIGINT[]" else recIds.mkString("[", ", ", "]")
-        val w = servingWeights
-        val qLit = vecLit(Queries.queryVec64)
-        s"""
-        |WITH cents AS MATERIALIZED (
-        |  SELECT vec_id AS cid, embedding::DOUBLE[] AS c FROM embeddings WHERE vec_id < 8
-        |), assigned AS MATERIALIZED (
-        |  SELECT vec_id, cid AS cluster_id FROM (
-        |    SELECT e.vec_id, c.cid,
-        |           row_number() OVER (PARTITION BY e.vec_id
-        |                              ORDER BY ${duckL2("e.embedding::DOUBLE[]", "c.c")}, c.cid) AS rn
-        |    FROM embeddings e CROSS JOIN cents c
-        |  ) WHERE rn = 1
-        |), planes AS MATERIALIZED (
-        |  SELECT b, list_transform(range(64), j ->
-        |    CASE WHEN ('0x' || substring(md5('lsh:' || b::VARCHAR || ':' || j::VARCHAR), 1, 12))::BIGINT % 2 = 0
-        |         THEN 1.0 ELSE -1.0 END) AS plane
-        |  FROM (SELECT unnest(range(8)) AS b)
-        |), bk AS MATERIALIZED (
-        |  SELECT e.vec_id,
-        |         sum(CASE WHEN list_dot_product(e.embedding::DOUBLE[], p.plane) >= 0
-        |                  THEN (1::BIGINT << p.b) ELSE 0 END)::BIGINT AS lsh_bucket
-        |  FROM embeddings e CROSS JOIN planes p GROUP BY e.vec_id
-        |), qb AS MATERIALIZED (
-        |  SELECT sum(CASE WHEN list_dot_product($qLit, plane) >= 0
-        |                  THEN (1::BIGINT << b) ELSE 0 END)::BIGINT AS qbucket
-        |  FROM planes
-        |), est AS MATERIALIZED (
-        |  SELECT (SELECT count(*) FROM assigned WHERE cluster_id IN
-        |            (SELECT cid FROM cents ORDER BY ${duckL2(qLit, "c")}, cid LIMIT 3))::BIGINT
-        |           * 256 AS est_ivf_b,
-        |         (SELECT count(*) FROM bk, qb
-        |          WHERE len(list_filter(range(8), i ->
-        |            ((bk.lsh_bucket >> i) & 1) <> ((qb.qbucket >> i) & 1))) <= 2)::BIGINT
-        |           * 256 AS est_lsh_b,
-        |         16384::BIGINT AS est_hnsw_b,
-        |         ((SELECT count(*) FROM embeddings)::BIGINT * 8 + 16 * 256) AS est_pq_b
-        |), cost AS MATERIALIZED (
-        |  SELECT est_ivf_b, est_lsh_b, est_hnsw_b, est_pq_b,
-        |         ((est_ivf_b + 1023) // 1024) * ${w.ivfNsPerKib} AS cost_ivf_ns,
-        |         ((est_lsh_b + 1023) // 1024) * ${w.lshNsPerKib} AS cost_lsh_ns,
-        |         ((est_hnsw_b + 1023) // 1024) * ${w.hnswNsPerKib} AS cost_hnsw_ns,
-        |         ((est_pq_b + 1023) // 1024) * ${w.pqNsPerKib} AS cost_pq_ns
-        |  FROM est
-        |), bchoice AS MATERIALIZED (
-        |  SELECT CASE WHEN est_pq_b < est_ivf_b AND est_pq_b < est_lsh_b
-        |                   AND est_pq_b < est_hnsw_b THEN 'pq'
-        |              WHEN est_hnsw_b < est_ivf_b AND est_hnsw_b < est_lsh_b THEN 'hnsw'
-        |              WHEN est_lsh_b < est_ivf_b THEN 'lsh'
-        |              ELSE 'ivf' END AS byte_chosen
-        |  FROM est
-        |), cchoice AS MATERIALIZED (
-        |  SELECT CASE WHEN cost_pq_ns < cost_ivf_ns AND cost_pq_ns < cost_lsh_ns
-        |                   AND cost_pq_ns < cost_hnsw_ns THEN 'pq'
-        |              WHEN cost_hnsw_ns < cost_ivf_ns AND cost_hnsw_ns < cost_lsh_ns THEN 'hnsw'
-        |              WHEN cost_lsh_ns < cost_ivf_ns THEN 'lsh'
-        |              ELSE 'ivf' END AS cal_chosen
-        |  FROM cost
-        |), cand AS (
-        |  SELECT vec_id FROM assigned
-        |  WHERE (SELECT cal_chosen FROM cchoice) = 'ivf'
-        |    AND cluster_id IN (SELECT cid FROM cents ORDER BY ${duckL2(qLit, "c")}, cid LIMIT 3)
-        |  UNION ALL
-        |  SELECT bk.vec_id FROM bk, qb
-        |  WHERE (SELECT cal_chosen FROM cchoice) = 'lsh'
-        |    AND len(list_filter(range(8), i ->
-        |      ((bk.lsh_bucket >> i) & 1) <> ((qb.qbucket >> i) & 1))) <= 2
-        |  UNION ALL
-        |  SELECT unnest($recList) AS vec_id
-        |  WHERE (SELECT cal_chosen FROM cchoice) IN ('hnsw', 'pq')
-        |), top AS (
-        |  SELECT c.vec_id, ${duckCosine("e.embedding", qLit)} AS dist
-        |  FROM cand c JOIN embeddings e ON c.vec_id = e.vec_id
-        |  ORDER BY dist, c.vec_id LIMIT 10
-        |)
-        |SELECT t.vec_id, (SELECT byte_chosen FROM bchoice) AS byte_chosen,
-        |       (SELECT cal_chosen FROM cchoice) AS cal_chosen,
-        |       c.est_ivf_b, c.est_lsh_b, c.est_hnsw_b, c.est_pq_b,
-        |       c.cost_ivf_ns, c.cost_lsh_ns, c.cost_hnsw_ns, c.cost_pq_ns,
-        |       round(t.dist, 6) AS distance
-        |FROM top t CROSS JOIN cost c ORDER BY distance, vec_id
-        """.stripMargin.trim
+        duckServingOracle(
+          Seq(OracleLeg("q", Seq(0 -> Queries.queryVec64),
+            Map(0 -> CostServingCalState.recorded.getOrElse(d, Seq.empty)))),
+          k = 10, lshRadius = 2, NswRouterStore.bound, Some(PqStore.M -> 16),
+          Some(servingWeights), bytesPerRow = 256,
+          "vec_id, chosen_index AS byte_chosen, cal_chosen, " +
+            "est_ivf_b, est_lsh_b, est_hnsw_b, est_pq_b, " +
+            "cost_ivf_ns, cost_lsh_ns, cost_hnsw_ns, cost_pq_ns, distance",
+          "distance, vec_id")
       }))
 
   private object CostServingBatchFilteredState {
@@ -1683,112 +1386,19 @@ object VectorQueries {
     @volatile var lastDir: Option[String] = None
   }
 
-  /** Per-leg oracle CTEs for [[costServingBatchFiltered]] — the
-    * [[duckServingBatchLeg]] algebra with the selectivity widening
-    * composed in: the exact (n_match, n_total) pair, the
-    * least(n_total, ⌈·⌉)-saturated ef_eff/sl_eff knobs, per-query probe
-    * sums × 256 (selectivity-invariant), B·2·ef_eff·256 for the routed
-    * beam, n_total·8 + B·sl_eff·256 for the amortized scan, then
-    * per-query top-k UNDER THE PREDICATE over the decision's candidate
-    * set (probe membership in SQL; recorded ids for hnsw/pq). Same
-    * MATERIALIZED discipline — every multi-referenced CTE is pinned.
-    */
-  private def duckServingBatchFilteredLeg(tag: String,
-                                          qs: Seq[(Int, Array[Float])],
-                                          cands: Map[Int, Seq[Long]], k: Int,
-                                          predSql: String, matchSql: String)
-      : (String, String) = {
-    val b = qs.length
-    val qbCtes = qs.map { case (qid, v) =>
-      s"""|qb_${tag}_$qid AS (
-          |  SELECT sum(CASE WHEN list_dot_product(${vecLit(v)}, plane) >= 0
-          |                  THEN (1::BIGINT << b) ELSE 0 END)::BIGINT AS qbucket
-          |  FROM planes
-          |)""".stripMargin
-    }
-    val ivfCnt = qs.map { case (_, v) =>
-      s"""(SELECT count(*) FROM assigned WHERE cluster_id IN
-         |      (SELECT cid FROM cents ORDER BY ${duckL2(vecLit(v), "c")}, cid LIMIT 3))"""
-        .stripMargin
-    }.mkString(" + ")
-    val lshCnt = qs.map { case (qid, _) =>
-      s"""(SELECT count(*) FROM bk, qb_${tag}_$qid q
-         |      WHERE len(list_filter(range(8), i ->
-         |        ((bk.lsh_bucket >> i) & 1) <> ((q.qbucket >> i) & 1))) <= 2)"""
-        .stripMargin
-    }.mkString(" + ")
-    val efSql = "least(n_total, (32 * n_total + n_match - 1) // n_match)"
-    val slSql = "least(n_total, (16 * n_total + n_match - 1) // n_match)"
-    val estCte =
-      s"""|m_$tag AS MATERIALIZED (
-          |  SELECT ($matchSql)::BIGINT AS n_match,
-          |         (SELECT count(*) FROM embeddings)::BIGINT AS n_total
-          |), est_$tag AS MATERIALIZED (
-          |  SELECT n_match, n_total, $efSql AS ef_eff, $slSql AS sl_eff,
-          |         ($ivfCnt)::BIGINT * 256 AS est_ivf_b,
-          |         ($lshCnt)::BIGINT * 256 AS est_lsh_b,
-          |         ${b}::BIGINT * 2 * $efSql * 256 AS est_hnsw_b,
-          |         n_total * 8 + ${b}::BIGINT * $slSql * 256 AS est_pq_b
-          |  FROM m_$tag
-          |), choice_$tag AS MATERIALIZED (
-          |  SELECT CASE WHEN est_pq_b < est_ivf_b AND est_pq_b < est_lsh_b
-          |                   AND est_pq_b < est_hnsw_b THEN 'pq'
-          |              WHEN est_hnsw_b < est_ivf_b AND est_hnsw_b < est_lsh_b THEN 'hnsw'
-          |              WHEN est_lsh_b < est_ivf_b THEN 'lsh'
-          |              ELSE 'ivf' END AS chosen
-          |  FROM est_$tag
-          |)""".stripMargin
-    val candCtes = qs.map { case (qid, v) =>
-      val rec = cands.getOrElse(qid, Seq.empty)
-      val recList = if (rec.isEmpty) "[]::BIGINT[]" else rec.mkString("[", ", ", "]")
-      s"""|cand_${tag}_$qid AS (
-          |  SELECT vec_id FROM assigned
-          |  WHERE (SELECT chosen FROM choice_$tag) = 'ivf'
-          |    AND cluster_id IN (SELECT cid FROM cents ORDER BY ${duckL2(vecLit(v), "c")}, cid LIMIT 3)
-          |  UNION ALL
-          |  SELECT bk.vec_id FROM bk, qb_${tag}_$qid q
-          |  WHERE (SELECT chosen FROM choice_$tag) = 'lsh'
-          |    AND len(list_filter(range(8), i ->
-          |      ((bk.lsh_bucket >> i) & 1) <> ((q.qbucket >> i) & 1))) <= 2
-          |  UNION ALL
-          |  SELECT unnest($recList) AS vec_id
-          |  WHERE (SELECT chosen FROM choice_$tag) IN ('hnsw', 'pq')
-          |), top_${tag}_$qid AS (
-          |  SELECT $qid AS query_id, vec_id, dist,
-          |         row_number() OVER (ORDER BY dist, vec_id) AS knn_rank
-          |  FROM (
-          |    SELECT c.vec_id, ${duckCosine("e.embedding", vecLit(v))} AS dist
-          |    FROM cand_${tag}_$qid c JOIN embeddings e ON c.vec_id = e.vec_id
-          |    WHERE $predSql
-          |  ) QUALIFY knn_rank <= $k
-          |)""".stripMargin
-    }
-    val ctes = (qbCtes ++ Seq(estCte) ++ candCtes).mkString(",\n", ",\n", "")
-    val select = qs.map { case (qid, _) =>
-      s"""|SELECT '$tag' AS leg, ${b}::BIGINT AS batch_size, t.query_id,
-          |       CAST(t.knn_rank AS BIGINT) AS knn_rank, t.vec_id,
-          |       (SELECT chosen FROM choice_$tag) AS chosen_index,
-          |       e.n_match, e.n_total, e.ef_eff, e.sl_eff,
-          |       e.est_ivf_b, e.est_lsh_b, e.est_hnsw_b, e.est_pq_b,
-          |       round(t.dist, 6) AS distance
-          |FROM top_${tag}_$qid t CROSS JOIN est_$tag e""".stripMargin
-    }.mkString("\nUNION ALL\n")
-    (ctes, select)
-  }
-
   private val costServingBatchFiltered = QueryDef(
     "ann_cost_serving_batch_filtered",
     "COMBINED batch × selectivity serving cost choice (r19 verdict #5) " +
       "— a production serving tier faces both at once: a BATCH of " +
-      "hybrid predicate+KNN queries. chooseServingBatchFiltered " +
-      "composes the two r19 models orthogonally: probe paths sum " +
+      "hybrid predicate+KNN queries. IvfProbeRule.priceServing, given " +
+      "both B and the selectivity pair, composes the two r19 models " +
+      "orthogonally: probe paths sum " +
       "per-query probe bytes (selectivity-invariant, batch-linear), " +
       "the predicate-blind beam pays B × its 1/s-widened bound, and " +
       "PQ amortizes ONE shared code scan against B selectivity-widened " +
       "shortlist rescores — so the decision flips on (B, s) JOINTLY " +
       "(IvfProbeRuleSpec pins hnsw→ivf on selectivity alone at B=1 " +
-      "and ivf→pq on batch size alone at fixed s, plus exact equality " +
-      "with both parent models on the degenerate corners). Measured: " +
+      "and ivf→pq on batch size alone at fixed s). Measured: " +
       "at the 500-row fixtures selectivity alone flips pq→lsh at " +
       "either batch size; at sf1 (20k vectors) the flip is STRICTLY " +
       "JOINT — hnsw on three legs, pq only where the 5-query batch " +
@@ -1804,11 +1414,8 @@ object VectorQueries {
       "recorded beam/shortlist ids for hnsw/pq) under the predicate.",
     (s, dir) => {
       val corpus = Tables.embeddings(s, dir)
-      val cents = Ann.seededCentroids(corpus, "embedding", "vec_id", nlist = 8)
-      val planes = Ann.signPlanes(dim = 64, nBits = 8)
-      val (path, clusterRows, bucketRows) =
-        HybridIndexStore.ensure(s, dir, cents, planes)
-      val nTotal = clusterRows.values.sum
+      val (path, ivf, lsh) = servingIndexes(s, dir, lshRadius = 2)
+      val nTotal = ivf.clusterRows.values.sum
       val nMatch = corpus.filter(col("label") === 3).count()
       val p = NswStore.params
       val graph = Nsw.readGraph(s, NswStore.ensure(s, dir))
@@ -1822,13 +1429,8 @@ object VectorQueries {
         ("b1_sel", batchQueryVecs.take(1), nMatch, Some(col("label") === 3)),
         ("b5_sel", batchQueryVecs, nMatch, Some(col("label") === 3)))
       val outs = legs.map { case (tag, qs, m, pred) =>
-        val (chosen, ivfB, lshB, hnswB, pqB, efEff, slEff) =
-          graft.plans.IvfProbeRule.chooseServingBatchFiltered(qs.map(_._2),
-            graft.plans.IvfCatalog.IvfIndex(cents, 3, clusterRows),
-            graft.plans.LshCatalog.LshIndex(planes, 2, bucketRows),
-            p.nShards, NswRouterStore.nprobe, p.efSearch, dim = 64,
-            nTotal, pqM = PqStore.M, pqShortlist = 16,
-            matchRows = m, totalRows = nTotal)
+        val price = graft.plans.IvfProbeRule.priceServing(qs.map(_._2), ivf, lsh,
+          NswRouterStore.bound, gatePq(ivf), selectivity = Some(m -> nTotal))
         def withPred(df: org.apache.spark.sql.DataFrame) =
           pred.map(df.filter).getOrElse(df)
         def rank(legsDf: Seq[org.apache.spark.sql.DataFrame]) = {
@@ -1839,18 +1441,18 @@ object VectorQueries {
             .withColumn("knn_rank", row_number().over(w))
             .filter(col("knn_rank") <= 3)
         }
-        val (ranked, rec) = chosen match {
+        val (ranked, rec) = price.chosen match {
           case "pq" =>
             // one shared ADC pass (the amortized term the model
             // priced), then the predicate-filtered rescore of each
             // query's sl_eff shortlist
             val (res, sl) = Pq.batchSearch(codes, withPred(corpus),
-              "embedding", "vec_id", qs, cb, k = 3, slEff.toInt)
+              "embedding", "vec_id", qs, cb, k = 3, price.slEff.toInt)
             (res, sl.map { case (q, ids) => q -> ids.map(_.asInstanceOf[Long]).sorted })
           case "hnsw" =>
             val (_, cands, _) = Nsw.routedBatchSearch(
               Nsw.openGraph(graph, p.nShards), "vec_id", qs, k = 3,
-              routerCents, NswRouterStore.nprobe, p.copy(efSearch = efEff.toInt))
+              routerCents, NswRouterStore.nprobe, p.copy(efSearch = price.efEff.toInt))
             val rec0 = qs.map { case (qid, _) =>
               qid -> cands.getOrElse(qid, Seq.empty).sorted
             }.toMap
@@ -1861,21 +1463,10 @@ object VectorQueries {
                 .withColumn("query_id", lit(qid))
             }
             (rank(legsDf), rec0)
-          case "lsh" =>
+          case probe =>
             val legsDf = qs.map { case (qid, qv) =>
-              val probes = Ann.probeBuckets(Ann.queryBucket(qv, planes),
-                planes.length, radius = 2)
-              Knn.search(withPred(indexed.filter(
-                  col("lsh_bucket").isin(probes: _*))),
-                "embedding", "vec_id", qv, k = 3)
-                .withColumn("query_id", lit(qid))
-            }
-            (rank(legsDf), Map.empty[Int, Seq[Long]])
-          case _ =>
-            val legsDf = qs.map { case (qid, qv) =>
-              val probes = Ann.probeIds(qv, cents, nprobe = 3)
-              Knn.search(withPred(indexed.filter(
-                  col("cluster_id").isin(probes: _*))),
+              Knn.search(withPred(graft.streaming.VectorServing.probeScan(
+                  indexed, probe, qv, ivf, lsh)),
                 "embedding", "vec_id", qv, k = 3)
                 .withColumn("query_id", lit(qid))
             }
@@ -1884,15 +1475,12 @@ object VectorQueries {
         CostServingBatchFilteredState.cands(dir) =
           CostServingBatchFilteredState.cands.getOrElse(dir, Map.empty) +
             (tag -> rec)
-        ranked.select(lit(tag).as("leg"),
+        ranked.select(Seq(lit(tag).as("leg"),
           lit(qs.length.toLong).as("batch_size"), col("query_id"),
           col("knn_rank").cast("long").as("knn_rank"), col("vec_id"),
-          lit(chosen).as("chosen_index"),
-          lit(m).as("n_match"), lit(nTotal).as("n_total"),
-          lit(efEff).as("ef_eff"), lit(slEff).as("sl_eff"),
-          lit(ivfB).as("est_ivf_b"), lit(lshB).as("est_lsh_b"),
-          lit(hnswB).as("est_hnsw_b"), lit(pqB).as("est_pq_b"),
-          round(col("distance_score"), 6).as("distance"))
+          lit(price.chosen).as("chosen_index")) ++
+          selectivityColumns(price, m, nTotal) ++
+          Seq(round(col("distance_score"), 6).as("distance")): _*)
       }
       CostServingBatchFilteredState.lastDir = Some(dir)
       outs.reduce(_ unionByName _)
@@ -1902,43 +1490,20 @@ object VectorQueries {
     oracleLate = Some(() =>
       CostServingBatchFilteredState.lastDir.map { d =>
         val rec = CostServingBatchFilteredState.cands.getOrElse(d, Map.empty)
-        val legs = Seq(
-          ("b1_all", batchQueryVecs.take(1), "TRUE",
-            "SELECT count(*) FROM embeddings"),
-          ("b5_all", batchQueryVecs, "TRUE",
-            "SELECT count(*) FROM embeddings"),
-          ("b1_sel", batchQueryVecs.take(1), "e.label = 3",
-            "SELECT count(*) FROM embeddings WHERE label = 3"),
-          ("b5_sel", batchQueryVecs, "e.label = 3",
-            "SELECT count(*) FROM embeddings WHERE label = 3"))
-        val built = legs.map { case (tag, qs, predSql, matchSql) =>
-          duckServingBatchFilteredLeg(tag, qs,
-            rec.getOrElse(tag, Map.empty), k = 3, predSql, matchSql)
-        }
-        s"""
-        |WITH cents AS MATERIALIZED (
-        |  SELECT vec_id AS cid, embedding::DOUBLE[] AS c FROM embeddings WHERE vec_id < 8
-        |), assigned AS MATERIALIZED (
-        |  SELECT vec_id, cid AS cluster_id FROM (
-        |    SELECT e.vec_id, c.cid,
-        |           row_number() OVER (PARTITION BY e.vec_id
-        |                              ORDER BY ${duckL2("e.embedding::DOUBLE[]", "c.c")}, c.cid) AS rn
-        |    FROM embeddings e CROSS JOIN cents c
-        |  ) WHERE rn = 1
-        |), planes AS MATERIALIZED (
-        |  SELECT b, list_transform(range(64), j ->
-        |    CASE WHEN ('0x' || substring(md5('lsh:' || b::VARCHAR || ':' || j::VARCHAR), 1, 12))::BIGINT % 2 = 0
-        |         THEN 1.0 ELSE -1.0 END) AS plane
-        |  FROM (SELECT unnest(range(8)) AS b)
-        |), bk AS MATERIALIZED (
-        |  SELECT e.vec_id,
-        |         sum(CASE WHEN list_dot_product(e.embedding::DOUBLE[], p.plane) >= 0
-        |                  THEN (1::BIGINT << p.b) ELSE 0 END)::BIGINT AS lsh_bucket
-        |  FROM embeddings e CROSS JOIN planes p GROUP BY e.vec_id
-        |)""".stripMargin.trim +
-          built.map(_._1).mkString +
-          "\n" + built.map(_._2).mkString("\nUNION ALL\n") +
-          "\nORDER BY leg, query_id, knn_rank"
+        val all = ("SELECT count(*) FROM embeddings", "TRUE")
+        val sel = ("SELECT count(*) FROM embeddings WHERE label = 3", "e.label = 3")
+        duckServingOracle(
+          Seq(("b1_all", batchQueryVecs.take(1), all), ("b5_all", batchQueryVecs, all),
+            ("b1_sel", batchQueryVecs.take(1), sel), ("b5_sel", batchQueryVecs, sel))
+            .map { case (tag, qs, filter) =>
+              OracleLeg(tag, qs, rec.getOrElse(tag, Map.empty), Some(filter))
+            },
+          k = 3, lshRadius = 2, NswRouterStore.bound, Some(PqStore.M -> 16),
+          weights = None, bytesPerRow = 256,
+          "leg, batch_size, query_id, knn_rank, vec_id, chosen_index, " +
+            "n_match, n_total, ef_eff, sl_eff, " +
+            "est_ivf_b, est_lsh_b, est_hnsw_b, est_pq_b, distance",
+          "leg, query_id, knn_rank")
       }))
 
   /** KMeans-built IVF index per (fixture, JVM) — the QUALITY centroid

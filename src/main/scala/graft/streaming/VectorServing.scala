@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.functions.{EmbeddingModel, Embeddings}
 import graft.operators.{Ann, Knn}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -221,32 +221,36 @@ object VectorServing {
       graft.operators.Nsw.openGraph(graph, p.nShards)
   }
 
-  /** Price a query batch with `IvfProbeRule.chooseServingBatch`, then
-    * EXECUTE it on the winning index family (r18 verdict #1) — the
-    * shared dispatch under [[serveAutoKnn]] and the batch
-    * `ann_cost_serving_batch` gate (single-builder rule). Returns the
-    * ranked results (query_id, knn_rank, vec_id-named idCol,
-    * distance_score), the decision + its four byte totals, and the
-    * per-query recorded candidate ids the late oracle re-ranks (hnsw:
-    * the routed beam's candidates; pq: the per-query ADC shortlists;
-    * ivf/lsh: empty — their candidate sets are probe-set membership,
-    * which the oracle replays directly in SQL).
+  /** Price a query batch with `IvfProbeRule.priceServing` (all four
+    * families, unfiltered), then EXECUTE it on the winning index family
+    * (r18 verdict #1) — the shared dispatch under [[serveAutoKnn]] and
+    * the batch `ann_cost_serving_batch` gate (single-builder rule).
+    * Returns the ranked results (query_id, knn_rank, vec_id-named idCol,
+    * distance_score), the decision, its price (four byte totals), and
+    * the per-query recorded candidate ids the late oracle re-ranks
+    * (hnsw: the routed beam's candidates; pq: the per-query ADC
+    * shortlists; ivf/lsh: empty — their candidate sets are probe-set
+    * membership, which the oracle replays directly in SQL).
     *
     * Scale shape: the decision is O(B · nlist·dim) driver arithmetic on
     * index METADATA; execution is the chosen family's own bounded path
     * (probe-pruned scan / routed beams / one shared ADC pass). Per-query
     * legs union ≤ B small plans — query batches are user requests, not
-    * data, by the serving contract.
+    * data, by the serving contract. Every query must have the indexes'
+    * dimension.
     */
   def dispatchServingBatch(qs: Seq[(Int, Array[Float])],
                            idx: AutoServingIndexes,
                            corpusVecCol: String, corpusIdCol: String, k: Int)
-      : (DataFrame, String, (Long, Long, Long, Long), Map[Int, Seq[Long]]) = {
-    import graft.operators.{Ann, Knn, Nsw, Pq}
-    val (chosen, ivfB, lshB, hnswB, pqB) =
-      graft.plans.IvfProbeRule.chooseServingBatch(qs.map(_._2), idx.ivf,
-        idx.lsh, idx.p.nShards, idx.routerNprobe, idx.p.efSearch,
-        idx.dim, idx.corpusRows, idx.pqM, idx.pqShortlist)
+      : (DataFrame, String, graft.plans.IvfProbeRule.ServingPrice, Map[Int, Seq[Long]]) = {
+    import graft.operators.{Nsw, Pq}
+    import graft.plans.IvfProbeRule
+    require(qs.forall(_._2.length == idx.dim),
+      s"every query vector must have the indexes' dimension ${idx.dim}")
+    val price = IvfProbeRule.priceServing(qs.map(_._2), idx.ivf, idx.lsh,
+      IvfProbeRule.GraphBound(idx.p.nShards, idx.routerNprobe, idx.p.efSearch),
+      Some(IvfProbeRule.PqFamily(idx.corpusRows, idx.pqM, idx.pqShortlist)))
+    val chosen = price.chosen
     def rankPerQuery(legs: Seq[DataFrame]): DataFrame = {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("query_id"))
@@ -259,7 +263,7 @@ object VectorServing {
       case "hnsw" =>
         val (res, cands, _) = Nsw.routedBatchSearch(idx.openedGraph,
           corpusIdCol, qs, k, idx.routerCents, idx.routerNprobe, idx.p)
-        (res, chosen, (ivfB, lshB, hnswB, pqB), cands)
+        (res, chosen, price, cands)
       case "pq" =>
         // the EXECUTED plan is the PRICED plan (r19 verdict #1): ONE
         // shared pass over the codes store for the whole batch (a
@@ -270,26 +274,38 @@ object VectorServing {
         // re-ranks.
         val (res, shortlists) = Pq.batchSearch(idx.encoded, idx.corpus,
           corpusVecCol, corpusIdCol, qs, idx.codebooks, k, idx.pqShortlist)
-        (res, chosen, (ivfB, lshB, hnswB, pqB),
+        (res, chosen, price,
           shortlists.map { case (q, ids) => q -> ids.map(_.asInstanceOf[Long]).sorted })
-      case "lsh" =>
+      case fam =>
         val legs = qs.map { case (qid, qv) =>
-          val probes = Ann.probeBuckets(Ann.queryBucket(qv, idx.lsh.planes),
-            idx.lsh.planes.length, idx.lsh.radius)
-          Knn.search(idx.indexed.filter(col("lsh_bucket").isin(probes: _*)),
+          Knn.search(probeScan(idx.indexed, fam, qv, idx.ivf, idx.lsh),
             corpusVecCol, corpusIdCol, qv, k)
             .withColumn("query_id", lit(qid))
         }
-        (rankPerQuery(legs), chosen, (ivfB, lshB, hnswB, pqB), Map.empty)
-      case _ =>
-        val legs = qs.map { case (qid, qv) =>
-          val probes = Ann.probeIds(qv, idx.ivf.centroids, idx.ivf.nprobe)
-          Knn.search(idx.indexed.filter(col("cluster_id").isin(probes: _*)),
-            corpusVecCol, corpusIdCol, qv, k)
-            .withColumn("query_id", lit(qid))
-        }
-        (rankPerQuery(legs), chosen, (ivfB, lshB, hnswB, pqB), Map.empty)
+        (rankPerQuery(legs), chosen, price, Map.empty)
     }
+  }
+
+  /** A hybrid (cluster_id, lsh_bucket)-partitioned store pruned to
+    * `qv`'s probe set on one probe family: the hamming-≤radius buckets
+    * for "lsh", the nprobe nearest lists for anything else (ivf).
+    */
+  def probeScan(indexed: DataFrame, family: String, qv: Array[Float],
+                ivf: graft.plans.IvfCatalog.IvfIndex,
+                lsh: graft.plans.LshCatalog.LshIndex): DataFrame =
+    if (family == "lsh")
+      indexed.filter(col("lsh_bucket").isin(Ann.probeBuckets(
+        Ann.queryBucket(qv, lsh.planes), lsh.planes.length, lsh.radius): _*))
+    else indexed.filter(col("cluster_id").isin(Ann.probeIds(qv, ivf.centroids, ivf.nprobe): _*))
+
+  /** A price's byte totals as the literal columns est_ivf_b, est_lsh_b,
+    * est_hnsw_b and (when the PQ family was priced) est_pq_b — the
+    * decision record every cost-served output row carries.
+    */
+  def byteColumns(price: graft.plans.IvfProbeRule.ServingPrice): Seq[Column] = {
+    val b = price.bytes
+    Seq(lit(b.ivf).as("est_ivf_b"), lit(b.lsh).as("est_lsh_b"),
+      lit(b.hnsw).as("est_hnsw_b")) ++ b.pq.map(lit(_).as("est_pq_b"))
   }
 
   /** Micro-batch COST-ROUTED serving: every micro-batch is priced by
@@ -313,14 +329,14 @@ object VectorServing {
         if (!batch.isEmpty) {
           val qs = batch.select(col(queryIdCol), col(queryVecCol)).collect()
             .map(r => (r.getInt(0), r.getSeq[Float](1).toArray)).toSeq
-          val (res, chosen, (ivfB, lshB, hnswB, pqB), cands) =
+          val (res, chosen, price, cands) =
             dispatchServingBatch(qs, idx, corpusVecCol, corpusIdCol, k)
           record(batchId, chosen, cands)
-          sink(res.select(col(queryIdCol), col("knn_rank").cast("long").as("knn_rank"),
+          sink(res.select(Seq(col(queryIdCol),
+            col("knn_rank").cast("long").as("knn_rank"),
             col(corpusIdCol), round(col("distance_score"), 6).as("distance"),
-            lit(chosen).as("chosen_index"), lit(qs.length.toLong).as("batch_size"),
-            lit(ivfB).as("est_ivf_b"), lit(lshB).as("est_lsh_b"),
-            lit(hnswB).as("est_hnsw_b"), lit(pqB).as("est_pq_b")))
+            lit(chosen).as("chosen_index"), lit(qs.length.toLong).as("batch_size")) ++
+            byteColumns(price): _*))
         }
       }
       .start()

@@ -15,6 +15,22 @@ class IvfProbeRuleSpec extends SparkSpec {
   private lazy val emb = Tables.embeddings(spark, sf("sf0.001"))
   private val q = Queries.queryVec64
 
+  // The serving cost model read back in the shapes the gates project:
+  // three-way rows, four-way bytes, bytes plus the widened knobs, and
+  // bytes beside the calibrated ns costs.
+  import graft.plans.IvfProbeRule.{GraphBound, PqFamily, ServingPrice, ServingWeights, priceServing}
+  private def rows3(p: ServingPrice) =
+    (p.chosen, p.rows(p.bytes.ivf), p.rows(p.bytes.lsh), p.rows(p.bytes.hnsw))
+  private def bytes4(p: ServingPrice) =
+    (p.chosen, p.bytes.ivf, p.bytes.lsh, p.bytes.hnsw, p.bytes.pq.get)
+  private def knobs(p: ServingPrice) =
+    (p.chosen, p.bytes.ivf, p.bytes.lsh, p.bytes.hnsw, p.bytes.pq.get, p.efEff, p.slEff)
+  private def calibrated(p: ServingPrice, w: ServingWeights) = {
+    val ns = p.weighted(w)
+    (p.chosen, ns.chosen, p.bytes.ivf, p.bytes.lsh, p.bytes.hnsw, p.bytes.pq.get,
+      ns.ivf, ns.lsh, ns.hnsw, ns.pq.get)
+  }
+
   private def withIndexDir(f: (String, Array[Array[Float]]) => Unit): Unit = {
     val cents = Ann.seededCentroids(emb, "embedding", "vec_id", nlist = 8)
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf_rule").toString
@@ -243,8 +259,11 @@ class IvfProbeRuleSpec extends SparkSpec {
     }
   }
 
+  // The six serving-cost tests below keep the names of the per-gate
+  // choosers that priceServing replaced; each prices its gate's scenario
+  // through priceServing and reads the result back in that gate's shape.
   test("chooseServing: synthetic stats flip the three-way choice; missing stats fall back to IVF") {
-    import graft.plans.{IvfCatalog, LshCatalog, IvfProbeRule}
+    import graft.plans.{IvfCatalog, LshCatalog}
     val planes = Ann.signPlanes(dim = 64, nBits = 8)
     val cents = Ann.seededCentroids(emb, "embedding", "vec_id", nlist = 8)
     val ivfProbes = Ann.probeIds(q, cents, nprobe = 3)
@@ -258,10 +277,10 @@ class IvfProbeRuleSpec extends SparkSpec {
     def lshStats(rowsPerProbe: Long): Map[Long, Long] =
       lshProbes.map(_ -> rowsPerProbe).toMap
     def choose(ivfRows: Long, lshRows: Long) =
-      IvfProbeRule.chooseServing(q,
+      rows3(priceServing(Seq(q),
         IvfCatalog.IvfIndex(cents, 3, ivfStats(ivfRows)),
         LshCatalog.LshIndex(planes, 1, lshStats(lshRows)),
-        hnswShards = 4, hnswNprobe = 2, efSearch = 32)
+        GraphBound(nShards = 4, nprobe = 2, efSearch = 32)))
     // hnsw: its 64-candidate bound strictly under both row estimates
     assert(choose(1000, 1000)._1 == "hnsw")
     // lsh: cheapest probe set (1 row/bucket, ≤ 9 rows) beats both
@@ -276,15 +295,15 @@ class IvfProbeRuleSpec extends SparkSpec {
     assert(ivfRows == 9 && lshRows == 9 && bound == 64)
     assert(tieChosen == "ivf")
     // missing stats on either side: documented IVF fallback, estimates -1
-    val (fb, fbIvf, fbLsh, _) = IvfProbeRule.chooseServing(q,
+    val (fb, fbIvf, fbLsh, _) = rows3(priceServing(Seq(q),
       IvfCatalog.IvfIndex(cents, 3, Map.empty),
       LshCatalog.LshIndex(planes, 1, lshStats(1)),
-      hnswShards = 4, hnswNprobe = 2, efSearch = 32)
+      GraphBound(nShards = 4, nprobe = 2, efSearch = 32)))
     assert(fb == "ivf" && fbIvf == -1L && fbLsh == -1L)
   }
 
   test("chooseServing4: synthetic stats flip the four-way choice; byte unit and tie discipline hold") {
-    import graft.plans.{IvfCatalog, LshCatalog, IvfProbeRule}
+    import graft.plans.{IvfCatalog, LshCatalog}
     val planes = Ann.signPlanes(dim = 64, nBits = 8)
     val cents = Ann.seededCentroids(emb, "embedding", "vec_id", nlist = 8)
     val ivfProbes = Ann.probeIds(q, cents, nprobe = 3)
@@ -296,11 +315,11 @@ class IvfProbeRuleSpec extends SparkSpec {
       lshProbes.map(_ -> rowsPerProbe).toMap
     // hnsw bound = min(4,2)·32·256 = 16384 bytes; pq = N·8 + 16·256
     def choose(ivfRows: Long, lshRows: Long, corpusRows: Long) =
-      IvfProbeRule.chooseServing4(q,
+      bytes4(priceServing(Seq(q),
         IvfCatalog.IvfIndex(cents, 3, ivfStats(ivfRows)),
         LshCatalog.LshIndex(planes, 1, lshStats(lshRows)),
-        hnswShards = 4, hnswNprobe = 2, efSearch = 32,
-        dim = 64, pqCorpusRows = corpusRows, pqM = 8, pqShortlist = 16)
+        GraphBound(nShards = 4, nprobe = 2, efSearch = 32),
+        Some(PqFamily(corpusRows, m = 8, shortlist = 16))))
     // pq: 500·8 + 4096 = 8096 B strictly under probes AND the hnsw bound
     assert(choose(1000, 1000, 500)._1 == "pq")
     // hnsw: a big corpus prices pq out (1e6·8 ≫ 16384), probes still bad
@@ -317,16 +336,16 @@ class IvfProbeRuleSpec extends SparkSpec {
     // the hnsw bound (N·8 + 4096 = 16384 → N = 1536) hnsw keeps the win
     assert(choose(1000, 1000, 1536)._1 == "hnsw")
     // missing stats: documented IVF fallback with -1 probe estimates
-    val (fb4, a, b, _, _) = IvfProbeRule.chooseServing4(q,
+    val (fb4, a, b, _, _) = bytes4(priceServing(Seq(q),
       IvfCatalog.IvfIndex(cents, 3, Map.empty),
       LshCatalog.LshIndex(planes, 1, lshStats(1)),
-      hnswShards = 4, hnswNprobe = 2, efSearch = 32,
-      dim = 64, pqCorpusRows = 500, pqM = 8, pqShortlist = 16)
+      GraphBound(nShards = 4, nprobe = 2, efSearch = 32),
+      Some(PqFamily(500, m = 8, shortlist = 16))))
     assert(fb4 == "ivf" && a == -1L && b == -1L)
   }
 
   test("chooseServingBatch: batch size alone flips hnsw (small) → pq (large); totals are per-batch") {
-    import graft.plans.{IvfCatalog, LshCatalog, IvfProbeRule}
+    import graft.plans.{IvfCatalog, LshCatalog}
     val planes = Ann.signPlanes(dim = 64, nBits = 8)
     val cents = Ann.seededCentroids(emb, "embedding", "vec_id", nlist = 8)
     def batchOf(n: Int): Seq[Array[Float]] = Seq.fill(n)(q)
@@ -336,11 +355,11 @@ class IvfProbeRuleSpec extends SparkSpec {
         .map(_ -> rowsPerProbe).toMap)
     def choose(b: Int, corpusRows: Long) = {
       val (ivfS, lshS) = stats(1000L)
-      IvfProbeRule.chooseServingBatch(batchOf(b),
+      bytes4(priceServing(batchOf(b),
         IvfCatalog.IvfIndex(cents, 3, ivfS),
         LshCatalog.LshIndex(planes, 1, lshS),
-        hnswShards = 4, hnswNprobe = 2, efSearch = 32,
-        dim = 64, pqCorpusRows = corpusRows, pqM = 8, pqShortlist = 16)
+        GraphBound(nShards = 4, nprobe = 2, efSearch = 32),
+        Some(PqFamily(corpusRows, m = 8, shortlist = 16))))
     }
     // per-query: hnsw bound 16384 B, probe paths ≥ 768 kB. corpus 10⁴:
     // pq scan = 80 kB shared. B=1: hnsw 16384 < pq 84096 → hnsw.
@@ -358,17 +377,17 @@ class IvfProbeRuleSpec extends SparkSpec {
     // B=2: 2·(16384 − 4096) = 24576 = N·8 → N = 3072
     assert(choose(2, 3072L)._1 == "hnsw")
     assert(choose(2, 3071L)._1 == "pq")
-    // missing stats: same sticky-ivf fallback as chooseServing4
-    val (fb, fa, fbb, _, _) = IvfProbeRule.chooseServingBatch(batchOf(4),
+    // missing stats: the same sticky-ivf fallback at any batch size
+    val (fb, fa, fbb, _, _) = bytes4(priceServing(batchOf(4),
       IvfCatalog.IvfIndex(cents, 3, Map.empty),
       LshCatalog.LshIndex(planes, 1, stats(1L)._2),
-      hnswShards = 4, hnswNprobe = 2, efSearch = 32,
-      dim = 64, pqCorpusRows = 500, pqM = 8, pqShortlist = 16)
+      GraphBound(nShards = 4, nprobe = 2, efSearch = 32),
+      Some(PqFamily(500, m = 8, shortlist = 16))))
     assert(fb == "ivf" && fa == -1L && fbb == -1L)
   }
 
   test("chooseServingFiltered: selectivity alone flips the winner; widened knobs are exact ceilings") {
-    import graft.plans.{IvfCatalog, LshCatalog, IvfProbeRule}
+    import graft.plans.{IvfCatalog, LshCatalog}
     val planes = Ann.signPlanes(dim = 64, nBits = 8)
     val cents = Ann.seededCentroids(emb, "embedding", "vec_id", nlist = 8)
     def stats(rowsPerProbe: Long) = (
@@ -377,12 +396,12 @@ class IvfProbeRuleSpec extends SparkSpec {
         .map(_ -> rowsPerProbe).toMap)
     def choose(matchRows: Long, totalRows: Long, probeRows: Long = 1000L) = {
       val (ivfS, lshS) = stats(probeRows)
-      IvfProbeRule.chooseServingFiltered(q,
+      knobs(priceServing(Seq(q),
         IvfCatalog.IvfIndex(cents, 3, ivfS),
         LshCatalog.LshIndex(planes, 1, lshS),
-        hnswShards = 4, hnswNprobe = 2, efSearch = 32,
-        dim = 64, pqCorpusRows = totalRows, pqM = 8, pqShortlist = 16,
-        matchRows = matchRows, totalRows = totalRows)
+        GraphBound(nShards = 4, nprobe = 2, efSearch = 32),
+        Some(PqFamily(totalRows, m = 8, shortlist = 16)),
+        selectivity = Some(matchRows -> totalRows)))
     }
     // s = 1 on a big corpus: the graph's constant bound wins (16384 B
     // vs pq 80 kB scan, probes 768 kB+)
@@ -467,22 +486,22 @@ class IvfProbeRuleSpec extends SparkSpec {
   }
 
   test("chooseServingCalibrated: measured ns/KiB weights overturn the byte argmin; fallback stays sticky-ivf") {
-    import graft.plans.{IvfCatalog, LshCatalog, IvfProbeRule}
+    import graft.plans.{IvfCatalog, LshCatalog}
     val planes = Ann.signPlanes(dim = 64, nBits = 8)
     val cents = Ann.seededCentroids(emb, "embedding", "vec_id", nlist = 8)
     // the r20 measured weights (RECALL.md "Serving latency calibration")
-    val w = IvfProbeRule.ServingWeights(1153585L, 1887563L, 15938730L, 6728523L)
+    val w = ServingWeights(1153585L, 1887563L, 15938730L, 6728523L)
     def stats(ivfRows: Long, lshRows: Long) = (
       Ann.probeIds(q, cents, nprobe = 3).map(_ -> ivfRows).toMap,
       Ann.probeBuckets(Ann.queryBucket(q, planes), planes.length, radius = 1)
         .map(_ -> lshRows).toMap)
     def choose(ivfRows: Long, lshRows: Long, n: Long) = {
       val (ivfS, lshS) = stats(ivfRows, lshRows)
-      IvfProbeRule.chooseServingCalibrated(q,
+      calibrated(priceServing(Seq(q),
         IvfCatalog.IvfIndex(cents, 3, ivfS),
         LshCatalog.LshIndex(planes, 1, lshS),
-        hnswShards = 4, hnswNprobe = 2, efSearch = 32,
-        dim = 64, pqCorpusRows = n, pqM = 8, pqShortlist = 16, w)
+        GraphBound(nShards = 4, nprobe = 2, efSearch = 32),
+        Some(PqFamily(n, m = 8, shortlist = 16))), w)
     }
     // the sf0.1-shaped regime: bytes pick the 16 KiB beam, the measured
     // ~15.6 μs/KiB beam cost hands the decision to the 65 KiB lsh scan
@@ -498,16 +517,16 @@ class IvfProbeRuleSpec extends SparkSpec {
     val big = choose(125000L, 12500L, 1000000L)
     assert(big._1 == "hnsw" && big._2 == "hnsw")
     // missing probe stats: sticky ivf on both channels, -1 sentinels
-    val fb = IvfProbeRule.chooseServingCalibrated(q,
+    val fb = calibrated(priceServing(Seq(q),
       IvfCatalog.IvfIndex(cents, 3, Map.empty),
       LshCatalog.LshIndex(planes, 1, stats(10L, 10L)._2),
-      hnswShards = 4, hnswNprobe = 2, efSearch = 32,
-      dim = 64, pqCorpusRows = 500, pqM = 8, pqShortlist = 16, w)
+      GraphBound(nShards = 4, nprobe = 2, efSearch = 32),
+      Some(PqFamily(500, m = 8, shortlist = 16))), w)
     assert(fb._1 == "ivf" && fb._2 == "ivf" && fb._3 == -1L && fb._7 == -1L)
   }
 
   test("chooseServingBatchFiltered: the decision flips on (B, s) JOINTLY; degenerate corners equal the parent models") {
-    import graft.plans.{IvfCatalog, LshCatalog, IvfProbeRule}
+    import graft.plans.{IvfCatalog, LshCatalog}
     val planes = Ann.signPlanes(dim = 64, nBits = 8)
     val cents = Ann.seededCentroids(emb, "embedding", "vec_id", nlist = 8)
     val batchOf = (n: Int) => Seq.fill(n)(q)
@@ -518,12 +537,12 @@ class IvfProbeRuleSpec extends SparkSpec {
     def choose(b: Int, matchRows: Long, totalRows: Long,
                probeRows: Long = 100L) = {
       val (ivfS, lshS) = stats(probeRows)
-      IvfProbeRule.chooseServingBatchFiltered(batchOf(b),
+      knobs(priceServing(batchOf(b),
         IvfCatalog.IvfIndex(cents, 3, ivfS),
         LshCatalog.LshIndex(planes, 1, lshS),
-        hnswShards = 4, hnswNprobe = 2, efSearch = 32,
-        dim = 64, pqCorpusRows = totalRows, pqM = 8, pqShortlist = 16,
-        matchRows = matchRows, totalRows = totalRows)
+        GraphBound(nShards = 4, nprobe = 2, efSearch = 32),
+        Some(PqFamily(totalRows, m = 8, shortlist = 16)),
+        selectivity = Some(matchRows -> totalRows)))
     }
     // the joint grid (probe stats 100 rows/probe, corpus 10⁴):
     // B=1, s=1   → hnsw: one 16 kB beam beats 76.8 kB probes, 84 kB scan
@@ -542,39 +561,71 @@ class IvfProbeRuleSpec extends SparkSpec {
     val (c4s, i4s, _, _, p4s, _, _) = choose(4, 1000L, 10000L)
     assert(c4s == "pq", s"batched selective queries must amortize: $c4s")
     assert(p4s == 80000L + 4L * 40960L && i4s == 4L * 76800L)
-    // degenerate corners reproduce the parent models exactly:
-    // B=1 ≡ chooseServingFiltered; s=1 (match = total) ≡ chooseServingBatch
+    // degenerate corners. Batch: with one query repeated B times the
+    // per-query terms (probe rows, the beam) scale by exactly B, and pq
+    // pays its code scan once.
+    Seq(4, 32).foreach { b =>
+      val (_, i1, l1, h1, p1, _, _) = choose(1, 1000L, 10000L)
+      val (_, ib, lb, hb, pb, _, _) = choose(b, 1000L, 10000L)
+      assert(ib == b * i1 && lb == b * l1 && hb == b * h1 &&
+        pb == p1 + (b - 1L) * (p1 - 10000L * 8), s"B=$b corner is not batch-linear")
+    }
+    // Selectivity: match = total prices like no predicate while the
+    // corpus holds at least efSearch rows — and NOT below it, where the
+    // saturating knobs clamp the beam and the shortlist to the corpus
+    // (why selectivity is optional rather than defaulted to (n, n))
     val (ivfS, lshS) = stats(100L)
-    Seq(10000L -> 10000L, 1000L -> 10000L, 3L -> 10L).foreach {
-      case (m, n) =>
-        val full = choose(1, m, n)
-        val parent = IvfProbeRule.chooseServingFiltered(q,
-          IvfCatalog.IvfIndex(cents, 3, ivfS),
-          LshCatalog.LshIndex(planes, 1, lshS),
-          hnswShards = 4, hnswNprobe = 2, efSearch = 32, dim = 64,
-          pqCorpusRows = n, pqM = 8, pqShortlist = 16,
-          matchRows = m, totalRows = n)
-        assert(full == parent, s"B=1 corner diverged at ($m,$n): $full vs $parent")
-    }
+    def unfiltered(b: Int, n: Long) = knobs(priceServing(batchOf(b),
+      IvfCatalog.IvfIndex(cents, 3, ivfS), LshCatalog.LshIndex(planes, 1, lshS),
+      GraphBound(nShards = 4, nprobe = 2, efSearch = 32),
+      Some(PqFamily(n, m = 8, shortlist = 16))))
     Seq(1, 4, 32).foreach { b =>
-      val full = choose(b, 10000L, 10000L)
-      val parent = IvfProbeRule.chooseServingBatch(batchOf(b),
-        IvfCatalog.IvfIndex(cents, 3, ivfS),
-        LshCatalog.LshIndex(planes, 1, lshS),
-        hnswShards = 4, hnswNprobe = 2, efSearch = 32, dim = 64,
-        pqCorpusRows = 10000L, pqM = 8, pqShortlist = 16)
-      assert((full._1, full._2, full._3, full._4, full._5) == parent,
-        s"s=1 corner diverged at B=$b: $full vs $parent")
+      assert(choose(b, 10000L, 10000L) == unfiltered(b, 10000L),
+        s"s=1 corner diverged at B=$b")
     }
+    val (_, _, _, hSmall, pSmall, efSmall, slSmall) = choose(1, 10L, 10L)
+    val (_, _, _, hNone, pNone, efNone, slNone) = unfiltered(1, 10L)
+    assert(efSmall == 10L && slSmall == 10L && efNone == 32L && slNone == 16L)
+    assert(hSmall == 2L * 10 * 256 && hNone == 2L * 32 * 256 && pSmall < pNone)
     // saturation + missing-stats discipline inherited
     val (cBig, _, _, hBig, pBig, efBig, _) = choose(2, 1L, 2_000_000_000L)
     assert(efBig == 2_000_000_000L && hBig > 0L && pBig > 0L && cBig != "hnsw")
-    val fb = IvfProbeRule.chooseServingBatchFiltered(batchOf(2),
+    val fb = knobs(priceServing(batchOf(2),
       IvfCatalog.IvfIndex(cents, 3, Map.empty),
       LshCatalog.LshIndex(planes, 1, stats(100L)._2),
-      hnswShards = 4, hnswNprobe = 2, efSearch = 32, dim = 64,
-      pqCorpusRows = 500, pqM = 8, pqShortlist = 16,
-      matchRows = 50, totalRows = 500)
+      GraphBound(nShards = 4, nprobe = 2, efSearch = 32),
+      Some(PqFamily(500, m = 8, shortlist = 16)),
+      selectivity = Some(50L -> 500L)))
     assert(fb._1 == "ivf" && fb._2 == -1L && fb._3 == -1L)
+  }
+
+  test("golden decision table: one pricing function reproduces the six per-gate choosers it replaced") {
+    import ServingGoldenGrid.fingerprint
+    val cs = ServingGoldenGrid.cases
+    def price(c: ServingGoldenGrid.Case, b: Int, pq: Boolean, sel: Boolean) =
+      priceServing(c.qvs.take(b), c.ivf, c.lsh, GraphBound(c.nShards, c.nprobe, c.efSearch),
+        if (pq) Some(PqFamily(c.pqRows, c.pqM, c.pqShortlist)) else None,
+        if (sel) Some(c.matchRows -> c.totalRows) else None)
+    // md5 over each gate's full decision tuples on the whole grid, taken
+    // from the per-gate choosers before they were folded into
+    // priceServing (single-query gates price each case's first query)
+    val got = Map(
+      "three-way" -> fingerprint(cs.map(c => rows3(price(c, 1, pq = false, sel = false)))),
+      "four-way" -> fingerprint(cs.map(c => bytes4(price(c, 1, pq = true, sel = false)))),
+      "batch" -> fingerprint(cs.map(c => bytes4(price(c, c.qvs.length, pq = true, sel = false)))),
+      "filtered" -> fingerprint(cs.map(c => knobs(price(c, 1, pq = true, sel = true)))),
+      "calibrated" -> fingerprint(cs.map(c => calibrated(price(c, 1, pq = true, sel = false), c.w))),
+      "batch-filtered" ->
+        fingerprint(cs.map(c => knobs(price(c, c.qvs.length, pq = true, sel = true)))))
+    val golden = Map(
+      "three-way" -> "6a90c618a1d03658ed119bddb07b345a",
+      "four-way" -> "771e03983b3197ec621be02ebcb13314",
+      "batch" -> "f97bb0df83a52f68dc6a18a5fc530ad6",
+      "filtered" -> "2b329eded7e09e595f77f34049880acd",
+      "calibrated" -> "3dd3b2e116579a183303b80ba49b27ae",
+      "batch-filtered" -> "045d5d618ccd91a2e58fedfbba585b72")
+    assert(cs.length == 1028)
+    val diverged = golden.keys.toSeq.sorted.filter(g => got(g) != golden(g))
+    assert(diverged.isEmpty, s"decisions moved for ${diverged.map(g => s"$g (${got(g)})")}")
   }
 }
