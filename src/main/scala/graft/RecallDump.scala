@@ -243,6 +243,15 @@ object RecallDump {
     pts
   }
 
+  /** A graph batch search's total candidate count and per-query
+    * recall@k, query i of the batch against `exactByQ(i)`.
+    */
+  private def batchRecall(res: org.apache.spark.sql.DataFrame, byQ: Map[Int, Seq[Long]],
+                          exactByQ: Array[org.apache.spark.sql.DataFrame]): (Long, Seq[Double]) =
+    (byQ.values.map(_.length.toLong).sum,
+      exactByQ.indices.map(i =>
+        Ann.recallAtK(res.filter(col("query_id") === i), exactByQ(i), "vec_id")))
+
   /** NSW beam-width sweep: recall@k vs efSearch on the sharded
     * small-world graph (ann_nsw_beam's read path). The candidate
     * fraction is the emitted-row cost (≤ nShards·ef of n); the walk
@@ -267,15 +276,13 @@ object RecallDump {
       .map(_.getSeq[Float](0).toArray)
     val qs = if (includeFlagship) qs0 :+ Queries.queryVec64 else qs0
     val exactByQ = qs.map(qv => Knn.search(emb, "embedding", "vec_id", qv, k))
+    // one held exchange per curve, one batch search per beam width
+    val opened = graft.operators.Nsw.openGraph(graph, base.nShards)
+    val batch = qs.toSeq.zipWithIndex.map { case (qv, i) => i -> qv }
     val pts = Seq(8, 16, 32, 64).map { ef =>
-      val p = base.copy(efSearch = ef)
-      var cand = 0L
-      val rs = qs.toSeq.lazyZip(exactByQ).map { (qv, exact) =>
-        val (res, cs) = graft.operators.Nsw
-          .search(graph, emb, "embedding", "vec_id", qv, k, p)
-        cand += cs.length
-        Ann.recallAtK(res, exact, "vec_id")
-      }
+      val (res, byQ) = graft.operators.Nsw.batchSearch(opened, "vec_id", batch, k,
+        base.copy(efSearch = ef))
+      val (cand, rs) = batchRecall(res, byQ, exactByQ)
       NswPoint(ef, cand.toDouble / (n * qs.length), rs.sum / rs.size, rs.min)
     }
     graph.unpersist(); emb.unpersist()
@@ -309,14 +316,13 @@ object RecallDump {
       .map(_.getSeq[Float](0).toArray)
     val qs = if (includeFlagship) qs0 :+ Queries.queryVec64 else qs0
     val exactByQ = qs.map(qv => Knn.search(emb, "embedding", "vec_id", qv, k))
+    // one held exchange per curve, one routed batch search per nprobe
+    val opened = graft.operators.Nsw.openGraph(graph, p.nShards)
+    val batch = qs.toSeq.zipWithIndex.map { case (qv, i) => i -> qv }
     val pts = (1 to p.nShards).map { np =>
-      var cand = 0L
-      val rs = qs.toSeq.lazyZip(exactByQ).map { (qv, exact) =>
-        val (res, cs, _) = graft.operators.Nsw.routedSearch(
-          graph, emb, "embedding", "vec_id", qv, k, cents, np, p)
-        cand += cs.length
-        Ann.recallAtK(res, exact, "vec_id")
-      }
+      val (res, byQ, _) = graft.operators.Nsw.routedBatchSearch(opened, "vec_id",
+        batch, k, cents, np, p)
+      val (cand, rs) = batchRecall(res, byQ, exactByQ)
       RoutedPoint(np, cand.toDouble / (n * qs.length), rs.sum / rs.size, rs.min)
     }
     graph.unpersist(); emb.unpersist()

@@ -31,16 +31,17 @@ import scala.collection.mutable
   * layers), `layers(l)` = the node's neighbors at layer l, so a flat
   * store is the level-0 case of the layered one.
   *
-  * Search fans one beam per shard (each task touches O(ef·log n) nodes
-  * of its local graph, not the shard), emits ≤ efSearch candidate ids
-  * per shard, and the union (≤ nShards·efSearch ids — bounded, like
-  * IVF's probe list) is re-ranked EXACTLY. The single-query paths
-  * ([[search]], [[routedSearch]]) re-rank through the same codegen'd
-  * cosine expression the exact-KNN path uses; the batch paths
-  * ([[batchSearch]], [[routedBatchSearch]]) re-rank inside the beam
-  * task, with that expression's arithmetic, over the graph store's
-  * float copy of each candidate's vector — no second corpus scan. That
-  * two-stage shape is what makes the result hash-gateable: the
+  * Search runs over the store's shard exchange, opened once and held
+  * ([[OpenedGraph]]): one Spark job fans one beam per shard (each task
+  * touches O(ef·log n) nodes of its local graph, not the shard), and
+  * the same task scores each of its ≤ efSearch candidates EXACTLY, with
+  * the codegen'd cosine expression's arithmetic, over the graph store's
+  * float copy of the candidate's vector — no second corpus scan. The
+  * driver keeps the top k per query of the union (≤ nShards·efSearch
+  * ids — bounded, like IVF's probe list). There is one search per mode:
+  * [[batchSearch]] (every shard) and [[routedBatchSearch]] (each query's
+  * nprobe centroid-nearest shards); a single query is a batch of one.
+  * That two-stage shape is what makes the result hash-gateable: the
   * candidate set is deterministic (ascending-id insertion, id
   * tie-breaks everywhere), so the DuckDB oracle re-ranks the identical
   * id list with its own cosine and must agree bit-for-bit after the
@@ -64,9 +65,12 @@ import scala.collection.mutable
   * launching a Spark job from inside Catalyst optimization is both
   * unsound (rules may re-fire, plans may never execute) and
   * unbounded-latency. Graph indexes therefore serve through the
-  * explicit [[search]]/[[batchSearch]] API; the single-query re-rank
-  * stage still plans identically to the rewritten IVF/LSH probes
-  * (pushed IN-filter + TakeOrderedAndProject).
+  * explicit [[batchSearch]]/[[routedBatchSearch]] API. A hybrid
+  * predicate + graph query takes the candidates from that API and
+  * re-ranks them in SQL under its predicate: the beams run unchanged
+  * (dropping nodes DURING traversal would disconnect the small-world
+  * routing), and the predicate composes with the candidate IN-filter
+  * on one corpus scan.
   */
 object Nsw {
 
@@ -405,8 +409,8 @@ object Nsw {
     * shard — better balanced for a static corpus, but an append
     * rewrites the whole store; this layout is the documented
     * mitigation. Search code is layout-agnostic: tasks group rows by
-    * the `shard` column, so [[shardCandidates]]/[[batchSearch]] fan over
-    * windowed stores unchanged.
+    * the `shard` column, so [[batchSearch]]/[[routedBatchSearch]] fan
+    * over windowed stores unchanged.
     */
   def windowShard(idCol: String, windowSize: Long): Column =
     // integer `div`, not `/` (double division) — exact at any id scale.
@@ -630,8 +634,8 @@ object Nsw {
     * maxPartitionBytes splits across tasks, and a beam over half a
     * shard's graph returns wrong candidates). Serving opens this once
     * per index ([[graft.streaming.VectorServing.AutoServingIndexes]]
-    * holds one); a one-shot caller ([[shardCandidates]]) opens it and
-    * searches it in the same call — the same code either way.
+    * holds one; the registered queries hold one per graph store and
+    * fixture), and every search reads it.
     */
   final class OpenedGraph private[Nsw] (graph: DataFrame, nShards: Int) {
     private[Nsw] val spark: SparkSession = graph.sparkSession
@@ -671,29 +675,6 @@ object Nsw {
   def openGraph(graph: DataFrame, nShards: Int): OpenedGraph =
     new OpenedGraph(graph, nShards)
 
-  /** Per-shard beam candidates for one query: ≤ efSearch ids per shard
-    * (ascending (distance, id) within the shard), as rows (shard,
-    * vec_id, beam_distance). One pass over the graph store's shard
-    * exchange, opened for this call; each task returns a bounded row
-    * count — the same "every task returns ≤ k rows" contract as exact
-    * KNN.
-    */
-  def shardCandidates(graph: DataFrame, queryVec: Array[Float],
-                      p: Params): DataFrame = {
-    val spark = graph.sparkSession
-    val q = spark.sparkContext.broadcast(queryVec)
-    val ef = p.efSearch
-    val out = openGraph(graph, p.nShards).shardRows(None).mapPartitions { it =>
-      shardGraphs(it).flatMap { g =>
-        g.search(q.value, ef).iterator.map { case (d, id) => Row(g.shard, id, d) }
-      }
-    }
-    spark.createDataFrame(out, StructType(Seq(
-      StructField("shard", IntegerType),
-      StructField("vec_id", LongType),
-      StructField("beam_distance", DoubleType))))
-  }
-
   /** The one search over an [[OpenedGraph]], in ONE Spark job: each task
     * reads one exchanged partition, builds the lookup of every shard in
     * it that some query is routed to (`routes` = None: every shard, for
@@ -707,11 +688,16 @@ object Nsw {
     * Returns the ranked rows (query_id, knn_rank, `idCol`,
     * distance_score) as a local DataFrame, plus the per-query candidate
     * ids (for the late-bound oracle, which re-ranks exactly these).
+    * Query ids must be distinct (two queries under one id would merge
+    * their candidates into one ranking) and k at least 1.
     */
   private def openedSearch(graph: OpenedGraph, idCol: String,
                            queries: Seq[(Int, Array[Float])], k: Int,
                            efSearch: Int, routes: Option[Map[Int, Seq[Int]]])
       : (DataFrame, Map[Int, Seq[Long]]) = {
+    require(k >= 1, s"k must be >= 1, got $k")
+    val dups = queries.map(_._1).diff(queries.map(_._1).distinct).distinct
+    require(dups.isEmpty, s"duplicate query ids: ${dups.mkString(", ")}")
     val routeSets = routes.map(_.map { case (q, shs) => q -> shs.toSet })
     val wanted = routeSets.map(_.values.flatten.toSet)
     val found = graph.shardRows(wanted).mapPartitions { it =>
@@ -733,8 +719,9 @@ object Nsw {
       found.groupBy(_._1).map { case (q, rs) => q -> rs.map(_._2).toSeq.sorted })
   }
 
-  /** Batch search: every query beams every shard of the opened store in
-    * one job, then the exact per-query top-k over its candidates.
+  /** Full-fan search: every query beams every shard of the opened
+    * store in one job, then the exact per-query top-k over its
+    * candidates. A single query is the batch `Seq(id -> vector)`.
     * Returns the ranked result plus the per-query candidate ids.
     */
   def batchSearch(graph: OpenedGraph, idCol: String,
@@ -746,11 +733,12 @@ object Nsw {
     * centroid-nearest shards ([[routeShards]]), the job reads only the
     * partitions of the batch's routed-shard UNION, and within a shard
     * only the queries routed THERE beam — per-query cost is
-    * ≤ min(nShards, nprobe)·efSearch candidates, the single-query
-    * router's constant-in-corpus bound, batch-wide. Returns (ranked
-    * result, per-query candidate ids, per-query routed shards) — the
-    * candidate map feeds the recorded-candidate late oracle, the route
-    * map rides gated output.
+    * ≤ min(nShards, nprobe)·efSearch candidates, the router's
+    * constant-in-corpus bound, batch-wide. A query's candidates are the
+    * full fan's restricted to its routed shards (per-shard beams are
+    * independent). Returns (ranked result, per-query candidate ids,
+    * per-query routed shards) — the candidate map feeds the
+    * recorded-candidate late oracle, the route map rides gated output.
     */
   def routedBatchSearch(graph: OpenedGraph, idCol: String,
                         queries: Seq[(Int, Array[Float])], k: Int,
@@ -764,48 +752,22 @@ object Nsw {
     (res, byQ, routes)
   }
 
-  /** End-to-end search: beam per shard → bounded candidate id list
-    * (≤ nShards·efSearch, collected like IVF's probe list) → EXACT
-    * top-k over the candidates via the same codegen'd expression and
-    * TakeOrderedAndProject as exact KNN, with the `vec_id IN (...)`
-    * filter pushed into the corpus scan. Returns (result, candidates)
-    * so callers (the late oracle, recall telemetry) see the id set.
-    *
-    * Hybrid predicate + graph search passes `corpus.filter(predicate)`:
-    * the beams run unchanged (the graph is predicate-agnostic — dropping
-    * nodes DURING traversal would disconnect the small-world routing),
-    * and the predicate composes with the candidate IN-filter on one
-    * corpus scan (both push to the parquet scan). Only
-    * predicate-survivors can place, so the efSearch beam is the
-    * oversampling budget: a deployment sizes efSearch ∝ 1/selectivity
-    * (the standard filtered-ANN contract — same trade as IVF's
-    * knn_filtered_ivf_rewrite, where probes oversample instead).
-    */
-  def search(graph: DataFrame, corpus: DataFrame, vecCol: String,
-             idCol: String, queryVec: Array[Float], k: Int,
-             p: Params): (DataFrame, Seq[Long]) = {
-    val cands = shardCandidates(graph, queryVec, p)
-      .select("vec_id").collect().map(_.getLong(0)).toSeq.sorted
-    val result = Knn.search(
-      corpus.filter(col(idCol).isin(cands: _*)),
-      vecCol, idCol, queryVec, k)
-    (result, cands)
-  }
-
   // ------------------------------------------------------------------
   // Shard routing — graph-ANN query cost independent of corpus size
   // ------------------------------------------------------------------
   //
-  // The full-fan searches above launch one beam per shard, and nShards
-  // must grow with the corpus (a shard's graph has to fit one executor),
-  // so per-query work is LINEAR in corpus size where monolithic HNSW is
-  // logarithmic — the documented trade of the sharded layout. The
-  // router closes it: each shard keeps one centroid (a bounded
-  // build-time aggregate, the IvfCatalog-stats pattern), a query beams
-  // only its nprobe nearest shards, and per-query cost becomes
-  // O(nShards·dim) driver-side routing + O(nprobe·ef·log shardSize)
-  // beams — constant in corpus size once nprobe is fixed, exactly how
-  // IVF keeps probe cost flat while nlist grows. Recall now depends on
+  // The full fan ([[batchSearch]]) launches one beam per shard, and
+  // nShards must grow with the corpus (a shard's graph has to fit one
+  // executor), so per-query work is LINEAR in corpus size where
+  // monolithic HNSW is logarithmic — the documented trade of the
+  // sharded layout. The router ([[routedBatchSearch]]) closes it: each
+  // shard keeps one centroid (a bounded build-time aggregate, the
+  // IvfCatalog-stats pattern), a query beams only its nprobe nearest
+  // shards, and the search job reads only the exchange partitions that
+  // hold them. Per-query cost becomes O(nShards·dim) driver-side
+  // routing + O(nprobe·ef·log shardSize) beams — constant in corpus
+  // size once nprobe is fixed, exactly how IVF keeps probe cost flat
+  // while nlist grows. Recall now depends on
   // the router sending the query to the right shards: under HASH
   // sharding every shard sees the same distribution (centroids nearly
   // coincide — routing is a coin flip and recall degrades ∝
@@ -858,23 +820,4 @@ object Nsw {
                   queryVec: Array[Float], nprobe: Int): Seq[Int] =
     centroids.map { case (sh, c) => (cosineDbl(queryVec, c), sh) }
       .sortBy(t => (t._1, t._2)).take(nprobe).map(_._2).sorted
-
-  /** Routed search: route to the nprobe centroid-nearest shards, beam
-    * ONLY those (the shard filter is a pushed partition filter on the
-    * shard-partitioned store — unrouted shard directories are never
-    * opened), then the identical exact re-rank + recorded-candidate-set
-    * contract as [[search]]. Returns (result, candidates, routed
-    * shards). Candidates are by construction the full fan's candidates
-    * restricted to the routed shards (per-shard beams are independent).
-    */
-  def routedSearch(graph: DataFrame, corpus: DataFrame, vecCol: String,
-                   idCol: String, queryVec: Array[Float], k: Int,
-                   centroids: Array[(Int, Array[Double])], nprobe: Int,
-                   p: Params): (DataFrame, Seq[Long], Seq[Int]) = {
-    val routed = routeShards(centroids, queryVec, nprobe)
-    val (result, cands) = search(
-      graph.filter(col("shard").isin(routed.map(Integer.valueOf): _*)),
-      corpus, vecCol, idCol, queryVec, k, p)
-    (result, cands, routed)
-  }
 }

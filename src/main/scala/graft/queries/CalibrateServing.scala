@@ -50,7 +50,6 @@ object CalibrateServing {
       VectorQueries.HybridIndexStore.ensure(spark, dir, cents, planes)
     val indexed = Ann.readIndexed(spark, path)
     val p = VectorQueries.NswStore.params
-    val graph = Nsw.readGraph(spark, VectorQueries.NswStore.ensure(spark, dir))
     val routerCents = VectorQueries.NswRouterStore.ensure(spark, dir)
     val cb = VectorQueries.PqStore.ensure(spark, dir)
     val codes = Pq.readEncoded(spark, VectorQueries.PqCodeStore.ensure(spark, dir))
@@ -76,7 +75,7 @@ object CalibrateServing {
     }
     // a serving index opens its graph exchange once; the warm-up reps
     // of timeNs pay that, the timed ones measure the routed request
-    val opened = Nsw.openGraph(graph, p.nShards)
+    val opened = VectorQueries.NswStore.opened(spark, dir)
     val hnswNs = timeNs(reps) {
       val (res, _, _) = Nsw.routedBatchSearch(opened, "vec_id", Seq(0 -> q),
         k = 10, routerCents, VectorQueries.NswRouterStore.nprobe, p)

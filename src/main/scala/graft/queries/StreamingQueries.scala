@@ -258,7 +258,7 @@ object StreamingQueries {
     oracle = None,
     oracleLate = Some(() =>
       NswServeStore.lastDir.flatMap(NswServeStore.cands.get)
-        .map(VectorQueries.duckNswBatchSql(_, k = 3))))
+        .map(VectorQueries.duckBatchRerank(_, k = 3))))
 
   /** One run-to-completion COST-ROUTED serving stream per (sfDir, JVM):
     * the knn_batch query vectors replay as two MemoryStream

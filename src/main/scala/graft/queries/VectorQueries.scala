@@ -480,6 +480,7 @@ object VectorQueries {
     val candidates = scala.collection.concurrent.TrieMap.empty[String, Seq[Long]]
     @volatile var lastDir: Option[String] = None
     private val written = scala.collection.concurrent.TrieMap.empty[String, String]
+    private val openedByDir = scala.collection.concurrent.TrieMap.empty[String, Nsw.OpenedGraph]
     def ensure(s: org.apache.spark.sql.SparkSession, dir: String): String = {
       lastDir = Some(dir)
       written.getOrElseUpdate(dir, {
@@ -487,6 +488,18 @@ object VectorQueries {
         Nsw.writeGraph(Nsw.buildGraph(Tables.embeddings(s, dir),
           "embedding", "vec_id", params), p)
         p
+      })
+    }
+
+    /** The store's shard exchange, opened once per (fixture, JVM): the
+      * first search runs the exchange, every later one reads it. Opening
+      * is lazy, so a racing second open costs nothing.
+      */
+    def opened(s: org.apache.spark.sql.SparkSession, dir: String): Nsw.OpenedGraph = {
+      val path = ensure(s, dir)
+      openedByDir.getOrElseUpdate(dir, {
+        val graph = Nsw.readGraph(s, path)
+        Nsw.openGraph(graph, params.nShards)
       })
     }
   }
@@ -526,65 +539,97 @@ object VectorQueries {
   private[queries] val NswRouterStore = new GraphRouterStore(NswStore)
   private[queries] val HnswRouterStore = new GraphRouterStore(HnswStore)
 
-  /** Late-oracle builder for candidate-restricted batch re-ranks (the
-    * NSW batch/streaming serving gates): for each query, exact cosine
-    * rank over ITS recorded candidate id list — the SQL mirror of
-    * [[graft.operators.Nsw.batchSearch]]'s second stage.
+  /** One query of a recorded-candidate re-rank oracle: its id and
+    * vector, THIS run's recorded candidate ids, and optionally its
+    * routed shard list (rides its rows as `routed_shards`).
     */
-  private[queries] def duckNswBatchSql(cands: Map[Int, Seq[Long]],
-                                       k: Int): String = {
+  private[queries] final case class RerankLeg(qid: Int, q: Array[Float], cands: Seq[Long],
+                                              routed: Option[Seq[Int]] = None)
+
+  /** The late oracle of every graph gate: the exact re-rank of THIS
+    * run's recorded candidates, the SQL mirror of the opened-graph
+    * search's in-task re-rank. Per leg, the embeddings rows among the
+    * leg's candidates that pass `where`, with their cosine `dist` to the
+    * leg's query (computed from the parquet data) and `knn_rank` by
+    * (dist, vec_id). The top k of every leg, as (query_id, knn_rank,
+    * vec_id, [routed_shards], `extra`…, dist), projected by `select`
+    * and ordered by `orderBy`.
+    */
+  private[queries] def duckRecordedRerank(legs: Seq[RerankLeg], k: Int,
+                                          select: String, orderBy: String,
+                                          extra: Seq[String] = Nil,
+                                          where: Option[String] = None): String = {
+    val cols = extra.map(c => s"$c, ").mkString
+    legs.map { l =>
+      val routed = l.routed.fold("")(r => s"'${r.mkString(",")}' AS routed_shards, ")
+      s"""|  SELECT ${l.qid} AS query_id, vec_id, $routed${cols}dist,
+          |         row_number() OVER (ORDER BY dist, vec_id) AS knn_rank
+          |  FROM (SELECT vec_id, $cols${duckCosine("embedding", vecLit(l.q))} AS dist
+          |        FROM embeddings
+          |        WHERE vec_id IN (${l.cands.mkString(", ")})${where.fold("")(w => s" AND $w")})""".stripMargin
+    }.mkString(s"SELECT $select FROM (\n", "\nUNION ALL\n",
+      s"\n) WHERE knn_rank <= $k ORDER BY $orderBy")
+  }
+
+  /** The batch gates' projection of [[duckRecordedRerank]] over the
+    * knn_batch queries, with or without the routed shard column.
+    */
+  private[queries] def duckBatchRerank(cands: Map[Int, Seq[Long]], k: Int,
+                                       routes: Option[Map[Int, Seq[Int]]] = None): String = {
     val qvecs = batchQueryVecs.toMap
-    val legs = cands.toSeq.sortBy(_._1).map { case (qid, ids) =>
-      val qLit = vecLit(qvecs(qid))
-      s"""|SELECT query_id, knn_rank, vec_id, round(dist, 6) AS distance FROM (
-          |  SELECT $qid AS query_id, vec_id,
-          |         ${duckCosine("embedding", qLit)} AS dist,
-          |         row_number() OVER (ORDER BY ${duckCosine("embedding", qLit)}, vec_id) AS knn_rank
-          |  FROM embeddings WHERE vec_id IN (${ids.mkString(", ")})
-          |) WHERE knn_rank <= $k""".stripMargin
-    }
-    legs.mkString("SELECT query_id, CAST(knn_rank AS BIGINT) AS knn_rank, vec_id, distance\nFROM (\n",
-      "\nUNION ALL\n", "\n) ORDER BY query_id, knn_rank")
+    duckRecordedRerank(
+      cands.toSeq.sortBy(_._1).map { case (qid, ids) =>
+        RerankLeg(qid, qvecs(qid), ids, routes.map(_(qid)))
+      }, k,
+      "query_id, CAST(knn_rank AS BIGINT) AS knn_rank, vec_id, " +
+        routes.fold("")(_ => "routed_shards, ") + "round(dist, 6) AS distance",
+      "query_id, knn_rank")
+  }
+
+  /** The single-query gates' projection of [[duckRecordedRerank]]: the
+    * flagship query's top 10 among `cands` as (vec_id,
+    * [routed_shards], `extra`…, distance).
+    */
+  private def duckFlagshipRerank(cands: Seq[Long], routed: Option[Seq[Int]] = None,
+                                 extra: Seq[String] = Nil,
+                                 where: Option[String] = None): String = {
+    val cols = (routed.map(_ => "routed_shards").toSeq ++ extra).map(c => s"$c, ").mkString
+    duckRecordedRerank(Seq(RerankLeg(0, Queries.queryVec64, cands, routed)), k = 10,
+      s"vec_id, ${cols}round(dist, 6) AS distance", "distance, vec_id", extra, where)
+  }
+
+  /** The flagship query's full-fan search over `store`'s held exchange:
+    * its top 10 ranked in the search task, and its candidates recorded
+    * for the late oracle.
+    */
+  private def flagshipBeam(store: GraphStore)(s: org.apache.spark.sql.SparkSession,
+                                              dir: String) = {
+    val (res, cands) = Nsw.batchSearch(store.opened(s, dir), "vec_id",
+      Seq(0 -> Queries.queryVec64), k = 10, store.params)
+    store.candidates(dir) = cands.getOrElse(0, Seq.empty)
+    res.select(col("vec_id"), round(col("distance_score"), 6).as("distance"))
+      .orderBy(col("distance"), col("vec_id"))
   }
 
   private val nswBeam = QueryDef(
     "ann_nsw_beam",
     "Graph-ANN (sharded Navigable-Small-World) beam search over the " +
-      "persisted, shard-partitioned graph store: one beam per shard " +
-      "(each task walks O(ef·log n) nodes of its LOCAL graph — no " +
-      "shuffle, no full scan), ≤ nShards·efSearch candidate ids " +
-      "collected (bounded, like IVF's probe list), then exact cosine " +
-      "top-10 over the candidates via the same codegen'd expression + " +
-      "TakeOrderedAndProject as exact KNN, with the id IN-filter " +
-      "pushed to the corpus scan. Build = ascending-id NSW insertion " +
-      "per shard (deterministic; id tie-breaks in every heap). The " +
-      "oracle re-ranks this run's candidate set in SQL — a green hash " +
-      "proves the store round trip and the exact re-rank; NswSpec + " +
-      "RECALL.md cover graph quality (recall vs exact).",
-    (s, dir) => {
-      val path = NswStore.ensure(s, dir)
-      val (res, cands) = Nsw.search(Nsw.readGraph(s, path),
-        Tables.embeddings(s, dir), "embedding", "vec_id",
-        Queries.queryVec64, k = 10, NswStore.params)
-      NswStore.candidates(dir) = cands
-      res.select(col("vec_id"), round(col("distance_score"), 6).as("distance"))
-        .orderBy(col("distance"), col("vec_id"))
-    },
+      "persisted, shard-partitioned graph store: the store's shard " +
+      "exchange is opened once per fixture and held, and ONE job runs " +
+      "one beam per shard (each task walks O(ef·log n) nodes of its " +
+      "LOCAL graph — no full scan) and scores its ≤ efSearch " +
+      "candidates exactly in the same task, over the store's copy of " +
+      "each vector; the driver keeps the top 10 of the ≤ " +
+      "nShards·efSearch candidates (bounded, like IVF's probe list). " +
+      "Build = ascending-id NSW insertion per shard (deterministic; id " +
+      "tie-breaks in every heap). The oracle re-ranks this run's " +
+      "candidate set in SQL — a green hash proves the store round trip " +
+      "and the exact re-rank; NswSpec + RECALL.md cover graph quality " +
+      "(recall vs exact).",
+    flagshipBeam(NswStore),
     oracle = None,
     oracleLate = Some(() =>
-      NswStore.lastDir.flatMap(NswStore.candidates.get).map { cands =>
-        val qLit = vecLit(Queries.queryVec64)
-        s"""
-        |WITH d AS (
-        |  SELECT vec_id, ${duckCosine("embedding", qLit)} AS dist
-        |  FROM embeddings WHERE vec_id IN (${cands.mkString(", ")})
-        |), top AS (
-        |  SELECT vec_id, dist FROM d ORDER BY dist, vec_id LIMIT 10
-        |)
-        |SELECT vec_id, round(dist, 6) AS distance
-        |FROM top ORDER BY distance, vec_id
-        """.stripMargin.trim
-      }))
+      NswStore.lastDir.flatMap(NswStore.candidates.get).map(duckFlagshipRerank(_))))
 
   private val hnswBeam = QueryDef(
     "ann_hnsw_beam",
@@ -599,35 +644,16 @@ object VectorQueries {
       "top-level entry point through the upper layers, then runs the " +
       "efSearch beam at layer 0 — the log-layered entry replaces the " +
       "cap-0 store's smallest-id entry, which at large shard sizes is " +
-      "an arbitrary corner the beam must walk in from. Exact cosine " +
-      "top-10 re-rank over the ≤ nShards·efSearch candidates, " +
-      "identical second stage (and late oracle: re-rank THIS run's " +
-      "recorded candidate set) to ann_nsw_beam; NswSpec locks the " +
-      "layer invariants, RECALL.md the ef sweep vs flat NSW.",
-    (s, dir) => {
-      val path = HnswStore.ensure(s, dir)
-      val (res, cands) = Nsw.search(Nsw.readGraph(s, path),
-        Tables.embeddings(s, dir), "embedding", "vec_id",
-        Queries.queryVec64, k = 10, HnswStore.params)
-      HnswStore.candidates(dir) = cands
-      res.select(col("vec_id"), round(col("distance_score"), 6).as("distance"))
-        .orderBy(col("distance"), col("vec_id"))
-    },
+      "an arbitrary corner the beam must walk in from. Same one-job " +
+      "search over the held shard exchange as ann_nsw_beam, with the " +
+      "exact top-10 re-rank of the ≤ nShards·efSearch candidates in " +
+      "the beam tasks (and the same late oracle: re-rank THIS run's " +
+      "recorded candidate set); NswSpec locks the layer invariants, " +
+      "RECALL.md the ef sweep vs flat NSW.",
+    flagshipBeam(HnswStore),
     oracle = None,
     oracleLate = Some(() =>
-      HnswStore.lastDir.flatMap(HnswStore.candidates.get).map { cands =>
-        val qLit = vecLit(Queries.queryVec64)
-        s"""
-        |WITH d AS (
-        |  SELECT vec_id, ${duckCosine("embedding", qLit)} AS dist
-        |  FROM embeddings WHERE vec_id IN (${cands.mkString(", ")})
-        |), top AS (
-        |  SELECT vec_id, dist FROM d ORDER BY dist, vec_id LIMIT 10
-        |)
-        |SELECT vec_id, round(dist, 6) AS distance
-        |FROM top ORDER BY distance, vec_id
-        """.stripMargin.trim
-      }))
+      HnswStore.lastDir.flatMap(HnswStore.candidates.get).map(duckFlagshipRerank(_))))
 
   private object HnswRoutedState {
     val candidates = scala.collection.concurrent.TrieMap.empty[String, Seq[Long]]
@@ -646,25 +672,23 @@ object VectorQueries {
       "centroid is shuffle-order-independent), the query routes to its " +
       "nprobe=2 cosine-nearest shards driver-side (O(nShards·dim), the " +
       "graph twin of Ann.probeIds), and ONLY those shards beam — the " +
-      "shard filter is a pushed partition filter on the " +
-      "shard-partitioned store, so unrouted shard directories are " +
-      "never opened. Per-query cost is then O(nprobe·ef·log shardSize) " +
-      "— constant in corpus size, exactly how IVF keeps probe cost " +
-      "flat as nlist grows. Exact cosine top-10 re-rank over the " +
-      "≤ nprobe·efSearch candidates; the late oracle re-ranks THIS " +
-      "run's recorded candidate set (identical contract to " +
-      "ann_hnsw_beam), with the routed shard list riding the output. " +
-      "NswSpec asserts routed candidates ≡ the full fan's restricted " +
-      "to the routed shards; RECALL.md measures the recall/fan-out " +
-      "trade per nprobe.",
+      "search job over the store's held shard exchange reads only the " +
+      "exchange partitions of the routed shards, so it runs at most " +
+      "nprobe tasks (PlanShapeSpec pins it). Per-query cost is then " +
+      "O(nprobe·ef·log shardSize) — constant in corpus size, exactly " +
+      "how IVF keeps probe cost flat as nlist grows. Exact cosine " +
+      "top-10 re-rank of the ≤ nprobe·efSearch candidates in the beam " +
+      "tasks; the late oracle re-ranks THIS run's recorded candidate " +
+      "set (identical contract to ann_hnsw_beam), with the routed " +
+      "shard list riding the output. NswSpec asserts routed candidates " +
+      "≡ the full fan's restricted to the routed shards; RECALL.md " +
+      "measures the recall/fan-out trade per nprobe.",
     (s, dir) => {
-      val path = HnswStore.ensure(s, dir)
-      val cents = HnswRouterStore.ensure(s, dir)
-      val (res, cands, routed) = Nsw.routedSearch(
-        Nsw.readGraph(s, path), Tables.embeddings(s, dir),
-        "embedding", "vec_id", Queries.queryVec64, k = 10,
-        cents, HnswRouterStore.nprobe, HnswStore.params)
-      HnswRoutedState.candidates(dir) = cands
+      val (res, cands, routes) = Nsw.routedBatchSearch(HnswStore.opened(s, dir),
+        "vec_id", Seq(0 -> Queries.queryVec64), k = 10,
+        HnswRouterStore.ensure(s, dir), HnswRouterStore.nprobe, HnswStore.params)
+      val routed = routes(0)
+      HnswRoutedState.candidates(dir) = cands.getOrElse(0, Seq.empty)
       HnswRoutedState.routed(dir) = routed
       HnswRoutedState.lastDir = Some(dir)
       res.select(col("vec_id"), lit(routed.mkString(",")).as("routed_shards"),
@@ -677,64 +701,44 @@ object VectorQueries {
         for {
           cands <- HnswRoutedState.candidates.get(d)
           routed <- HnswRoutedState.routed.get(d)
-        } yield {
-          val qLit = vecLit(Queries.queryVec64)
-          s"""
-          |WITH d AS (
-          |  SELECT vec_id, ${duckCosine("embedding", qLit)} AS dist
-          |  FROM embeddings WHERE vec_id IN (${cands.mkString(", ")})
-          |), top AS (
-          |  SELECT vec_id, dist FROM d ORDER BY dist, vec_id LIMIT 10
-          |)
-          |SELECT vec_id, '${routed.mkString(",")}' AS routed_shards,
-          |       round(dist, 6) AS distance
-          |FROM top ORDER BY distance, vec_id
-          """.stripMargin.trim
-        }
+        } yield duckFlagshipRerank(cands, routed = Some(routed))
       }))
 
   private val filteredHnsw = QueryDef(
     "knn_filtered_hnsw",
     "Hybrid predicate + graph-ANN — the retrieval composition the IVF " +
       "family already gates (knn_filtered_ivf_rewrite) applied to the " +
-      "graph index: the HNSW beams run unchanged (the graph is " +
-      "predicate-agnostic; filtering nodes DURING traversal would " +
-      "disconnect it), and the relational predicate applies inside the " +
-      "exact candidate re-rank, composing with the candidate IN-filter " +
-      "on ONE corpus scan (both reach the parquet scan as " +
-      "PushedFilters — PlanShapeSpec asserts it). The beam oversamples " +
-      "for the filter by construction: efSearch candidates per shard " +
-      "are re-ranked but only predicate-survivors can place, so a " +
-      "deployment raises efSearch ∝ 1/selectivity (documented; at " +
+      "graph index: the HNSW beams run unchanged over the store's held " +
+      "shard exchange (the graph is predicate-agnostic; filtering " +
+      "nodes DURING traversal would disconnect it), and since the " +
+      "predicate lives in the corpus, not in the graph store, the " +
+      "search's candidates are re-ranked in SQL, where the relational " +
+      "predicate composes with the candidate IN-filter on ONE corpus " +
+      "scan (both reach the parquet scan as PushedFilters under a " +
+      "TakeOrderedAndProject — PlanShapeSpec asserts it). The beam " +
+      "oversamples for the filter by construction: efSearch candidates " +
+      "per shard are re-ranked but only predicate-survivors can place, " +
+      "so a deployment raises efSearch ∝ 1/selectivity (documented; at " +
       "~30% selectivity here, 4·32 candidates comfortably cover " +
       "top-10). Late oracle: the same predicate + exact re-rank over " +
       "THIS run's recorded candidate set.",
     (s, dir) => {
-      val path = HnswStore.ensure(s, dir)
-      val (res, cands) = Nsw.search(Nsw.readGraph(s, path),
-        Tables.embeddings(s, dir).filter(col("label").isin(2, 5, 8)),
-        "embedding", "vec_id", Queries.queryVec64, k = 10, HnswStore.params)
+      val (_, byQ) = Nsw.batchSearch(HnswStore.opened(s, dir), "vec_id",
+        Seq(0 -> Queries.queryVec64), k = 10, HnswStore.params)
+      val cands = byQ.getOrElse(0, Seq.empty)
       FilteredHnswState.candidates(dir) = cands
       FilteredHnswState.lastDir = Some(dir)
-      res.select(col("vec_id"), col("label"),
+      Knn.search(Tables.embeddings(s, dir).filter(col("label").isin(2, 5, 8))
+          .filter(col("vec_id").isin(cands: _*)),
+          "embedding", "vec_id", Queries.queryVec64, k = 10)
+        .select(col("vec_id"), col("label"),
           round(col("distance_score"), 6).as("distance"))
         .orderBy(col("distance"), col("vec_id"))
     },
     oracle = None,
     oracleLate = Some(() =>
       FilteredHnswState.lastDir.flatMap(FilteredHnswState.candidates.get).map { cands =>
-        val qLit = vecLit(Queries.queryVec64)
-        s"""
-        |WITH d AS (
-        |  SELECT vec_id, label, ${duckCosine("embedding", qLit)} AS dist
-        |  FROM embeddings
-        |  WHERE label IN (2, 5, 8) AND vec_id IN (${cands.mkString(", ")})
-        |), top AS (
-        |  SELECT vec_id, label, dist FROM d ORDER BY dist, vec_id LIMIT 10
-        |)
-        |SELECT vec_id, label, round(dist, 6) AS distance
-        |FROM top ORDER BY distance, vec_id
-        """.stripMargin.trim
+        duckFlagshipRerank(cands, extra = Seq("label"), where = Some("label IN (2, 5, 8)"))
       }))
 
   private object FilteredHnswState {
@@ -925,8 +929,7 @@ object VectorQueries {
         (ranked(corpus.filter(col("vec_id").isin(sl: _*))), sl)
       case "hnsw" =>
         val p = router.store.params.copy(efSearch = ef.toInt)
-        val (res, cands, _) = Nsw.routedBatchSearch(
-          Nsw.openGraph(Nsw.readGraph(s, router.store.ensure(s, dir)), p.nShards),
+        val (res, cands, _) = Nsw.routedBatchSearch(router.store.opened(s, dir),
           "vec_id", Seq(0 -> q), k, router.ensure(s, dir), router.nprobe, p)
         val ids = cands.getOrElse(0, Seq.empty).sorted
         (if (pred.isEmpty) res else ranked(corpus.filter(col("vec_id").isin(ids: _*))), ids)
@@ -1021,27 +1024,6 @@ object VectorQueries {
     @volatile var lastDir: Option[String] = None
   }
 
-  /** duckNswBatchSql with each query's routed shard list riding the
-    * output as a literal column — the routed-batch late oracle.
-    */
-  private def duckRoutedBatchSql(cands: Map[Int, Seq[Long]],
-                                 routes: Map[Int, Seq[Int]], k: Int): String = {
-    val qvecs = batchQueryVecs.toMap
-    val legs = cands.toSeq.sortBy(_._1).map { case (qid, ids) =>
-      val qLit = vecLit(qvecs(qid))
-      val routed = routes(qid).mkString(",")
-      s"""|SELECT query_id, knn_rank, vec_id, routed_shards, round(dist, 6) AS distance FROM (
-          |  SELECT $qid AS query_id, vec_id, '$routed' AS routed_shards,
-          |         ${duckCosine("embedding", qLit)} AS dist,
-          |         row_number() OVER (ORDER BY ${duckCosine("embedding", qLit)}, vec_id) AS knn_rank
-          |  FROM embeddings WHERE vec_id IN (${ids.mkString(", ")})
-          |) WHERE knn_rank <= $k""".stripMargin
-    }
-    legs.mkString(
-      "SELECT query_id, CAST(knn_rank AS BIGINT) AS knn_rank, vec_id, routed_shards, distance\nFROM (\n",
-      "\nUNION ALL\n", "\n) ORDER BY query_id, knn_rank")
-  }
-
   private val nswRoutedBatch = QueryDef(
     "ann_nsw_routed_batch",
     "Shard-ROUTED batch graph-ANN — the router applied to the BATCH " +
@@ -1062,11 +1044,9 @@ object VectorQueries {
       "NswSpec asserts routed-batch candidates ≡ the full batch fan's " +
       "restricted to each query's routed shards.",
     (s, dir) => {
-      val graph = Nsw.readGraph(s, NswStore.ensure(s, dir))
-      val cents = NswRouterStore.ensure(s, dir)
-      val (res, cands, routes) = Nsw.routedBatchSearch(
-        Nsw.openGraph(graph, NswStore.params.nShards), "vec_id",
-        batchQueryVecs, k = 3, cents, NswRouterStore.nprobe, NswStore.params)
+      val (res, cands, routes) = Nsw.routedBatchSearch(NswStore.opened(s, dir),
+        "vec_id", batchQueryVecs, k = 3, NswRouterStore.ensure(s, dir),
+        NswRouterStore.nprobe, NswStore.params)
       RoutedBatchState.cands(dir) = cands
       RoutedBatchState.routes(dir) = routes
       RoutedBatchState.lastDir = Some(dir)
@@ -1086,7 +1066,7 @@ object VectorQueries {
         for {
           cands <- RoutedBatchState.cands.get(d)
           routes <- RoutedBatchState.routes.get(d)
-        } yield duckRoutedBatchSql(cands, routes, k = 3)
+        } yield duckBatchRerank(cands, k = 3, Some(routes))
       }))
 
   private object CostServing4State {
@@ -1418,7 +1398,6 @@ object VectorQueries {
       val nTotal = ivf.clusterRows.values.sum
       val nMatch = corpus.filter(col("label") === 3).count()
       val p = NswStore.params
-      val graph = Nsw.readGraph(s, NswStore.ensure(s, dir))
       val routerCents = NswRouterStore.ensure(s, dir)
       val cb = PqStore.ensure(s, dir)
       val codes = Pq.readEncoded(s, PqCodeStore.ensure(s, dir))
@@ -1451,7 +1430,7 @@ object VectorQueries {
             (res, sl.map { case (q, ids) => q -> ids.map(_.asInstanceOf[Long]).sorted })
           case "hnsw" =>
             val (_, cands, _) = Nsw.routedBatchSearch(
-              Nsw.openGraph(graph, p.nShards), "vec_id", qs, k = 3,
+              NswStore.opened(s, dir), "vec_id", qs, k = 3,
               routerCents, NswRouterStore.nprobe, p.copy(efSearch = price.efEff.toInt))
             val rec0 = qs.map { case (qid, _) =>
               qid -> cands.getOrElse(qid, Seq.empty).sorted

@@ -25,6 +25,18 @@ class NswSpec extends SparkSpec {
 
   private def layer0(r: Row): Seq[Long] = layersOf(r).head
 
+  /** One query through the full-fan search over a freshly opened
+    * `g`: (ranked rows, the query's candidate ids).
+    */
+  private def search1(g: DataFrame, qv: Array[Float], pp: Nsw.Params): (DataFrame, Seq[Long]) = {
+    val (res, byQ) = Nsw.batchSearch(Nsw.openGraph(g, pp.nShards), "vec_id", Seq(0 -> qv), 10, pp)
+    (res, byQ.getOrElse(0, Seq.empty))
+  }
+
+  /** The graph store's own shard of every node. */
+  private def shardOf(g: DataFrame): Map[Long, Int] =
+    g.select("vec_id", "shard").collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+
   /** Per shard, the nodes not reachable at layer 0 from the shard's
     * entry (highest level, ties to the smallest id).
     */
@@ -65,7 +77,7 @@ class NswSpec extends SparkSpec {
     // with ef covering the whole shard the beam must visit everything
     // reachable, so the candidate union contains the exact global top-10
     val pAll = p.copy(efSearch = 1000)
-    val (res, cands) = Nsw.search(graph, emb, "embedding", "vec_id", q, 10, pAll)
+    val (res, cands) = search1(graph, q, pAll)
     val exact = Knn.search(emb, "embedding", "vec_id", q, 10)
       .select("vec_id").collect().map(_.getLong(0)).toSeq
     assert(exact.toSet.subsetOf(cands.toSet))
@@ -73,14 +85,14 @@ class NswSpec extends SparkSpec {
   }
 
   test("search is deterministic: identical candidates and results across runs") {
-    val (r1, c1) = Nsw.search(graph, emb, "embedding", "vec_id", q, 10, p)
-    val (r2, c2) = Nsw.search(graph, emb, "embedding", "vec_id", q, 10, p)
+    val (r1, c1) = search1(graph, q, p)
+    val (r2, c2) = search1(graph, q, p)
     assert(c1 == c2)
     assert(r1.collect().toSeq == r2.collect().toSeq)
   }
 
   test("default-ef beam reaches recall@10 >= 0.8 vs exact KNN on the fixture") {
-    val (res, cands) = Nsw.search(graph, emb, "embedding", "vec_id", q, 10, p)
+    val (res, cands) = search1(graph, q, p)
     assert(cands.length <= p.nShards * p.efSearch)
     val got = res.select("vec_id").collect().map(_.getLong(0)).toSet
     val exact = Knn.search(emb, "embedding", "vec_id", q, 10)
@@ -103,7 +115,7 @@ class NswSpec extends SparkSpec {
     val recalls = qs.map { qv =>
       val exact = Knn.search(emb, "embedding", "vec_id", qv, 10)
         .select("vec_id").collect().map(_.getLong(0)).toSet
-      val got = Nsw.search(graph, emb, "embedding", "vec_id", qv, 10, p)
+      val got = search1(graph, qv, p)
         ._1.select("vec_id").collect().map(_.getLong(0)).toSet
       (exact & got).size / 10.0
     }
@@ -131,7 +143,7 @@ class NswSpec extends SparkSpec {
       assert(n == 0, s"shard $shard disconnected after append")
     }
     // batch vectors are actually findable: search quality holds
-    val (res, _) = Nsw.search(appended, emb, "embedding", "vec_id", q, 10, p)
+    val (res, _) = search1(appended, q, p)
     val exact = Knn.search(emb, "embedding", "vec_id", q, 10)
       .select("vec_id").collect().map(_.getLong(0)).toSet
     val gotTop = res.select("vec_id").collect().map(_.getLong(0)).toSet
@@ -175,8 +187,8 @@ class NswSpec extends SparkSpec {
   test("beam cost is sublinear: default ef visits a fraction of each shard") {
     // the candidate list per shard is capped at efSearch = 32 of ~125
     // shard rows — the emitted row bound that holds at any scale
-    val perShard = Nsw.shardCandidates(graph, q, p)
-      .groupBy("shard").count().collect().map(_.getAs[Long]("count"))
+    val shard = shardOf(graph)
+    val perShard = search1(graph, q, p)._2.groupBy(shard).values.map(_.length)
     assert(perShard.nonEmpty && perShard.forall(_ <= p.efSearch))
   }
 
@@ -236,10 +248,10 @@ class NswSpec extends SparkSpec {
   test("search over a windowed store: recall holds, per-shard candidates bounded") {
     val ws = 125L
     val wgraph = Nsw.buildGraphWindowed(emb, "embedding", "vec_id", ws, p).cache()
-    val perShard = Nsw.shardCandidates(wgraph, q, p)
-      .groupBy("shard").count().collect().map(_.getAs[Long]("count"))
-    assert(perShard.length == 4 && perShard.forall(_ <= p.efSearch))
-    val (res, _) = Nsw.search(wgraph, emb, "embedding", "vec_id", q, 10, p)
+    val shard = shardOf(wgraph)
+    val (res, cands) = search1(wgraph, q, p)
+    val perShard = cands.groupBy(shard).values.map(_.length)
+    assert(perShard.size == 4 && perShard.forall(_ <= p.efSearch))
     val exact = Knn.search(emb, "embedding", "vec_id", q, 10)
       .select("vec_id").collect().map(_.getLong(0)).toSet
     val gotTop = res.select("vec_id").collect().map(_.getLong(0)).toSet
@@ -301,8 +313,8 @@ class NswSpec extends SparkSpec {
   }
 
   test("hnsw: search is deterministic and recall@10 >= 0.8 vs exact") {
-    val (r1, c1) = Nsw.search(hnsw, emb, "embedding", "vec_id", q, 10, ph)
-    val (r2, c2) = Nsw.search(hnsw, emb, "embedding", "vec_id", q, 10, ph)
+    val (r1, c1) = search1(hnsw, q, ph)
+    val (r2, c2) = search1(hnsw, q, ph)
     assert(c1 == c2)
     assert(c1.length <= p.nShards * p.efSearch)
     assert(r1.collect().toSeq == r2.collect().toSeq)
@@ -315,7 +327,7 @@ class NswSpec extends SparkSpec {
 
   test("hnsw: exhaustive layer-0 beam returns the exact per-shard ranking") {
     val pAll = ph.copy(efSearch = 1000)
-    val (res, cands) = Nsw.search(hnsw, emb, "embedding", "vec_id", q, 10, pAll)
+    val (res, cands) = search1(hnsw, q, pAll)
     val exact = Knn.search(emb, "embedding", "vec_id", q, 10)
       .select("vec_id").collect().map(_.getLong(0)).toSeq
     assert(exact.toSet.subsetOf(cands.toSet))
@@ -380,6 +392,16 @@ class NswSpec extends SparkSpec {
 
   private lazy val routerCents = Nsw.shardCentroids(hnsw)
 
+  /** One query through the routed search over a freshly opened `g`:
+    * (ranked rows, the query's candidate ids, its routed shards).
+    */
+  private def routed1(g: DataFrame, qv: Array[Float], cents: Array[(Int, Array[Double])],
+                      nprobe: Int, pp: Nsw.Params): (DataFrame, Seq[Long], Seq[Int]) = {
+    val (res, byQ, routes) = Nsw.routedBatchSearch(Nsw.openGraph(g, pp.nShards), "vec_id",
+      Seq(0 -> qv), 10, cents, nprobe, pp)
+    (res, byQ.getOrElse(0, Seq.empty), routes(0))
+  }
+
   test("router: centroids cover every shard and are shuffle-order-independent") {
     assert(routerCents.map(_._1).toSeq == (0 until p.nShards))
     val again = Nsw.shardCentroids(hnsw.repartition(13))
@@ -389,21 +411,17 @@ class NswSpec extends SparkSpec {
   }
 
   test("router: routed candidates ≡ the full fan's restricted to the routed shards") {
-    val (_, candsR, routed) = Nsw.routedSearch(hnsw, emb, "embedding",
-      "vec_id", q, 10, routerCents, nprobe = 2, ph)
+    val (_, candsR, routed) = routed1(hnsw, q, routerCents, nprobe = 2, ph)
     assert(routed.length == 2 && routed == routed.sorted)
-    val restricted = Nsw.shardCandidates(hnsw, q, ph)
-      .filter(col("shard").isin(routed.map(Integer.valueOf): _*))
-      .select("vec_id").collect().map(_.getLong(0)).toSeq.sorted
+    val shard = shardOf(hnsw)
+    val restricted = search1(hnsw, q, ph)._2.filter(id => routed.contains(shard(id)))
     assert(candsR == restricted,
       "per-shard beams are independent — routing must only drop shards")
   }
 
   test("router: nprobe = nShards ≡ the full fan; recall degrades gracefully at nprobe 2") {
-    val (resFull, candsFull) = Nsw.search(hnsw, emb, "embedding",
-      "vec_id", q, 10, ph)
-    val (resAll, candsAll, _) = Nsw.routedSearch(hnsw, emb, "embedding",
-      "vec_id", q, 10, routerCents, nprobe = p.nShards, ph)
+    val (resFull, candsFull) = search1(hnsw, q, ph)
+    val (resAll, candsAll, _) = routed1(hnsw, q, routerCents, nprobe = p.nShards, ph)
     assert(candsAll == candsFull)
     assert(resAll.collect().toSeq == resFull.collect().toSeq)
     val exact = Knn.search(emb, "embedding", "vec_id", q, 10)
@@ -412,8 +430,7 @@ class NswSpec extends SparkSpec {
       val got = res.select("vec_id").collect().map(_.getLong(0)).toSet
       (got & exact).size / 10.0
     }
-    val (res2, _, _) = Nsw.routedSearch(hnsw, emb, "embedding",
-      "vec_id", q, 10, routerCents, nprobe = 2, ph)
+    val (res2, _, _) = routed1(hnsw, q, routerCents, nprobe = 2, ph)
     val r2 = recall(res2); val rf = recall(resFull)
     // under HASH sharding every shard sees the same distribution, so
     // routing approximates a uniform shard sample: recall ≈ rf·nprobe/n
@@ -440,10 +457,9 @@ class NswSpec extends SparkSpec {
     assert(routes.values.toSet.size > 1,
       "perturbed queries should route differently; widen the perturbation if not")
     // full fan per query, restricted to that query's routed shards
+    val shard = shardOf(graph)
     queries.foreach { case (qid, qv) =>
-      val restricted = Nsw.shardCandidates(graph, qv, p)
-        .filter(col("shard").isin(routes(qid).map(Integer.valueOf): _*))
-        .select("vec_id").collect().map(_.getLong(0)).toSeq.sorted
+      val restricted = search1(graph, qv, p)._2.filter(id => routes(qid).contains(shard(id)))
       assert(byQ(qid) == restricted,
         s"query $qid: routed-batch candidates must be the full fan's restricted set")
     }
@@ -619,7 +635,7 @@ class NswSpec extends SparkSpec {
     }
   }
 
-  test("job pins: single-query search and routedSearch run 3 jobs and 3 stages at both caps") {
+  test("job pins: a warm single-query search over a held opened graph runs 1 job and 1 stage, full fan and routed, at both caps") {
     val root = java.nio.file.Files.createTempDirectory("nsw_jobs").toString
     val counter = new JobCounter(spark)
     try {
@@ -628,21 +644,42 @@ class NswSpec extends SparkSpec {
         Nsw.writeGraph(Nsw.buildGraph(emb, "embedding", "vec_id", pp), path)
         val store = Nsw.readGraph(spark, path)
         val cents = Nsw.shardCentroids(store)
+        val opened = Nsw.openGraph(store, pp.nShards)
         def pin(name: String)(run: => DataFrame): Unit = {
-          run.collect() // warm
+          run.collect() // warm: the first search runs the exchange
           counter.reset()
           assert(run.collect().length == 10)
-          // one exchange job for the shard beams, the candidate collect,
-          // and the re-rank over the pushed IN-filter
-          assert(counter.settle() == ((3, 3)), s"cap ${pp.maxLevel} $name")
+          // the held exchange's map stage is skipped: one search job,
+          // its result stage only, and the ranked rows are local
+          assert(counter.settle() == ((1, 1)), s"cap ${pp.maxLevel} $name")
         }
-        pin("search")(Nsw.search(store, emb, "embedding", "vec_id", q, 10, pp)._1)
-        pin("routedSearch")(Nsw.routedSearch(store, emb, "embedding", "vec_id", q, 10,
+        pin("batchSearch")(Nsw.batchSearch(opened, "vec_id", Seq(0 -> q), 10, pp)._1)
+        pin("routedBatchSearch")(Nsw.routedBatchSearch(opened, "vec_id", Seq(0 -> q), 10,
           cents, nprobe = 2, pp)._1)
       }
     } finally {
       counter.close()
       new scala.reflect.io.Directory(new java.io.File(root)).deleteRecursively()
+    }
+  }
+
+  test("malformed batches: duplicate query ids and k < 1 are rejected, full fan and routed") {
+    val opened = Nsw.openGraph(graph, p.nShards)
+    val cents = Nsw.shardCentroids(graph)
+    val dup = Seq(3 -> q, 4 -> q, 3 -> q.map(_ * 2))
+    val e1 = intercept[IllegalArgumentException](
+      Nsw.batchSearch(opened, "vec_id", dup, 10, p))
+    assert(e1.getMessage.contains("duplicate query ids: 3"), e1.getMessage)
+    val e2 = intercept[IllegalArgumentException](
+      Nsw.routedBatchSearch(opened, "vec_id", dup, 10, cents, nprobe = 2, p))
+    assert(e2.getMessage.contains("duplicate query ids: 3"), e2.getMessage)
+    Seq(0, -1).foreach { k =>
+      val e3 = intercept[IllegalArgumentException](
+        Nsw.batchSearch(opened, "vec_id", Seq(0 -> q), k, p))
+      assert(e3.getMessage.contains(s"got $k"), e3.getMessage)
+      val e4 = intercept[IllegalArgumentException](
+        Nsw.routedBatchSearch(opened, "vec_id", Seq(0 -> q), k, cents, nprobe = 2, p))
+      assert(e4.getMessage.contains(s"got $k"), e4.getMessage)
     }
   }
 }

@@ -69,17 +69,6 @@ class PlanShapeSpec extends SparkSpec {
     assert(exchanges == 1, s"expected exactly the rank shuffle, got $exchanges:\n$p")
   }
 
-  test("NSW re-rank: candidate IN-filter pushed to the scan, top-k without global sort") {
-    val p = planOf("ann_nsw_beam")
-    // the exact stage must be the same shape as exact KNN: a bounded
-    // per-task heap over the candidate-pruned scan
-    assert(p.contains("TakeOrderedAndProject"), p)
-    assert(p.contains("PushedFilters: [In(vec_id") ||
-      p.contains("PushedFilters: [IsNotNull(vec_id), In(vec_id"),
-      s"candidate id IN-filter should push into parquet:\n$p")
-    assert(!p.contains("Exchange"), s"NSW re-rank must not shuffle:\n$p")
-  }
-
   test("filtered HNSW: predicate AND candidate IN-filter compose on ONE re-rank scan") {
     val p = planOf("knn_filtered_hnsw")
     assert(p.contains("TakeOrderedAndProject"), p)
@@ -90,30 +79,34 @@ class PlanShapeSpec extends SparkSpec {
     assert(!p.contains("Exchange"), s"filtered re-rank must not shuffle:\n$p")
   }
 
-  test("routed HNSW: the shard filter prunes the store to the routed partitions") {
+  test("routed HNSW: a routed job over the opened graph runs at most nprobe tasks, the full fan nShards") {
     import graft.operators.Nsw
     val emb = Tables.embeddings(spark, sf("sf0.001"))
     val params = Nsw.Params(nShards = 4, m = 8, efConstruction = 32, efSearch = 32,
       maxLevel = Nsw.HnswMaxLevel)
     val dir = java.nio.file.Files.createTempDirectory("graft_hnsw_route").toString
+    val counter = new JobCounter(spark)
     try {
       Nsw.writeGraph(
         Nsw.buildGraph(emb, "embedding", "vec_id", params), dir)
       val store = Nsw.readGraph(spark, dir)
       val cents = Nsw.shardCentroids(store)
-      val routed = Nsw.routeShards(cents, Queries.queryVec64, nprobe = 2)
-      // the exact relation routedSearch beams over: unrouted shard
-      // DIRECTORIES must never be opened (static partition pruning on
-      // the shard-partitioned store — the IVF probe-pruning shape)
-      val pruned = store.filter(
-        org.apache.spark.sql.functions.col("shard")
-          .isin(routed.map(Integer.valueOf): _*))
-      val scan = fileScanOf(pruned)
-      assert(scan.nonEmpty, pruned.queryExecution.executedPlan.toString)
-      assert(scan.get.selectedPartitions.partitionCount == routed.length,
-        s"expected ${routed.length} routed shard dirs, scanned " +
-          s"${scan.get.selectedPartitions.partitionCount}")
+      val opened = Nsw.openGraph(store, params.nShards)
+      val one = Seq(0 -> Queries.queryVec64)
+      Nsw.batchSearch(opened, "vec_id", one, 10, params) // runs the exchange
+      // the job over the held exchange reads only the partitions of the
+      // routed shards (partition pruning on the exchanged RDD — the IVF
+      // probe-pruning shape): unrouted shards' partitions get no task
+      def tasksOf(search: => Unit): Int = {
+        counter.reset(); search; counter.settle(); counter.tasksRun
+      }
+      val full = tasksOf(Nsw.batchSearch(opened, "vec_id", one, 10, params))
+      val routed = tasksOf(Nsw.routedBatchSearch(opened, "vec_id", one, 10, cents,
+        nprobe = 2, params))
+      assert(full == params.nShards, s"full fan ran $full tasks")
+      assert(routed >= 1 && routed <= 2, s"routed (nprobe 2) ran $routed tasks")
     } finally {
+      counter.close()
       new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
     }
   }
