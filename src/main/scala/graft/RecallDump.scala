@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.{Ann, IvfPq, Knn, Pq}
-import graft.queries.Queries
+import graft.queries.QueryVectors
 import org.apache.spark.sql.functions._
 
 /** Dumps RECALL.md — the recall-vs-nprobe curve of the PERSISTED KMeans
@@ -43,7 +43,7 @@ object RecallDump {
     val corpusQs = emb.filter(col("vec_id") % 100 === 10)
       .orderBy("vec_id").limit(MaxQueries).select("embedding").collect()
       .map(_.getSeq[Float](0).toArray)
-    val points = curveOver(emb, indexed, cents, corpusQs :+ Queries.queryVec64, nlist, k)
+    val points = curveOver(emb, indexed, cents, corpusQs :+ QueryVectors.queryVec64, nlist, k)
     emb.unpersist()
     points
   }
@@ -129,7 +129,7 @@ object RecallDump {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val qs = emb.filter(col("vec_id") % 100 === 10)
       .orderBy("vec_id").limit(MaxQueries).select("embedding").collect()
-      .map(_.getSeq[Float](0).toArray) :+ Queries.queryVec64
+      .map(_.getSeq[Float](0).toArray) :+ QueryVectors.queryVec64
     val exactByQ = qs.map(qv => Knn.search(emb, "embedding", "vec_id", qv, k))
     val pts = Seq(0, 1, 2).map { r =>
       var scanned = 0L
@@ -161,7 +161,7 @@ object RecallDump {
     val enc = graft.operators.Pq.encode(emb, "embedding", cb).cache()
     val qs = emb.filter(col("vec_id") % 100 === 10)
       .orderBy("vec_id").limit(MaxQueries).select("embedding").collect()
-      .map(_.getSeq[Float](0).toArray) :+ Queries.queryVec64
+      .map(_.getSeq[Float](0).toArray) :+ QueryVectors.queryVec64
     val exactByQ = qs.map(qv => Knn.search(emb, "embedding", "vec_id", qv, k))
     val pts = sweep(emb, enc, cb, qs, k)
     enc.unpersist(); emb.unpersist()
@@ -274,7 +274,7 @@ object RecallDump {
     val qs0 = emb.filter(col("vec_id") % 100 === 10)
       .orderBy("vec_id").limit(MaxQueries).select("embedding").collect()
       .map(_.getSeq[Float](0).toArray)
-    val qs = if (includeFlagship) qs0 :+ Queries.queryVec64 else qs0
+    val qs = if (includeFlagship) qs0 :+ QueryVectors.queryVec64 else qs0
     val exactByQ = qs.map(qv => Knn.search(emb, "embedding", "vec_id", qv, k))
     // one held exchange per curve, one batch search per beam width
     val opened = graft.operators.Nsw.openGraph(graph, base.nShards)
@@ -314,7 +314,7 @@ object RecallDump {
     val qs0 = emb.filter(col("vec_id") % 100 === 10)
       .orderBy("vec_id").limit(MaxQueries).select("embedding").collect()
       .map(_.getSeq[Float](0).toArray)
-    val qs = if (includeFlagship) qs0 :+ Queries.queryVec64 else qs0
+    val qs = if (includeFlagship) qs0 :+ QueryVectors.queryVec64 else qs0
     val exactByQ = qs.map(qv => Knn.search(emb, "embedding", "vec_id", qv, k))
     // one held exchange per curve, one routed batch search per nprobe
     val opened = graft.operators.Nsw.openGraph(graph, p.nShards)

@@ -43,7 +43,7 @@ object CalibrateServing {
     graft.GraftSession.prepare(spark)
 
     val corpus = graft.Tables.embeddings(spark, dir)
-    val q = Queries.queryVec64
+    val q = QueryVectors.queryVec64
     val cents = Ann.seededCentroids(corpus, "embedding", "vec_id", nlist = 8)
     val planes = Ann.signPlanes(dim = 64, nBits = 8)
     val (path, clusterRows, bucketRows) =

@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.{GraftSession, Tables}
-import graft.functions.HashingEmbedder
 import graft.operators.Knn
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -112,12 +111,6 @@ object Queries {
     */
   private def vecLit(v: Array[Float]): String = Duck.vecLit(v)
 
-  /** The flagship deterministic query vector (64-d to match the
-    * `embeddings` fixture), from the engine's offline encoder.
-    */
-  val queryVec64: Array[Float] = HashingEmbedder(dim = 64, seed = 7)
-    .encode("graft flagship knn query vector")
-
   /** DuckDB cosine-distance SQL fragment matching [[graft.functions.CosineDistance]]
     * bit-for-bit — delegates to the single [[Duck.cosine]] builder.
     */
@@ -188,10 +181,12 @@ object Queries {
   private val knnExact = QueryDef(
     "knn_exact_cosine",
     "Reference flagship: exact brute-force top-k cosine KNN " +
-      "(streamlit_app.py:55-73). Plans as TakeOrderedAndProject — " +
-      "per-partition heap, no corpus shuffle.",
+      "(streamlit_app.py:55-73). The store is decoded once and held " +
+      "with every vector's norm (Knn.openCorpus); each search plans as " +
+      "TakeOrderedAndProject over the held rows — a k-row heap per " +
+      "task, no corpus shuffle, no file read.",
     (s, dir) => {
-      val d = Knn.search(Tables.embeddings(s, dir), "embedding", "vec_id", queryVec64, k = 10)
+      val d = Knn.search(Tables.embeddings(s, dir), "embedding", "vec_id", QueryVectors.queryVec64, k = 10)
         .select(col("vec_id"), round(col("distance_score"), 6).as("distance"))
       // re-sort on the rounded value for deterministic cross-engine order
       d.orderBy(col("distance"), col("vec_id"))
@@ -199,7 +194,7 @@ object Queries {
     Some(s"""
       |WITH d AS (
       |  SELECT vec_id,
-      |         ${duckCosine("embedding", vecLit(queryVec64))} AS dist
+      |         ${duckCosine("embedding", vecLit(QueryVectors.queryVec64))} AS dist
       |  FROM embeddings
       |), top AS (
       |  SELECT vec_id, dist FROM d ORDER BY dist, vec_id LIMIT 10
@@ -216,13 +211,13 @@ object Queries {
       // referenceSearch = search + the UI's [1,10] k-clamp; k=5 is
       // in-domain, so this is result-identical to plain search while
       // keeping the reference-parity API on the flagship path
-      val hits = Knn.referenceSearch(Tables.embeddings(s, dir), "embedding", "vec_id", queryVec64, k = 5)
+      val hits = Knn.referenceSearch(Tables.embeddings(s, dir), "embedding", "vec_id", QueryVectors.queryVec64, k = 5)
       Knn.withMatchScore(hits, "vec_id")
         .select(col("vec_id"), col("match_score"), col("display_score"))
     },
     Some(s"""
       |WITH d AS (
-      |  SELECT vec_id, ${duckCosine("embedding", vecLit(queryVec64))} AS distance_score
+      |  SELECT vec_id, ${duckCosine("embedding", vecLit(QueryVectors.queryVec64))} AS distance_score
       |  FROM embeddings
       |  ORDER BY distance_score, vec_id LIMIT 5
       |), m AS (

@@ -36,7 +36,7 @@ object VectorQueries {
       "parquet scan (PushedFilters) — with label-partitioned storage it " +
       "prunes files entirely.",
     (s, dir) => {
-      val q = Queries.queryVec64
+      val q = QueryVectors.queryVec64
       Knn.filteredSearch(Tables.embeddings(s, dir),
           col("label").isin(2, 5, 8), "embedding", "vec_id", q, k = 10)
         .select(col("vec_id"), col("label"),
@@ -46,7 +46,7 @@ object VectorQueries {
     Some(s"""
       |WITH d AS (
       |  SELECT vec_id, label,
-      |         ${duckCosine("embedding", vecLit(Queries.queryVec64))} AS dist
+      |         ${duckCosine("embedding", vecLit(QueryVectors.queryVec64))} AS dist
       |  FROM embeddings WHERE label IN (2, 5, 8)
       |), top AS (
       |  SELECT vec_id, label, dist FROM d ORDER BY dist, vec_id LIMIT 10
@@ -61,7 +61,7 @@ object VectorQueries {
       "TakeOrderedAndProject plan as the cosine flagship, different " +
       "metric expression.",
     (s, dir) => {
-      val q = Queries.queryVec64
+      val q = QueryVectors.queryVec64
       Knn.search(Tables.embeddings(s, dir), "embedding", "vec_id", q,
           k = 10, metric = Knn.L2)
         .select(col("vec_id"), round(col("distance_score"), 6).as("distance"))
@@ -70,7 +70,7 @@ object VectorQueries {
     Some(s"""
       |WITH d AS (
       |  SELECT vec_id,
-      |         ${duckL2("embedding::DOUBLE[]", vecLit(Queries.queryVec64))} AS dist
+      |         ${duckL2("embedding::DOUBLE[]", vecLit(QueryVectors.queryVec64))} AS dist
       |  FROM embeddings
       |), top AS (
       |  SELECT vec_id, dist FROM d ORDER BY dist, vec_id LIMIT 10
@@ -130,7 +130,7 @@ object VectorQueries {
       "match-score lines, score-descending, collapsed to one context " +
       "string (collect_list + array_join pushed into the engine).",
     (s, dir) => {
-      val q = Queries.queryVec64
+      val q = QueryVectors.queryVec64
       val hits = Knn.search(Tables.embeddings(s, dir), "embedding", "vec_id", q, k = 5)
         .select(col("vec_id"), col("distance_score"),
           round((lit(1.0) - round(col("distance_score"), 6)) * 100.0, 2).as("match_score"))
@@ -144,7 +144,7 @@ object VectorQueries {
     },
     Some(s"""
       |WITH d AS (
-      |  SELECT vec_id, ${duckCosine("embedding", vecLit(Queries.queryVec64))} AS dist
+      |  SELECT vec_id, ${duckCosine("embedding", vecLit(QueryVectors.queryVec64))} AS dist
       |  FROM embeddings ORDER BY dist, vec_id LIMIT 5
       |), m AS (
       |  SELECT vec_id, dist,
@@ -165,7 +165,7 @@ object VectorQueries {
       "partitioned storage the probe filter is partition pruning — " +
       "~nprobe/nlist of the corpus is read.",
     (s, dir) => {
-      val q = Queries.queryVec64
+      val q = QueryVectors.queryVec64
       val corpus = Tables.embeddings(s, dir)
       val cents = Ann.seededCentroids(corpus, "embedding", "vec_id", nlist = 8)
       val indexed = Ann.assignClusters(corpus, "embedding", cents)
@@ -175,7 +175,7 @@ object VectorQueries {
         .orderBy(col("distance"), col("vec_id"))
     },
     Some {
-      val qLit = vecLit(Queries.queryVec64)
+      val qLit = vecLit(QueryVectors.queryVec64)
       s"""
       |WITH cents AS (
       |  SELECT vec_id AS cid, embedding::DOUBLE[] AS c FROM embeddings WHERE vec_id < 8
@@ -413,7 +413,7 @@ object VectorQueries {
       "index over the same rows (the spec flips the choice with " +
       "synthetic stats; this gate pins the data-derived one).",
     (s, dir) => {
-      val q = Queries.queryVec64
+      val q = QueryVectors.queryVec64
       val corpus = Tables.embeddings(s, dir)
       val cents = Ann.seededCentroids(corpus, "embedding", "vec_id", nlist = 8)
       val planes = Ann.signPlanes(dim = 64, nBits = 8)
@@ -429,7 +429,7 @@ object VectorQueries {
         .orderBy(col("distance"), col("vec_id"))
     },
     Some {
-      val qLit = vecLit(Queries.queryVec64)
+      val qLit = vecLit(QueryVectors.queryVec64)
       s"""
       |$duckServingPrelude, ivf_probes AS (
       |  SELECT cid FROM cents ORDER BY ${duckL2(qLit, "c")}, cid LIMIT 3
@@ -594,7 +594,7 @@ object VectorQueries {
                                  extra: Seq[String] = Nil,
                                  where: Option[String] = None): String = {
     val cols = (routed.map(_ => "routed_shards").toSeq ++ extra).map(c => s"$c, ").mkString
-    duckRecordedRerank(Seq(RerankLeg(0, Queries.queryVec64, cands, routed)), k = 10,
+    duckRecordedRerank(Seq(RerankLeg(0, QueryVectors.queryVec64, cands, routed)), k = 10,
       s"vec_id, ${cols}round(dist, 6) AS distance", "distance, vec_id", extra, where)
   }
 
@@ -605,7 +605,7 @@ object VectorQueries {
   private def flagshipBeam(store: GraphStore)(s: org.apache.spark.sql.SparkSession,
                                               dir: String) = {
     val (res, cands) = Nsw.batchSearch(store.opened(s, dir), "vec_id",
-      Seq(0 -> Queries.queryVec64), k = 10, store.params)
+      Seq(0 -> QueryVectors.queryVec64), k = 10, store.params)
     store.candidates(dir) = cands.getOrElse(0, Seq.empty)
     res.select(col("vec_id"), round(col("distance_score"), 6).as("distance"))
       .orderBy(col("distance"), col("vec_id"))
@@ -685,7 +685,7 @@ object VectorQueries {
       "measures the recall/fan-out trade per nprobe.",
     (s, dir) => {
       val (res, cands, routes) = Nsw.routedBatchSearch(HnswStore.opened(s, dir),
-        "vec_id", Seq(0 -> Queries.queryVec64), k = 10,
+        "vec_id", Seq(0 -> QueryVectors.queryVec64), k = 10,
         HnswRouterStore.ensure(s, dir), HnswRouterStore.nprobe, HnswStore.params)
       val routed = routes(0)
       HnswRoutedState.candidates(dir) = cands.getOrElse(0, Seq.empty)
@@ -724,13 +724,13 @@ object VectorQueries {
       "THIS run's recorded candidate set.",
     (s, dir) => {
       val (_, byQ) = Nsw.batchSearch(HnswStore.opened(s, dir), "vec_id",
-        Seq(0 -> Queries.queryVec64), k = 10, HnswStore.params)
+        Seq(0 -> QueryVectors.queryVec64), k = 10, HnswStore.params)
       val cands = byQ.getOrElse(0, Seq.empty)
       FilteredHnswState.candidates(dir) = cands
       FilteredHnswState.lastDir = Some(dir)
       Knn.search(Tables.embeddings(s, dir).filter(col("label").isin(2, 5, 8))
           .filter(col("vec_id").isin(cands: _*)),
-          "embedding", "vec_id", Queries.queryVec64, k = 10)
+          "embedding", "vec_id", QueryVectors.queryVec64, k = 10)
         .select(col("vec_id"), col("label"),
           round(col("distance_score"), 6).as("distance"))
         .orderBy(col("distance"), col("vec_id"))
@@ -990,7 +990,7 @@ object VectorQueries {
       "independent graph path. IvfProbeRuleSpec flips all three " +
       "choices with synthetic stats.",
     (s, dir) => {
-      val q = Queries.queryVec64
+      val q = QueryVectors.queryVec64
       val (path, ivf, lsh) = servingIndexes(s, dir, lshRadius = 1)
       val price = graft.plans.IvfProbeRule.priceServing(Seq(q), ivf, lsh,
         HnswRouterStore.bound)
@@ -1009,7 +1009,7 @@ object VectorQueries {
     oracleLate = Some(() =>
       CostServingState.lastDir.map { d =>
         duckServingOracle(
-          Seq(OracleLeg("q", Seq(0 -> Queries.queryVec64),
+          Seq(OracleLeg("q", Seq(0 -> QueryVectors.queryVec64),
             Map(0 -> CostServingState.hnswCands.getOrElse(d, Seq.empty)))),
           k = 10, lshRadius = 1, HnswRouterStore.bound, pq = None,
           weights = None, bytesPerRow = 1,
@@ -1096,7 +1096,7 @@ object VectorQueries {
       "and flips across the decade gate; IvfProbeRuleSpec flips all " +
       "FOUR ways with synthetic stats.",
     (s, dir) => {
-      val q = Queries.queryVec64
+      val q = QueryVectors.queryVec64
       val (path, ivf, lsh) = servingIndexes(s, dir, lshRadius = 2)
       val price = graft.plans.IvfProbeRule.priceServing(Seq(q), ivf, lsh,
         HnswRouterStore.bound, gatePq(ivf))
@@ -1113,7 +1113,7 @@ object VectorQueries {
     oracleLate = Some(() =>
       CostServing4State.lastDir.map { d =>
         duckServingOracle(
-          Seq(OracleLeg("q", Seq(0 -> Queries.queryVec64),
+          Seq(OracleLeg("q", Seq(0 -> QueryVectors.queryVec64),
             Map(0 -> CostServing4State.recorded.getOrElse(d, Seq.empty)))),
           k = 10, lshRadius = 2, HnswRouterStore.bound, Some(PqStore.M -> 16),
           weights = None, bytesPerRow = 256,
@@ -1248,7 +1248,7 @@ object VectorQueries {
       "recorded beam/shortlist ids for hnsw/pq). IvfProbeRuleSpec " +
       "pins the synthetic flips and the ceiling arithmetic.",
     (s, dir) => {
-      val q = Queries.queryVec64
+      val q = QueryVectors.queryVec64
       val (path, ivf, lsh) = servingIndexes(s, dir, lshRadius = 2)
       val nTotal = ivf.clusterRows.values.sum
       val nMatch = Tables.embeddings(s, dir).filter(col("label") === 3).count()
@@ -1279,7 +1279,7 @@ object VectorQueries {
           Seq(("all", "SELECT count(*) FROM embeddings", "TRUE"),
             ("sel", "SELECT count(*) FROM embeddings WHERE label = 3", "e.label = 3"))
             .map { case (tag, matchSql, predSql) =>
-              OracleLeg(tag, Seq(0 -> Queries.queryVec64),
+              OracleLeg(tag, Seq(0 -> QueryVectors.queryVec64),
                 Map(0 -> rec.getOrElse(tag, Seq.empty)), Some(matchSql -> predSql))
             },
           k = 5, lshRadius = 2, NswRouterStore.bound, Some(PqStore.M -> 16),
@@ -1329,7 +1329,7 @@ object VectorQueries {
       "calibrated choice's candidates (probe membership in SQL; THIS " +
       "run's recorded ids for hnsw/pq).",
     (s, dir) => {
-      val q = Queries.queryVec64
+      val q = QueryVectors.queryVec64
       val (path, ivf, lsh) = servingIndexes(s, dir, lshRadius = 2)
       val price = graft.plans.IvfProbeRule.priceServing(Seq(q), ivf, lsh,
         NswRouterStore.bound, gatePq(ivf))
@@ -1350,7 +1350,7 @@ object VectorQueries {
     oracleLate = Some(() =>
       CostServingCalState.lastDir.map { d =>
         duckServingOracle(
-          Seq(OracleLeg("q", Seq(0 -> Queries.queryVec64),
+          Seq(OracleLeg("q", Seq(0 -> QueryVectors.queryVec64),
             Map(0 -> CostServingCalState.recorded.getOrElse(d, Seq.empty)))),
           k = 10, lshRadius = 2, NswRouterStore.bound, Some(PqStore.M -> 16),
           Some(servingWeights), bytesPerRow = 256,
@@ -1593,7 +1593,7 @@ object VectorQueries {
 
   private def duckPqAdc(cb: Array[Array[Array[Float]]]): String =
     s"""${duckPqCodes(cb)}, adc AS (
-    |  SELECT vec_id, ${duckAdcChain(cb, Queries.queryVec64)} AS adc_dist FROM codes
+    |  SELECT vec_id, ${duckAdcChain(cb, QueryVectors.queryVec64)} AS adc_dist FROM codes
     |)""".stripMargin
 
   /** Persisted (vec_id, pq_codes) store per (sfDir, JVM) — the serving
@@ -1636,7 +1636,7 @@ object VectorQueries {
       "TakeOrderedAndProject, zero shuffles, no model state — fully " +
       "SQL-recomputable (static oracle, list_slice mirror).",
     (s, dir) => {
-      val q = Queries.queryVec64
+      val q = QueryVectors.queryVec64
       val qPrefix = q.take(16)
       val cand = Tables.embeddings(s, dir)
         .withColumn("prefix_dist",
@@ -1653,10 +1653,10 @@ object VectorQueries {
       |  SELECT vec_id, embedding
       |  FROM embeddings
       |  ORDER BY ${Duck.cosine("list_slice(embedding::DOUBLE[], 1, 16)",
-          vecLit(Queries.queryVec64.take(16)))}, vec_id
+          vecLit(QueryVectors.queryVec64.take(16)))}, vec_id
       |  LIMIT 50
       |), d AS (
-      |  SELECT vec_id, ${duckCosine("embedding", vecLit(Queries.queryVec64))} AS dist
+      |  SELECT vec_id, ${duckCosine("embedding", vecLit(QueryVectors.queryVec64))} AS dist
       |  FROM cand
       |), top AS (
       |  SELECT vec_id, dist FROM d ORDER BY dist, vec_id LIMIT 10
@@ -1677,7 +1677,7 @@ object VectorQueries {
     (s, dir) => {
       val cb = PqStore.ensure(s, dir)
       val path = PqCodeStore.ensure(s, dir)
-      Pq.search(Pq.readEncoded(s, path), "vec_id", Queries.queryVec64, cb, k = 10)
+      Pq.search(Pq.readEncoded(s, path), "vec_id", QueryVectors.queryVec64, cb, k = 10)
         .select(col("vec_id"), round(col("adc_dist"), 6).as("adc_distance"))
         .orderBy(col("adc_distance"), col("vec_id"))
     },
@@ -1700,7 +1700,7 @@ object VectorQueries {
     (s, dir) => {
       val cb = PqStore.ensure(s, dir)
       val enc = Pq.encode(Tables.embeddings(s, dir), "embedding", cb)
-      Pq.search(enc, "vec_id", Queries.queryVec64, cb, k = 10)
+      Pq.search(enc, "vec_id", QueryVectors.queryVec64, cb, k = 10)
         .select(col("vec_id"), round(col("adc_dist"), 6).as("adc_distance"))
         .orderBy(col("adc_distance"), col("vec_id"))
     },
@@ -1719,7 +1719,7 @@ object VectorQueries {
     (s, dir) => {
       val cb = PqStore.ensure(s, dir)
       val enc = Pq.encode(Tables.embeddings(s, dir), "embedding", cb)
-      Pq.searchRescore(enc, "embedding", "vec_id", Queries.queryVec64, cb,
+      Pq.searchRescore(enc, "embedding", "vec_id", QueryVectors.queryVec64, cb,
           k = 10, shortlist = 50)
         .select(col("vec_id"), round(col("distance_score"), 6).as("distance"))
         .orderBy(col("distance"), col("vec_id"))
@@ -1727,7 +1727,7 @@ object VectorQueries {
     oracle = None,
     oracleLate = Some(() =>
       PqStore.lastDir.flatMap(PqStore.books.get).map { cb =>
-        val qLit = vecLit(Queries.queryVec64)
+        val qLit = vecLit(QueryVectors.queryVec64)
         s"""
         |${duckPqAdc(cb)},
         |cand AS (
@@ -1910,7 +1910,7 @@ object VectorQueries {
       "RESTRICTED SQL: a green row proves the rewrite fired (an exact " +
       "unrewritten scan would return different rows).",
     (s, dir) => {
-      val q = Queries.queryVec64
+      val q = QueryVectors.queryVec64
       val corpus = Tables.embeddings(s, dir)
       val cents = Ann.seededCentroids(corpus, "embedding", "vec_id", nlist = 8)
       val path = IvfIndexStore.ensure(s, dir, cents)
@@ -1920,7 +1920,7 @@ object VectorQueries {
         .orderBy(col("distance"), col("vec_id"))
     },
     Some {
-      val qLit = vecLit(Queries.queryVec64)
+      val qLit = vecLit(QueryVectors.queryVec64)
       s"""
       |WITH cents AS (
       |  SELECT vec_id AS cid, embedding::DOUBLE[] AS c FROM embeddings WHERE vec_id < 8
@@ -1956,7 +1956,7 @@ object VectorQueries {
       "fitted (oracleSql is dumped after the queries execute), keeping " +
       "result and oracle self-consistent per run.",
     (s, dir) => {
-      val q = Queries.queryVec64
+      val q = QueryVectors.queryVec64
       val (path, cents) = KmeansIndexStore.ensure(s, dir, nlist = 8)
       graft.plans.IvfCatalog.register(path, cents, nprobe = 3)
       Knn.search(Ann.readIndexed(s, path), "embedding", "vec_id", q, k = 10)
@@ -1967,7 +1967,7 @@ object VectorQueries {
     oracle = None,
     oracleLate = Some(() =>
       KmeansIndexStore.lastDir.flatMap(KmeansIndexStore.cents.get).map { cents =>
-        val qLit = vecLit(Queries.queryVec64)
+        val qLit = vecLit(QueryVectors.queryVec64)
         val values = cents.zipWithIndex
           .map { case (c, i) => s"($i, ${vecLit(c)})" }.mkString(",\n         ")
         s"""
@@ -2008,7 +2008,7 @@ object VectorQueries {
       "SQL with the same label predicate; green proves filter and " +
       "rewrite compose.",
     (s, dir) => {
-      val q = Queries.queryVec64
+      val q = QueryVectors.queryVec64
       val corpus = Tables.embeddings(s, dir)
       val cents = Ann.seededCentroids(corpus, "embedding", "vec_id", nlist = 8)
       val path = IvfIndexStore.ensure(s, dir, cents)
@@ -2021,7 +2021,7 @@ object VectorQueries {
         .orderBy(col("distance"), col("vec_id"))
     },
     Some {
-      val qLit = vecLit(Queries.queryVec64)
+      val qLit = vecLit(QueryVectors.queryVec64)
       s"""
       |WITH cents AS (
       |  SELECT vec_id AS cid, embedding::DOUBLE[] AS c FROM embeddings WHERE vec_id < 8
@@ -2054,7 +2054,7 @@ object VectorQueries {
       "heap as the cosine flagship, the ordering expression is the " +
       "only change.",
     (s, dir) => {
-      val q = Queries.queryVec64
+      val q = QueryVectors.queryVec64
       Knn.search(Tables.embeddings(s, dir), "embedding", "vec_id", q,
           k = 10, metric = Knn.NegDot)
         .select(col("vec_id"),
@@ -2064,7 +2064,7 @@ object VectorQueries {
     Some(s"""
       |WITH d AS (
       |  SELECT vec_id,
-      |         list_dot_product(embedding::DOUBLE[], ${vecLit(Queries.queryVec64)}) AS dot
+      |         list_dot_product(embedding::DOUBLE[], ${vecLit(QueryVectors.queryVec64)}) AS dot
       |  FROM embeddings
       |), top AS (
       |  SELECT vec_id, dot FROM d ORDER BY dot DESC, vec_id LIMIT 10
@@ -2083,7 +2083,7 @@ object VectorQueries {
       "(round-half-up int8 + float32 dequant both recomputed in SQL).",
     (s, dir) => {
       import graft.functions.VectorFunctions._
-      val q = Queries.queryVec64
+      val q = QueryVectors.queryVec64
       val quant = Tables.embeddings(s, dir)
         .withColumn("amax", quantScale(col("embedding")))
         .withColumn("qv", quantizeInt8(col("embedding"), col("amax")))
@@ -2101,7 +2101,7 @@ object VectorQueries {
         .limit(10)
     },
     Some {
-      val qLit = vecLit(Queries.queryVec64)
+      val qLit = vecLit(QueryVectors.queryVec64)
       s"""
       |WITH e AS (
       |  SELECT vec_id, embedding, embedding::DOUBLE[] AS v FROM embeddings
@@ -2137,7 +2137,7 @@ object VectorQueries {
       "as the DataFrame API path.",
     (s, dir) => {
       Tables.embeddings(s, dir).createOrReplaceTempView("embeddings_v")
-      val qArr = Queries.queryVec64
+      val qArr = QueryVectors.queryVec64
         .map(f => s"CAST(${new java.math.BigDecimal(f.toDouble).toPlainString} AS FLOAT)")
         .mkString("array(", ", ", ")")
       // two-level shape: top-k SELECTION on the full-precision distance
@@ -2157,7 +2157,7 @@ object VectorQueries {
     },
     Some(s"""
       |WITH d AS (
-      |  SELECT vec_id, ${duckCosine("embedding", vecLit(Queries.queryVec64))} AS dist
+      |  SELECT vec_id, ${duckCosine("embedding", vecLit(QueryVectors.queryVec64))} AS dist
       |  FROM embeddings
       |), top AS (
       |  SELECT vec_id, dist FROM d ORDER BY dist, vec_id LIMIT 10
@@ -2332,7 +2332,7 @@ object VectorQueries {
                            books: Array[Array[Array[Float]]]): String = {
     import IvfPqStore.{Dim, M, Nlist, Nprobe}
     val dsub = Dim / M
-    val qLit = vecLit(Queries.queryVec64)
+    val qLit = vecLit(QueryVectors.queryVec64)
     val cbRows = (for { mi <- 0 until M; ci <- books(mi).indices } yield
       s"($mi, $ci, ${vecLit(books(mi)(ci))})").mkString(",\n         ")
     val distByM = (0 until M).map(mi =>
@@ -2340,8 +2340,8 @@ object VectorQueries {
       .mkString(" ", "\n             ", "")
     val codeCols = (0 until M).map(mi =>
       s"MAX(CASE WHEN m = $mi THEN cid END) AS c$mi").mkString(",\n         ")
-    val probes = Ann.probeIds(Queries.queryVec64, cents, Nprobe)
-    val caseArms = IvfPq.adcTables(Queries.queryVec64, cents, books, probes)
+    val probes = Ann.probeIds(QueryVectors.queryVec64, cents, Nprobe)
+    val caseArms = IvfPq.adcTables(QueryVectors.queryVec64, cents, books, probes)
       .map { case (c, t) => s"WHEN cluster_id = $c THEN ${duckAdcChainT(t)}" }
       .mkString("\n           ", "\n           ", "")
     s"""
@@ -2406,7 +2406,7 @@ object VectorQueries {
       "rounds to 6 decimals.",
     (s, dir) => {
       val (cents, books, path) = IvfPqStore.ensure(s, dir)
-      IvfPq.search(IvfPq.readIndex(s, path), "vec_id", Queries.queryVec64,
+      IvfPq.search(IvfPq.readIndex(s, path), "vec_id", QueryVectors.queryVec64,
           cents, books, nprobe = IvfPqStore.Nprobe, k = 10)
         .select(col("vec_id"), col("cluster_id").cast("long").as("cluster_id"),
           round(col("adc_dist"), 6).as("adc_distance"))
@@ -2445,7 +2445,7 @@ object VectorQueries {
     */
   private def duckPcaKnnSql(mean: Array[Double],
                             basis: Array[Array[Double]]): String = {
-    val qp = graft.operators.Pca.projectVec(Queries.queryVec64, mean, basis)
+    val qp = graft.operators.Pca.projectVec(QueryVectors.queryVec64, mean, basis)
     val meanLit = mean.map(dblLit).mkString("[", ", ", "]::DOUBLE[]")
     val pcCols = basis.zipWithIndex.map { case (row, j) =>
       val bLit = row.map(dblLit).mkString("[", ", ", "]::DOUBLE[]")
@@ -2487,7 +2487,7 @@ object VectorQueries {
       "distance chain.",
     (s, dir) => {
       val (mean, basis) = PcaStore.ensure(s, dir)
-      val qp = graft.operators.Pca.projectVec(Queries.queryVec64, mean, basis)
+      val qp = graft.operators.Pca.projectVec(QueryVectors.queryVec64, mean, basis)
       val projected = graft.operators.Pca.project(
         Tables.embeddings(s, dir), "embedding", mean, basis)
       val chain = qp.indices.map(j =>
@@ -2519,7 +2519,7 @@ object VectorQueries {
       "engines (a pure function of two fixed constants).",
     (s, dir) => {
       val planes = Ann.signPlanes(dim = 64, nBits = 16, tag = "rp")
-      val q = Queries.queryVec64
+      val q = QueryVectors.queryVec64
       val qp = planes.map { p =>
         var acc = 0.0; var i = 0
         while (i < 64) { acc += q(i).toDouble * p(i).toDouble; i += 1 }
@@ -2539,7 +2539,7 @@ object VectorQueries {
     },
     Some {
       val planes = Ann.signPlanes(dim = 64, nBits = 16, tag = "rp")
-      val q = Queries.queryVec64
+      val q = QueryVectors.queryVec64
       val qp = planes.map { p =>
         var acc = 0.0; var i = 0
         while (i < 64) { acc += q(i).toDouble * p(i).toDouble; i += 1 }
@@ -2611,7 +2611,7 @@ object VectorQueries {
       "Sign-bit packing is pure arithmetic, so the oracle is fully " +
       "STATIC: DuckDB repacks the corpus and mirrors both stages.",
     (s, dir) => {
-      val q = Queries.queryVec64
+      val q = QueryVectors.queryVec64
       def qWord(off: Int): Long =
         (0 until 32).map(j => if (q(off + j) > 0f) 1L << j else 0L).sum
       val store = s.read.parquet(BqStore.ensure(s, dir))
@@ -2626,7 +2626,7 @@ object VectorQueries {
         .orderBy(col("distance"), col("vec_id"))
     },
     Some {
-      val q = Queries.queryVec64
+      val q = QueryVectors.queryVec64
       def qWord(off: Int): Long =
         (0 until 32).map(j => if (q(off + j) > 0f) 1L << j else 0L).sum
       def pack(off: Int) =
@@ -2646,7 +2646,7 @@ object VectorQueries {
       |), cand AS (
       |  SELECT vec_id, embedding, hamming FROM sh ORDER BY hamming, vec_id LIMIT 50
       |), d AS (
-      |  SELECT vec_id, hamming, ${duckCosine("embedding", vecLit(Queries.queryVec64))} AS dist
+      |  SELECT vec_id, hamming, ${duckCosine("embedding", vecLit(QueryVectors.queryVec64))} AS dist
       |  FROM cand
       |), top AS (
       |  SELECT vec_id, hamming, dist FROM d ORDER BY dist, vec_id LIMIT 10

@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.{Ann, Knn}
-import graft.queries.Queries
+import graft.queries.QueryVectors
 import org.apache.spark.sql.functions._
 
 /** IVF ANN tests: assignment invariants, probe monotonicity, and the
@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 class AnnSpec extends SparkSpec {
 
   private lazy val emb = Tables.embeddings(spark, sf("sf0.001")).cache()
-  private val q = Queries.queryVec64
+  private val q = QueryVectors.queryVec64
 
   test("seeded centroids are the vectors of the smallest ids") {
     val cents = Ann.seededCentroids(emb, "embedding", "vec_id", nlist = 4)

@@ -17,11 +17,10 @@ class HeldGraphSpec extends SparkSpec {
       java.nio.file.Paths.get(sf("sf0.001"), "embeddings.parquet"),
       java.nio.file.Paths.get(dir, "embeddings.parquet"))
     GraftSession.prepare(spark)
-    // Queries first: it initializes VectorQueries as one of its parts
-    val routedQuery = Queries.queriesMap("ann_hnsw_routed")
     // the store and its router are built before counting, so the two
     // runs differ only in whether the exchange is already held
     VectorQueries.HnswRouterStore.ensure(spark, dir)
+    val routedQuery = Queries.queriesMap("ann_hnsw_routed")
     val counter = new JobCounter(spark)
     try {
       def run(): (Seq[Row], (Int, Int)) = {

@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.{Ann, IvfPq, Knn, Pq}
-import graft.queries.Queries
+import graft.queries.QueryVectors
 import org.apache.spark.sql.functions._
 
 /** IVF-PQ (residual quantization) tests: residual exactness, code
@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
 class IvfPqSpec extends SparkSpec {
 
   private lazy val emb = Tables.embeddings(spark, sf("sf0.001")).cache()
-  private val q = Queries.queryVec64
+  private val q = QueryVectors.queryVec64
   private lazy val cents = Ann.seededCentroids(emb, "embedding", "vec_id", nlist = 8)
   private lazy val books = IvfPq.fitResidualCodebooks(emb, "embedding", cents, 64, 8, 16)
 

@@ -2,7 +2,7 @@ package graft
 
 import graft.operators.{Ann, Knn}
 import graft.plans.IvfCatalog
-import graft.queries.Queries
+import graft.queries.QueryVectors
 import org.apache.spark.sql.execution.FileSourceScanExec
 
 /** The transparent exact-KNN → IVF-probe optimizer rule: a plain
@@ -13,7 +13,7 @@ import org.apache.spark.sql.execution.FileSourceScanExec
 class IvfProbeRuleSpec extends SparkSpec {
 
   private lazy val emb = Tables.embeddings(spark, sf("sf0.001"))
-  private val q = Queries.queryVec64
+  private val q = QueryVectors.queryVec64
 
   // The serving cost model read back in the shapes the gates project:
   // three-way rows, four-way bytes, bytes plus the widened knobs, and
@@ -152,7 +152,7 @@ class IvfProbeRuleSpec extends SparkSpec {
   test("LSH-registered table: plain exact search is rewritten to the 9-bucket probe scan") {
     import graft.plans.LshCatalog
     val planes = Ann.signPlanes(dim = 64, nBits = 8)
-    val lq = graft.queries.Queries.queryVec64
+    val lq = graft.queries.QueryVectors.queryVec64
     val dir = java.nio.file.Files.createTempDirectory("graft_lsh_rule").toString
     try {
       Ann.writeLshIndexed(emb, "embedding", planes, dir)

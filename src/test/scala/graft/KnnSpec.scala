@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.Knn
-import graft.queries.Queries
+import graft.queries.QueryVectors
 import org.apache.spark.sql.functions._
 
 /** Operator tests for exact KNN (the reference flagship,
@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 class KnnSpec extends SparkSpec {
 
   private lazy val emb = Tables.embeddings(spark, sf("sf0.001"))
-  private val q = Queries.queryVec64
+  private val q = QueryVectors.queryVec64
 
   test("search returns exactly k rows, ascending by distance with id tiebreak") {
     val hits = Knn.search(emb, "embedding", "vec_id", q, k = 7).collect()
@@ -143,7 +143,7 @@ class KnnSpec extends SparkSpec {
     val rows = graft.queries.Queries.queriesMap("vec_bq_hamming_rescore")(
       spark, sf("sf0.001")).collect()
     assert(rows.length == 10)
-    val q = graft.queries.Queries.queryVec64
+    val q = graft.queries.QueryVectors.queryVec64
     def packed(v: Array[Float]): (Long, Long) = {
       def word(off: Int) =
         (0 until 32).map(j => if (v(off + j) > 0f) 1L << j else 0L).sum

@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.{Knn, Nsw}
-import graft.queries.Queries
+import graft.queries.QueryVectors
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
 class NswSpec extends SparkSpec {
 
   private lazy val emb = Tables.embeddings(spark, sf("sf0.001"))
-  private val q = Queries.queryVec64
+  private val q = QueryVectors.queryVec64
   private val p = Nsw.Params(nShards = 4, m = 8, efConstruction = 32, efSearch = 32)
   private val ph = p.copy(maxLevel = Nsw.HnswMaxLevel)
 
@@ -441,7 +441,7 @@ class NswSpec extends SparkSpec {
   }
 
   test("routed batch: per-query candidates ≡ the full batch fan restricted to that query's routed shards") {
-    val queries = Queries.queryVec64 match {
+    val queries = QueryVectors.queryVec64 match {
       case base =>
         // five deterministic perturbations of the flagship query — the
         // routes must differ across queries for the test to bite

@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.{Ann, Knn}
-import graft.queries.Queries
+import graft.queries.{Queries, QueryVectors}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.SparkPlan
 
@@ -50,8 +50,34 @@ class PlanShapeSpec extends SparkSpec {
     val p = planOf("knn_exact_cosine")
     assert(p.contains("TakeOrderedAndProject"), p)
     assert(!p.contains("Exchange"), s"KNN must not shuffle the corpus:\n$p")
-    // the distance expression participates in codegen (not a black-box UDF)
-    assert(p.contains("cosine_distance") || p.contains("CosineDistance"), p)
+    // where the corpus is read, not held (a filtered corpus), the
+    // distance expression participates in codegen (not a black-box UDF)
+    val filtered = Knn.search(Tables.embeddings(spark, sf("sf0.001")).filter(col("label") >= 0),
+      "embedding", "vec_id", QueryVectors.queryVec64, k = 10)
+      .queryExecution.executedPlan.toString
+    assert(filtered.contains("cosine_distance") || filtered.contains("CosineDistance"), filtered)
+  }
+
+  test("flagship job pin: a warm withMatchScore(search(store)) collects in 1 job, reading no file") {
+    GraftSession.prepare(spark)
+    val store = Tables.embeddings(spark, sf("sf0.001"))
+    def request() = Knn.withMatchScore(
+      Knn.search(store, "embedding", "vec_id", QueryVectors.queryVec64, k = 10), "vec_id")
+    val warm = request().collect().toSeq
+    val counter = new JobCounter(spark)
+    try {
+      counter.reset()
+      val df = request()
+      assert(df.collect().toSeq == warm)
+      val (jobs, _) = counter.settle()
+      assert(jobs == 1, s"$jobs jobs for one warm request")
+      val exec = df.queryExecution.executedPlan
+      val scans = exec.collect { case s: org.apache.spark.sql.execution.FileSourceScanExec => s } ++
+        exec.collect { case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+          a.executedPlan.collect { case s: org.apache.spark.sql.execution.FileSourceScanExec => s }
+        }.flatten
+      assert(scans.isEmpty, s"the warm request read the files:\n$exec")
+    } finally counter.close()
   }
 
   test("hybrid KNN: label predicate reaches the scan as a pushed filter") {
@@ -92,7 +118,7 @@ class PlanShapeSpec extends SparkSpec {
       val store = Nsw.readGraph(spark, dir)
       val cents = Nsw.shardCentroids(store)
       val opened = Nsw.openGraph(store, params.nShards)
-      val one = Seq(0 -> Queries.queryVec64)
+      val one = Seq(0 -> QueryVectors.queryVec64)
       Nsw.batchSearch(opened, "vec_id", one, 10, params) // runs the exchange
       // the job over the held exchange reads only the partitions of the
       // routed shards (partition pruning on the exchanged RDD — the IVF
@@ -407,7 +433,7 @@ class PlanShapeSpec extends SparkSpec {
     try {
       Ann.writeIndexed(emb, "embedding", cents, dir)
       val indexed = Ann.readIndexed(spark, dir)
-      val hits = Ann.search(indexed, "embedding", "vec_id", Queries.queryVec64,
+      val hits = Ann.search(indexed, "embedding", "vec_id", QueryVectors.queryVec64,
         k = 10, cents, nprobe = 3)
       val plan = hits.queryExecution.executedPlan.toString
       assert(plan.contains("PartitionFilters: [") && plan.contains("cluster_id"),
@@ -420,7 +446,7 @@ class PlanShapeSpec extends SparkSpec {
         s"expected 3 probed partitions, scanned ${scan.get.selectedPartitions.partitionCount}")
       // and the result matches searching the unpartitioned frame
       val expect = Ann.search(Ann.assignClusters(emb, "embedding", cents),
-        "embedding", "vec_id", Queries.queryVec64, k = 10, cents, nprobe = 3)
+        "embedding", "vec_id", QueryVectors.queryVec64, k = 10, cents, nprobe = 3)
         .select("vec_id").collect().map(_.getLong(0)).toSeq
       assert(hits.select("vec_id").collect().map(_.getLong(0)).toSeq == expect)
     } finally {

@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.{Ann, Knn, Pq}
-import graft.queries.Queries
+import graft.queries.QueryVectors
 import org.apache.spark.sql.functions._
 
 /** Product-quantization tests: encode invariants, ADC-vs-true-distance
@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 class PqSpec extends SparkSpec {
 
   private lazy val emb = Tables.embeddings(spark, sf("sf0.001")).cache()
-  private val q = Queries.queryVec64
+  private val q = QueryVectors.queryVec64
   private lazy val cb = Pq.fitCodebooks(emb, "embedding", dim = 64, m = 8, ksub = 16)
 
   test("codebook shape: m × ksub × dsub; codes land in [0, ksub)") {
