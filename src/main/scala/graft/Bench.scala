@@ -96,17 +96,17 @@ object Bench {
       "ev_markov_transitions" -> Set("ev_markov_transitions",
         "ev_markov_stationary"),
       // PQ codebook fit (PqStore) feeds every PQ consumer. r22: the
-      // shape-adaptive gate and the cost-serving gates also read the
-      // fit (PqStore/PqCodeStore) — without these entries a SOLO run of
-      // e.g. ann_pq_shape_adaptive absorbed the ~9 s codebook fit
-      // inside its timing (measured 10.9 s solo vs 2.2 s with the
-      // warmup), exactly the skew the consumer map exists to prevent.
+      // cost-serving gates also read the fit (PqStore/PqCodeStore) —
+      // without these entries a SOLO run of a PQ gate absorbed the ~9 s
+      // codebook fit inside its timing (measured 10.9 s solo vs 2.2 s
+      // with the warmup), exactly the skew the consumer map exists to
+      // prevent.
       // Full-suite timings are unaffected (warmups always run there).
       "ann_pq_adc" -> Set("ann_pq_adc", "ann_pq_rescore", "ann_pq_batch",
-        "ann_pq_store_adc", "stream_serve_pq", "ann_pq_shape_adaptive",
-        "ann_cost_serving4", "ann_cost_serving_filtered",
-        "ann_cost_serving_calibrated", "ann_cost_serving_batch",
-        "ann_cost_serving_batch_filtered", "stream_serve_auto"),
+        "ann_pq_store_adc", "stream_serve_pq", "ann_cost_serving4",
+        "ann_cost_serving_filtered", "ann_cost_serving_calibrated",
+        "ann_cost_serving_batch", "ann_cost_serving_batch_filtered",
+        "stream_serve_auto"),
       // persisted IVF index + catalog registration
       "ann_ivf_rule_rewrite" -> Set("ann_ivf_rule_rewrite",
         "knn_filtered_ivf_rewrite"),

@@ -38,8 +38,9 @@ object GraftSession {
     // fixtures), so r22 BOUNDS it at 768 KiB. Why 768 KiB and not the
     // VERDICT's suggested 1-4 MB: measured on the 32-core bench host,
     // any floor ≥ 1 MiB collapses the ~0.8 MB embeddings file to ONE
-    // split and the expression-heavy on-the-fly PQ encode+ADC pass runs
-    // single-threaded (ann_pq_shape_adaptive 2.2 s → 4.1 s, a new ×1.9
+    // split and the expression-heavy on-the-fly PQ encode+ADC pass that
+    // ann_pq_adc and ann_pq_batch run goes single-threaded (measured on
+    // r22's batch-PQ gate over that pass: 2.2 s → 4.1 s, a new ×1.9
     // regression), while at 768 KiB the ~0.6 MB documents file scans as
     // EXACTLY ONE split — bit-identical scan layout to the r20 4 MB
     // default for the whole driver-regressed dedup/mm/txt family — and

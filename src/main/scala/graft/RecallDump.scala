@@ -12,6 +12,13 @@ import org.apache.spark.sql.functions._
   * (probe filter = static partition pruning).
   *
   * Usage: RecallDump <sfDir> [out.md]
+  *
+  * The session takes one core per available processor, and the
+  * clustered-corpus IVF, PQ and IVF-PQ tables depend on that count.
+  * RECALL.md's tables come from a 32-processor JVM; on a smaller host,
+  * run with `JAVA_TOOL_OPTIONS=-XX:ActiveProcessorCount=32` to
+  * reproduce them byte for byte. RecallDump does not write the
+  * hand-written "Serving latency calibration" section; carry it over.
   */
 object RecallDump {
 
@@ -162,7 +169,6 @@ object RecallDump {
     val qs = emb.filter(col("vec_id") % 100 === 10)
       .orderBy("vec_id").limit(MaxQueries).select("embedding").collect()
       .map(_.getSeq[Float](0).toArray) :+ QueryVectors.queryVec64
-    val exactByQ = qs.map(qv => Knn.search(emb, "embedding", "vec_id", qv, k))
     val pts = sweep(emb, enc, cb, qs, k)
     enc.unpersist(); emb.unpersist()
     pts
@@ -186,17 +192,20 @@ object RecallDump {
     pts
   }
 
+  /** One [[Pq.batchSearch]] per shortlist point over all of `qs`
+    * (query i of the batch is `qs(i)`), each query's top k scored
+    * against its exact top k.
+    */
   private def sweep(emb: org.apache.spark.sql.DataFrame,
                     enc: org.apache.spark.sql.DataFrame,
                     cb: Array[Array[Array[Float]]],
                     qs: Array[Array[Float]], k: Int): Seq[PqPoint] = {
     val exactByQ = qs.map(qv => Knn.search(emb, "embedding", "vec_id", qv, k))
     Seq(k, 2 * k, 5 * k, 10 * k).map { sl =>
-      val rs = qs.toSeq.lazyZip(exactByQ).map { (qv, exact) =>
-        Ann.recallAtK(
-          graft.operators.Pq.searchRescore(enc, "embedding", "vec_id", qv, cb, k, sl),
-          exact, "vec_id")
-      }
+      val (res, _) = Pq.batchSearch(enc, enc, "embedding", "vec_id",
+        qs.indices.map(i => i -> qs(i)), cb, k, sl)
+      val rs = qs.indices.map(i =>
+        Ann.recallAtK(res.filter(col("query_id") === i), exactByQ(i), "vec_id"))
       PqPoint(sl, rs.sum / rs.size, rs.min)
     }
   }

@@ -38,6 +38,17 @@ object ScanSavings {
       .limit(10)
   }
 
+  /** The codes scan `ann_pq_store_adc`'s shortlist job reads: the
+    * persisted (vec_id, pq_codes) store, both columns. The registered
+    * query answers from a local frame of the merged heaps, which has no
+    * scan node, so the scan is built here.
+    */
+  private def pqCodesScan(spark: org.apache.spark.sql.SparkSession,
+                          sfDir: String): org.apache.spark.sql.DataFrame =
+    graft.operators.Pq.readEncoded(spark,
+      graft.queries.VectorQueries.PqCodeStore.ensure(spark, sfDir))
+      .select("vec_id", "pq_codes")
+
   /** Runs the plan `query` builds and reads its scan-node metrics.
     * One untimed warm-up run first (index build memoization, codegen);
     * then `runs` timed runs, median wall-time, metrics from the last.
@@ -106,7 +117,7 @@ object ScanSavings {
 
     // PQ serving store: ADC over persisted (id, codes) — the compression
     // axis (IVF above is the pruning axis; a production index uses both)
-    val pq = measure(spark, "ann_pq_store_adc", sfDir, runs)
+    val pq = measurePlan(spark, "ann_pq_store_adc", runs)(pqCodesScan(spark, sfDir))
     println(s"\n## PQ codes-store scan savings ($sfDir, m=8 × ksub=16 over 64-d)\n")
     println("| query | files read | bytes scanned | rows decoded | wall (median) |")
     println("|---|---|---|---|---|")

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DataType
 
@@ -24,13 +23,13 @@ import scala.jdk.CollectionConverters._
   * m=8). Query scoring is ADC (asymmetric distance computation): the
   * query precomputes an m×ksub table of squared subspace distances on
   * the driver, and each row's approximate squared L2 distance is m
-  * table lookups + (m−1) adds, no vector arithmetic, no shuffle. One
-  * query ([[search]]) is a codegen'd projection over the codes column
-  * under TakeOrderedAndProject; a query batch ([[batchSearch]]) is one
-  * pass over the codes in which each task keeps a bounded heap per
-  * query, then one In-pruned read of the shortlisted vectors re-ranked
-  * in the task. At 100 TB the codes relation is ~1/32 the corpus bytes
-  * and the scan is memory-bandwidth-bound exactly like the int8 path.
+  * table lookups + (m−1) adds, no vector arithmetic, no shuffle. Every
+  * search is a query batch — a single query is the batch `Seq(0 -> q)`:
+  * [[batchShortlist]] is one pass over the codes in which each task
+  * keeps a bounded heap per query, and [[batchSearch]] follows it with
+  * one In-pruned read of the shortlisted vectors re-ranked in the task.
+  * At 100 TB the codes relation is ~1/32 the corpus bytes and the scan
+  * is memory-bandwidth-bound exactly like the int8 path.
   *
   * Determinism/parity contract (mirrored by the late-bound DuckDB
   * oracles in VectorQueries):
@@ -142,30 +141,6 @@ object Pq {
       element_at(typedLit(dists.toSeq), element_at(codesCol, mi + 1) + 1)
     }.reduceLeft(_ + _)
 
-  /** Top-k by ADC: full-precision (adc, id) selection via
-    * TakeOrderedAndProject — no shuffle, no vector column read.
-    */
-  def search(encoded: DataFrame, idCol: String, queryVec: Array[Float],
-             codebooks: Array[Array[Array[Float]]], k: Int): DataFrame = {
-    val t = adcTable(queryVec, codebooks)
-    encoded.withColumn("adc_dist", adcScore(col("pq_codes"), t))
-      .orderBy(col("adc_dist"), col(idCol))
-      .limit(k)
-  }
-
-  /** PQ shortlist → exact rescore: top-`shortlist` rows by ADC (codes
-    * only), then exact cosine over the kept vector column for the final
-    * top-k — the standard two-stage serving shape (compressed scan
-    * bounds the exact work to `shortlist` rows).
-    */
-  def searchRescore(encoded: DataFrame, vecCol: String, idCol: String,
-                    queryVec: Array[Float],
-                    codebooks: Array[Array[Array[Float]]], k: Int,
-                    shortlist: Int): DataFrame = {
-    val cand = search(encoded, idCol, queryVec, codebooks, shortlist)
-    graft.operators.Knn.search(cand, vecCol, idCol, queryVec, k)
-  }
-
   /** Write-time encode: persist ONLY (id, pq_codes) — the serving-scan
     * relation. At 4·D/m-fold compression the stored bytes are the whole
     * point: an ADC top-k over this store reads ~1/30 the bytes of the
@@ -181,9 +156,11 @@ object Pq {
   def readEncoded(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
 
-  /** Batch multi-query PQ serving in TWO Spark jobs — the micro-batch
-    * serving kernel ([[graft.streaming.VectorServing.dispatchServingBatch]]'s
-    * pq branch, [[batchSearchRescore]], the filtered batch gate):
+  /** Batch multi-query PQ serving in TWO Spark jobs — the one PQ
+    * search with a rescore ([[graft.streaming.VectorServing.dispatchServingBatch]]'s
+    * pq branch, `servePqKnn`, the `ann_pq_*` gates; one query is the
+    * batch `Seq(0 -> q)`). `codes` and `vectors` may be the same
+    * relation (an encoded corpus carries both):
     *   1. [[batchShortlist]]: one pass over `codes` keeps every query's
     *      `shortlist` best ADC rows;
     *   2. one pass over `vectors` filtered to the shortlisted ids (the In
@@ -246,43 +223,6 @@ object Pq {
   private[graft] def vectorRead(vectors: DataFrame, vecCol: String, idCol: String,
                                 ids: Seq[Any]): DataFrame =
     vectors.filter(col(idCol).isin(ids: _*)).select(col(idCol), col(vecCol))
-
-  /** [[batchSearch]] over one encoded relation that carries both the
-    * codes and the vectors. Ranked rows (query_id, knn_rank, `idCol`,
-    * distance_score); EAGER, like [[batchSearch]].
-    */
-  def batchSearchRescore(encoded: DataFrame, vecCol: String, idCol: String,
-                         queries: Seq[(Int, Array[Float])],
-                         codebooks: Array[Array[Array[Float]]],
-                         k: Int, shortlist: Int): DataFrame =
-    batchSearch(encoded, encoded, vecCol, idCol, queries, codebooks, k, shortlist)._1
-
-  /** The PER-QUERY execution shape of batch PQ serving: B independent
-    * TakeOrderedAndProject scans of the codes relation (zero shuffle,
-    * zero sort — each is [[searchRescore]]'s plan), unioned and
-    * re-ranked. Reads B× the codes bytes of [[batchSearchRescore]]; it
-    * measured ~2.4× faster than the shared pass at a CACHE-RESIDENT
-    * 2M codes × 32 queries when that pass still ranked under a map-side
-    * window sort, and loses whenever the codes are not cache-resident;
-    * [[graft.plans.IvfProbeRule.choosePqBatchShape]] makes that call
-    * from one replayable integer comparison. Identical output to
-    * [[batchSearchRescore]] by the ADC determinism contract.
-    */
-  def batchSearchRescorePerQuery(encoded: DataFrame, vecCol: String,
-                                 idCol: String,
-                                 queries: Seq[(Int, Array[Float])],
-                                 codebooks: Array[Array[Array[Float]]],
-                                 k: Int, shortlist: Int): DataFrame = {
-    require(queries.nonEmpty, "batchSearchRescorePerQuery: empty query batch")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("distance_score").asc, col(idCol).asc)
-    queries.map { case (qid, v) =>
-      searchRescore(encoded, vecCol, idCol, v, codebooks, k, shortlist)
-        .withColumn("query_id", lit(qid))
-    }.reduce(_ unionByName _)
-      .withColumn("knn_rank", row_number().over(w))
-      .filter(col("knn_rank") <= k)
-  }
 
   /** The ADC-shortlist job of [[batchSearch]] alone: ONE pass over the
     * codes for the WHOLE batch (the amortized N·m scan the batch-aware

@@ -258,38 +258,6 @@ object IvfProbeRule extends Rule[LogicalPlan] {
       efEff, slEff, vecBytes)
   }
 
-  /** Execution-SHAPE choice inside the pq family for a batch of B
-    * queries (r20 probe finding): the amortized single-pass
-    * `Pq.batchShortlist` and B per-query TakeOrdered scans read the
-    * same number of ROWS and do the same ADC arithmetic, but their
-    * wall-clock inverts with the CACHE REGIME — measured at 2M codes ×
-    * 32 queries (cache-resident), B zero-shuffle TakeOrdered scans ran
-    * ~2.4× FASTER than the shared pass (whose extra cost is the
-    * map-side sort feeding WindowGroupLimit), while in the I/O-bound
-    * regime (codes ≫ cache, the 100 TB serving tier) B passes pay B×
-    * disk reads and the shared scan wins by the full amortization.
-    * (The 2.4× was measured against the OLD shared pass, a sorted
-    * window rank over a codes × queries join; the shared pass is now a
-    * per-task heap per query with no sort, which that measurement does
-    * not cover. The rule is unchanged.)
-    * The switch is one integer comparison the oracle replays:
-    * codesBytes = corpusRows × m vs the deployment's cache budget
-    * (hardware data, like [[ServingWeights]]); B = 1 is always
-    * per-query — a single TakeOrdered scan strictly dominates a
-    * one-query window plan (zero amortization to buy). Returns
-    * (shape, codesBytes). Both shapes produce IDENTICAL results (the
-    * ADC selection contract) — `ann_pq_shape_adaptive` executes both
-    * and hashes them against one oracle ranking.
-    */
-  def choosePqBatchShape(pqCorpusRows: Long, pqM: Int, b: Int,
-                         cacheBudgetBytes: Long): (String, Long) = {
-    require(b >= 1, s"batch size must be >= 1, got $b")
-    val codesBytes = pqCorpusRows * pqM
-    val shape =
-      if (b > 1 && codesBytes > cacheBudgetBytes) "shared" else "perquery"
-    (shape, codesBytes)
-  }
-
   /** Measured per-family serving cost weights in NANOSECONDS PER KiB
     * READ — the latency calibration [[ServingPrice.weighted]]
     * multiplies into the byte model. Derived by the

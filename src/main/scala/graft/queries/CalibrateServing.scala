@@ -10,9 +10,9 @@ import org.apache.spark.sql.functions._
   * the four-way cost model prices, and print per-family
   * picoseconds-per-byte. BYTES-READ is a portable cost unit but not a
   * clock: a routed graph beam pays per-candidate random access and
-  * per-shard job dispatch, while PQ's code scan is one codegen'd
-  * columnar pass — their measured s/byte differ by an order of
-  * magnitude, which is exactly what flips the calibrated decision
+  * per-shard job dispatch, while PQ's code scan is one pass keeping a
+  * bounded ADC heap per task — their measured s/byte differ by an
+  * order of magnitude, which is exactly what flips the calibrated decision
   * against the pure-bytes one on some legs
   * (`ann_cost_serving_calibrated` gates the flip; RECALL.md records
   * the measurements). Calibration is DATA, like an index's centroids —
@@ -82,8 +82,7 @@ object CalibrateServing {
       res.collect()
     }
     val pqNs = timeNs(reps) {
-      val sl = Pq.search(codes, "vec_id", q, cb, k = 16)
-        .select("vec_id").collect().map(_.getLong(0)).toSeq
+      val sl = Pq.batchShortlist(codes, "vec_id", Seq(0 -> q), cb, 16)(0).map(_._2)
       Knn.search(corpus.filter(col("vec_id").isin(sl: _*)),
         "embedding", "vec_id", q, k = 10).collect()
     }

@@ -128,9 +128,9 @@ object StreamingQueries {
 
   /** One run-to-completion PQ serving stream per (sfDir, JVM) — the PQ
     * twin of [[ServeStore]]: same two MemoryStream micro-batches of the
-    * `knn_batch` query vectors, scored by `Pq.batchSearchRescore` over
-    * the encoded corpus (codebooks from the SAME per-run `PqStore` the
-    * batch PQ oracles embed).
+    * `knn_batch` query vectors, scored by `Pq.batchSearch` with the
+    * encoded corpus as both codes and vectors (codebooks from the SAME
+    * per-run `PqStore` the batch PQ oracles embed).
     */
   private object PqServeStore {
     private val done = scala.collection.concurrent.TrieMap.empty[String, String]

@@ -924,8 +924,8 @@ object VectorQueries {
       case "pq" =>
         val cb = PqStore.ensure(s, dir)
         val codes = Pq.readEncoded(s, PqCodeStore.ensure(s, dir))
-        val sl = Pq.search(codes, "vec_id", q, cb, k = shortlist.toInt)
-          .select("vec_id").collect().map(_.getLong(0)).toSeq.sorted
+        val sl = Pq.batchShortlist(codes, "vec_id", Seq(0 -> q), cb, shortlist.toInt)(0)
+          .map(_._2.asInstanceOf[Long]).sorted
         (ranked(corpus.filter(col("vec_id").isin(sl: _*))), sl)
       case "hnsw" =>
         val p = router.store.params.copy(efSearch = ef.toInt)
@@ -1600,7 +1600,7 @@ object VectorQueries {
     * layout `Pq.writeEncoded` produces; `ann_pq_store_adc` reads it and
     * ScanSavings measures its scan bytes against the vector store.
     */
-  private[queries] object PqCodeStore {
+  private[graft] object PqCodeStore {
     private val written = scala.collection.concurrent.TrieMap.empty[String, String]
     def ensure(s: org.apache.spark.sql.SparkSession, dir: String): String = {
       val cb = PqStore.ensure(s, dir)
@@ -1626,6 +1626,22 @@ object VectorQueries {
     |SELECT vec_id, round(adc_dist, 6) AS adc_distance
     |FROM top ORDER BY adc_distance, vec_id
     """.stripMargin.trim
+
+  /** The flagship query's 10 best `codes` rows by full-precision (adc,
+    * id) from [[Pq.batchShortlist]], as the local frame (vec_id,
+    * adc_distance) the two ADC gates hash: rounded to 6 decimals and
+    * re-sorted on the rounded value.
+    */
+  private def adcTop(s: org.apache.spark.sql.SparkSession,
+                     codes: org.apache.spark.sql.DataFrame,
+                     cb: Array[Array[Array[Float]]]): org.apache.spark.sql.DataFrame = {
+    import s.implicits._
+    Pq.batchShortlist(codes, "vec_id", Seq(0 -> QueryVectors.queryVec64), cb, 10)(0)
+      .map { case (adc, id) => (id.asInstanceOf[Long], Option(adc).map(_.doubleValue)) }
+      .toDF("vec_id", "adc_dist")
+      .select(col("vec_id"), round(col("adc_dist"), 6).as("adc_distance"))
+      .orderBy(col("adc_distance"), col("vec_id"))
+  }
 
   private val matryoshka = QueryDef(
     "ann_matryoshka_rescore",
@@ -1670,16 +1686,14 @@ object VectorQueries {
     "ADC top-k over the PERSISTED codes store (Pq.writeEncoded: only " +
       "(vec_id, pq_codes) on disk — ~1/30 the vector store's bytes): " +
       "the serving-path scan reads no vectors at all; " +
-      "TakeOrderedAndProject over the codes scan, zero shuffles. " +
-      "Oracle = the ann_pq_adc SQL (stored codes ≡ recomputed codes — " +
+      "Pq.batchShortlist keeps a bounded ADC heap in each task of ONE " +
+      "pass over the codes scan and merges them on the driver, zero " +
+      "shuffles. Oracle = the ann_pq_adc SQL (stored codes ≡ recomputed codes — " +
       "a green row proves the write/read round trip preserved every " +
       "code).",
     (s, dir) => {
       val cb = PqStore.ensure(s, dir)
-      val path = PqCodeStore.ensure(s, dir)
-      Pq.search(Pq.readEncoded(s, path), "vec_id", QueryVectors.queryVec64, cb, k = 10)
-        .select(col("vec_id"), round(col("adc_dist"), 6).as("adc_distance"))
-        .orderBy(col("adc_distance"), col("vec_id"))
+      adcTop(s, Pq.readEncoded(s, PqCodeStore.ensure(s, dir)), cb)
     },
     oracle = None,
     oracleLate = Some(() =>
@@ -1689,20 +1703,18 @@ object VectorQueries {
     "ann_pq_adc",
     "Product-quantization ANN (Jégou et al. 2011): 64-d float32 vectors " +
       "stored as 8 codebook codes (32× compression), query scored by " +
-      "ADC — 8 literal-table lookups + 7 adds per row, a codegen'd " +
-      "projection over the codes column with TakeOrderedAndProject on " +
-      "top; the corpus vector column is never read and nothing " +
-      "shuffles. KMeans codebooks are not SQL-recomputable, so the " +
-      "oracle embeds this run's fitted codebook AND the driver-computed " +
-      "ADC table as exact literals (late-bound, self-consistent per " +
+      "ADC — 8 driver-computed table lookups + 7 adds per row in ONE " +
+      "pass over the codes column (Pq.batchShortlist: a bounded heap " +
+      "per task, merged on the driver) over codes encoded inline " +
+      "from the vectors; nothing shuffles. KMeans codebooks are not " +
+      "SQL-recomputable, so the oracle embeds this run's fitted " +
+      "codebook AND the driver-computed ADC table as exact literals " +
+      "(late-bound, self-consistent per " +
       "run); selection is full-precision (adc, id), presentation " +
       "rounds to 6 decimals.",
     (s, dir) => {
       val cb = PqStore.ensure(s, dir)
-      val enc = Pq.encode(Tables.embeddings(s, dir), "embedding", cb)
-      Pq.search(enc, "vec_id", QueryVectors.queryVec64, cb, k = 10)
-        .select(col("vec_id"), round(col("adc_dist"), 6).as("adc_distance"))
-        .orderBy(col("adc_distance"), col("vec_id"))
+      adcTop(s, Pq.encode(Tables.embeddings(s, dir), "embedding", cb), cb)
     },
     oracle = None,
     oracleLate = Some(() =>
@@ -1712,15 +1724,17 @@ object VectorQueries {
     "ann_pq_rescore",
     "Two-stage PQ serving: ADC over the codes column shortlists 50 " +
       "candidates (compressed scan, no vector reads), then the exact " +
-      "cosine re-ranks only those 50 for the final top-10 — both stages " +
-      "are TakeOrderedAndProject, zero shuffles; the exact stage's cost " +
-      "is bounded by the shortlist, not the corpus. Late oracle mirrors " +
-      "both stages on the same fitted-codebook literals.",
+      "cosine re-ranks only those 50 for the final top-10 — " +
+      "Pq.batchSearch over the batch of one query: a codes pass with a " +
+      "heap per task, then an In-pruned read of the 50 vectors scored " +
+      "in the task, zero shuffles; the exact stage's cost is bounded by " +
+      "the shortlist, not the corpus. Late oracle mirrors both stages " +
+      "on the same fitted-codebook literals.",
     (s, dir) => {
       val cb = PqStore.ensure(s, dir)
       val enc = Pq.encode(Tables.embeddings(s, dir), "embedding", cb)
-      Pq.searchRescore(enc, "embedding", "vec_id", QueryVectors.queryVec64, cb,
-          k = 10, shortlist = 50)
+      Pq.batchSearch(enc, enc, "embedding", "vec_id", Seq(0 -> QueryVectors.queryVec64),
+          cb, k = 10, shortlist = 50)._1
         .select(col("vec_id"), round(col("distance_score"), 6).as("distance"))
         .orderBy(col("distance"), col("vec_id"))
     },
@@ -1750,15 +1764,16 @@ object VectorQueries {
       "row up in the 5 driver-computed ADC tables (table lookups, not " +
       "vector math) and keeps a bounded shortlist-20 heap per query; " +
       "the driver merges the heaps, then one In-pruned read of the " +
-      "shortlisted vectors is exact-cosine rescored in the task. Two " +
-      "Spark jobs, no shuffle. The micro-batch serving kernel — same " +
-      "output shape as knn_batch. Late oracle: per-query ADC chains " +
-      "over the shared recomputed codes + per-query rescore, unioned.",
+      "shortlisted vectors is exact-cosine rescored in the task " +
+      "(Pq.batchSearch). Two Spark jobs, no shuffle. The micro-batch " +
+      "serving kernel — same output shape as knn_batch. Late oracle: " +
+      "per-query ADC chains over the shared recomputed codes + " +
+      "per-query rescore, unioned.",
     (s, dir) => {
       val cb = PqStore.ensure(s, dir)
       val enc = Pq.encode(Tables.embeddings(s, dir), "embedding", cb)
-      Pq.batchSearchRescore(enc, "embedding", "vec_id", batchQueryVecs, cb,
-          k = 3, shortlist = 20)
+      Pq.batchSearch(enc, enc, "embedding", "vec_id", batchQueryVecs, cb,
+          k = 3, shortlist = 20)._1
         .select(col("query_id"), col("knn_rank").cast("long").as("knn_rank"),
           col("vec_id"), round(col("distance_score"), 6).as("distance"))
         .orderBy(col("query_id"), col("knn_rank"))
@@ -1803,101 +1818,6 @@ object VectorQueries {
     |FROM r WHERE knn_rank <= 3 ORDER BY query_id, knn_rank
     """.stripMargin.trim
   }
-
-  private val pqShapeAdaptive = QueryDef(
-    "ann_pq_shape_adaptive",
-    "Cache-regime-adaptive batch-PQ execution shape (r20 sf100 probe " +
-      "finding): the amortized single-pass shortlist and B per-query " +
-      "TakeOrdered scans do the SAME ADC arithmetic but their " +
-      "wall-clock inverts with the cache regime — B zero-shuffle " +
-      "scans ran ~2.4× faster at a cache-resident 2M-code store " +
-      "(measured when the shared pass still ranked under a map-side " +
-      "sort; it now keeps per-task heaps), while beyond " +
-      "cache the shared pass wins by the full B× on disk bytes. " +
-      "IvfProbeRule.choosePqBatchShape makes the call from ONE " +
-      "replayable integer comparison (codesBytes = N·m vs the " +
-      "deployment's cache budget — hardware data, like the calibrated " +
-      "router's weights; B = 1 is always per-query). The gate runs " +
-      "BOTH shapes through two synthetic budgets (1 KiB → shared, " +
-      "1 GiB → perquery at every fixture) and the two legs must " +
-      "produce IDENTICAL rankings — a shape-differential: the oracle " +
-      "replays the decision arithmetic per leg and ONE ADC+rescore " +
-      "ranking for both (the ADC determinism contract is exactly " +
-      "what makes the shape a pure execution choice). " +
-      "IvfProbeRuleSpec pins the flip on budget and the B=1 rule.",
-    (s, dir) => {
-      val cb = PqStore.ensure(s, dir)
-      val corpus = Tables.embeddings(s, dir)
-      val enc = Pq.encode(corpus, "embedding", cb)
-      val n = corpus.count()
-      val legs = Seq(("tight", 1024L), ("roomy", 1073741824L))
-      val outs = legs.map { case (tag, budget) =>
-        val (shape, codesBytes) = graft.plans.IvfProbeRule
-          .choosePqBatchShape(n, PqStore.M, batchQueryVecs.length, budget)
-        val ranked = shape match {
-          case "shared" => Pq.batchSearchRescore(enc, "embedding", "vec_id",
-            batchQueryVecs, cb, k = 3, shortlist = 20)
-          case _ => Pq.batchSearchRescorePerQuery(enc, "embedding", "vec_id",
-            batchQueryVecs, cb, k = 3, shortlist = 20)
-        }
-        ranked.select(lit(tag).as("leg"), lit(shape).as("shape_chosen"),
-          lit(codesBytes).as("codes_bytes"), lit(budget).as("cache_budget"),
-          col("query_id"), col("knn_rank").cast("long").as("knn_rank"),
-          col("vec_id"), round(col("distance_score"), 6).as("distance"))
-      }
-      outs.reduce(_ unionByName _)
-        .orderBy(col("leg"), col("query_id"), col("knn_rank"))
-    },
-    oracle = None,
-    oracleLate = Some(() =>
-      PqStore.lastDir.flatMap(PqStore.books.get).map { cb =>
-        val adcCols = batchQueryVecs.map { case (i, v) =>
-          s"${duckAdcChain(cb, v)} AS adc_$i"
-        }.mkString(",\n         ")
-        val branches = batchQueryVecs.map { case (i, v) =>
-          val qLit = vecLit(v)
-          s"""|cand_$i AS (
-              |  SELECT vec_id FROM adc ORDER BY adc_$i, vec_id LIMIT 20
-              |), d_$i AS (
-              |  SELECT $i AS query_id, e.vec_id, ${duckCosine("e.embedding", qLit)} AS dist
-              |  FROM embeddings e WHERE e.vec_id IN (SELECT vec_id FROM cand_$i)
-              |)""".stripMargin
-        }.mkString(", ")
-        val union = batchQueryVecs.map { case (i, _) => s"SELECT * FROM d_$i" }
-          .mkString("\n  UNION ALL ")
-        val decs = Seq(("tight", 1024L), ("roomy", 1073741824L)).map {
-          case (tag, budget) =>
-            s"""|dec_$tag AS MATERIALIZED (
-                |  SELECT (SELECT count(*) FROM embeddings)::BIGINT * 8 AS codes_bytes,
-                |         ${budget}::BIGINT AS cache_budget,
-                |         CASE WHEN ${batchQueryVecs.length} > 1
-                |                AND (SELECT count(*) FROM embeddings)::BIGINT * 8 > $budget
-                |              THEN 'shared' ELSE 'perquery' END AS shape_chosen
-                |)""".stripMargin
-        }.mkString(", ")
-        val selects = Seq("tight", "roomy").map { tag =>
-          s"""|SELECT '$tag' AS leg, d.shape_chosen, d.codes_bytes,
-              |       d.cache_budget, r.query_id, r.knn_rank, r.vec_id,
-              |       round(r.dist, 6) AS distance
-              |FROM r CROSS JOIN dec_$tag d WHERE r.knn_rank <= 3""".stripMargin
-        }.mkString("\nUNION ALL\n")
-        s"""
-        |${duckPqCodes(cb)}, adc AS MATERIALIZED (
-        |  SELECT vec_id,
-        |         $adcCols
-        |  FROM codes
-        |), $branches, u AS (
-        |  $union
-        |), r AS MATERIALIZED (
-        |  SELECT query_id, vec_id, dist,
-        |         row_number() OVER (PARTITION BY query_id
-        |                            ORDER BY dist, vec_id) AS knn_rank
-        |  FROM u
-        |), $decs
-        |$selects
-        |ORDER BY leg, query_id, knn_rank
-        """.stripMargin.trim
-      }))
 
   private val ivfRule = QueryDef(
     "ann_ivf_rule_rewrite",
@@ -2971,6 +2891,6 @@ object VectorQueries {
       nswRoutedBatch, ivfRule,
       lshRule, costRule, ivfKmeansRule, filteredIvfRule, mips, quantRescore, sqlApi,
       centroids, quantize, groupTopk, pqAdc, pqRescore, pqBatch, pqStoreAdc,
-      matryoshka, ivfPqAdc, pqShapeAdaptive, pcaKnn, rpKnn, bqHamming, mmrDiversify, recallEval,
+      matryoshka, ivfPqAdc, pcaKnn, rpKnn, bqHamming, mmrDiversify, recallEval,
       ivfRecallEvalQ, quantError, dimStatsQ)
 }

@@ -344,9 +344,10 @@ object VectorServing {
   /** Micro-batch PQ serving: each query batch is COLLECTED to the driver
     * (query batches are small by contract — they are user requests, not
     * data) so its per-query ADC tables can be computed there and served
-    * by [[graft.operators.Pq.batchSearchRescore]]; the corpus side stays
-    * fully distributed — one job per batch over the codes column, one
-    * over the vectors of the per-query shortlists only.
+    * by [[graft.operators.Pq.batchSearch]] over `encoded` as both the
+    * codes and the vectors; the corpus side stays fully distributed —
+    * one job per batch over the codes column, one over the vectors of
+    * the per-query shortlists only.
     * Same sink contract as [[serveKnn]].
     */
   def servePqKnn(queries: DataFrame, encoded: DataFrame,
@@ -362,8 +363,8 @@ object VectorServing {
         if (!batch.isEmpty) {
           val qs = batch.select(col(queryIdCol), col(queryVecCol)).collect()
             .map(r => (r.getInt(0), r.getSeq[Float](1).toArray)).toSeq
-          sink(graft.operators.Pq.batchSearchRescore(encoded, corpusVecCol,
-              corpusIdCol, qs, codebooks, k, shortlist)
+          sink(graft.operators.Pq.batchSearch(encoded, encoded, corpusVecCol,
+              corpusIdCol, qs, codebooks, k, shortlist)._1
             .select(col(queryIdCol), col("knn_rank"), col(corpusIdCol),
               round(col("distance_score"), 6).as("distance")))
         }

@@ -435,17 +435,6 @@ class IvfProbeRuleSpec extends SparkSpec {
     intercept[IllegalArgumentException](choose(11L, 10L))
   }
 
-  test("choosePqBatchShape: the cache budget flips the execution shape; B=1 is always per-query") {
-    import graft.plans.IvfProbeRule.choosePqBatchShape
-    // 2M codes × m=8 = 16 MB: beyond a 1 MiB budget → shared pass;
-    // within a 1 GiB budget → B cached TakeOrdered scans
-    assert(choosePqBatchShape(2000000L, 8, 32, 1L << 20) == ("shared", 16000000L))
-    assert(choosePqBatchShape(2000000L, 8, 32, 1L << 30) == ("perquery", 16000000L))
-    // a single query has no amortization to buy — per-query regardless
-    assert(choosePqBatchShape(2000000L, 8, 1, 1L)._1 == "perquery")
-    intercept[IllegalArgumentException](choosePqBatchShape(10L, 8, 0, 1L))
-  }
-
   test("a manually-probed scan is NOT double-filtered — the idempotence guard matches InSet, not just In (r20)") {
     import graft.plans.{IvfCatalog, LshCatalog}
     val planes = Ann.signPlanes(dim = 64, nBits = 8)

@@ -5,8 +5,8 @@ import graft.queries.QueryVectors
 import org.apache.spark.sql.functions._
 
 /** Product-quantization tests: encode invariants, ADC-vs-true-distance
-  * fidelity, rescore recall against exact KNN, and the no-shuffle plan
-  * contract of the ADC scan.
+  * fidelity, rescore recall against exact KNN, and the job and
+  * no-shuffle contracts of the batch kernel.
   */
 class PqSpec extends SparkSpec {
 
@@ -43,20 +43,26 @@ class PqSpec extends SparkSpec {
 
   test("ADC score equals the driver-side table sum for the assigned codes") {
     val t = Pq.adcTable(q, cb)
-    val rows = Pq.encode(emb, "embedding", cb)
-      .withColumn("adc", Pq.adcScore(col("pq_codes"), t))
-      .select("pq_codes", "adc").limit(20).collect()
+    val enc = Pq.encode(emb, "embedding", cb)
+    val rows = enc.withColumn("adc", Pq.adcScore(col("pq_codes"), t))
+      .select("vec_id", "pq_codes", "adc").collect()
+    // a shortlist as long as the corpus keeps every row's kernel ADC
+    val kernel = Pq.batchShortlist(enc, "vec_id", Seq(0 -> q), cb, shortlist = rows.length)(0)
+      .map { case (adc, id) => id -> adc.doubleValue }.toMap
+    assert(kernel.size == rows.length)
+    def bits(d: Double) = java.lang.Double.doubleToRawLongBits(d)
     rows.foreach { r =>
-      val codes = r.getSeq[Int](0)
+      val codes = r.getSeq[Int](1)
       val want = (0 until 8).map(mi => t(mi)(codes(mi))).reduceLeft(_ + _)
-      assert(r.getDouble(1) == want)
+      assert(bits(r.getDouble(2)) == bits(want))
+      assert(bits(kernel(r.getLong(0))) == bits(want), s"kernel ADC of vec_id ${r.getLong(0)}")
     }
   }
 
   test("ADC approximates squared L2: rescore recall@10 vs exact ≥ 0.8, shortlist-50") {
     val exact = Knn.search(emb, "embedding", "vec_id", q, k = 10, Knn.L2)
     val enc = Pq.encode(emb, "embedding", cb)
-    val approx = Pq.searchRescore(enc, "embedding", "vec_id", q, cb,
+    val (approx, _) = Pq.batchSearch(enc, enc, "embedding", "vec_id", Seq(0 -> q), cb,
       k = 10, shortlist = 50)
     // rescore metric is cosine (serving default) — compare against the
     // exact cosine top-10, the contract the registered query gates
@@ -69,20 +75,19 @@ class PqSpec extends SparkSpec {
     assert(exact.count() == 10)
   }
 
-  test("batch PQ rescore ≡ per-query searchRescore for every query id") {
+  test("a batch of B ≡ B batches of one: rows and shortlists") {
     import graft.queries.VectorQueries
     val enc = Pq.encode(emb, "embedding", cb).cache()
-    val batch = Pq.batchSearchRescore(enc, "embedding", "vec_id",
-        VectorQueries.batchQueryVecs, cb, k = 3, shortlist = 20)
-      .select("query_id", "knn_rank", "vec_id").collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getLong(2))).toSet
-    val single = VectorQueries.batchQueryVecs.flatMap { case (qid, v) =>
-      Pq.searchRescore(enc, "embedding", "vec_id", v, cb, k = 3, shortlist = 20)
-        .orderBy(col("distance_score"), col("vec_id"))
-        .collect().zipWithIndex
-        .map { case (r, i) => (qid, i + 1, r.getAs[Long]("vec_id")) }
-    }.toSet
-    assert(batch == single, s"batch $batch != per-query $single")
+    def run(qs: Seq[(Int, Array[Float])]) = {
+      val (res, lists) = Pq.batchSearch(enc, enc, "embedding", "vec_id", qs, cb,
+        k = 3, shortlist = 20)
+      (res.collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.get(3))).toSeq, lists)
+    }
+    val (batch, batchLists) = run(VectorQueries.batchQueryVecs)
+    val singles = VectorQueries.batchQueryVecs.map(qv => run(Seq(qv)))
+    assert(batch.size == 15 && batch == singles.flatMap(_._1),
+      s"batch $batch != batches of one ${singles.flatMap(_._1)}")
+    assert(batchLists == singles.map(_._2).reduce(_ ++ _))
     enc.unpersist()
   }
 
@@ -100,27 +105,6 @@ class PqSpec extends SparkSpec {
     assert(p.contains("PushedFilters: [In(vec_id"),
       s"shortlist ids must push into the rescore parquet scan:\n$p")
     assert(!p.contains("Exchange"), s"the vector read must not shuffle:\n$p")
-  }
-
-  test("the two batch execution shapes are result-identical (shape is a pure execution choice)") {
-    import graft.queries.VectorQueries
-    val enc = Pq.encode(emb, "embedding", cb)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select("query_id", "knn_rank", "vec_id").collect()
-        .map(r => (r.getInt(0), r.getInt(1), r.getLong(2))).toSet
-    val shared = rows(Pq.batchSearchRescore(enc, "embedding", "vec_id",
-      VectorQueries.batchQueryVecs, cb, k = 3, shortlist = 20))
-    val perQuery = rows(Pq.batchSearchRescorePerQuery(enc, "embedding",
-      "vec_id", VectorQueries.batchQueryVecs, cb, k = 3, shortlist = 20))
-    assert(shared == perQuery && shared.size == 15,
-      s"shapes diverged:\nshared=$shared\nperquery=$perQuery")
-    // and the per-query shape really is the zero-exchange TakeOrdered
-    // plan, B times (each union branch scans + heaps, no rank sort of
-    // the codes relation)
-    val p = Pq.batchSearchRescorePerQuery(enc, "embedding", "vec_id",
-      VectorQueries.batchQueryVecs, cb, k = 3, shortlist = 20)
-      .queryExecution.executedPlan.toString
-    assert(p.contains("TakeOrderedAndProject"), s"expected per-query heaps:\n$p")
   }
 
   /** The PQ store as (vec_id, embedding, pq_codes) over the sf0.001
@@ -237,12 +221,22 @@ class PqSpec extends SparkSpec {
     assert(out.contains("vec_id = 77: code 16 in subspace 3 is outside [0, 16)"), out)
   }
 
-  test("ADC search plan: TakeOrderedAndProject over the scan, zero exchanges") {
+  test("ADC shortlist: 1 job of 1 stage; batchSearch 2 jobs") {
     val enc = Pq.encode(emb, "embedding", cb)
-    val p = Pq.search(enc, "vec_id", q, cb, k = 10)
-      .queryExecution.executedPlan.toString
-    assert(p.contains("TakeOrderedAndProject"), s"expected a top-k heap:\n$p")
-    assert(!p.contains("Exchange"), s"ADC scan must not shuffle:\n$p")
+    Pq.batchSearch(enc, enc, "embedding", "vec_id", Seq(0 -> q), cb, k = 10, shortlist = 50)
+    val counter = new JobCounter(spark)
+    try {
+      counter.reset()
+      Pq.batchShortlist(enc, "vec_id", Seq(0 -> q), cb, shortlist = 10)
+      val shortlistJobs = counter.settle()
+      assert(shortlistJobs == ((1, 1)),
+        s"the shortlist must be one pass, no shuffle stage: (jobs, stages) = $shortlistJobs")
+      counter.reset()
+      Pq.batchSearch(enc, enc, "embedding", "vec_id", Seq(0 -> q), cb, k = 10, shortlist = 50)
+      val searchJobs = counter.settle()
+      assert(searchJobs == ((2, 2)),
+        s"shortlist + rescore must be two one-stage jobs: (jobs, stages) = $searchJobs")
+    } finally counter.close()
   }
 
   test("parallel codebook fit ≡ a sequential loop over Ann.kmeansCentroids") {
